@@ -4340,7 +4340,10 @@ class KqlQuery:
         tools/probe_activity_persist.py): the consumers are
         independent stages the scheduler overlaps, and the persist's
         materialization barrier serializes them for longer than the
-        repeated distinct costs."""
+        repeated distinct costs.  Both A/Bs read page-cached local
+        files, where a re-scan is nearly free: the trade depends on the
+        storage backend, and on remote or object-store input, where the
+        scan dominates, re-running it for every consumer may lose."""
         idc, tc, start_sql, end_sql = self._span_args(args, 1)
         step_us = self._win_us(args[4], "Window")
         df = frame.df.filter(

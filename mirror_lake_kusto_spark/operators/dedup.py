@@ -223,6 +223,20 @@ def _sig_udf(k: int):
 _PAIR_CHUNK = 64
 
 
+def _chunk_rows(grouped: DataFrame, star_over: int | None) -> DataFrame:
+    """(ids, _j) pair-expansion rows: ceil(K/C) per K-member group,
+    but ONE for a star group (wider than ``star_over``) — it emits
+    O(K) pairs from a single row, and chunking it would only ship
+    ceil(K/C) copies of its id array through the repartition."""
+    ids = F.col("ids")
+    last_chunk = F.floor((F.size(ids) - 1) / _PAIR_CHUNK).cast("int")
+    if star_over is not None:
+        last_chunk = F.when(F.size(ids) <= star_over, last_chunk).otherwise(0)
+    return grouped.select(
+        "ids", F.explode(F.sequence(F.lit(0), last_chunk)).alias("_j")
+    )
+
+
 def _pairs_from_groups(
     grouped: DataFrame,
     star_over: int | None = None,
@@ -259,12 +273,9 @@ def _pairs_from_groups(
         grouped = grouped.filter(F.size("ids") <= drop_over)
     C = _PAIR_CHUNK
     ids = F.col("ids")
-    grouped = grouped.select(
-        "ids",
-        F.explode(
-            F.sequence(F.lit(0), F.floor((F.size(ids) - 1) / C).cast("int"))
-        ).alias("_j"),
-    ).repartition(grouped.sparkSession.sparkContext.defaultParallelism)
+    grouped = _chunk_rows(grouped, star_over).repartition(
+        grouped.sparkSession.sparkContext.defaultParallelism
+    )
     j0 = F.col("_j") * C
     chunk_pairs = F.flatten(
         F.transform(
@@ -276,20 +287,14 @@ def _pairs_from_groups(
         )
     )
     if star_over is not None:
-        # star groups emit O(width) pairs — no chunking needed; emit
-        # them from chunk 0 only
         star = F.transform(
             F.slice(ids, 2, F.size(ids)),
             lambda y: F.struct(
                 F.element_at(ids, 1).alias("id1"), y.alias("id2")
             ),
         )
-        empty = F.transform(
-            F.slice(ids, 1, 0),
-            lambda y: F.struct(y.alias("id1"), y.alias("id2")),
-        )
         pair_expr = F.when(F.size(ids) <= star_over, chunk_pairs).otherwise(
-            F.when(F.col("_j") == 0, star).otherwise(empty)
+            star
         )
     else:
         pair_expr = chunk_pairs

@@ -1256,8 +1256,7 @@ class MirrorPipeline:
             for p in dv_parts[1:]:
                 dv_out = dv_out.unionByName(p)
             # one bitmap anti-join across every DV'd file in the batch
-            # (KB-scale compressed bitmaps driver-side, exploded
-            # executor-side, broadcast under 10M deleted rows — the
+            # (dv.deleted_rows, broadcast under 10M deleted rows — the
             # same pass read_snapshot applies)
             parts.append(
                 DL._apply_deletion_vectors(

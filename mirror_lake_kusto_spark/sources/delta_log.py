@@ -1917,46 +1917,26 @@ def _apply_deletion_vectors(
 ) -> DataFrame:
     """Filter ``out`` (which carries ``__mlk_file``/``__mlk_ridx``) by
     each file's deletion vector — Delta merge-on-read (PROTOCOL.md
-    "Deletion Vectors").
-
-    Scale shape: the driver touches only the COMPRESSED bitmaps
-    (KB-scale metadata, same class as the log); they are parallelized
-    one-row-per-file and exploded to (file, row_index) pairs
-    executor-side by an Arrow-batched pass, then removed with an
-    anti-join.  Total deleted cardinality is known from the
-    descriptors, so the small case broadcasts and the huge case
-    shuffles — never a driver list."""
+    "Deletion Vectors") — with an anti-join against the deleted
+    (file, row_index) pairs of :func:`dv.deleted_rows`.  Within the
+    broadcast bound, where the pair list lives on the driver anyway,
+    the driver decodes the bitmaps and the pairs are broadcast; beyond
+    it executors decode and the anti-join shuffles."""
     from . import dv as _dv
 
-    payloads = [
-        (
-            _fs.data_path_spelling(table_path, f["path"]),
-            bytearray(_dv.dv_payload(table_path, f["deletionVector"])),
-        )
-        for f in dv_files
-    ]
-    dv_df = spark.createDataFrame(
-        payloads, f"{file_col} string, __mlk_payload binary"
+    deleted = _dv.deleted_rows(
+        spark,
+        table_path,
+        [
+            (
+                _fs.data_path_spelling(table_path, f["path"]),
+                f["deletionVector"],
+            )
+            for f in dv_files
+        ],
+        file_col,
+        ridx_col,
     )
-
-    def explode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for fpath, payload in zip(
-                pdf[file_col], pdf["__mlk_payload"]
-            ):
-                idx = _dv.deserialize(bytes(payload))
-                yield pd.DataFrame(
-                    {file_col: fpath, ridx_col: idx}
-                )
-
-    deleted = dv_df.mapInPandas(
-        explode, f"{file_col} string, {ridx_col} long"
-    )
-    total = sum(int(f["deletionVector"]["cardinality"]) for f in dv_files)
-    if total <= 10_000_000:
-        deleted = F.broadcast(deleted)
     return out.join(
         deleted, [file_col, ridx_col], "left_anti"
     ).drop(file_col, ridx_col)
@@ -2087,8 +2067,8 @@ def classify_mor_commit(
     those lookups so plain CoW tables pay nothing.  ``blob_cache``
     lets a multi-commit caller share .bin reads across the span
     (consecutive delete_dv commits reuse each other's blobs).
-    Compressed payloads only — expansion is the caller's
-    executor-side job."""
+    Compressed payloads only — the caller expands them
+    (:func:`dv.deleted_rows`)."""
     from . import dv as _dv
 
     if blob_cache is None:
@@ -2330,7 +2310,7 @@ def read_changes(
     #: one-sided DV masks: (version, change, pv) -> [(rel, payload,
     #: cardinality)] — survivors only (anti join)
     apply_groups: dict[tuple, list[tuple]] = {}
-    from . import dv as _dv  # used by the pair-frame explode below
+    from . import dv as _dv  # used by _pair_frame below
 
     _dv_blob_cache: dict = {}  # span-wide: consecutive delete_dv
     # commits share .bin blobs (old side == previous new side)
@@ -2433,59 +2413,24 @@ def read_changes(
         )
 
     def _pair_frame(entries, delta: bool):
-        """(file, row_index[, _change_type]) pairs exploded from the
-        compressed bitmaps executor-side — the driver ships only the
-        KB-scale payloads (same shape as _apply_deletion_vectors)."""
-        rows = [
-            (
-                _fs.data_path_spelling(table_path, e[0]),
-                bytearray(e[1]),
-                bytearray(e[2]) if delta and e[2] is not None else None,
-            )
-            for e in entries
-        ]
-        pair_src = spark.createDataFrame(
-            rows, "__mlk_file string, __n binary, __o binary"
+        """(file, row_index, _change_type) pairs of the entries'
+        already-fetched payloads; ``delta`` pairs are the new∖old
+        deletes and old∖new inserts."""
+        return _dv.deleted_rows(
+            spark,
+            table_path,
+            [
+                (
+                    _fs.data_path_spelling(table_path, e[0]),
+                    e[1],
+                    e[2] if delta else None,
+                )
+                for e in entries
+            ],
+            "__mlk_file",
+            "__mlk_ridx",
+            "_change_type",
         )
-
-        def explode(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for fp, nb, ob in zip(
-                    pdf["__mlk_file"], pdf["__n"], pdf["__o"]
-                ):
-                    new = set(_dv.deserialize(bytes(nb)))
-                    old = (
-                        set(_dv.deserialize(bytes(ob)))
-                        if ob is not None
-                        else set()
-                    )
-                    if delta:
-                        dels = sorted(new - old)
-                        ins = sorted(old - new)
-                        yield pd.DataFrame(
-                            {
-                                "__mlk_file": fp,
-                                "__mlk_ridx": dels + ins,
-                                "_change_type": ["delete"] * len(dels)
-                                + ["insert"] * len(ins),
-                            }
-                        )
-                    else:
-                        yield pd.DataFrame(
-                            {
-                                "__mlk_file": fp,
-                                "__mlk_ridx": sorted(new),
-                                "_change_type": "delete",
-                            }
-                        )
-
-        pairs = pair_src.mapInPandas(
-            explode, "__mlk_file string, __mlk_ridx long, _change_type string"
-        )
-        total = sum(e[-1] for e in entries)
-        return F.broadcast(pairs) if total <= 10_000_000 else pairs
 
     def _finish(df, pv, v):
         for col_name, raw in pv:

@@ -2635,8 +2635,6 @@ class DeltaSink:
             wait,
         )
 
-        import threading
-
         # memoize the mapping once before the race (double-compute is
         # benign but wasteful)
         self._current_mapping()
@@ -3209,38 +3207,6 @@ class DeltaSink:
             actions.extend(acts)
         return self._commit(actions, operation="UPDATE")
 
-    def _old_dv_pairs_df(self, old_payloads: dict[str, bytes]):
-        """(file, row_index) pairs of EXISTING deletion vectors,
-        exploded executor-side from the compressed payloads — the
-        already-deleted row set DML probes must ignore.  Nothing
-        expands on the driver."""
-        from . import dv as _dv
-
-        pairs_src = self.spark.createDataFrame(
-            [(f, bytearray(p)) for f, p in old_payloads.items()],
-            "_f string, _payload binary",
-        )
-
-        def explode_old(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for fpath, payload in zip(pdf["_f"], pdf["_payload"]):
-                    yield pd.DataFrame(
-                        {
-                            "_f": fpath,
-                            "_ridx": list(_dv.deserialize(bytes(payload))),
-                        }
-                    )
-
-        return pairs_src.mapInPandas(explode_old, "_f string, _ridx long")
-
-    #: DV'd-file count above which existing-DV payloads are fetched by
-    #: EXECUTORS from descriptor rows instead of materializing every
-    #: payload on the driver — a 10M-file heavily-DV'd table must not
-    #: hold 10M bitmaps in driver memory (round-9 VERDICT ask)
-    _DV_DISTRIBUTED_FILES = 1024
-
     #: DV'd-file count up to which existing-DV DESCRIPTORS (not
     #: payloads — ~200 bytes each, already in the driver's snapshot
     #: listing) ship to executors as one sc.broadcast dict; above it
@@ -3249,15 +3215,13 @@ class DeltaSink:
     _DV_DESC_BROADCAST_FILES = 200_000
 
     def _old_dv_pairs(self, files):
-        """(file, _ridx) DataFrame of the table's EXISTING deletion
-        vectors, or None when it carries none.  Below
-        ``_DV_DISTRIBUTED_FILES`` the compressed payloads (KB each)
-        are read driver-side and parallelized; past it only the
-        DESCRIPTORS leave the driver and executors fetch + explode the
-        payloads themselves — driver RSS stays flat at any DV'd-file
-        count."""
-        import json as _json
-
+        """(_f, _ridx) DataFrame of the rows the table's EXISTING
+        deletion vectors delete, or None when it carries none — the
+        already-deleted row set DML probes must ignore.  Expansion is
+        :func:`dv.deleted_rows`: within the broadcast bound, where the
+        pair list lived on the driver anyway, the driver decodes;
+        beyond it (rows or DV'd files) executors fetch and decode the
+        payloads, so driver RSS stays flat at any DV'd-file count."""
         from . import dv as _dv
 
         dv_files = [
@@ -3267,47 +3231,17 @@ class DeltaSink:
         ]
         if not dv_files:
             return None
-        if len(dv_files) <= self._DV_DISTRIBUTED_FILES:
-            return self._old_dv_pairs_df(
-                {
-                    _fs.data_path_spelling(self.path, f["path"]): bytes(
-                        _dv.dv_payload(self.path, f["deletionVector"])
-                    )
-                    for f in dv_files
-                }
-            )
-        table_path = self.path
-        desc_df = self.spark.createDataFrame(
+        return _dv.deleted_rows(
+            self.spark,
+            self.path,
             [
                 (
                     _fs.data_path_spelling(self.path, f["path"]),
-                    _json.dumps(f["deletionVector"]),
+                    f["deletionVector"],
                 )
                 for f in dv_files
             ],
-            "_f string, _desc string",
-        ).repartition(min(len(dv_files) // 64 + 1, 256))
-
-        def explode_desc(batches):
-            import json as _j
-
-            import pandas as pd
-
-            from mirror_lake_kusto_spark.sources import dv as _dvx
-
-            for pdf in batches:
-                for fpath, dj in zip(pdf["_f"], pdf["_desc"]):
-                    payload = _dvx.dv_payload(table_path, _j.loads(dj))
-                    yield pd.DataFrame(
-                        {
-                            "_f": fpath,
-                            "_ridx": list(
-                                _dvx.deserialize(bytes(payload))
-                            ),
-                        }
-                    )
-
-        return desc_df.mapInPandas(explode_desc, "_f string, _ridx long")
+        )
 
     def _old_dv_desc_df(self, files):
         """Handle on the table's EXISTING deletion-vector DESCRIPTORS
@@ -4466,33 +4400,14 @@ class DeltaSink:
             return self._commit([], operation="REORG (PURGE)")
         types, data_schema = self._data_schema()
         now = int(time.time() * 1000)
-        payloads = [
-            (
-                _fs.data_path_spelling(self.path, p),
-                bytearray(_dv.dv_payload(self.path, d)),
-            )
-            for p, d in dvs.items()
-        ]
-        dv_df = self.spark.createDataFrame(
-            payloads, "_f string, _payload binary"
+        deleted = _dv.deleted_rows(
+            self.spark,
+            self.path,
+            [
+                (_fs.data_path_spelling(self.path, p), d)
+                for p, d in dvs.items()
+            ],
         )
-
-        def explode(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for fpath, payload in zip(pdf["_f"], pdf["_payload"]):
-                    yield pd.DataFrame(
-                        {
-                            "_f": fpath,
-                            "_ridx": _dv.deserialize(bytes(payload)),
-                        }
-                    )
-
-        deleted = dv_df.mapInPandas(explode, "_f string, _ridx long")
-        total = sum(int(d["cardinality"]) for d in dvs.values())
-        if total <= 10_000_000:
-            deleted = F.broadcast(deleted)
         norm_expr = _fs.spark_scan_path(F.input_file_name())
         groups = self._partition_groups()
         actions: list[dict] = []

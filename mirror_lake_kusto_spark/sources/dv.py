@@ -26,19 +26,27 @@ bitmap ``i`` holds the low 32 bits of indices with high 32 bits = i.
 The reference predates deletion vectors entirely
 (TransactionLogEntry.cs parses only classic actions and the engine
 refused such tables); this module upgrades the READ side so current
-Delta writers' tables (DV-enabled by default) can be queried, while
-the mirror pipeline still refuses to ingest DV'd files loudly.
+Delta writers' tables (DV-enabled by default) can be queried; the
+mirror pipeline ingests DV'd files only under ``on_dv="materialize"``.
 
 Scale posture: descriptors and compressed bitmaps are KB-scale driver
-metadata (same class as the log itself); EXPANSION to row indices
-happens executor-side (see delta_log.read_snapshot) — the driver never
-materializes a deleted-row list.
+metadata (same class as the log itself).  EXPANSION to (file,
+row_index) pairs has one home, :func:`deleted_rows`.  Within the
+broadcast bound (:data:`DRIVER_DECODE_ROWS` rows,
+:data:`DRIVER_DECODE_FILES` files) the driver decodes, with numpy, and
+hands Spark one Arrow table: the broadcast relation built from that
+pair list lives in the driver JVM anyway, so decoding there only
+removes a Python-worker round trip.  Beyond either bound executors
+fetch and decode, and the driver never holds a deleted-row list.
 """
 
 from __future__ import annotations
 
+import json
 import struct
 import zlib
+
+import numpy as np
 
 from . import fs as _fs
 
@@ -84,74 +92,102 @@ _SERIAL_COOKIE_NO_RUNS = 12346
 _NO_OFFSET_THRESHOLD = 4
 
 
-def _deserialize_bitmap32(buf: bytes, pos: int) -> tuple[list[int], int]:
-    """One standard 32-bit roaring bitmap starting at ``pos``; returns
-    (values, next_pos)."""
+def _layout32(buf, pos: int) -> tuple[list[tuple[int, int, str, int]], int]:
+    """Container directory of one standard 32-bit roaring bitmap
+    starting at ``pos``: ([(base, cardinality, kind, offset)], next_pos)
+    with kind ``run`` / ``array`` / ``bitset``.  Reads headers only, so
+    the cardinality of a payload costs no decode."""
     (cookie,) = struct.unpack_from("<I", buf, pos)
     start = pos
     pos += 4
-    run_bits = b""
     if (cookie & 0xFFFF) == _SERIAL_COOKIE:
         n = (cookie >> 16) + 1
         nb = (n + 7) // 8
-        run_bits = buf[pos : pos + nb]
+        is_run = np.unpackbits(
+            np.frombuffer(buf, np.uint8, nb, pos), bitorder="little"
+        )[:n]
         pos += nb
     elif cookie == _SERIAL_COOKIE_NO_RUNS:
         (n,) = struct.unpack_from("<I", buf, pos)
         pos += 4
+        is_run = np.zeros(n, np.uint8)
     else:
         raise ValueError(f"bad roaring cookie {cookie}")
-    keys, cards = [], []
-    for _ in range(n):
-        k, c = struct.unpack_from("<HH", buf, pos)
-        pos += 4
-        keys.append(k)
-        cards.append(c + 1)
-    has_offsets = cookie == _SERIAL_COOKIE_NO_RUNS or n >= _NO_OFFSET_THRESHOLD
+    head = np.frombuffer(buf, "<u2", 2 * n, pos).reshape(n, 2)
+    pos += 4 * n
     offsets = None
-    if has_offsets:
-        offsets = list(struct.unpack_from(f"<{n}I", buf, pos))
+    if cookie == _SERIAL_COOKIE_NO_RUNS or n >= _NO_OFFSET_THRESHOLD:
+        offsets = np.frombuffer(buf, "<u4", n, pos)
         pos += 4 * n
-    values: list[int] = []
+    out = []
     for i in range(n):
         if offsets is not None:
-            pos = start + offsets[i]
-        base = keys[i] << 16
-        is_run = bool(run_bits and (run_bits[i // 8] >> (i % 8)) & 1)
-        if is_run:
-            (n_runs,) = struct.unpack_from("<H", buf, pos)
-            pos += 2
-            for _ in range(n_runs):
-                lo, ln = struct.unpack_from("<HH", buf, pos)
-                pos += 4
-                values.extend(range(base + lo, base + lo + ln + 1))
-        elif cards[i] <= 4096:
-            vals = struct.unpack_from(f"<{cards[i]}H", buf, pos)
-            pos += 2 * cards[i]
-            values.extend(base + v for v in vals)
+            pos = start + int(offsets[i])
+        card = int(head[i, 1]) + 1
+        if is_run[i]:
+            kind, size = "run", 2 + 4 * struct.unpack_from("<H", buf, pos)[0]
+        elif card <= 4096:
+            kind, size = "array", 2 * card
         else:
-            words = struct.unpack_from("<1024Q", buf, pos)
-            pos += 8192
-            for wi, w in enumerate(words):
-                while w:
-                    b = w & -w
-                    values.append(base + (wi << 6) + b.bit_length() - 1)
-                    w ^= b
-    return values, pos
+            kind, size = "bitset", 8192
+        out.append((int(head[i, 0]) << 16, card, kind, pos))
+        pos += size
+    return out, pos
 
 
-def deserialize(data: bytes) -> list[int]:
-    """Serialized RoaringBitmapArray -> sorted 64-bit row indices."""
+def _layout(data) -> list[tuple[int, int, str, int]]:
+    """Container directory of a serialized RoaringBitmapArray, bases
+    widened to 64 bits (bitmap ``i`` holds indices with high word i)."""
     (magic,) = struct.unpack_from("<i", data, 0)
     if magic != MAGIC:
         raise ValueError(f"bad deletion-vector magic {magic}")
     (count,) = struct.unpack_from("<q", data, 4)
     pos = 12
-    out: list[int] = []
+    out = []
     for hi in range(count):
-        vals, pos = _deserialize_bitmap32(data, pos)
-        out.extend((hi << 32) | v for v in vals)
+        conts, pos = _layout32(data, pos)
+        out.extend((hi << 32 | b, c, k, o) for b, c, k, o in conts)
     return out
+
+
+def cardinality(data) -> int:
+    """Number of row indices in a serialized RoaringBitmapArray, from
+    its container headers alone."""
+    return sum(c for _b, c, _k, _o in _layout(data))
+
+
+def decode(data) -> np.ndarray:
+    """Serialized RoaringBitmapArray -> sorted int64 row indices, one
+    numpy operation per container: ``frombuffer`` for arrays,
+    ``unpackbits`` for bitsets, a shifted ``arange`` for runs."""
+    parts = [np.empty(0, np.int64)]
+    for base, card, kind, pos in _layout(data):
+        if kind == "array":
+            vals = np.frombuffer(data, "<u2", card, pos).astype(np.int64)
+        elif kind == "bitset":
+            vals = np.flatnonzero(
+                np.unpackbits(
+                    np.frombuffer(data, np.uint8, 8192, pos),
+                    bitorder="little",
+                )
+            )
+        else:
+            (n_runs,) = struct.unpack_from("<H", data, pos)
+            runs = np.frombuffer(data, "<u2", 2 * n_runs, pos + 2)
+            starts = runs[0::2].astype(np.int64)
+            lens = runs[1::2].astype(np.int64) + 1
+            # run r covers starts[r] .. starts[r] + lens[r] - 1: one
+            # arange over all runs, shifted back to each run's start
+            vals = np.arange(lens.sum()) + np.repeat(
+                starts - (np.cumsum(lens) - lens), lens
+            )
+        parts.append(vals + base)
+    return np.concatenate(parts)
+
+
+def deserialize(data: bytes) -> list[int]:
+    """Serialized RoaringBitmapArray -> sorted 64-bit row indices."""
+    return decode(data).tolist()
 
 
 def _serialize_bitmap32(values: list[int]) -> bytes:
@@ -308,7 +344,7 @@ def dv_payload(
     table_path: str, desc: dict, blob_cache: dict | None = None
 ) -> bytes:
     """Resolve a descriptor to its serialized bitmap bytes (KB-scale
-    driver metadata; the expansion to row indices runs executor-side).
+    metadata; :func:`deleted_rows` decides where they are expanded).
     ``blob_cache`` (path -> bytes) memoizes the .bin reads across a
     batch of descriptors — delete_dv packs a whole commit's vectors
     into ONE shared file, so N descriptors otherwise re-read and
@@ -342,3 +378,145 @@ def dv_payload(
     if crc != (zlib.crc32(payload) & 0xFFFFFFFF):
         raise ValueError("deletion vector payload failed CRC-32 check")
     return payload
+
+
+# -- expansion to (file, row_index) pairs --------------------------------
+
+#: Bounds of the driver-side decode in :func:`deleted_rows`: total
+#: deleted rows (the bound under which the pair list is broadcast, so
+#: the driver JVM already holds all of it) and DV'd files (above which
+#: payloads are not fetched one by one on the driver).
+DRIVER_DECODE_ROWS = 10_000_000
+DRIVER_DECODE_FILES = 1024
+
+
+def _card(dv) -> int:
+    """Cardinality of a descriptor, a payload, or None (no vector)."""
+    if dv is None:
+        return 0
+    if isinstance(dv, dict):
+        return int(dv["cardinality"])
+    return cardinality(dv)
+
+
+def _pairs_table(chunks, file_col, ridx_col, change_col):
+    """Arrow (file, row_index[, change]) table from (file, sorted
+    int64 indices, change) chunks; file and change are
+    dictionary-encoded, so a file's path is stored once, not per row."""
+    import pyarrow as pa
+
+    lens = [len(a) for _f, a, _c in chunks]
+    cols = {
+        file_col: pa.DictionaryArray.from_arrays(
+            np.repeat(np.arange(len(chunks), dtype=np.int32), lens),
+            pa.array([f for f, _a, _c in chunks], pa.string()),
+        ),
+        ridx_col: np.concatenate(
+            [np.empty(0, np.int64)] + [a for _f, a, _c in chunks]
+        ),
+    }
+    if change_col is not None:
+        kinds = ["delete", "insert"]
+        cols[change_col] = pa.DictionaryArray.from_arrays(
+            np.repeat(
+                np.array([kinds.index(c) for _f, _a, c in chunks], np.int32),
+                lens,
+            ),
+            pa.array(kinds),
+        )
+    return pa.table(cols)
+
+
+def _chunks(table_path, entries, delta: bool):
+    """Fetch and decode each (file, new, old) entry: its rows, or with
+    ``delta`` the bitmap delta — new∖old as deletes, old∖new as
+    inserts."""
+    blob_cache: dict = {}
+
+    def rows_of(dv):
+        if isinstance(dv, dict):
+            dv = dv_payload(table_path, dv, blob_cache)
+        return decode(dv)
+
+    out = []
+    for f, new, old in entries:
+        rows = rows_of(new)
+        if not delta:
+            out.append((f, rows, None))
+            continue
+        prior = rows_of(old) if old is not None else rows[:0]
+        for a, b, change in ((rows, prior, "delete"), (prior, rows, "insert")):
+            out.append((f, np.setdiff1d(a, b, assume_unique=True), change))
+    return out
+
+
+def deleted_rows(
+    spark,
+    table_path: str,
+    dvs: list[tuple],
+    file_col: str = "_f",
+    ridx_col: str = "_ridx",
+    change_col: str | None = None,
+):
+    """The (file, row_index) DataFrame of the rows deleted by ``dvs`` —
+    the single home of deletion-vector expansion.
+
+    ``dvs`` holds ``(file, dv)`` pairs, or with ``change_col``
+    ``(file, new_dv, old_dv)`` triples whose rows are the bitmap delta
+    tagged ``delete`` (new∖old) / ``insert`` (old∖new).  A ``dv`` is a
+    descriptor dict or an already-fetched payload; ``old_dv`` may be
+    None.  ``file`` is used verbatim as the join key.
+
+    Within :data:`DRIVER_DECODE_ROWS` total rows and
+    :data:`DRIVER_DECODE_FILES` files the driver fetches and decodes
+    the payloads and hands Spark one Arrow table — the broadcast the
+    pair list feeds is built in the driver anyway, so this only drops
+    the Python-worker round trip.  Beyond either bound executors fetch
+    and decode in one ``mapInArrow`` pass.  The frame is broadcast
+    whenever its rows are within the row bound."""
+    import pyarrow as pa
+    import pyspark.sql.functions as F
+
+    def pairs_table(entries):
+        chunks = _chunks(table_path, entries, change_col is not None)
+        return _pairs_table(chunks, file_col, ridx_col, change_col)
+
+    entries = [(e[0], e[1], e[2] if len(e) > 2 else None) for e in dvs]
+    total = sum(_card(new) + _card(old) for _f, new, old in entries)
+    if total <= DRIVER_DECODE_ROWS and len(entries) <= DRIVER_DECODE_FILES:
+        return F.broadcast(spark.createDataFrame(pairs_table(entries)))
+
+    def ship(dv):
+        # descriptors travel as JSON, fetched payloads as bytes
+        if isinstance(dv, dict):
+            return json.dumps(dv), None
+        return None, (None if dv is None else bytes(dv))
+
+    def land(desc, payload):
+        return json.loads(desc) if desc is not None else payload
+
+    src = spark.createDataFrame(
+        [(f, *ship(new), *ship(old)) for f, new, old in entries],
+        "f string, new_desc string, new binary, old_desc string, old binary",
+    )
+    names = [file_col, ridx_col] + ([change_col] if change_col else [])
+    # mapInArrow takes no dictionary columns: decode them to strings
+    plain = pa.schema(
+        [(n, pa.int64() if n == ridx_col else pa.string()) for n in names]
+    )
+
+    def expand(batches):
+        for batch in batches:
+            b = batch.to_pydict()
+            cols = ("f", "new_desc", "new", "old_desc", "old")
+            entries = [
+                (f, land(nd, nb), land(od, ob))
+                for f, nd, nb, od, ob in zip(*(b[c] for c in cols))
+            ]
+            yield from pairs_table(entries).cast(plain).to_batches()
+
+    ddl = ", ".join(
+        f"{n} {'long' if n == ridx_col else 'string'}" for n in names
+    )
+    pairs = src.mapInArrow(expand, ddl)
+    return F.broadcast(pairs) if total <= DRIVER_DECODE_ROWS else pairs

@@ -769,6 +769,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
     def read(self, partition: _FilePartition):
         # executor-side: parquet -> Arrow batches, partition constants
         # appended typed, columns ordered to the declared schema
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -782,10 +783,14 @@ class DeltaLogStreamReader(DataSourceStreamReader):
             # halves the scan cost of every ordinary delete_dv commit
             from ..sources import dv as _dv
 
-            keep_idx = set(_dv.deserialize(partition.dv_payload))
+            keep_idx = _dv.decode(partition.dv_payload)
             if partition.dv_old_payload is not None:
-                keep_idx -= set(_dv.deserialize(partition.dv_old_payload))
-            if not keep_idx:
+                keep_idx = np.setdiff1d(
+                    keep_idx,
+                    _dv.decode(partition.dv_old_payload),
+                    assume_unique=True,
+                )
+            if not len(keep_idx):
                 return
 
         parsed = json.loads(partition.schema_json)
@@ -805,8 +810,6 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         arrow_schema = to_arrow_schema(schema)
         want_row_ids = any(f.name == ROW_ID_IDX_COL for f in arrow_schema)
         table = pq.read_table(partition.file_path)
-        import numpy as np
-
         row_idx = None  # original in-file indices of the emitted rows
         if partition.dv_payload is not None:
             # merge-on-read: "apply" drops the deletion vector's row
@@ -818,16 +821,11 @@ class DeltaLogStreamReader(DataSourceStreamReader):
 
             if partition.dv_mode == "apply":
                 mask = np.ones(table.num_rows, dtype=bool)
-                mask[
-                    np.array(
-                        _dv.deserialize(partition.dv_payload),
-                        dtype=np.int64,
-                    )
-                ] = False
+                mask[_dv.decode(partition.dv_payload)] = False
             else:
                 # keep_idx computed (non-empty) before the file read
                 mask = np.zeros(table.num_rows, dtype=bool)
-                mask[np.array(sorted(keep_idx), dtype=np.int64)] = True
+                mask[keep_idx] = True
             table = table.filter(pa.array(mask))
             if want_row_ids:
                 row_idx = np.nonzero(mask)[0]

@@ -23,34 +23,122 @@ from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
 # -- codec ----------------------------------------------------------------
 
 
+def _assert_decodes(payload, expected):
+    """The numpy decoder, its list twin and the header-only cardinality
+    all agree with the expected row indices."""
+    got = dvm.decode(payload)
+    assert got.dtype.name == "int64"
+    assert got.tolist() == expected
+    assert dvm.deserialize(payload) == expected
+    assert dvm.cardinality(payload) == len(expected)
+
+
 def test_roaring_roundtrip_container_shapes():
     cases = [
-        [],
+        [],  # empty DV: zero bitmaps
         [0],
         [1, 3],
         list(range(5000)),  # spans two keys, array containers
         list(range(0, 65536, 3)),  # >4096 in one key -> bitset container
+        list(range(65536)),  # a full key: all-ones bitset
         [7, 65536 * 3 + 2, (1 << 32) + 5, (3 << 32) + 1],  # multi-bitmap
+        # >= 2^32, with an empty bitmap between two populated ones and
+        # a bitset container in a high bitmap
+        [(2 << 32) + v for v in range(0, 30000, 5)] + [(4 << 32) + 65535],
+        # >= 4 containers: the offset table is present
+        [k << 16 | 9 for k in range(6)]
+        + [(1 << 32) | k << 16 for k in range(5)],
     ]
     rng = random.Random(42)
     cases.append(sorted(rng.sample(range(1 << 20), 9000)))
+    cases.append(rng.sample(range(1 << 34), 3000))  # many high bitmaps
     for idx in cases:
-        assert dvm.deserialize(dvm.serialize(list(idx))) == sorted(set(idx))
+        _assert_decodes(dvm.serialize(list(idx)), sorted(set(idx)))
+
+
+def _run_cookie_bitmap(containers):
+    """One standard roaring bitmap under the RUN cookie (the layout
+    foreign writers emit; our writer never does) from (key, kind,
+    values) containers, kind run / array / bitset.  The offset table
+    is present only from 4 containers on, as the spec requires."""
+    import struct
+
+    n = len(containers)
+    run_bits = bytearray((n + 7) // 8)
+    desc, bodies = b"", []
+    for i, (key, kind, vals) in enumerate(containers):
+        desc += struct.pack("<HH", key, len(vals) - 1)
+        if kind == "run":
+            run_bits[i // 8] |= 1 << (i % 8)
+            runs: list[list[int]] = []
+            for v in vals:
+                if runs and v == runs[-1][0] + runs[-1][1] + 1:
+                    runs[-1][1] += 1
+                else:
+                    runs.append([v, 0])
+            bodies.append(
+                struct.pack("<H", len(runs))
+                + b"".join(struct.pack("<HH", a, ln) for a, ln in runs)
+            )
+        elif kind == "array":
+            bodies.append(struct.pack(f"<{len(vals)}H", *vals))
+        else:
+            words = [0] * 1024
+            for v in vals:
+                words[v >> 6] |= 1 << (v & 63)
+            bodies.append(struct.pack("<1024Q", *words))
+    head = struct.pack("<I", (n - 1) << 16 | 12347) + bytes(run_bits) + desc
+    if n >= 4:
+        off, offsets = len(head) + 4 * n, []
+        for b in bodies:
+            offsets.append(off)
+            off += len(b)
+        head += struct.pack(f"<{n}I", *offsets)
+    return head + b"".join(bodies)
 
 
 def test_roaring_reads_run_containers():
-    """Foreign writers may emit run containers — hand-build one and
-    read it (our writer never produces runs, readers must accept)."""
+    """Foreign writers may emit run containers — hand-build them, mixed
+    with array and bitset containers, and read them."""
     import struct
 
-    # one bitmap, one run container [10, 14] ∪ [100, 100]
-    cookie = (1 - 1) << 16 | 12347
-    run_bits = b"\x01"
-    desc = struct.pack("<HH", 0, 6 - 1)
-    runs = struct.pack("<HHHHH", 2, 10, 4, 100, 0)
-    bm = struct.pack("<I", cookie) + run_bits + desc + runs
-    payload = struct.pack("<iq", dvm.MAGIC, 1) + bm
-    assert dvm.deserialize(payload) == [10, 11, 12, 13, 14, 100]
+    def payload(*bitmaps):
+        return struct.pack("<iq", dvm.MAGIC, len(bitmaps)) + b"".join(
+            _run_cookie_bitmap(b) for b in bitmaps
+        )
+
+    def expected(*bitmaps):
+        return sorted(
+            hi << 32 | key << 16 | v
+            for hi, b in enumerate(bitmaps)
+            for key, _kind, vals in b
+            for v in vals
+        )
+
+    cases = [
+        # one run container [10, 14] ∪ [100, 100]
+        [[(0, "run", [10, 11, 12, 13, 14, 100])]],
+        # two containers, no offset table
+        [[(0, "run", list(range(3, 40))), (1, "array", [0, 7, 65535])]],
+        # five containers (offset table): runs, array, bitset, full key
+        [
+            [
+                (0, "run", list(range(0, 9)) + list(range(20, 30)) + [99]),
+                (1, "array", [5, 500, 5000]),
+                (2, "bitset", list(range(0, 65536, 7))),
+                (3, "run", list(range(65536))),
+                (9, "run", [65535]),
+            ]
+        ],
+        # row indices >= 2^32: runs in the second and third bitmaps
+        [
+            [(0, "array", [1])],
+            [(0, "run", list(range(100, 200)))],
+            [(4, "run", list(range(60000, 65536))), (5, "array", [2])],
+        ],
+    ]
+    for bitmaps in cases:
+        _assert_decodes(payload(*bitmaps), expected(*bitmaps))
 
 
 def test_z85_roundtrip():
@@ -144,6 +232,40 @@ def test_dv_read_with_predicate_still_exact(spark, tmp_path):
         for r in DL.read_snapshot(spark, path, predicate="n >= 2").collect()
     )
     assert got == [2, 4, 5, 6, 7, 8, 9]
+
+
+def test_dv_expansion_runs_no_python_worker_within_bounds(
+    spark, tmp_path, monkeypatch
+):
+    """Within the broadcast bound the driver decodes the bitmaps: the
+    executed plan of a DV read has no Python node.  Past the bounds
+    (forced to 0) executors decode, through one mapInArrow pass, and
+    the rows are identical."""
+    sink = DeltaSink(spark, str(tmp_path / "t"))
+    for lo in (0, 50):
+        sink.append(
+            spark.range(lo, lo + 50)
+            .selectExpr("id", "id % 7 AS k")
+            .coalesce(2)
+        )
+    sink.delete_dv("k = 3")
+
+    def read():
+        df = DL.read_snapshot(spark, sink.path)
+        rows = sorted(r.id for r in df.collect())
+        plan = spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        return rows, plan
+
+    rows, plan = read()
+    assert rows == [i for i in range(100) if i % 7 != 3]
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
+    monkeypatch.setattr(dvm, "DRIVER_DECODE_ROWS", 0)
+    monkeypatch.setattr(dvm, "DRIVER_DECODE_FILES", 0)
+    dist_rows, dist_plan = read()
+    assert "MapInArrow" in dist_plan
+    assert dist_rows == rows
 
 
 def test_protocol_guard_still_rejects_unknown_features(spark, tmp_path):

@@ -354,6 +354,26 @@ def test_minhash_bucket_width_cap_bounds_candidates(spark):
     assert len(capped) == 119
 
 
+def test_star_bucket_crosses_repartition_as_one_row(spark):
+    """A star bucket wider than one pair chunk (64 ids) expands from a
+    SINGLE row — not ceil(K/64) rows each carrying its full id array
+    through the repartition — and still emits every head-member pair
+    exactly once; an all-pairs bucket beside it keeps its chunks."""
+    wide = list(range(200))  # star: 4 chunk rows if it were chunked
+    narrow = list(range(1000, 1100))  # all-pairs: 2 chunk rows
+    grouped = spark.createDataFrame([(wide,), (narrow,)], "ids array<long>")
+    rows = dedup._chunk_rows(grouped, star_over=150).collect()
+    assert sorted(len(r.ids) for r in rows) == [100, 100, 200]
+    pairs = [
+        (r.id1, r.id2)
+        for r in dedup._pairs_from_groups(grouped, star_over=150).collect()
+    ]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == {(0, m) for m in wide[1:]} | {
+        (a, b) for i, a in enumerate(narrow) for b in narrow[i + 1 :]
+    }
+
+
 def test_minhash_bucket_cap_noop_when_buckets_narrow(spark, docs):
     """With a generous cap (the production configuration) results are
     identical to the uncapped exact-verified output."""

@@ -1,20 +1,21 @@
 """Round-9 distributed DV-payload handling: past
-``_DV_DISTRIBUTED_FILES`` DV'd files, existing bitmap payloads are
-fetched and exploded by EXECUTORS from descriptor rows — the driver
+``dv.DRIVER_DECODE_FILES`` DV'd files, existing bitmap payloads are
+fetched and decoded by EXECUTORS from descriptor rows — the driver
 never materializes a payload dict (flat RSS at any DV'd-file count).
 These tests force the distributed path (threshold 0) and assert it is
-result-identical to the broadcast path on every merge-on-read DML.
+result-identical to the driver-decode path on every merge-on-read DML.
 """
 
 import pytest
 
 from mirror_lake_kusto_spark.sources import delta_log as DL
+from mirror_lake_kusto_spark.sources import dv as dvm
 from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
 
 
 @pytest.fixture
 def dist(monkeypatch):
-    monkeypatch.setattr(DeltaSink, "_DV_DISTRIBUTED_FILES", 0)
+    monkeypatch.setattr(dvm, "DRIVER_DECODE_FILES", 0)
 
 
 def _mk(spark, tmp_path):
@@ -78,7 +79,7 @@ def test_distributed_equals_broadcast(spark, tmp_path, monkeypatch):
     """Same DML sequence under both thresholds -> identical tables."""
     results = {}
     for name, thresh in (("bc", 10_000), ("dist", 0)):
-        monkeypatch.setattr(DeltaSink, "_DV_DISTRIBUTED_FILES", thresh)
+        monkeypatch.setattr(dvm, "DRIVER_DECODE_FILES", thresh)
         sink = DeltaSink(spark, str(tmp_path / name))
         for lo in (0, 30):
             sink.append(

@@ -521,13 +521,14 @@ def probe_many_dvd_files(spark) -> list[str]:
     """Round-9 scale evidence: a table where EVERY one of ~10k files
     already carries a deletion vector, hit with a second merge-on-read
     delete.  The old code materialized every existing payload in a
-    driver dict and broadcast it; past _DV_DISTRIBUTED_FILES (1024)
-    the payloads are now fetched+exploded by executors from descriptor
+    driver dict and broadcast it; past dv.DRIVER_DECODE_FILES (1024)
+    the payloads are now fetched+decoded by executors from descriptor
     rows.  Both paths run on identical tables; wall and driver-RSS
     delta compared."""
     import shutil
 
     from mirror_lake_kusto_spark.sources import delta_log as DL
+    from mirror_lake_kusto_spark.sources import dv as DV
     from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
 
     n_files = 10_000
@@ -548,8 +549,8 @@ def probe_many_dvd_files(spark) -> list[str]:
     for label, thresh in (("distributed", 1024), ("driver-dict", 10**9)):
         path = f"/tmp/mlk_scale_manydv_{label}"
         sink = build(path)
-        old_thresh = DeltaSink._DV_DISTRIBUTED_FILES
-        DeltaSink._DV_DISTRIBUTED_FILES = thresh
+        old_thresh = DV.DRIVER_DECODE_FILES
+        DV.DRIVER_DECODE_FILES = thresh
         try:
             rss0 = rss_mb()
             t0 = time.time()
@@ -557,7 +558,7 @@ def probe_many_dvd_files(spark) -> list[str]:
             wall = time.time() - t0
             rss1 = rss_mb()
         finally:
-            DeltaSink._DV_DISTRIBUTED_FILES = old_thresh
+            DV.DRIVER_DECODE_FILES = old_thresh
         cnt = DL.read_snapshot(spark, path).count()
         assert cnt == n * 8 // 10, cnt
         results[label] = (wall, rss1 - rss0, rss1)
