@@ -38,6 +38,7 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 from . import fs as _fs
 from .skipping import file_stats_json
@@ -136,18 +137,21 @@ def _safe_parquet_meta(path: str):
 
 
 def _spark_row_counts(spark, root: str) -> dict[str, int]:
-    """Rows per parquet file under ``root`` in ONE distributed job —
-    the footer-free fallback for files pyarrow cannot open."""
-    import pyspark.sql.functions as F
-
-    fs = _fs.get_fs(root)
+    """Rows per parquet file under ``root``, keyed by the file's path
+    below ``root`` as spelled on disk, in ONE distributed job — the
+    footer-free fallback for files pyarrow cannot open."""
+    below = f"/{root.rstrip('/').rsplit('/', 1)[-1]}/"
     rows = (
         spark.read.parquet(root)
-        .groupBy(F.col("_metadata.file_path").alias("p"))
+        .groupBy(
+            F.substring_index(
+                _fs.spark_scan_path(F.col("_metadata.file_path")), below, -1
+            ).alias("p")
+        )
         .count()
         .collect()
     )
-    return {fs.normalize(r["p"]): int(r["count"]) for r in rows}
+    return {r["p"]: int(r["count"]) for r in rows}
 
 
 class CommitCoordinator:
@@ -342,6 +346,30 @@ def _actions_parquet_bytes(rows: list[dict], spark_schema) -> bytes:
     return buf.getvalue().to_pybytes()
 
 
+#: the DML core's per-row tag: NULL (untouched), 'delete' or 'update'
+_ACT = "__mlk_act"
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """Union by name; a column some frame lacks reads NULL there."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
+def _remove(f: dict, now: int, data_change: bool = True) -> dict:
+    """Remove action for snapshot file ``f``."""
+    return {
+        "remove": {
+            "path": f["path"],
+            "deletionTimestamp": now,
+            "dataChange": data_change,
+            "partitionValues": f["partitionValues"] or {},
+        }
+    }
+
+
 def _stamp_mapping_identity(
     fields: list[dict], conf: dict
 ) -> tuple[list[dict], int]:
@@ -365,7 +393,19 @@ def _stamp_mapping_identity(
 
 
 class DeltaSink:
-    """Append / delete / optimize on a local or shared-FS Delta table."""
+    """Append / delete / optimize on a local or shared-FS Delta table.
+
+    Row-level DML runs ONE pipeline, :meth:`_dml`: match → touched
+    files → write strategy → CDF → actions → :meth:`_commit`.  The
+    copy-on-write verbs (``delete``/``update``/``merge``) and their
+    deletion-vector twins (``delete_dv``/``update_dv``/``merge_dv``)
+    differ only in the strategy flag; each verb plugs in its matcher
+    (:meth:`_where`'s predicate, or ``_merge``'s key join), its
+    new-rows step (none, ``_update``'s cast assignments, ``_merge``'s
+    source join) and — through the tags its matcher sets — its change
+    types.  Every read goes through :meth:`_dml_scan`, every staged
+    file through :meth:`_stage_adds`; ``reorg`` and ``optimize`` reuse
+    the same scan and rewrite (:meth:`_rewrite`)."""
 
     def __init__(
         self,
@@ -1085,39 +1125,31 @@ class DeltaSink:
         return self._rt_mats_cache
 
     def _materialize_row_ids(
-        self, df, paths: list[str], mat_id: str, mat_rcv: str | None
+        self, df, files: list[dict], mat_id: str, mat_rcv: str | None
     ):
         """Fill the materialized row-id / commit-version columns for
-        rows that still carry fresh (positional) ids: value =
+        rows (of snapshot ``files``, identified by ``_f``/``_ridx``)
+        that still carry fresh (positional) ids: value =
         ``add.baseRowId + physical row index``, resolved by a
-        BROADCAST join against the group's per-file id frame (metadata-
-        sized; a literal map would bloat the plan on 10k-file groups).
-        Rows whose materialized value is already set keep it."""
-        from .delta_log import snapshot_files
-
-        info = {
-            f["path"]: (
-                f.get("baseRowId"),
-                f.get("defaultRowCommitVersion"),
-            )
-            for f in snapshot_files(self.spark, self.path)
-        }
-        id_rows = [
-            (
-                _fs.data_path_spelling(self.path, rel),
-                *(info.get(rel) or (None, None)),
-            )
-            for rel in paths
-        ]
+        BROADCAST join against the per-file id frame (metadata-sized;
+        a literal map would bloat the plan on 10k-file groups).  Rows
+        whose materialized value is already set keep it."""
         ids = F.broadcast(
             self.spark.createDataFrame(
-                id_rows,
-                "__mlk_rtfile string, __mlk_base long, __mlk_frcv long",
+                [
+                    (
+                        _fs.data_path_spelling(self.path, f["path"]),
+                        f.get("baseRowId"),
+                        f.get("defaultRowCommitVersion"),
+                    )
+                    for f in files
+                ],
+                "_f string, __mlk_base long, __mlk_frcv long",
             )
         )
-        df = df.join(ids, "__mlk_rtfile", "left")
+        df = df.join(ids, "_f", "left")
         for col, fresh in (
-            (mat_id, F.col("__mlk_base") + F.col("__mlk_rtridx")),
+            (mat_id, F.col("__mlk_base") + F.col("_ridx")),
             (mat_rcv, F.col("__mlk_frcv")),
         ):
             if not col:
@@ -1128,8 +1160,6 @@ class DeltaSink:
                 else F.lit(None).cast("long")
             )
             df = df.withColumn(col, F.coalesce(have, fresh))
-        # keep the identity helpers: the caller's transform may use
-        # them (reorg's DV anti-join); _rewrite_group drops them last
         return df.drop("__mlk_base", "__mlk_frcv")
 
     def _check_conflicts(self, versions, actions: list[dict]) -> None:
@@ -1876,17 +1906,22 @@ class DeltaSink:
                 self._pending_schema = wm["metaData"]["schemaString"]
         op = "WRITE" if data_change else "WRITE (dataChange=false)"
         if txn is not None:
-            adds.insert(
-                0,
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": txn[1],
-                        "lastUpdated": int(time.time() * 1000),
-                    }
-                },
-            )
+            adds.insert(0, self._txn_action(txn))
         return self._commit([*extra_actions, *adds], operation=op)
+
+    @staticmethod
+    def _txn_action(txn: tuple[str, int]) -> dict:
+        """Delta ``txn`` action for ``txn=(app_id, version)``: riding
+        the data commit, it lets a writer that crashed after committing
+        find the fact via last_txn_version and not re-apply (I3
+        exactly-once) — append's and merge's idempotence contract."""
+        return {
+            "txn": {
+                "appId": txn[0],
+                "version": txn[1],
+                "lastUpdated": int(time.time() * 1000),
+            }
+        }
 
     #: memoized _current_mapping result; False = not yet computed.
     #: Invalidated by evolve_rename (the only in-process mutation) and
@@ -1970,92 +2005,134 @@ class DeltaSink:
     def _stage_adds(
         self,
         df: DataFrame,
-        data_change: bool,
+        data_change: bool = True,
         skip_empty: bool = False,
         tags: dict[str, str] | None = None,
+        part_values: dict[str, str] | None = None,
+        cdc: bool = False,
     ) -> list[dict]:
-        """Distributed parquet write to a staging dir, then O(new files)
-        driver-side moves into place — returns the add actions (with
-        full stats) for the caller's commit.  Shared by append() (which
-        keeps zero-row parts: empty adds are a legitimate log shape the
-        mirror must handle, O4) and merge()'s not-matched-insert path
-        (which skips them).
+        """The ONE staged-file publisher: a distributed parquet write to
+        a fresh ``_staging_<uuid>`` dir, then O(new files) driver-side
+        footer reads and moves into place — returns the actions (adds
+        with full stats) for the caller's commit.  Zero-row files are
+        kept only for a plain append (empty adds are a legitimate log
+        shape the mirror must handle, O4); ``skip_empty`` and change
+        files drop them.
 
-        On a column-mapped table (post-``evolve_rename``) the data
-        files must carry PHYSICAL column names (PROTOCOL.md "Column
-        Mapping": add.partitionValues keys, directory names, and file
-        stats are all physical) — the logical frame is renamed right
-        before the write, so partition dirs and stats come out physical
-        for free."""
-        import pyspark.sql.functions as F
+        Layout: by default ``df`` carries the partition columns and the
+        write partitions by them (partitionValues read back off the
+        directories).  ``part_values`` instead places a rewrite's
+        partition-free rows into that one partition's directory.
+        ``cdc`` stages change-data files under ``_change_data/`` and
+        returns ``cdc`` actions (always ``dataChange: false``, never
+        checkpointed — PROTOCOL.md "Add CDC File").
 
-        mapping = self._current_mapping()
-        part_by = self.partition_by
+        On a column-mapped table (post-``evolve_rename``) the files
+        must carry PHYSICAL column names (PROTOCOL.md "Column Mapping":
+        add.partitionValues keys, directory names, and file stats are
+        all physical; change files store their columns exactly as data
+        files do) — the logical frame is renamed right before the
+        write, so partition dirs and stats come out physical for free.
+
+        A failure anywhere removes the staging dir and every file
+        already moved, then re-raises: nothing is left behind that no
+        commit will ever reference (``vacuum`` skips ``_staging_``)."""
+        from .delta_log import partition_subdir
+
+        mapping = self._current_mapping() or {}
         if mapping:
             df = df.select(
                 *[df[c].alias(mapping.get(c, c)) for c in df.columns]
             )
-            part_by = [mapping.get(c, c) for c in self.partition_by]
+        part_by = (
+            [] if part_values is not None
+            else [mapping.get(c, c) for c in self.partition_by]
+        )
         tmp = _fs.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        writer = df.write
-        if part_by:
-            writer = writer.partitionBy(*part_by)
-        writer.parquet(tmp)
-
-        # NOTE (r13, measured): the commit-assembly tail below (footer
-        # read + rename per file) was suspected as the per-commit
-        # floor's next lever and rebuilt with a 16-thread pool — the
-        # pool measured 14x SLOWER on this page-cached local FS
-        # (footer reads are ~46 µs serial and do not release the GIL
-        # long enough to overlap; 1024 files: 0.047 s serial vs
-        # 0.64 s pooled), and the whole serial tail is ~1.5 % of a
-        # 1024-file commit (0.07 s of 4.5 s — the write JOB is the
-        # floor).  Reverted; see tools/probe_commit_floor.py and
-        # OPTIMIZATION_r13.md.  On an object store (ms-latency
-        # round trips) a pool would win — revisit only with such a
-        # backend to measure against.
-        adds: list[dict] = []
-        counts: dict[str, int] | None = None
-        for dirpath, _dirs, files in self.fs.walk(tmp):
-            rel_dir = dirpath[len(tmp):].strip("/") or "."
-            part_values = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split("/"):
-                    k, _, val = seg.partition("=")
-                    part_values[k] = val
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                src = _fs.join(dirpath, name)
-                meta = _safe_parquet_meta(src)
-                if meta is None:
-                    if counts is None:
-                        counts = _spark_row_counts(self.spark, tmp)
-                    nrows = counts.get(self.fs.normalize(src), 0)
-                    stats = json.dumps({"numRecords": nrows})
+        actions: list[dict] = []
+        moved: list[str] = []
+        try:
+            writer = df.write
+            if part_by:
+                writer = writer.partitionBy(*part_by)
+            writer.parquet(tmp)
+            # NOTE (r13, measured): the commit-assembly tail below
+            # (footer read + rename per file) was suspected as the
+            # per-commit floor's next lever and rebuilt with a
+            # 16-thread pool — the pool measured 14x SLOWER on this
+            # page-cached local FS (footer reads are ~46 µs serial and
+            # do not release the GIL long enough to overlap; 1024
+            # files: 0.047 s serial vs 0.64 s pooled), and the whole
+            # serial tail is ~1.5 % of a 1024-file commit (0.07 s of
+            # 4.5 s — the write JOB is the floor).  Reverted; see
+            # tools/probe_commit_floor.py and OPTIMIZATION_r13.md.  On
+            # an object store (ms-latency round trips) a pool would
+            # win — revisit only with such a backend to measure
+            # against.
+            counts: dict[str, int] | None = None
+            for dirpath, _dirs, files in self.fs.walk(tmp):
+                rel_dir = dirpath[len(tmp):].strip("/")
+                if part_values is not None:
+                    pv, rel_dir = part_values, partition_subdir(part_values)
                 else:
-                    nrows = meta.num_rows
-                    stats = file_stats_json(meta)
-                if skip_empty and nrows == 0:
-                    continue
-                new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-                rel = f"{rel_dir}/{new_name}" if rel_dir != "." else new_name
-                dst = _fs.join(self.path, rel)
-                self.fs.makedirs(dst.rsplit("/", 1)[0])
-                self.fs.move(src, dst)
-                add = {
-                    "path": rel,
-                    "partitionValues": part_values,
-                    "size": self.fs.getsize(dst),
-                    "modificationTime": int(time.time() * 1000),
-                    "dataChange": data_change,
-                    "stats": stats,
-                }
-                if tags:
-                    add["tags"] = dict(tags)
-                adds.append({"add": add})
-        self.fs.rmtree(tmp)
-        return adds
+                    pv = dict(
+                        seg.partition("=")[::2]
+                        for seg in rel_dir.split("/")
+                        if seg
+                    )
+                if cdc:
+                    rel_dir = "/".join(p for p in ("_change_data", rel_dir) if p)
+                for name in files:
+                    if not name.endswith(".parquet"):
+                        continue
+                    src = _fs.join(dirpath, name)
+                    meta = _safe_parquet_meta(src)
+                    if meta is None:
+                        if counts is None:
+                            counts = _spark_row_counts(self.spark, tmp)
+                        nrows = counts.get(src[len(tmp):].lstrip("/"), 0)
+                    else:
+                        nrows = meta.num_rows
+                    if nrows == 0 and (skip_empty or cdc):
+                        continue
+                    new_name = (
+                        f"{'cdc' if cdc else 'part'}-{uuid.uuid4().hex}"
+                        ".snappy.parquet"
+                    )
+                    rel = f"{rel_dir}/{new_name}" if rel_dir else new_name
+                    dst = _fs.join(self.path, rel)
+                    self.fs.makedirs(dst.rsplit("/", 1)[0])
+                    moved.append(dst)
+                    self.fs.move(src, dst)
+                    act = {
+                        "path": rel,
+                        "partitionValues": dict(pv),
+                        "size": self.fs.getsize(dst),
+                    }
+                    if cdc:
+                        actions.append({"cdc": {**act, "dataChange": False}})
+                        continue
+                    act.update(
+                        modificationTime=int(time.time() * 1000),
+                        dataChange=data_change,
+                        stats=file_stats_json(meta)
+                        if meta is not None
+                        else json.dumps({"numRecords": nrows}),
+                    )
+                    if tags:
+                        act["tags"] = dict(tags)
+                    actions.append({"add": act})
+        except BaseException:
+            for dst in moved:
+                try:
+                    self.fs.remove(dst)
+                except OSError:
+                    pass
+            raise
+        finally:
+            self.fs.rmtree(tmp)
+        return actions
+
 
     def add_constraint(self, name: str, expr: str) -> int:
         """ADD CONSTRAINT (PROTOCOL.md "CHECK Constraints"): record
@@ -2548,50 +2625,38 @@ class DeltaSink:
             == "true"
         )
 
-    def _phys_read_schema(self, logical_schema):
-        """``logical_schema`` respelled with the table's PHYSICAL
-        column names (identity when the table is unmapped) — what the
-        parquet files actually carry under column mapping."""
-        mapping = self._current_mapping()
-        if not mapping or logical_schema is None:
-            return logical_schema
-        from pyspark.sql.types import StructField, StructType
-
-        return StructType(
+    def _scan_logical(self, paths, logical_schema, with_pos=False):
+        """Scan table data files yielding LOGICAL column names — the
+        ONE home of the physical→logical respelling: every DML, reorg
+        and optimize read goes through it (round 12 made the rewrite
+        paths work on column-mapped tables this way).  Columns outside
+        the mapping (row-tracking materializations) are physical by
+        definition and keep their names.  ``with_pos`` attaches each
+        row's physical identity BEFORE the alias (``_metadata``
+        resolves only directly on the scan): ``_f``, the file in
+        :func:`fs.data_path_spelling`'s spelling, and ``_ridx``, its
+        row index.  Only ask for them when something uses them: a
+        dropped ``_metadata`` still builds a per-row struct (with the
+        row index) under a filter instead of pruning away."""
+        mapping = self._current_mapping() or {}
+        phys = StructType(
             [
                 StructField(
-                    mapping.get(f.name, f.name),
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
+                    mapping.get(f.name, f.name), f.dataType, f.nullable, f.metadata
                 )
                 for f in logical_schema.fields
             ]
         )
-
-    def _scan_logical(self, paths, logical_schema, with_pos=False):
-        """Scan table data files yielding LOGICAL column names — the
-        ONE home of the physical→logical respelling that makes the
-        copy-on-write rewrite paths work on column-mapped tables
-        (round 12; they previously refused outright).  ``with_pos``
-        attaches the physical position columns (``_f``/``_ridx``)
-        BEFORE the alias: ``_metadata`` resolves only directly on the
-        scan."""
-        import pyspark.sql.functions as F
-
-        reader = self.spark.read
-        phys = self._phys_read_schema(logical_schema)
-        if phys is not None:
-            reader = reader.schema(phys)
-        df = reader.parquet(*[_fs.join(self.path, p) for p in paths])
+        df = self.spark.read.schema(phys).parquet(
+            *[_fs.join(self.path, p) for p in paths]
+        )
         if with_pos:
             df = df.withColumns(
                 {
-                    "_f": _fs.spark_scan_path(F.input_file_name()),
+                    "_f": _fs.spark_scan_path(F.col("_metadata.file_path")),
                     "_ridx": F.col("_metadata.row_index"),
                 }
             )
-        mapping = self._current_mapping()
         if mapping:
             inv = {p: l for l, p in mapping.items()}
             df = df.select(
@@ -2599,18 +2664,102 @@ class DeltaSink:
             )
         return df
 
-    def _hit_frame(self, hit_parts, data_schema, inject) -> DataFrame:
-        """Union of ONLY the hit files (per partition group, partition
-        values injected) — the frame the CDF staging scans, so change
-        extraction costs O(files touched), never a second whole-table
-        probe."""
+    @staticmethod
+    def _groups(files) -> list[tuple[dict, list[dict]]]:
+        """Snapshot file dicts grouped by partition tuple:
+        ``[(partitionValues, [file, ...]), ...]``."""
+        groups: dict[tuple, list[dict]] = {}
+        for f in files:
+            key = tuple(sorted((f["partitionValues"] or {}).items()))
+            groups.setdefault(key, []).append(f)
+        return [(dict(k), g) for k, g in groups.items()]
+
+    def _dml_scan(
+        self, files, types, data_schema, old_pairs=None, row_ids=False
+    ) -> DataFrame:
+        """The one scan behind the DML, reorg and optimize paths:
+        LOGICAL rows of ``files`` — one :meth:`_scan_logical` per
+        partition group with its partition values injected (they live
+        in the directory, not the file, A7/O6), unioned by name.  Rows
+        named by ``old_pairs`` (what existing deletion vectors delete)
+        anti-join away.  ``row_ids`` also reads and MATERIALIZES the
+        row-tracking columns, so a rewrite or an appended post-image
+        keeps every row's identity (PROTOCOL.md "Row Tracking").
+        Probes (``row_ids`` off) carry ``_f``/``_ridx``; other scans
+        only while a join here needs them."""
+        mats = (
+            self._rt_mat_cols()
+            if row_ids and self._rt_enabled()
+            else (None, None)
+        )
+        schema = data_schema
+        if mats[0]:
+            schema = StructType(
+                [
+                    *data_schema.fields,
+                    *[
+                        StructField(c, LongType(), True)
+                        for c in mats
+                        if c and c not in data_schema.fieldNames()
+                    ],
+                ]
+            )
+        pos = not row_ids or old_pairs is not None or bool(mats[0])
         frames = []
-        for paths, pv in hit_parts:
-            frames.append(inject(self._scan_logical(paths, data_schema), pv))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        for pv, group in self._groups(files):
+            df = self._scan_logical([f["path"] for f in group], schema, pos)
+            if pv:
+                df = df.withColumns(
+                    {
+                        c: F.lit(raw).cast(types.get(c, "string"))
+                        for c, raw in pv.items()
+                    }
+                )
+            frames.append(df)
+        df = _union(frames)
+        if old_pairs is not None:
+            df = df.join(old_pairs, ["_f", "_ridx"], "left_anti")
+        if mats[0]:
+            df = self._materialize_row_ids(df, files, *mats)
+        return df
+
+    def _rewrite(
+        self,
+        files,
+        types,
+        data_schema,
+        transform,
+        data_change: bool,
+        now: int,
+        tags: dict[str, str] | None = None,
+        old_pairs=None,
+    ) -> list:
+        """Copy-on-write rewrite thunks, one per partition group of
+        ``files``: remove the group's files and publish ``transform``
+        of their rows (:meth:`_dml_scan`, row ids materialized,
+        ``old_pairs`` purged) into the group's partition directory.
+        Partition columns stay OUT of the data files (injected at
+        read, A7/O6).  The DML fans the thunks out through
+        :meth:`_concurrent_stage`; maintenance runs them in turn, one
+        write job at a time, as it always has."""
+
+        def run(pv, group):
+            rows = self._dml_scan(
+                group, types, data_schema, old_pairs, row_ids=True
+            )
+            adds = self._stage_adds(
+                transform(rows).drop("_f", "_ridx", _ACT, *pv),
+                data_change,
+                skip_empty=True,
+                tags=tags,
+                part_values=pv,
+            )
+            return [_remove(f, now, data_change) for f in group] + adds
+
+        return [
+            lambda pv=pv, group=group: run(pv, group)
+            for pv, group in self._groups(files)
+        ]
 
     def _concurrent_stage(self, thunks):
         """Run independent staging jobs — each its own Spark action plus
@@ -2693,225 +2842,24 @@ class DeltaSink:
             raise failed.exception()
         return [f.result() for f in futures]
 
-    def _stage_cdc(self, df: DataFrame) -> list[dict]:
-        """Stage change-data files (df = full logical rows incl.
-        partition columns + ``_change_type``) under ``_change_data/``
-        and return the ``cdc`` actions.  Layout mirrors the data files:
-        partition columns become directories (and partitionValues),
-        rows carry only the data columns + ``_change_type``.  cdc
-        actions always record ``dataChange: false`` (PROTOCOL.md) and
-        are never checkpointed (reconciled_actions rebuilds from
-        adds only).  On a column-mapped table the change files carry
-        PHYSICAL data-column names like the data files (PROTOCOL.md
-        "Change Data Files" store their columns exactly as data files
-        do); ``_change_type`` is a literal spec column and stays."""
-        mapping = self._current_mapping()
-        if mapping:
-            df = df.select(
-                *[df[c].alias(mapping.get(c, c)) for c in df.columns]
-            )
-        tmp = _fs.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        writer = df.write
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
-        actions: list[dict] = []
-        counts: dict[str, int] | None = None
-        for dirpath, _dirs, files in self.fs.walk(tmp):
-            rel_dir = dirpath[len(tmp):].strip("/") or "."
-            part_values = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split("/"):
-                    k, _, val = seg.partition("=")
-                    part_values[k] = val
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                src = _fs.join(dirpath, name)
-                meta = _safe_parquet_meta(src)
-                if meta is None:
-                    if counts is None:
-                        counts = _spark_row_counts(self.spark, tmp)
-                    if counts.get(self.fs.normalize(src), 0) == 0:
-                        continue
-                elif meta.num_rows == 0:
-                    continue
-                new_name = f"cdc-{uuid.uuid4().hex}.snappy.parquet"
-                rel = (
-                    f"_change_data/{rel_dir}/{new_name}"
-                    if rel_dir != "."
-                    else f"_change_data/{new_name}"
-                )
-                dst = _fs.join(self.path, rel)
-                self.fs.makedirs(dst.rsplit("/", 1)[0])
-                self.fs.move(src, dst)
-                actions.append(
-                    {
-                        "cdc": {
-                            "path": rel,
-                            "partitionValues": part_values,
-                            "size": self.fs.getsize(dst),
-                            "dataChange": False,
-                        }
-                    }
-                )
-        self.fs.rmtree(tmp)
-        return actions
-
-    def _rewrite_group(
-        self,
-        paths: list[str],
-        part_values: dict[str, str],
-        transform,
-        data_change: bool,
-        now: int,
-        read_schema=None,
-        tags: dict[str, str] | None = None,
-    ) -> list[dict]:
-        """Rewrite one partition group's files through ``transform``:
-        emit removes for the old files and adds for the rewritten ones.
-        Partition columns stay OUT of the data files (injected at read,
-        A7/O6), so the rewrite only moves the non-partition columns.
-
-        Under row tracking, the rows' ids are MATERIALIZED into the
-        rewritten files (the configured physical columns) before the
-        transform runs — a rewrite must preserve row identities
-        (PROTOCOL.md "Row Tracking"); the re-added files get fresh
-        baseRowIds but every surviving row's materialized id wins on
-        read."""
-        from .delta_log import partition_subdir
-
-        rt = self._rt_enabled()
-        mats = self._rt_mat_cols() if rt else (None, None)
-        mapping = self._current_mapping()
-        reader = self.spark.read
-        if read_schema is not None:
-            # physical spelling under column mapping (the files carry
-            # physical names); the row-tracking materialization columns
-            # are ALREADY physical by definition
-            schema = self._phys_read_schema(read_schema)
-            if rt and mats[0]:
-                from pyspark.sql.types import LongType, StructField, StructType
-
-                schema = StructType(
-                    [
-                        *schema.fields,
-                        *[
-                            StructField(c, LongType(), True)
-                            for c in mats
-                            if c and c not in schema.fieldNames()
-                        ],
-                    ]
-                )
-            reader = reader.schema(schema)
-        df = reader.parquet(*[_fs.join(self.path, p) for p in paths])
-        if rt and mats[0]:
-            # attach the physical identity BEFORE any join: _metadata
-            # resolves only directly on the scan.  Transforms may use
-            # the helpers (__mlk_rtfile/__mlk_rtridx); they are dropped
-            # before the write either way.
-            df = df.withColumn(
-                "__mlk_rtfile",
-                _fs.spark_scan_path(F.col("_metadata.file_path")),
-            ).withColumn("__mlk_rtridx", F.col("_metadata.row_index"))
-            df = self._materialize_row_ids(df, paths, *mats)
-        if mapping:
-            # transforms (predicates, assignments, joins) speak LOGICAL
-            # names; alias after the _metadata attach above
-            inv = {p: l for l, p in mapping.items()}
-            df = df.select(
-                *[F.col(c).alias(inv.get(c, c)) for c in df.columns]
-            )
-        out = transform(df).drop("__mlk_rtfile", "__mlk_rtridx")
-        if mapping:
-            # the rewritten files must carry PHYSICAL names again so
-            # stats/readers line up (same rule as _stage_adds)
-            out = out.select(
-                *[out[c].alias(mapping.get(c, c)) for c in out.columns]
-            )
-        tmp = _fs.join(self.path, f"_staging_{uuid.uuid4().hex}")
-        out.write.parquet(tmp)
-        actions: list[dict] = [
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": now,
-                    "dataChange": data_change,
-                    "partitionValues": part_values,
-                }
-            }
-            for rel in paths
-        ]
-        subdir = partition_subdir(part_values)
-        counts: dict[str, int] | None = None
-        for name in self.fs.listdir(tmp):
-            if not name.endswith(".parquet"):
-                continue
-            src = _fs.join(tmp, name)
-            meta = _safe_parquet_meta(src)
-            if meta is None:
-                if counts is None:
-                    counts = _spark_row_counts(self.spark, tmp)
-                if counts.get(self.fs.normalize(src), 0) == 0:
-                    continue
-            elif meta.num_rows == 0:
-                continue
-            new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-            rel = f"{subdir}/{new_name}" if subdir else new_name
-            dst = _fs.join(self.path, rel)
-            self.fs.makedirs(dst.rsplit("/", 1)[0])
-            self.fs.move(src, dst)
-            add = {
-                "path": rel,
-                "partitionValues": part_values,
-                "size": self.fs.getsize(dst),
-                "modificationTime": now,
-                "dataChange": data_change,
-                "stats": file_stats_json(meta)
-                if meta is not None
-                else json.dumps(
-                    {
-                        "numRecords": counts.get(
-                            self.fs.normalize(src), 0
-                        )
-                    }
-                ),
-            }
-            if tags:
-                add["tags"] = dict(tags)
-            actions.append({"add": add})
-        self.fs.rmtree(tmp)
-        return actions
-
-    def _partition_groups(self) -> dict[tuple, list[str]]:
-        from .delta_log import snapshot_files
-
-        groups: dict[tuple, list[str]] = {}
-        for f in snapshot_files(self.spark, self.path):
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        return groups
-
-    def _dv_map(self) -> dict[str, dict]:
-        """Live files carrying a deletion vector: path -> descriptor."""
-        from .delta_log import snapshot_files
-
-        return {
-            f["path"]: dict(f["deletionVector"])
-            for f in snapshot_files(self.spark, self.path)
-            if (f.get("deletionVector") or {}).get("cardinality")
-        }
-
-    def _require_no_dvs(self, op: str) -> None:
+    def _require_no_dvs(self, op: str, files=None) -> None:
         """Copy-on-write rewrites read data files RAW — on a file with
         a deletion vector that would resurrect its deleted rows.  The
         CoW paths therefore refuse until ``reorg()`` materializes the
         DVs (Delta's own REORG TABLE ... APPLY (PURGE) prerequisite)."""
-        dvs = self._dv_map()
-        if dvs:
+        from .delta_log import snapshot_files
+
+        if files is None:
+            files = snapshot_files(self.spark, self.path)
+        n = sum(
+            1
+            for f in files
+            if (f.get("deletionVector") or {}).get("cardinality")
+        )
+        if n:
             raise ValueError(
                 f"{op} on a table with deletion vectors "
-                f"({len(dvs)} file(s)) would resurrect deleted rows — "
+                f"({n} file(s)) would resurrect deleted rows — "
                 "run reorg() first to materialize them"
             )
 
@@ -2919,11 +2867,12 @@ class DeltaSink:
         """(partition-col types, data-col StructType) from the table
         metadata — both driver-side reads.  The StructType is LOGICAL;
         on a column-mapped table the rewrite paths respell reads/
-        writes physically through _scan_logical/_phys_read_schema
+        writes physically through _scan_logical/_stage_adds
         (round 12 — mapped tables previously refused outright).
         Mapped AND partitioned stays loud: partitionValues keys,
-        directory names, and the inject() casts are keyed physically
-        and the rewrite paths don't translate them yet."""
+        directory names, and _dml_scan's partition-value casts are
+        keyed physically and the rewrite paths don't translate them
+        yet."""
         from .delta_log import (
             UnsupportedTableFeature,
             column_mapping_of,
@@ -2949,6 +2898,214 @@ class DeltaSink:
         types = {f.name: f.dataType for f in schema.fields if f.name in part_cols}
         return types, _St([f for f in schema.fields if f.name not in part_cols])
 
+    # -- row-level DML: one pipeline, two write strategies -----------------
+
+    def _dml(
+        self,
+        op: str,
+        dv: bool,
+        match,
+        new_rows=None,
+        inserts=None,
+        txn: tuple[str, int] | None = None,
+        schema=None,
+    ) -> int:
+        """The ONE row-level DML pipeline behind delete/update/merge and
+        their ``_dv`` twins: match → touched files → write strategy →
+        CDF → actions → :meth:`_commit`.  A verb supplies:
+
+        - ``match(df)``: tags each scanned row's ``__mlk_act`` with
+          NULL (untouched), ``'delete'`` or ``'update'``;
+        - ``new_rows(df)``: the post-image of every ``'update'`` row,
+          leaving other rows as they are;
+        - ``inserts(hits)``: rows that matched no target row (merge),
+          given the matched rows (None when no file was touched);
+        - ``dv``, the strategy.  Copy-on-write (False): ONE probe
+          collect finds the touched files, and each partition group of
+          them is rewritten with deletes dropped and updates replaced.
+          Merge-on-read (True): the matches become merged deletion
+          vectors (ONE ``_pack_merged_dvs`` collect) and post-images
+          append as new files, with the inserts.
+
+        Either way every later frame — post-images, inserts, the change
+        feed (delete / update_preimage by tag, update_postimage,
+        insert) — rescans only the TOUCHED files, and all staging jobs
+        run through one :meth:`_concurrent_stage` into one commit."""
+        from .delta_log import snapshot_files
+
+        types, data_schema = schema or self._data_schema()
+        if data_schema is None:
+            return -1  # empty table: nothing to match
+        now = int(time.time() * 1000)
+        files = snapshot_files(self.spark, self.path)
+        if not dv:
+            self._require_no_dvs(op, files)
+        cdf = self._cdf_enabled()
+        mat_rcv = self._rt_mat_cols()[1] if self._rt_enabled() else None
+        by_f = {_fs.data_path_spelling(self.path, f["path"]): f for f in files}
+        # rows already in a deletion vector are logically gone: they
+        # must never match again wherever matched ROWS are consumed
+        # (bitmaps merge idempotently, so a plain delete_dv skips the
+        # old-vector expansion)
+        old_pairs = (
+            self._old_dv_pairs(files)
+            if dv and (new_rows is not None or cdf)
+            else None
+        )
+        hit = F.col(_ACT).isNotNull()
+        upd = F.col(_ACT) == "update"
+        touched, packed = [], []
+        if files:
+            probe = match(
+                self._dml_scan(files, types, data_schema, old_pairs)
+            ).filter(hit)
+            if not dv:
+                touched = [
+                    by_f[r["_f"]]
+                    for r in probe.select("_f").distinct().collect()
+                ]
+            else:
+                old_descs = self._old_dv_desc_df(files)
+                for r in self._pack_merged_dvs(probe, old_descs):
+                    f = by_f[r["_f"]]
+                    # merged bitmap == old bitmap (every match already
+                    # deleted): a re-add would be log churn and, under
+                    # CDF, a DV change with no cdc action
+                    dvc = (f.get("deletionVector") or {}).get("cardinality")
+                    if r["card"] > (dvc or 0):
+                        touched.append(f)
+                        packed.append((f, r))
+
+        def image(df):
+            """Rows after the DML: deletes dropped, updates replaced,
+            and an updated row's materialized commit version reset so it
+            reads as THIS commit's (PROTOCOL.md Row Tracking)."""
+            out = new_rows(df) if new_rows is not None else df
+            if mat_rcv and mat_rcv in out.columns:
+                out = out.withColumn(
+                    mat_rcv,
+                    F.when(upd, F.lit(None).cast("long")).otherwise(
+                        F.col(mat_rcv)
+                    ),
+                )
+            return out.filter(~F.col(_ACT).eqNullSafe("delete"))
+
+        hits = post = None
+        if touched and (cdf or new_rows is not None or inserts is not None):
+            hits = match(
+                self._dml_scan(
+                    touched, types, data_schema, old_pairs, row_ids=True
+                )
+            ).filter(hit)
+            if new_rows is not None:
+                post = image(hits.filter(upd))
+        ins = inserts(hits) if inserts is not None else None
+        landing = [d for d in (post, ins) if d is not None]
+        if landing:
+            self._enforce_constraints(_union(landing), op)
+        thunks = []
+        if touched and not dv:
+            thunks += self._rewrite(
+                touched,
+                types,
+                data_schema,
+                lambda df: image(match(df)),
+                data_change=True,
+                now=now,
+            )
+        appended = [d for d in (post if dv else None, ins) if d is not None]
+        if appended:
+            new_files = _union(appended).drop("_f", "_ridx", _ACT)
+            thunks.append(
+                lambda: self._stage_adds(new_files, skip_empty=True)
+            )
+        if cdf:
+            cols = [*data_schema.fieldNames(), *types]
+            ct = "_change_type"
+            changes = []
+            if hits is not None:
+                changes.append(
+                    hits.select(
+                        *cols,
+                        F.when(F.col(_ACT) == "delete", "delete")
+                        .otherwise("update_preimage")
+                        .alias(ct),
+                    )
+                )
+            if post is not None:
+                changes.append(
+                    post.select(*cols, F.lit("update_postimage").alias(ct))
+                )
+            if ins is not None:
+                changes.append(ins.select(*cols, F.lit("insert").alias(ct)))
+            if changes:
+                cdc_df = _union(changes)
+                thunks.append(lambda: self._stage_adds(cdc_df, cdc=True))
+        staged = self._concurrent_stage(thunks)
+        actions = [self._txn_action(txn)] if txn is not None else []
+        if packed:
+            actions += self._dv_actions(packed, now)
+        for acts in staged:
+            actions += acts
+        return self._commit(
+            actions, operation=op + (" (merge-on-read)" if dv else "")
+        )
+
+    def _dv_actions(self, packed, now: int) -> list[dict]:
+        """Commit actions for a merge-on-read DML's merged bitmaps
+        (``packed`` = (file, packed row) pairs): the deletionVectors
+        protocol upgrade, MERGED with whatever the table declares
+        (overwriting would drop features an external writer recorded)
+        and enumerating the legacy features old version numbers
+        implied; a plain remove for a file whose every row is now
+        deleted; otherwise a remove plus a re-add of the SAME file with
+        its new descriptor — same physical file, so its row ids
+        (``baseRowId``/``defaultRowCommitVersion``, PROTOCOL.md Row
+        Tracking) and clustering tags stay.  All of a commit's bitmaps
+        share one .bin (:func:`dv.pack_dv_file`)."""
+        from . import dv as _dv
+        from .delta_log import latest_protocol
+
+        cur = latest_protocol(self.path)
+        pr = upgraded_protocol(cur, ("deletionVectors",), ("deletionVectors",))
+        actions: list[dict] = [] if pr == cur else [{"protocol": pr}]
+        partial = []
+        for f, r in packed:
+            actions.append(_remove(f, now))
+            n_rec = f.get("numRecords")
+            if n_rec is None or r["card"] < n_rec:
+                partial.append((f, r))
+        if not partial:
+            return actions
+        descs = _dv.pack_dv_file(
+            self.path,
+            [(bytes(r["payload"]), int(r["card"])) for _f, r in partial],
+        )
+        for (f, _r), desc in zip(partial, descs):
+            add = {
+                "path": f["path"],
+                "partitionValues": f["partitionValues"] or {},
+                "size": f["size"],
+                "modificationTime": now,
+                "dataChange": True,
+                "stats": f.get("stats"),
+                "deletionVector": desc,
+                "baseRowId": f.get("baseRowId"),
+                "defaultRowCommitVersion": f.get("defaultRowCommitVersion"),
+            }
+            if f.get("tags"):
+                add["tags"] = dict(f["tags"])
+            actions.append({"add": add})
+        return actions
+
+    @staticmethod
+    def _where(predicate: str, act: str):
+        """Predicate matcher: tag rows where ``predicate`` is TRUE (a
+        NULL result matches nothing, SQL WHERE semantics)."""
+        return lambda df: df.withColumn(
+            _ACT, F.when(F.expr(predicate), F.lit(act))
+        )
+
     def delete(self, predicate: str) -> int:
         """Row-level delete: rewrite only the FILES that contain matching
         rows — K6's `.delete table records` as copy-on-write.
@@ -2958,78 +3115,7 @@ class DeltaSink:
         affected files; each is then rewritten without its matching rows.
         All rewrites land in ONE atomic commit.  At scale this is two
         jobs total — probe + rewrite — not one probe per partition."""
-        import pyspark.sql.functions as F
-
-        self._require_no_dvs("DELETE")
-        now = int(time.time() * 1000)
-        cdf = self._cdf_enabled()
-        types, data_schema = self._data_schema()
-        groups = self._partition_groups()
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
-            )
-        actions: list[dict] = []
-        if probes:
-            probe = probes[0]
-            for p in probes[1:]:
-                probe = probe.unionByName(p)
-            hit_abs = set()
-            for r in probe.filter(predicate).select("_f").distinct().collect():
-                hit_abs.add(self.fs.normalize(r["_f"]))
-            # match on NORMALIZED full paths: stored paths are table-
-            # relative normally but absolute for shallow-cloned files,
-            # and join passes an absolute second arg through on local FS
-            hit_parts: list[tuple[list[str], dict]] = []
-            thunks = []
-            for key, paths in groups.items():
-                part_values = dict(key)
-                hit = [
-                    p
-                    for p in paths
-                    if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-                ]
-                if not hit:
-                    continue
-                hit_parts.append((hit, part_values))
-                thunks.append(
-                    lambda hit=hit, pv=part_values: self._rewrite_group(
-                        hit,
-                        pv,
-                        lambda df, pv=pv: inject(df, pv)
-                        .filter(f"NOT ({predicate})")
-                        .drop(*pv.keys()),
-                        data_change=True,
-                        now=now,
-                        read_schema=data_schema,
-                    )
-                )
-            if cdf and hit_parts:
-                # row-level change feed: the DELETED rows, so readers
-                # see exact deletes instead of the file-level
-                # remove+re-add synthesis.  Scans only the HIT files
-                # (every matching row lives in one by construction) —
-                # not a second whole-table probe
-                hit_probe = self._hit_frame(hit_parts, data_schema, inject)
-                thunks.append(
-                    lambda: self._stage_cdc(
-                        hit_probe.filter(predicate).withColumn(
-                            "_change_type", F.lit("delete")
-                        )
-                    )
-                )
-            for acts in self._concurrent_stage(thunks):
-                actions.extend(acts)
-        return self._commit(actions, operation="DELETE")
+        return self._dml("DELETE", False, self._where(predicate, "delete"))
 
     def _check_update_assignments(
         self, assignments: dict[str, str], types, data_schema, gen
@@ -3075,6 +3161,9 @@ class DeltaSink:
         to the matching rows (all right-hand sides see the PRE-update
         row, SQL semantics) and leaving the rest byte-stable.
 
+        - every right-hand side is cast to its column's DECLARED type
+          (a bare ``v + 0.5`` on a long column would otherwise fork
+          the rewritten file's physical schema off the table's);
         - generated columns recompute from the new values and may not
           be assigned directly (the generatedColumns contract);
         - CHECK constraints re-validate the updated rows BEFORE any
@@ -3094,118 +3183,46 @@ class DeltaSink:
         DeltaTableOrchestration.cs:85-133); this is standalone-engine
         surface past that parity point.  For the merge-on-read shape
         (DV the old rows, append only the new) see :meth:`update_dv`."""
-        import pyspark.sql.functions as F
+        return self._update(predicate, assignments, dv=False)
 
-        self._require_no_dvs("UPDATE")
-        now = int(time.time() * 1000)
-        cdf = self._cdf_enabled()
+    def _update(self, predicate, assignments, dv: bool) -> int:
+        """UPDATE's inputs to :meth:`_dml`: validation, the predicate
+        matcher, and the assignment step — every right-hand side sees
+        the PRE-update row and is cast to the column's declared type;
+        generated data columns recompute from the new values."""
         types, data_schema = self._data_schema()
+        if data_schema is None:
+            return -1  # empty table: nothing to update
         gen = self._generated()
         self._check_update_assignments(assignments, types, data_schema, gen)
-        groups = self._partition_groups()
+        field_type = {f.name: f.dataType for f in data_schema.fields}
+        upd = F.col(_ACT) == "update"
 
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        def apply_set(df):
-            """Hit rows get the new values; __mlk_hit is computed from
-            PRE-update values once so the predicate and the generated
-            recompute never observe half-updated rows."""
-            df = df.withColumn("__mlk_hit", F.expr(f"({predicate})"))
-            hit = F.coalesce(F.col("__mlk_hit"), F.lit(False))
+        def assign(df):
             df = df.withColumns(
                 {
-                    c: F.when(hit, F.expr(e)).otherwise(F.col(c))
+                    c: F.when(upd, F.expr(e).cast(field_type[c])).otherwise(
+                        F.col(c)
+                    )
                     for c, e in assignments.items()
                 }
             )
             regen = {
-                name: F.when(hit, F.expr(gexpr)).otherwise(F.col(name))
-                for name, gexpr in gen.items()
-                if name not in (types or {}) and name in df.columns
+                n: F.when(upd, F.expr(g).cast(field_type[n])).otherwise(
+                    F.col(n)
+                )
+                for n, g in gen.items()
+                if n in field_type
             }
-            if regen:
-                df = df.withColumns(regen)
-            return df
+            return df.withColumns(regen) if regen else df
 
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
-            )
-        if not probes:
-            return self._commit([], operation="UPDATE")
-        probe = probes[0]
-        for p in probes[1:]:
-            probe = probe.unionByName(p)
-        hit_abs = {
-            self.fs.normalize(r["_f"])
-            for r in probe.filter(predicate).select("_f").distinct().collect()
-        }
-        hit_parts: list[tuple[list[str], dict]] = []
-        for key, paths in groups.items():
-            hit = [
-                p
-                for p in paths
-                if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-            ]
-            if hit:
-                hit_parts.append((hit, dict(key)))
-        if not hit_parts:
-            return self._commit([], operation="UPDATE")
-        hit_probe = self._hit_frame(hit_parts, data_schema, inject)
-        updated = apply_set(hit_probe).filter("__mlk_hit").drop("__mlk_hit")
-        self._enforce_constraints(updated, "UPDATE")
-        mat_rcv = (
-            self._rt_mat_cols()[1] if self._rt_enabled() else None
+        return self._dml(
+            "UPDATE",
+            dv,
+            self._where(predicate, "update"),
+            assign,
+            schema=(types, data_schema),
         )
-        actions: list[dict] = []
-        thunks = []
-        for hit, part_values in hit_parts:
-
-            def transform(df, pv=part_values):
-                out = apply_set(inject(df, pv))
-                if mat_rcv and mat_rcv in out.columns:
-                    # updated rows belong to THIS commit: null the
-                    # materialized commit version so reads fall back
-                    # to the new add's defaultRowCommitVersion
-                    out = out.withColumn(
-                        mat_rcv,
-                        F.when(
-                            F.coalesce(F.col("__mlk_hit"), F.lit(False)),
-                            F.lit(None).cast("long"),
-                        ).otherwise(F.col(mat_rcv)),
-                    )
-                return out.drop("__mlk_hit", *pv.keys())
-
-            thunks.append(
-                lambda hit=hit, pv=part_values, transform=transform:
-                    self._rewrite_group(
-                        hit,
-                        pv,
-                        transform,
-                        data_change=True,
-                        now=now,
-                        read_schema=data_schema,
-                    )
-            )
-        if cdf:
-            pre = hit_probe.filter(predicate).withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            post = updated.withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            thunks.append(
-                lambda: self._stage_cdc(pre.unionByName(post))
-            )
-        for acts in self._concurrent_stage(thunks):
-            actions.extend(acts)
-        return self._commit(actions, operation="UPDATE")
 
     #: DV'd-file count up to which existing-DV DESCRIPTORS (not
     #: payloads — ~200 bytes each, already in the driver's snapshot
@@ -3397,217 +3414,31 @@ class DeltaSink:
         UPDATE shape current Delta writers use.
 
         Semantics match :meth:`update` exactly (the
-        tests/test_r6_update.py contract): every assignment RHS sees
-        the PRE-update row; generated columns recompute from the new
-        values; CHECK constraints re-validate the updated rows before
-        anything lands; CDF stages update_preimage/update_postimage
-        pairs; row tracking keeps every updated row's id (the original
-        id is MATERIALIZED into the appended files) while its commit
-        version moves to this commit (materialized NULL reads fall
-        back to the new add's defaultRowCommitVersion).  Rows already
-        in a deletion vector are logically gone and never match or
-        re-report.  :meth:`reorg` purges these DVs like any other.
-        The reference never updates in place — K6 is delete-only
+        tests/test_r6_update.py contract — both run the same
+        assignment step): every assignment RHS sees the PRE-update
+        row, cast to the column's declared type; generated columns
+        recompute from the new values; CHECK constraints re-validate
+        the updated rows before anything lands; CDF stages
+        update_preimage/update_postimage pairs; row tracking keeps
+        every updated row's id (the original id is MATERIALIZED into
+        the appended files) while its commit version moves to this
+        commit (materialized NULL reads fall back to the new add's
+        defaultRowCommitVersion).  Rows already in a deletion vector
+        are logically gone and never match or re-report.
+        :meth:`reorg` purges these DVs like any other.  The reference
+        never updates in place — K6 is delete-only
         (DeltaTableOrchestration.cs:85-133)."""
-        import pyspark.sql.functions as F
-
-        from . import dv as _dv
-        from .delta_log import latest_protocol, snapshot_files
-
-        types, data_schema = self._data_schema()
-        if data_schema is None:
-            return -1  # empty table: nothing to update
-        gen = self._generated()
-        self._check_update_assignments(assignments, types, data_schema, gen)
-        now = int(time.time() * 1000)
-        cdf = self._cdf_enabled()
-        rt = self._rt_enabled()
-        mat_id, mat_rcv = self._rt_mat_cols() if rt else (None, None)
-        read_schema = data_schema
-        if rt and (mat_id or mat_rcv):
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            read_schema = StructType(
-                [
-                    *data_schema.fields,
-                    *[
-                        StructField(c, LongType(), True)
-                        for c in (mat_id, mat_rcv)
-                        if c and c not in data_schema.fieldNames()
-                    ],
-                ]
-            )
-        files = snapshot_files(self.spark, self.path)
-        by_norm = {
-            _fs.data_path_spelling(self.path, f["path"]): f for f in files
-        }
-        old_pairs = self._old_dv_pairs(files)
-        old_descs = self._old_dv_desc_df(files)
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, read_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
-        if not probes:
-            return self._commit([], operation="UPDATE (merge-on-read)")
-        probe = probes[0]
-        for pr_ in probes[1:]:
-            probe = probe.unionByName(pr_)
-        if old_pairs is not None:
-            # single consumer now (the probe anti-join); the bitmap
-            # merge reads compressed payloads via old_descs instead of
-            # these exploded rows, and `matched` is persisted below so
-            # the explosion runs once regardless
-            probe = probe.join(old_pairs, ["_f", "_ridx"], "left_anti")
-        matched = probe.filter(predicate).persist()
-        try:
-            packed = self._pack_merged_dvs(matched, old_descs)
-            if not packed:
-                return self._commit([], operation="UPDATE (merge-on-read)")
-            # post-update rows: materialize original row ids FIRST (an
-            # appended file must carry them, PROTOCOL.md Row Tracking),
-            # null the materialized commit version, THEN apply the
-            # assignments so every RHS sees the pre-update row
-            post = matched
-            if rt and mat_id:
-                affected = sorted({by_norm[r["_f"]]["path"] for r in packed})
-                post = post.withColumn(
-                    "__mlk_rtfile", F.col("_f")
-                ).withColumn("__mlk_rtridx", F.col("_ridx"))
-                post = self._materialize_row_ids(
-                    post, affected, mat_id, None
-                ).drop("__mlk_rtfile", "__mlk_rtridx")
-            if rt and mat_rcv:
-                post = post.withColumn(mat_rcv, F.lit(None).cast("long"))
-            # cast every RHS to the column's DECLARED type (SQL UPDATE
-            # semantics): a bare literal like `100.0` parses as
-            # decimal(4,1) and would silently fork the postimage file's
-            # physical schema off the table schema
-            field_type = {f.name: f.dataType for f in data_schema.fields}
-            post = post.withColumns(
-                {
-                    c: F.expr(e).cast(field_type[c])
-                    for c, e in assignments.items()
-                }
-            )
-            regen = {
-                name: F.expr(gexpr).cast(field_type[name])
-                for name, gexpr in gen.items()
-                if name not in (types or {}) and name in field_type
-            }
-            if regen:
-                post = post.withColumns(regen)
-            post_rows = post.drop("_f", "_ridx")
-            self._enforce_constraints(post_rows, "UPDATE")
-            # CDC staging and the post-update append are independent
-            # jobs (own staging dirs, both read the persisted
-            # `matched`): overlap them so the append's tasks back-fill
-            # executors freed by the CDC write's tail (guide §2.6)
-            thunks = []
-            if cdf:
-                mats = [c for c in (mat_id, mat_rcv) if c]
-                pre = matched.drop("_f", "_ridx", *mats).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-                postc = post_rows.drop(*mats).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-                cdc_df = pre.unionByName(postc)
-                thunks.append(lambda df=cdc_df: self._stage_cdc(df))
-            thunks.append(
-                lambda df=post_rows: self._stage_adds(
-                    df, data_change=True, skip_empty=True
-                )
-            )
-            staged = self._concurrent_stage(thunks)
-            cdc_actions: list[dict] = staged[0] if cdf else []
-            add_actions = staged[-1]
-            cur = latest_protocol(self.path)
-            pr = upgraded_protocol(
-                cur, ("deletionVectors",), ("deletionVectors",)
-            )
-            actions: list[dict] = [] if pr == cur else [{"protocol": pr}]
-            actions.extend(cdc_actions)
-            full_deletes, dv_rows = [], []
-            for r in packed:
-                f = by_norm[r["_f"]]
-                n_rec = f.get("numRecords")
-                if n_rec is not None and r["card"] >= n_rec:
-                    full_deletes.append(f)  # every live row updated
-                else:
-                    dv_rows.append((f, r))
-            descs = _dv.pack_dv_file(
-                self.path,
-                [(bytes(r["payload"]), int(r["card"])) for _f, r in dv_rows],
-            )
-            for (f, _r), desc in zip(dv_rows, descs):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": f["path"],
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": f["partitionValues"] or {},
-                        }
-                    }
-                )
-                actions.append(
-                    {
-                        "add": {
-                            "path": f["path"],
-                            "partitionValues": f["partitionValues"] or {},
-                            "size": f["size"],
-                            "modificationTime": now,
-                            "dataChange": True,
-                            "stats": f.get("stats"),
-                            "deletionVector": desc,
-                            # same physical file: surviving rows keep
-                            # their identities and clustering tags
-                            "baseRowId": f.get("baseRowId"),
-                            "defaultRowCommitVersion": f.get(
-                                "defaultRowCommitVersion"
-                            ),
-                            **(
-                                {"tags": dict(f["tags"])}
-                                if f.get("tags")
-                                else {}
-                            ),
-                        }
-                    }
-                )
-            for f in full_deletes:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": f["path"],
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": f["partitionValues"] or {},
-                        }
-                    }
-                )
-            actions.extend(add_actions)
-            return self._commit(actions, operation="UPDATE (merge-on-read)")
-        finally:
-            matched.unpersist()
+        return self._update(predicate, assignments, dv=True)
 
     def _prep_merge(self, source, key_cols, delete_keys):
         """Shared MERGE validation (copy-on-write and merge-on-read):
         partition columns must ride the key, duplicate source keys
         raise (Delta's multiple-source-rows-matched error), delete
         keys must be disjoint from upsert keys, generated columns
-        apply, constraints enforce, and the source's column set must
-        equal the target's.  Returns (keys, del_keys, source, types,
-        data_schema)."""
+        apply, and the source's column set must equal the target's
+        (CHECK constraints enforce on the rows that land, in
+        :meth:`_dml`).  Returns (keys, del_keys, source, types,
+        data_schema, fill_cols)."""
         import pyspark.sql.functions as F
 
         keys = list(key_cols)
@@ -3662,7 +3493,6 @@ class DeltaSink:
         ]
         source = self._apply_defaults(source)
         source = self._apply_generated(source, "MERGE")
-        self._enforce_constraints(source, "MERGE")
         types, data_schema = self._data_schema()
         if data_schema is not None:
             # column-set guard: a wider source would write columns the
@@ -3695,245 +3525,83 @@ class DeltaSink:
 
         Scale shape mirrors ``delete``: one probe scan finds affected
         files (only the key columns of the source broadcast into the
-        probe), each affected file is rewritten once via an anti-join
-        against the source keys + a union of the matching source rows,
-        and unmatched source rows are computed with one anti-join
-        against the (small) affected-file row set's keys — at 100 TB
-        the rewrite cost is proportional to files TOUCHED, never table
+        probe), each affected file is rewritten once via a join against
+        the source that replaces matched rows' values in place, and
+        unmatched source rows are computed with one anti-join against
+        the (small) affected-file row set's keys — at 100 TB the
+        rewrite cost is proportional to files TOUCHED, never table
         size.  Duplicate keys in ``source`` raise (Delta's own
         multiple-source-rows-matched error).
 
         ``delete_keys`` adds whenMatchedDelete semantics: a DataFrame
         of key tuples whose matching target rows are removed in the
         SAME commit.  The keys stay executor-side end-to-end — they
-        ride the probe broadcast and the per-file anti-join; nothing
+        ride the probe broadcast and the rewrite's key join; nothing
         collects to the driver (vs the reference's driver-built delete
         predicates, ``Storage/TransactionLog.cs``).  A key present in
         both ``source`` and ``delete_keys`` raises: upsert-then-delete
         has no defined order inside one atomic commit."""
-        import pyspark.sql.functions as F
+        return self._merge(source, key_cols, txn, delete_keys, dv=False)
 
+    def _merge(self, source, key_cols, txn, delete_keys, dv: bool) -> int:
+        """MERGE's inputs to :meth:`_dml`: the key matcher (source keys
+        tag ``'update'``, delete keys ``'delete'``, one broadcast
+        left join), the matched-update join (one output per matched
+        TARGET row carrying the source's values cast to the declared
+        types — Delta's matched-update multiplicity; columns the
+        source omitted and the prep default-filled keep the TARGET
+        row's value, UPDATE SET * semantics) and the inserts (source
+        rows whose key no live target row holds)."""
         keys, del_keys, source, types, data_schema, fill_cols = (
             self._prep_merge(source, key_cols, delete_keys)
         )
-        self._require_no_dvs("MERGE")
-        now = int(time.time() * 1000)
-        cdf = self._cdf_enabled()
         if data_schema is None:
             # empty table: a merge is a plain first append, deletes are
             # no-ops — the txn ledger entry must still ride it (I3
             # exactly-once)
             return self.append(source, txn=txn)
-        groups = self._partition_groups()
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        import urllib.parse
-
-        src_keys = source.select(*keys).distinct()
-        # probe (and anti-join) on the union of upsert + delete keys:
-        # a file holding ONLY deleted rows must still rewrite
-        all_keys = (
-            src_keys.unionByName(del_keys).distinct()
-            if del_keys is not None
-            else src_keys
+        marks = source.select(*keys).distinct().withColumn(_ACT, F.lit("update"))
+        if del_keys is not None:
+            marks = marks.unionByName(
+                del_keys.withColumn(_ACT, F.lit("delete"))
+            )
+        field_type = {f.name: f.dataType for f in data_schema.fields}
+        sets = [c for c in source.columns if c not in keys + fill_cols]
+        src = source.select(
+            *keys, *[F.col(c).alias(f"__mlk_src_{c}") for c in sets]
         )
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
-            )
-        actions: list[dict] = []
-        thunks = []
-        matched_keys = None
-        hit_probe = None
-        if probes:
-            probe = probes[0]
-            for p in probes[1:]:
-                probe = probe.unionByName(p)
-            hits = probe.join(F.broadcast(all_keys), keys, "inner")
-            hit_abs = set()
-            for r in hits.select("_f").distinct().collect():
-                hit_abs.add(self.fs.normalize(r["_f"]))
-            src_cols = source.columns
-            # row tracking: _rewrite_group materializes the id columns
-            # into the frame; the rewrite must CARRY them — unmatched
-            # rows keep id and commit version, matched (updated) rows
-            # keep their id but reset the materialized commit version
-            # so reads surface the MERGE's commit (same semantics as
-            # update())
-            mat_id, mat_rcv = (
-                self._rt_mat_cols() if self._rt_enabled() else (None, None)
-            )
-            # absolute-path matching (see delete): shallow-cloned files
-            # are stored absolute and must still rewrite copy-on-write
-            hit_parts: list[tuple[list[str], dict]] = []
-            for key, paths in groups.items():
-                part_values = dict(key)
-                hit = [
-                    p
-                    for p in paths
-                    if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-                ]
-                if not hit:
-                    continue
-                hit_parts.append((hit, part_values))
-                pv = part_values
+        upd = F.col(_ACT) == "update"
 
-                def rewrite(df, pv=pv):
-                    full = inject(df, pv)
-                    rt_cols = [
-                        c
-                        for c in (mat_id, mat_rcv)
-                        if c and c in full.columns
-                    ]
-                    kept = full.join(
-                        F.broadcast(all_keys), keys, "left_anti"
-                    ).select(*src_cols, *rt_cols)
-                    # one output per MATCHED TARGET ROW carrying the
-                    # source's values (Delta's matched-update
-                    # multiplicity).  No forced broadcast: the source
-                    # can be arbitrarily large — AQE broadcasts it only
-                    # when it actually fits.  Columns the source
-                    # OMITTED and the prep default-filled keep the
-                    # TARGET row's value here (UPDATE SET * semantics:
-                    # a default never clobbers stored data)
-                    keep = [
-                        F.col(c).alias(f"__mlk_keep_{c}")
-                        for c in fill_cols
-                    ]
-                    updated = (
-                        full.select(*keys, *rt_cols, *keep)
-                        .join(source, keys, "inner")
-                        .select(
-                            *[
-                                F.col(f"__mlk_keep_{c}").alias(c)
-                                if c in fill_cols
-                                else F.col(c)
-                                for c in src_cols
-                            ],
-                            *rt_cols,
-                        )
-                    )
-                    if mat_rcv and mat_rcv in rt_cols:
-                        updated = updated.withColumn(
-                            mat_rcv, F.lit(None).cast("long")
-                        )
-                    return kept.unionByName(updated).drop(*pv.keys())
-
-                thunks.append(
-                    lambda hit=hit, pv=part_values, rewrite=rewrite:
-                        self._rewrite_group(
-                            hit, pv, rewrite,
-                            data_change=True, now=now,
-                            read_schema=data_schema,
-                        )
-                )
-            # keys present in ANY affected file = the matched set.
-            # Derived from the HIT files only (every match lives in
-            # one by construction) — downstream consumers (inserts
-            # anti-join, CDF post-image join) then rescan O(files
-            # touched), not the whole table a `hits`-based frame
-            # would re-probe
-            hit_probe = (
-                self._hit_frame(hit_parts, data_schema, inject)
-                if hit_parts
-                else None
-            )
-            matched_keys = (
-                hit_probe.join(F.broadcast(all_keys), keys, "inner")
-                .select(*keys)
-                .distinct()
-                if hit_probe is not None
-                else None
-            )
-        inserts = (
-            source.join(matched_keys, keys, "left_anti")
-            if matched_keys is not None
-            else source
-        )
-        # unmatched rows become fresh files inside the SAME commit
-        # (partition-aware via the shared staging path)
-        thunks.append(
-            lambda: self._stage_adds(
-                inserts, data_change=True, skip_empty=True
-            )
-        )
-        if cdf:
-            # row-level change feed: updated target rows (pre/post
-            # image), deleted target rows, and the fresh inserts.
-            # source ∩ delete_keys = ∅ (guarded above), so joining the
-            # source against matched_keys yields exactly the updates.
-            src_cols = source.columns
-            ct = "_change_type"
-            changes = inserts.select(*src_cols).withColumn(
-                ct, F.lit("insert")
-            )
-            if matched_keys is not None:
-                # pre-image / delete rows come off the HIT files only
-                # (hit_probe), not a second whole-table probe scan
-                pre = (
-                    hit_probe.join(F.broadcast(src_keys), keys, "inner")
-                    .select(*src_cols)
-                    .withColumn(ct, F.lit("update_preimage"))
-                )
-                if fill_cols:
-                    keepp = [
-                        F.col(c).alias(f"__mlk_keep_{c}")
-                        for c in fill_cols
-                    ]
-                    post = (
-                        hit_probe.join(F.broadcast(src_keys), keys, "inner")
-                        .select(*keys, *keepp)
-                        .join(source, keys, "inner")
-                        .select(
-                            *[
-                                F.col(f"__mlk_keep_{c}").alias(c)
-                                if c in fill_cols
-                                else F.col(c)
-                                for c in src_cols
-                            ]
-                        )
-                        .withColumn(ct, F.lit("update_postimage"))
-                    )
-                else:
-                    post = (
-                        source.join(matched_keys, keys, "inner")
-                        .select(*src_cols)
-                        .withColumn(ct, F.lit("update_postimage"))
-                    )
-                changes = changes.unionByName(pre).unionByName(post)
-                if del_keys is not None:
-                    changes = changes.unionByName(
-                        hit_probe.join(
-                            F.broadcast(del_keys), keys, "inner"
-                        )
-                        .select(*src_cols)
-                        .withColumn(ct, F.lit("delete"))
-                    )
-            thunks.append(lambda: self._stage_cdc(changes))
-        for acts in self._concurrent_stage(thunks):
-            actions.extend(acts)
-        if txn is not None:
-            # same idempotence contract as append(): the txn action
-            # rides the MERGE commit, so a replayed micro-batch can
-            # consult last_txn_version and skip (I3 exactly-once)
-            actions.insert(
-                0,
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": txn[1],
-                        "lastUpdated": now,
+        def upsert(df):
+            # no forced broadcast: the source can be arbitrarily large
+            # — AQE broadcasts it only when it actually fits
+            return (
+                df.join(src, keys, "left")
+                .withColumns(
+                    {
+                        c: F.when(
+                            upd, F.col(f"__mlk_src_{c}").cast(field_type[c])
+                        ).otherwise(F.col(c))
+                        for c in sets
                     }
-                },
+                )
+                .drop(*[f"__mlk_src_{c}" for c in sets])
             )
-        return self._commit(actions, operation="MERGE")
+
+        def inserts(hits):
+            if hits is None:
+                return source
+            return source.join(hits.select(*keys).distinct(), keys, "left_anti")
+
+        return self._dml(
+            "MERGE",
+            dv,
+            lambda df: df.join(F.broadcast(marks), keys, "left"),
+            upsert,
+            inserts,
+            txn=txn,
+            schema=(types, data_schema),
+        )
 
     def merge_dv(
         self,
@@ -3956,279 +3624,12 @@ class DeltaSink:
         types (insert / update_preimage / update_postimage / delete),
         row tracking (updated rows keep their ids, materialized into
         the appended files; inserts mint fresh ones) and txn
-        idempotence all match :meth:`merge`.  A target row already in
-        a deletion vector is logically gone: its key does NOT count as
-        matched, so the source row inserts instead.  :meth:`reorg`
-        purges these DVs like any other."""
-        import pyspark.sql.functions as F
-
-        from . import dv as _dv
-        from .delta_log import latest_protocol, snapshot_files
-
-        keys, del_keys, source, types, data_schema, fill_cols = (
-            self._prep_merge(source, key_cols, delete_keys)
-        )
-        now = int(time.time() * 1000)
-        cdf = self._cdf_enabled()
-        if data_schema is None:
-            # empty table: all-inserts append; deletes are no-ops
-            return self.append(source, txn=txn)
-        rt = self._rt_enabled()
-        mat_id, mat_rcv = self._rt_mat_cols() if rt else (None, None)
-        rt_cols = [c for c in (mat_id, mat_rcv) if c]
-        read_schema = data_schema
-        if rt and rt_cols:
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            read_schema = StructType(
-                [
-                    *data_schema.fields,
-                    *[
-                        StructField(c, LongType(), True)
-                        for c in rt_cols
-                        if c not in data_schema.fieldNames()
-                    ],
-                ]
-            )
-        files = snapshot_files(self.spark, self.path)
-        by_norm = {
-            _fs.data_path_spelling(self.path, f["path"]): f for f in files
-        }
-        old_pairs = self._old_dv_pairs(files)
-        old_descs = self._old_dv_desc_df(files)
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        src_keys = source.select(*keys).distinct()
-        all_keys = (
-            src_keys.unionByName(del_keys).distinct()
-            if del_keys is not None
-            else src_keys
-        )
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, read_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
-        actions: list[dict] = []
-        matched = None
-        packed: list = []
-        if probes:
-            probe = probes[0]
-            for pr_ in probes[1:]:
-                probe = probe.unionByName(pr_)
-            if old_pairs is not None:
-                # single consumer now (the probe anti-join); the bitmap
-                # merge reads compressed payloads via old_descs, and
-                # `matched` is persisted so the explosion runs once
-                probe = probe.join(old_pairs, ["_f", "_ridx"], "left_anti")
-            matched = probe.join(
-                F.broadcast(all_keys), keys, "inner"
-            ).persist()
-        try:
-            if matched is not None:
-                packed = self._pack_merged_dvs(matched, old_descs)
-            src_cols = source.columns
-            matched_keys = None
-            updated = None
-            m_rows = None
-            if packed:
-                m_rows = matched
-                if rt and mat_id:
-                    affected = sorted(
-                        {by_norm[r["_f"]]["path"] for r in packed}
-                    )
-                    m_rows = m_rows.withColumn(
-                        "__mlk_rtfile", F.col("_f")
-                    ).withColumn("__mlk_rtridx", F.col("_ridx"))
-                    m_rows = self._materialize_row_ids(
-                        m_rows, affected, mat_id, None
-                    ).drop("__mlk_rtfile", "__mlk_rtridx")
-                matched_keys = m_rows.select(*keys).distinct()
-                carry = [c for c in rt_cols if c in m_rows.columns]
-                # one output per matched TARGET row with the SOURCE's
-                # values (Delta's matched-update multiplicity); the
-                # target row's materialized id rides along, its commit
-                # version resets to this commit.  Default-filled
-                # columns the source omitted keep the TARGET value
-                # (UPDATE SET * semantics) — the postimage derives
-                # from this frame, so CDF stays consistent for free
-                keep = [
-                    F.col(c).alias(f"__mlk_keep_{c}") for c in fill_cols
-                ]
-                updated = (
-                    m_rows.select(*keys, *carry, *keep)
-                    .join(source, keys, "inner")
-                    .select(
-                        *[
-                            F.col(f"__mlk_keep_{c}").alias(c)
-                            if c in fill_cols
-                            else F.col(c)
-                            for c in src_cols
-                        ],
-                        *carry,
-                    )
-                )
-                if mat_rcv and mat_rcv in (updated.columns):
-                    updated = updated.withColumn(
-                        mat_rcv, F.lit(None).cast("long")
-                    )
-            inserts = (
-                source.join(matched_keys, keys, "left_anti")
-                if matched_keys is not None
-                else source
-            )
-            # the CDC write, the updated-row append and the insert
-            # append are independent staging jobs (own uuid dirs, all
-            # reading the persisted `matched` / the source): run them
-            # concurrently so each job's tasks back-fill executors
-            # freed by the previous one's tail (guide §2.6)
-            thunks = []
-            if cdf:
-                ct = "_change_type"
-                changes = inserts.select(*src_cols).withColumn(
-                    ct, F.lit("insert")
-                )
-                if packed:
-                    pre = (
-                        m_rows.join(F.broadcast(src_keys), keys, "inner")
-                        .select(*src_cols)
-                        .withColumn(ct, F.lit("update_preimage"))
-                    )
-                    post = (
-                        updated.select(*src_cols)
-                        .withColumn(ct, F.lit("update_postimage"))
-                    )
-                    changes = changes.unionByName(pre).unionByName(post)
-                    if del_keys is not None:
-                        changes = changes.unionByName(
-                            m_rows.join(
-                                F.broadcast(del_keys), keys, "inner"
-                            )
-                            .select(*src_cols)
-                            .withColumn(ct, F.lit("delete"))
-                        )
-                thunks.append(lambda df=changes: self._stage_cdc(df))
-            if updated is not None:
-                thunks.append(
-                    lambda df=updated: self._stage_adds(
-                        df, data_change=True, skip_empty=True
-                    )
-                )
-            thunks.append(
-                lambda df=inserts: self._stage_adds(
-                    df, data_change=True, skip_empty=True
-                )
-            )
-            staged = self._concurrent_stage(thunks)
-            cdc_actions: list[dict] = staged[0] if cdf else []
-            updated_adds = staged[-2] if updated is not None else []
-            insert_adds = staged[-1]
-            if packed:
-                cur = latest_protocol(self.path)
-                pr = upgraded_protocol(
-                    cur, ("deletionVectors",), ("deletionVectors",)
-                )
-                if pr != cur:
-                    actions.append({"protocol": pr})
-            actions.extend(cdc_actions)
-            full_deletes, dv_rows = [], []
-            for r in packed:
-                f = by_norm[r["_f"]]
-                n_rec = f.get("numRecords")
-                if n_rec is not None and r["card"] >= n_rec:
-                    full_deletes.append(f)
-                else:
-                    dv_rows.append((f, r))
-            descs = _dv.pack_dv_file(
-                self.path,
-                [(bytes(r["payload"]), int(r["card"])) for _f, r in dv_rows],
-            )
-            for (f, _r), desc in zip(dv_rows, descs):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": f["path"],
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": f["partitionValues"] or {},
-                        }
-                    }
-                )
-                actions.append(
-                    {
-                        "add": {
-                            "path": f["path"],
-                            "partitionValues": f["partitionValues"] or {},
-                            "size": f["size"],
-                            "modificationTime": now,
-                            "dataChange": True,
-                            "stats": f.get("stats"),
-                            "deletionVector": desc,
-                            "baseRowId": f.get("baseRowId"),
-                            "defaultRowCommitVersion": f.get(
-                                "defaultRowCommitVersion"
-                            ),
-                            **(
-                                {"tags": dict(f["tags"])}
-                                if f.get("tags")
-                                else {}
-                            ),
-                        }
-                    }
-                )
-            for f in full_deletes:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": f["path"],
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            "partitionValues": f["partitionValues"] or {},
-                        }
-                    }
-                )
-            actions.extend(updated_adds)
-            actions.extend(insert_adds)
-            if txn is not None:
-                actions.insert(
-                    0,
-                    {
-                        "txn": {
-                            "appId": txn[0],
-                            "version": txn[1],
-                            "lastUpdated": now,
-                        }
-                    },
-                )
-            return self._commit(actions, operation="MERGE (merge-on-read)")
-        finally:
-            if matched is not None:
-                matched.unpersist()
-
-    def _delete_dv_cdc(self, probe, predicate, old_pairs, packed):
-        """Row-level change feed for delete_dv: only the NEWLY deleted
-        rows — a row already in a prior deletion vector must not
-        re-report.  The old-vector pairs anti-join the matches;
-        nothing expands on the driver."""
-        import pyspark.sql.functions as F
-
-        if not (packed and self._cdf_enabled()):
-            return []
-        newly = probe.filter(predicate)
-        if old_pairs is not None:
-            newly = newly.join(old_pairs, ["_f", "_ridx"], "left_anti")
-        return self._stage_cdc(
-            newly.drop("_f", "_ridx").withColumn(
-                "_change_type", F.lit("delete")
-            )
-        )
+        idempotence all match :meth:`merge` — both run the same
+        matched-update join.  A target row already in a deletion
+        vector is logically gone: its key does NOT count as matched,
+        so the source row inserts instead.  :meth:`reorg` purges these
+        DVs like any other."""
+        return self._merge(source, key_cols, txn, delete_keys, dv=True)
 
     def delete_dv(self, predicate: str) -> int:
         """Merge-on-read row-level delete: instead of rewriting every
@@ -4244,146 +3645,16 @@ class DeltaSink:
         materializes them (Delta's REORG APPLY PURGE model).
 
         Executor-side end-to-end: matching (file, row_index) pairs are
-        found by a distributed scan, each file's bitmap is serialized
-        inside ``applyInPandas`` (merging any EXISTING vector without
-        driver expansion), and the driver collects only the compressed
-        payloads.  A file whose every row is deleted gets a plain
-        remove instead of a DV.  The commit also upgrades the protocol
-        to readerVersion 3 + deletionVectors."""
-        import pyspark.sql.functions as F
-
-        from . import dv as _dv
-        from .delta_log import snapshot_files
-
-        types, data_schema = self._data_schema()
-        if data_schema is None:
-            return -1  # empty table: nothing to delete
-        now = int(time.time() * 1000)
-        files = snapshot_files(self.spark, self.path)
-        # file identity key = the same JVM-side spelling the scan
-        # emits (url_decode + file:-scheme strip) — NOT fs.normalize,
-        # whose Hadoop qualification would never match; plain strings
-        # also keep the Arrow closure free of py4j handles
-        by_norm: dict[str, dict] = {
-            _fs.data_path_spelling(self.path, f["path"]): f for f in files
-        }
-        old_descs = self._old_dv_desc_df(files)
-        # the exploded (file, row) form of the old vectors is only
-        # needed by the CDC anti-join (newly-deleted rows must exclude
-        # already-deleted ones); the bitmap merge itself reads the
-        # compressed payloads via old_descs.  With CDF off, no old
-        # bitmap ever explodes at all (r12 optimization)
-        old_pairs = (
-            self._old_dv_pairs(files) if self._cdf_enabled() else None
-        )
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, data_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
-        if not probes:
-            return self._commit([], operation="DELETE (merge-on-read)")
-        probe = probes[0]
-        for pr in probes[1:]:
-            probe = probe.unionByName(pr)
-        matched = probe.filter(predicate).select("_f", "_ridx")
-        packed = self._pack_merged_dvs(matched, old_descs)
-        cdc_actions = self._delete_dv_cdc(
-            probe, predicate, old_pairs, packed
-        )
-        if not packed:
-            return self._commit([], operation="DELETE (merge-on-read)")
-        # protocol upgrade MERGES with whatever the table already
-        # declares (overwriting would drop features like timestampNtz
-        # or v2Checkpoint an external writer recorded) AND enumerates
-        # the legacy features the old version numbers implied
-        from .delta_log import latest_protocol
-
-        cur = latest_protocol(self.path)
-        pr = upgraded_protocol(
-            cur, ("deletionVectors",), ("deletionVectors",)
-        )
-        full_deletes, dv_rows = [], []
-        for r in packed:
-            f = by_norm[r["_f"]]
-            old_card = (f.get("deletionVector") or {}).get(
-                "cardinality"
-            ) or 0
-            if old_card and r["card"] <= old_card:
-                # every matching row was already deleted (the merged
-                # bitmap is the old bitmap): re-adding an identical DV
-                # is log churn — and under CDF it would commit DV
-                # re-adds with NO cdc action (zero newly-deleted
-                # rows), which permanently breaks the change feed over
-                # that span
-                continue
-            n_rec = f.get("numRecords")
-            if n_rec is not None and r["card"] >= n_rec:
-                full_deletes.append(f)
-            else:
-                dv_rows.append((f, r))
-        if not full_deletes and not dv_rows:
-            return self._commit([], operation="DELETE (merge-on-read)")
-        actions: list[dict] = [] if pr == cur else [{"protocol": pr}]
-        actions.extend(cdc_actions)
-        descs = _dv.pack_dv_file(
-            self.path,
-            [(bytes(r["payload"]), int(r["card"])) for _f, r in dv_rows],
-        )
-        for (f, _r), desc in zip(dv_rows, descs):
-            actions.append(
-                {
-                    "remove": {
-                        "path": f["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                        "partitionValues": f["partitionValues"] or {},
-                    }
-                }
-            )
-            actions.append(
-                {
-                    "add": {
-                        "path": f["path"],
-                        "partitionValues": f["partitionValues"] or {},
-                        "size": f["size"],
-                        "modificationTime": now,
-                        "dataChange": True,
-                        "stats": f.get("stats"),
-                        "deletionVector": desc,
-                        # re-adding the SAME file with a DV must keep
-                        # its row ids (PROTOCOL.md Row Tracking) — the
-                        # surviving rows' identities don't change
-                        "baseRowId": f.get("baseRowId"),
-                        "defaultRowCommitVersion": f.get(
-                            "defaultRowCommitVersion"
-                        ),
-                        # same physical file: clustering stays valid
-                        **({"tags": dict(f["tags"])} if f.get("tags") else {}),
-                    }
-                }
-            )
-        for f in full_deletes:
-            actions.append(
-                {
-                    "remove": {
-                        "path": f["path"],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                        "partitionValues": f["partitionValues"] or {},
-                    }
-                }
-            )
-        return self._commit(actions, operation="DELETE (merge-on-read)")
+        found by a distributed scan and grouped per file with a JVM
+        ``collect_list``; ONE ``mapInPandas`` pass then merges any
+        EXISTING vector (fetched executor-side, never expanded on the
+        driver) and serializes each file's bitmap, and the driver
+        collects only the compressed payloads.  A file whose every row
+        is deleted gets a plain remove instead of a DV; a file whose
+        matches were all already deleted is left alone.  The commit
+        also upgrades the protocol to readerVersion 3 +
+        deletionVectors."""
+        return self._dml("DELETE", True, self._where(predicate, "delete"))
 
     def reorg(self) -> int:
         """REORG TABLE ... APPLY (PURGE): materialize every deletion
@@ -4391,63 +3662,26 @@ class DeltaSink:
         rows (dataChange=false — logical content is unchanged, so the
         mirror and the change feed ignore the churn, O2).  After this
         the copy-on-write paths (delete/merge/optimize) work again."""
-        import pyspark.sql.functions as F
+        from .delta_log import snapshot_files
 
-        from . import dv as _dv
-
-        dvs = self._dv_map()
-        if not dvs:
-            return self._commit([], operation="REORG (PURGE)")
-        types, data_schema = self._data_schema()
-        now = int(time.time() * 1000)
-        deleted = _dv.deleted_rows(
-            self.spark,
-            self.path,
-            [
-                (_fs.data_path_spelling(self.path, p), d)
-                for p, d in dvs.items()
-            ],
-        )
-        norm_expr = _fs.spark_scan_path(F.input_file_name())
-        groups = self._partition_groups()
+        files = [
+            f
+            for f in snapshot_files(self.spark, self.path)
+            if (f.get("deletionVector") or {}).get("cardinality")
+        ]
         actions: list[dict] = []
-        for key, paths in groups.items():
-            hit = [p for p in paths if p in dvs]
-            if not hit:
-                continue
-
-            def transform(df, _d=deleted):
-                # under row tracking _rewrite_group pre-attaches the
-                # identity (a join consumed _metadata); otherwise read
-                # it straight off the scan
-                if "__mlk_rtridx" in df.columns:
-                    out = df.withColumns(
-                        {
-                            "_f": F.col("__mlk_rtfile"),
-                            "_ridx": F.col("__mlk_rtridx"),
-                        }
-                    )
-                else:
-                    out = df.withColumns(
-                        {
-                            "_f": norm_expr,
-                            "_ridx": F.col("_metadata.row_index"),
-                        }
-                    )
-                return out.join(_d, ["_f", "_ridx"], "left_anti").drop(
-                    "_f", "_ridx"
-                )
-
-            actions.extend(
-                self._rewrite_group(
-                    hit,
-                    dict(key),
-                    transform,
-                    data_change=False,
-                    now=now,
-                    read_schema=data_schema,
-                )
+        if files:
+            types, data_schema = self._data_schema()
+            thunks = self._rewrite(
+                files,
+                types,
+                data_schema,
+                lambda df: df,
+                data_change=False,
+                now=int(time.time() * 1000),
+                old_pairs=self._old_dv_pairs(files),
             )
+            actions = [a for run in thunks for a in run()]
         return self._commit(actions, operation="REORG (PURGE)")
 
     def properties(self) -> dict[str, str]:
@@ -5090,7 +4324,7 @@ class DeltaSink:
                     f"an integer: {raw!r} — fix it with set_properties"
                 ) from None
         now = int(time.time() * 1000)
-        _types, data_schema = self._data_schema()
+        types, data_schema = self._data_schema()
         hilbert = zorder_by is None and bool(cluster_by)
         zcols = list(zorder_by or cluster_by or [])
         if zcols:
@@ -5113,13 +4347,9 @@ class DeltaSink:
                 files = _prune_partitions(
                     self.spark, files, meta, partition_predicate
                 )
-        groups: dict[tuple, list[dict]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f)
         cluster_tag = ",".join(zcols) if hilbert else None
-        actions: list[dict] = []
-        for key, files in groups.items():
+        thunks = []
+        for _pv, files in self._groups(files):
             if hilbert and not full:
                 # INCREMENTAL clustering (the liquid model, and the
                 # 100 TB requirement): files a previous CLUSTER BY
@@ -5171,19 +4401,16 @@ class DeltaSink:
             else:
                 def transform(df, n=n_out):
                     return df.coalesce(n)
-            actions.extend(
-                self._rewrite_group(
-                    [f["path"] for f in files],
-                    dict(key),
-                    transform,
-                    data_change=False,
-                    now=now,
-                    read_schema=data_schema,
-                    tags={"MLK_CLUSTERED_BY": cluster_tag}
-                    if cluster_tag
-                    else None,
-                )
+            thunks += self._rewrite(
+                files,
+                types,
+                data_schema,
+                transform,
+                data_change=False,
+                now=now,
+                tags={"MLK_CLUSTERED_BY": cluster_tag} if cluster_tag else None,
             )
+        actions = [a for run in thunks for a in run()]
         return self._commit(
             actions,
             operation="OPTIMIZE CLUSTER BY"
