@@ -115,16 +115,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="compact the target's small files every N batches",
     )
     ap.add_argument(
-        "--state-backend",
-        choices=("csv", "delta"),
-        default="delta",
-        help="delta (default): state in a Delta table, Spark-side "
-        "current view, driver holds at most one batch (large tables); "
-        "csv: reference-faithful append-blob + driver map (low "
-        "latency, small tables).  A csv state dir migrates in place "
-        "when reopened with the delta backend",
-    )
-    ap.add_argument(
         "--on-schema-change",
         choices=(
             "fail", "evolve-add", "evolve-rename", "widen", "evolve-drop"
@@ -394,7 +384,6 @@ def main(argv: list[str] | None = None) -> int:
         creation_time_dialect=args.creation_time_dialect,
         max_items_per_batch=args.max_items_per_batch,
         optimize_target_every=args.optimize_target_every,
-        state_backend=args.state_backend,
         on_schema_change=args.on_schema_change,
     )
     if args.continuous:

@@ -1,10 +1,10 @@
-"""Delta-backed TransactionItem state store — the 100 TB state path.
+"""The TransactionItem state store: state rows in a Delta table.
 
-The CSV store (state.py) is reference-faithful: an append-only blob
-plus an in-memory LWW map (GlobalTableStatus.cs:66-74).  That driver
-map is O(total mirrored files) — SURVEY §7.4 named it the reference's
-scaling ceiling and prescribed keeping state in a Delta table instead.
-This class does exactly that, dogfooding this repo's own Delta writer:
+The reference keeps mirroring state as an append-only CSV blob plus an
+in-memory last-writer-wins map (GlobalTableStatus.cs:66-74); SURVEY
+§7.4 names that driver map the reference's scaling ceiling and
+prescribes keeping the state in a Delta table instead.  This store
+does that with this repo's own Delta writer:
 
 - ``persist`` appends item rows (with a monotonically increasing
   ``_seq``) to a Delta table — atomic commit, periodic parquet
@@ -31,10 +31,9 @@ footprint is under ``DRIVER_STATE_MAX_BYTES`` the LWW map is held on
 the driver (hydrated via pyarrow, write-through on persist: dict-lookup
 steering, zero Spark jobs), and past the threshold every steering read
 becomes a bounded Spark job over the cached Spark-side LWW view.  Both
-paths are tested equivalent.  This is the DEFAULT backend (the
-100×-scale posture SURVEY §7.4 prescribes); pass
-``state_backend="csv"`` for the reference-faithful CSV store.  A state
-dir written by the CSV backend migrates in place on open.
+paths are tested equivalent.  A state dir written by the retired CSV
+backend (``ix_*.csv`` files, read by ``state.StateStore``) migrates in
+place on open.
 """
 
 from __future__ import annotations
@@ -52,7 +51,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..sources.delta_sink import DeltaSink
 from ..sources.skipping import file_stats_json
-from .state import COLUMNS, COMPLETE_STATES, KEY
+from .state import COLUMNS, COMPLETE_STATES, KEY, StateStore
 
 _INT_COLS = ("start_tx_id", "end_tx_id", "size", "record_count", "_seq")
 _ALL_COLS = COLUMNS + ["_seq"]
@@ -74,7 +73,8 @@ _ARROW = pa.schema(
 
 
 class DeltaStateStore:
-    """Same surface as ``StateStore``, state rows in a Delta table."""
+    """TransactionItem rows in a Delta table; steering reads served
+    from a driver LWW map or, past the threshold, a Spark view."""
 
     # Driver LWW map allowed while the state table's parquet footprint
     # is below this (~160k items); past it, steering reads run as
@@ -110,10 +110,7 @@ class DeltaStateStore:
     def _hydrate(self) -> dict[tuple, dict[str, Any]] | None:
         from ..sources.delta_log import snapshot_files
 
-        try:
-            files = snapshot_files(self.spark, self.dir)
-        except Exception:  # no commits yet
-            files = []
+        files = snapshot_files(self.spark, self.dir)  # [] before the first commit
         if sum(f.get("size") or 0 for f in files) > self.DRIVER_STATE_MAX_BYTES:
             return None
         from ..sources import fs as _fsmod
@@ -146,24 +143,21 @@ class DeltaStateStore:
         return out
 
     def _migrate_csv_state(self) -> None:
-        """In-place CSV→Delta state migration: a mirror previously run
-        with ``state_backend="csv"`` upgrades transparently when opened
-        with the (now default) Delta backend.  The legacy store's LWW
-        current view is persisted as one Delta commit — compaction
-        semantics, history is not carried — then the CSV files are
-        removed.  Crash-safe: if the process dies between persist and
-        remove, re-running re-persists the same items, and LWW by a
-        later ``_seq`` yields the identical current view."""
+        """In-place CSV→Delta state migration: a state dir written by
+        the retired CSV backend upgrades transparently on open.  The
+        legacy store's LWW current view is persisted as one Delta
+        commit — compaction semantics, history is not carried — then
+        the CSV files are removed.  Crash-safe: if the process dies
+        between persist and remove, re-running re-persists the same
+        items, and LWW by a later ``_seq`` yields the identical current
+        view."""
         from ..sources import fs as _fsmod
 
         fs = _fsmod.get_fs(self.dir)
         csvs = [n for n in fs.listdir(self.dir) if n.startswith("ix_")]
         if not csvs:
             return
-        from .state import StateStore
-
-        legacy = StateStore(self.spark, self.dir)
-        self.persist(legacy.current_items())
+        self.persist(StateStore(self.dir).current_items())
         for n in csvs:
             fs.remove(_fsmod.join(self.dir, n))
 
@@ -248,8 +242,15 @@ class DeltaStateStore:
     # -- current view (Spark-side LWW) --------------------------------------
 
     def status_df(self) -> DataFrame:
-        """arg_max(_seq) per item key (K7 view, D3/D4).  Cached per
-        state generation: a sync round steers off this view many times
+        """The MLK_DeltaStatus view (K7): arg_max(_seq) per item key in
+        deterministic order (D3 + F1, DatabaseGateway.cs:85-104)."""
+        return self._view().orderBy(
+            "table_name", "start_tx_id", "action", "blob_path"
+        )
+
+    def _view(self) -> DataFrame:
+        """arg_max(_seq) per item key, unordered.  Cached per state
+        generation: a sync round steers off this view many times
         (high-water, incomplete batch, adds/removes) — the log replay +
         window runs once, consumers scan the cached result, and any
         ``persist``/``compact`` invalidates."""
@@ -282,7 +283,7 @@ class DeltaStateStore:
                 and (action is None or it["action"] == action)
             ]
         else:
-            df = self.status_df()
+            df = self._view()
             if table_name is not None:
                 df = df.filter(F.col("table_name") == table_name)
             if action is not None:
@@ -302,14 +303,16 @@ class DeltaStateStore:
         m = self._lww_map()
         if m is not None:
             rows = [
-                tuple(it.get(c) for c in COLUMNS)
+                it
                 for it in m.values()
                 if it["table_name"] == table_name and it["action"] == action
             ]
+            # through Arrow: Python rows would be re-verified per row and
+            # decoded again by Python workers on every scan
             return self.spark.createDataFrame(
-                rows, StructType(_STRUCT.fields[:-1])  # minus _seq
+                pa.Table.from_pylist(rows, schema=_ARROW.remove(len(COLUMNS)))
             )
-        return self.status_df().filter(
+        return self._view().filter(
             (F.col("table_name") == table_name) & (F.col("action") == action)
         )
 
@@ -340,7 +343,7 @@ class DeltaStateStore:
             done = [b for b, inc in incomplete.items() if not inc]
             return max(done) if done else -1
         row = (
-            self.status_df()
+            self._view()
             .filter(F.col("table_name") == table_name)
             .groupBy("end_tx_id")
             .agg(
@@ -379,7 +382,7 @@ class DeltaStateStore:
                 and it["end_tx_id"] == end
             ]
         else:
-            status = self.status_df().filter(F.col("table_name") == table_name)
+            status = self._view().filter(F.col("table_name") == table_name)
             earliest = (
                 status.filter(~F.col("state").isin(*COMPLETE_STATES))
                 .agg(

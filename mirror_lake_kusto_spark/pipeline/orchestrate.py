@@ -54,7 +54,8 @@ from pyspark.sql.types import StructField, StructType
 
 from ..sources import delta_log as DL
 from ..sources.delta_sink import DeltaSink
-from .state import COMPLETE_STATES, StateStore
+from .delta_state import DeltaStateStore
+from .state import COMPLETE_STATES
 
 
 class SchemaChangedError(NotImplementedError):
@@ -127,7 +128,6 @@ class MirrorPipeline:
         compact_every: int = 8,
         optimize_target_every: int | None = None,
         max_items_per_batch: int = 100_000,
-        state_backend: str = "delta",
         on_schema_change: str = "fail",
         optimize_target_zorder_by: list[str] | None = None,
         optimize_target_cluster_by: list[str] | None = None,
@@ -144,20 +144,10 @@ class MirrorPipeline:
         self.sink = DeltaSink(
             spark, target_path, commit_coordinator=commit_coordinator
         )
-        if state_backend == "csv":
-            # reference-faithful: append-only CSV + driver LWW map —
-            # lowest batch latency, driver holds O(total files) items
-            self.state = StateStore(spark, state_dir)
-        elif state_backend == "delta":
-            # default, the 100 TB path: state rows in a Delta table,
-            # LWW computed by Spark, steering reads collect at most one
-            # batch; a state dir written by the CSV backend migrates in
-            # place on open
-            from .delta_state import DeltaStateStore
-
-            self.state = DeltaStateStore(spark, state_dir)
-        else:
-            raise ValueError(f"unknown state_backend: {state_backend!r}")
+        # state rows in a Delta table: driver LWW map while small,
+        # Spark-side view past the threshold; a state dir written by
+        # the retired CSV backend migrates in place on open
+        self.state = DeltaStateStore(spark, state_dir)
         self.go_back_days = go_back_days
         self.creation_time_expr = creation_time_expr
         if creation_time_dialect not in ("spark", "kql", "auto"):
@@ -551,37 +541,20 @@ class MirrorPipeline:
         import pyspark.sql.functions as F2
 
         active = self._active_files(end_tx)
-        if hasattr(self.state, "adds_df"):
-            # scale path: processed state stays a DataFrame end-to-end —
-            # the driver never materializes the historical add list
-            processed = (
-                self.state.adds_df(self.table)
-                .select(
-                    F.col("blob_path").alias("path"), "partition_values"
-                )
-                .dropDuplicates(["path"])
-            )
-            removed = (
-                self.state.removes_df(self.table)
-                .select(F.col("blob_path").alias("path"))
-                .dropDuplicates(["path"])
-            )
-        else:
-            processed = self.spark.createDataFrame(
-                [
-                    (r["blob_path"], r["partition_values"])
-                    for r in self.state.current_items(self.table, "Add")
-                ],
-                "path string, partition_values string",
-            )
-            # removes already applied must not resurface as missing adds
-            removed = self.spark.createDataFrame(
-                [
-                    (r["blob_path"],)
-                    for r in self.state.current_items(self.table, "Remove")
-                ],
-                "path string",
-            )
+        # processed state stays a DataFrame end-to-end — past the
+        # steering threshold the driver never materializes the
+        # historical add list
+        processed = (
+            self.state.adds_df(self.table)
+            .select(F.col("blob_path").alias("path"), "partition_values")
+            .dropDuplicates(["path"])
+        )
+        # removes already applied must not resurface as missing adds
+        removed = (
+            self.state.removes_df(self.table)
+            .select(F.col("blob_path").alias("path"))
+            .dropDuplicates(["path"])
+        )
         live_processed = processed.join(removed, "path", "left_anti")
         new_adds = active.join(processed, "path", "left_anti")
         new_removes = live_processed.join(active, "path", "left_anti").select(
@@ -1357,14 +1330,10 @@ class MirrorPipeline:
     ) -> dict[str, tuple[str, str | None]]:
         """blob_path -> (state, internal_state) of the LATEST Add item
         per path, for a bounded probe set — driver map under the
-        steering threshold, broadcast-probe join past it (the same
-        split _apply_removes uses)."""
+        steering threshold, broadcast-probe join past it."""
         if not paths:
             return {}
-        driver_side = getattr(
-            self.state, "steering_is_driver_side", lambda: True
-        )()
-        if hasattr(self.state, "adds_df") and not driver_side:
+        if not self.state.steering_is_driver_side():
             probe = self.spark.createDataFrame(
                 [(p,) for p in sorted(paths)], "blob_path string"
             )
@@ -1479,24 +1448,7 @@ class MirrorPipeline:
         import pyspark.sql.functions as F2
 
         active = self._active_files(end_tx)
-        if hasattr(self.state, "adds_df"):
-            adds = self.state.adds_df(self.table)
-        else:
-            adds = self.spark.createDataFrame(
-                [
-                    (
-                        r["blob_path"],
-                        r["start_tx_id"],
-                        r["end_tx_id"],
-                        r["state"],
-                        r.get("internal_state"),
-                    )
-                    for r in self.state.current_items(self.table, "Add")
-                ],
-                "blob_path string, start_tx_id long, end_tx_id long, "
-                "state string, internal_state string",
-            )
-        latest = adds.groupBy("blob_path").agg(
+        latest = self.state.adds_df(self.table).groupBy("blob_path").agg(
             F2.max_by(
                 F2.struct("state", "internal_state"),
                 F2.struct("start_tx_id", "end_tx_id"),
@@ -1598,31 +1550,14 @@ class MirrorPipeline:
         ]
         if not removes:
             return 0
-        driver_side = getattr(
-            self.state, "steering_is_driver_side", lambda: True
-        )()
-        if hasattr(self.state, "adds_df") and not driver_side:
-            # scale path: look up only THIS batch's remove paths (a
-            # bounded broadcast probe), not the full historical add list
-            probe = self.spark.createDataFrame(
-                [(i["blob_path"],) for i in removes], "blob_path string"
-            )
-            latest = (
-                self.state.adds_df(self.table)
-                .join(F.broadcast(probe), "blob_path")
-                .groupBy("blob_path")
-                .agg(
-                    F.max_by(
-                        "state", F.struct("start_tx_id", "end_tx_id")
-                    ).alias("state")
-                )
-            )
-            hist = {r["blob_path"]: r["state"] for r in latest.collect()}
-        else:
-            hist = {
-                r["blob_path"]: r["state"]
-                for r in self.state.current_items(self.table, "Add")
-            }
+        # look up only THIS batch's remove paths, not the full
+        # historical add list
+        hist = {
+            p: state
+            for p, (state, _internal) in self._latest_add_items(
+                {i["blob_path"] for i in removes}
+            ).items()
+        }
         # adds staged in THIS batch are in `items`, possibly not yet persisted
         for i in items:
             if i["action"] == "Add":

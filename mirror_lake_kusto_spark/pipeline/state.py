@@ -1,41 +1,29 @@
-"""TransactionItem state store (SURVEY §1.2 state schema, A8/A9/A11/A12,
-D3/D4, O10).
+"""TransactionItem schema (SURVEY §1.2 state schema, A8/A9/A11/A12,
+D3/D4, O10) and the read-only legacy CSV state reader.
 
 The reference persists mirroring state as an append-only CSV blob of
-``TransactionItem`` rows — last-writer-wins per item key — compacted by
-rewriting the whole file (Storage/GlobalTableStatus.cs:19,112-180,
-CheckpointGateway.cs:46,87-104, TransactionItem.cs:24).  Faithful
-Spark shape:
+``TransactionItem`` rows — last-writer-wins per item key
+(Storage/GlobalTableStatus.cs:19,112-180, TransactionItem.cs:24).
+This engine keeps the same rows in a Delta table instead
+(``delta_state.DeltaStateStore``, SURVEY §7.4).  What stays here:
 
-- each flush appends one CSV file ``ix_<seq>_<uuid>.csv`` to the state
-  dir (the append-blob block analogue; ``seq`` gives the total write
-  order the reference gets from block order);
-- the current view is ``arg_max(seq) by item key`` — the same D3/D4
-  dedup the reference runs both client-side (GroupBy…Last) and
-  server-side (KQL ``arg_max(MirrorTimestamp, *)``,
-  DatabaseGateway.cs:93) — held as a driver map for the pipeline's
-  steering reads (items are O(source files), the same driver-scale
-  metadata Delta itself replays) AND computed independently as a Spark
-  window by ``status_df()`` (K7 view; the tests assert both agree);
-- ``compact()`` rewrites one CSV + deletes the old files
-  (GlobalTableStatus.cs:210-222's temp-blob + atomic-rename dance).
-
-Item columns mirror TransactionItem.cs:24; the ``dynamic`` (JSON-in-
-cell) columns stay JSON strings, parsed with ``from_json`` on demand
-(H6).
+- the item columns (TransactionItem.cs:24; the ``dynamic`` JSON-in-cell
+  columns stay JSON strings, H6), the item identity ``KEY`` and the
+  terminal states;
+- ``StateStore``, the reader for state dirs written by the retired CSV
+  backend: each flush there appended one ``ix_<seq>_<uuid>.csv`` file,
+  and the current view is the last write per item key in ``seq``
+  order.  ``DeltaStateStore`` reads it once to migrate such a dir in
+  place.
 """
 
 from __future__ import annotations
 
 import csv
 import io
-import uuid
 from typing import Any
 
 from ..sources import fs as _fs
-
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
 
 COLUMNS = [
     "table_name",
@@ -53,13 +41,6 @@ COLUMNS = [
     "schema",  # JSON
     "internal_state",  # JSON
 ]
-_CSV_SCHEMA = (
-    "table_name STRING, start_tx_id LONG, end_tx_id LONG, action STRING, "
-    "state STRING, mirror_timestamp STRING, delta_timestamp STRING, "
-    "blob_path STRING, partition_values STRING, size LONG, "
-    "record_count LONG, partition_columns STRING, schema STRING, "
-    "internal_state STRING"
-)
 # item identity (GetItemKey analogue, GlobalTableStatus.cs:72-74)
 KEY = ["table_name", "start_tx_id", "end_tx_id", "action", "blob_path"]
 
@@ -69,196 +50,26 @@ COMPLETE_STATES = ("Done", "Skipped")
 _INT_COLS = ("start_tx_id", "end_tx_id", "size", "record_count")
 
 
-def _item_key(it: dict[str, Any]) -> tuple:
-    return tuple(it.get(k) for k in KEY)
-
-
 class StateStore:
-    """Driver-held LWW view + append-only CSV persistence.
+    """Read-only view of a legacy CSV state dir: the last-writer-wins
+    fold over its ``ix_*.csv`` files."""
 
-    The driver keeps the current item map in memory (exactly the
-    reference's GlobalTableStatus in-memory list,
-    GlobalTableStatus.cs:66-74) and every read that steers the pipeline
-    (high-water mark, incomplete batch, historical adds) is served from
-    it — steering on metadata must not cost a cluster job.  The CSV
-    files remain the durable source of truth: a fresh StateStore
-    rehydrates from them, and ``status_df()`` exposes the same LWW view
-    as a DataFrame (K7) computed independently by Spark — the oracle
-    checks both agree.  Item count is O(source files), the same
-    driver-scale metadata Delta itself replays."""
-
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
+    def __init__(self, state_dir: str):
         self.dir = state_dir
         self.fs = _fs.get_fs(state_dir)
-        self.fs.makedirs(state_dir)
-        self._cache: dict[tuple, dict[str, Any]] | None = None
 
-    # -- writes -------------------------------------------------------------
-
-    def _next_seq(self) -> int:
-        seqs = [
-            int(n[3:13])
-            for n in self.fs.listdir(self.dir)
-            if n.startswith("ix_")
-        ]
-        return (max(seqs) + 1) if seqs else 0
-
-    def persist(self, items: list[dict[str, Any]]) -> None:
-        """Append one CSV of item rows (state transitions are new rows
-        for the same key — never in-place updates; A11)."""
-        if not items:
-            return
-        seq = self._next_seq()
-        path = _fs.join(self.dir, f"ix_{seq:010d}_{uuid.uuid4().hex}.csv")
-        buf = io.StringIO(newline="")
-        w = csv.DictWriter(buf, fieldnames=COLUMNS)
-        w.writeheader()
-        for it in items:
-            w.writerow({c: it.get(c) for c in COLUMNS})
-        self.fs.create_exclusive(path, buf.getvalue())
-        cache = self._items()
-        for it in items:
-            cache[_item_key(it)] = {c: it.get(c) for c in COLUMNS}
-
-    def compact(self) -> None:
-        """Rewrite the LWW view as a single file, drop history (A12)."""
-        rows = self.current_items()
-        old = [n for n in self.fs.listdir(self.dir) if n.startswith("ix_")]
-        tmp = _fs.join(self.dir, f"_tmp_{uuid.uuid4().hex}.csv")
-        buf = io.StringIO(newline="")
-        w = csv.DictWriter(buf, fieldnames=COLUMNS)
-        w.writeheader()
-        for r in rows:
-            w.writerow({c: r.get(c) for c in COLUMNS})
-        self.fs.create_exclusive(tmp, buf.getvalue())
-        final = _fs.join(self.dir, f"ix_{0:010d}_{uuid.uuid4().hex}.csv")
-        self.fs.rename(tmp, final)
-        for n in old:
-            self.fs.remove(_fs.join(self.dir, n))
-
-    # -- driver-side LWW view -----------------------------------------------
-
-    def _items(self) -> dict[tuple, dict[str, Any]]:
-        if self._cache is None:
-            cache: dict[tuple, dict[str, Any]] = {}
-            # ascending file order = append order; later rows win (D4)
-            for name in sorted(
-                n for n in self.fs.listdir(self.dir) if n.startswith("ix_")
-            ):
-                text = self.fs.read_text(_fs.join(self.dir, name))
-                for row in csv.DictReader(io.StringIO(text)):
-                    it: dict[str, Any] = {
-                        c: (row.get(c) or None) for c in COLUMNS
-                    }
-                    for c in _INT_COLS:
-                        if it[c] is not None:
-                            it[c] = int(it[c])
-                    cache[_item_key(it)] = it
-            self._cache = cache
-        return self._cache
-
-    def current_items(
-        self, table_name: str | None = None, action: str | None = None
-    ) -> list[dict[str, Any]]:
-        """LWW current state, deterministically ordered (driver twin of
-        ``status_df``)."""
-        out = [
-            dict(it)
-            for it in self._items().values()
-            if (table_name is None or it["table_name"] == table_name)
-            and (action is None or it["action"] == action)
-        ]
-        out.sort(
-            key=lambda r: (
-                r["table_name"] or "",
-                r["start_tx_id"] or 0,
-                r["action"] or "",
-                r["blob_path"] or "",
-            )
-        )
-        return out
-
-    # -- reads --------------------------------------------------------------
-
-    def _raw_df(self) -> DataFrame:
-        files = [n for n in self.fs.listdir(self.dir) if n.startswith("ix_")]
-        if not files:
-            return self.spark.createDataFrame([], _CSV_SCHEMA + ", _seq LONG")
-        if not self.fs.spark_readable:
-            # backend Spark executors cannot reach (memory://): the
-            # state is driver-scale metadata by contract, so
-            # parallelize the driver-parsed rows instead of file-scan
-            rows = []
-            for name in files:
-                seq = int(name[3:13])
-                text = self.fs.read_text(_fs.join(self.dir, name))
-                for row in csv.DictReader(io.StringIO(text)):
-                    it = {c: (row.get(c) or None) for c in COLUMNS}
-                    for c in _INT_COLS:
-                        if it[c] is not None:
-                            it[c] = int(it[c])
-                    it["_seq"] = seq
-                    rows.append(it)
-            return self.spark.createDataFrame(
-                rows, _CSV_SCHEMA + ", _seq LONG"
-            )
-        df = self.spark.read.csv(
-            [_fs.join(self.dir, n) for n in files],
-            header=True,
-            schema=_CSV_SCHEMA,
-            escape='"',  # python csv doubles quotes (RFC 4180); match it
-        )
-        return df.withColumn(
-            "_seq",
-            F.regexp_extract(F.input_file_name(), r"ix_(\d{10})_", 1).cast("long"),
-        )
-
-    def status_df(self) -> DataFrame:
-        """Last-writer-wins current state: the MLK_DeltaStatus view (K7)
-        = arg_max(_seq) per item key + deterministic order (D3 + F1,
-        DatabaseGateway.cs:85-104)."""
-        w = Window.partitionBy(*KEY).orderBy(F.desc("_seq"))
-        return (
-            self._raw_df()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn", "_seq")
-            .orderBy("table_name", "start_tx_id", "action", "blob_path")
-        )
-
-    def high_water(self, table_name: str) -> int:
-        """Highest end_tx_id with every item of its batch complete —
-        the resume point (TableStatus.cs:50-77).  Driver-side."""
-        incomplete: dict[int, bool] = {}
-        for it in self._items().values():
-            if it["table_name"] != table_name:
-                continue
-            b = it["end_tx_id"]
-            incomplete[b] = incomplete.get(b, False) or (
-                it["state"] not in COMPLETE_STATES
-            )
-        done = [b for b, inc in incomplete.items() if not inc]
-        return max(done) if done else -1
-
-    def incomplete_batch(self, table_name: str) -> list[dict[str, Any]] | None:
-        """Items of the earliest batch still in flight, if any (restart
-        recovery, DeltaTableOrchestration.cs:76-81,181-200).
-        Driver-side."""
-        pending: dict[tuple[int, int], bool] = {}
-        for it in self._items().values():
-            if it["table_name"] != table_name:
-                continue
-            b = (it["start_tx_id"], it["end_tx_id"])
-            pending[b] = pending.get(b, False) or (
-                it["state"] not in COMPLETE_STATES
-            )
-        open_batches = sorted(b for b, inc in pending.items() if inc)
-        if not open_batches:
-            return None
-        start, end = open_batches[0]
-        return [
-            it
-            for it in self.current_items(table_name)
-            if it["start_tx_id"] == start and it["end_tx_id"] == end
-        ]
+    def current_items(self) -> list[dict[str, Any]]:
+        """LWW current state: ascending file order is append order, so
+        a later row for the same key wins (D4)."""
+        items: dict[tuple, dict[str, Any]] = {}
+        for name in sorted(
+            n for n in self.fs.listdir(self.dir) if n.startswith("ix_")
+        ):
+            text = self.fs.read_text(_fs.join(self.dir, name))
+            for row in csv.DictReader(io.StringIO(text)):
+                it: dict[str, Any] = {c: (row.get(c) or None) for c in COLUMNS}
+                for c in _INT_COLS:
+                    if it[c] is not None:
+                        it[c] = int(it[c])
+                items[tuple(it[k] for k in KEY)] = it
+        return list(items.values())

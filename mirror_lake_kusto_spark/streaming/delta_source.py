@@ -36,8 +36,9 @@ log tailer hand-rolls at DeltaTableGateway.cs:71-159):
   partitionValues (A7/O6) — they are not stored in the data files;
 - reads return Arrow RecordBatches (zero row-at-a-time Python cost).
 
-Planning (offsets, file listing) is driver-side stdlib JSON over the
-``_delta_log`` dir — metadata only; the data path is
+Planning (offsets, file listing) is driver-side metadata read through
+the batch reader's log functions (``delta_log``: the ``fs`` layer, a
+coordinated table's ratified staged tail); the data path is
 executor-side pyarrow, Arrow all the way into the JVM.
 """
 
@@ -55,44 +56,16 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_TX_LEN = 20
+from ..sources import delta_log as DL
 
-
-def _log_dir(path: str) -> str:
-    return os.path.join(path, "_delta_log")
-
-
-def _versions(path: str) -> list[int]:
-    d = _log_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(n[:_TX_LEN])
-        for n in os.listdir(d)
-        if n.endswith(".json") and len(n) == _TX_LEN + 5 and n[:_TX_LEN].isdigit()
-    )
-
-
-def _commit_actions(path: str, version: int) -> list[dict]:
-    with open(os.path.join(_log_dir(path), f"{version:020d}.json")) as f:
-        return [json.loads(line) for line in f if line.strip()]
-
-
-def _last_checkpoint_version(path: str) -> int | None:
-    p = os.path.join(_log_dir(path), "_last_checkpoint")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        return int(json.load(f)["version"])
-
-
-def _checkpoint_column(path: str, version: int, column: str) -> list:
-    # delegate to the batch reader's fs-routed, schema-aware part
-    # reader (works on abfss/s3a/memory paths; raises on real I/O
-    # errors instead of silently dropping checkpoint parts)
-    from ..sources.delta_log import _checkpoint_column as _impl
-
-    return _impl(path, version, column)
+def _head(path: str, versions: "list[int] | None" = None) -> int:
+    """Newest readable version: the last commit (a coordinated table's
+    ratified staged tail included) or the ``_last_checkpoint``,
+    whichever is later; -1 for an empty log."""
+    if versions is None:
+        versions = DL.list_commit_versions(path)
+    ckpt = DL.read_last_checkpoint(path)
+    return max(versions[-1] if versions else -1, -1 if ckpt is None else ckpt)
 
 
 def _driver_snapshot(path: str, upto: int) -> list[dict]:
@@ -101,11 +74,9 @@ def _driver_snapshot(path: str, upto: int) -> list[dict]:
     ``initialSnapshot`` materialization.  A log whose JSON tail
     exceeds the driver budget fails with a pointer at the batch
     reader (such tables have checkpoints; write one)."""
-    from ..sources.delta_log import _LogTooBig, _snapshot_files_driver
-
     try:
-        return _snapshot_files_driver(path, upto)
-    except _LogTooBig:
+        return DL._snapshot_files_driver(path, upto)
+    except DL._LogTooBig:
         raise ValueError(
             f"initialSnapshot of {path}: the JSON log tail exceeds the "
             "driver replay budget — checkpoint the table first (the "
@@ -120,28 +91,11 @@ def _checkpoint_snapshot_files(path: str, version: int) -> list[dict]:
     adds pass through WITH their descriptor: the initial snapshot has
     batch semantics, so the reader applies the bitmap at scan time —
     only MID-STREAM deletion vectors are retractions and refuse."""
-    adds = _checkpoint_column(path, version, "add")
+    adds = DL._checkpoint_column(path, version, "add")
     removed = {
-        r["path"] for r in _checkpoint_column(path, version, "remove")
+        r["path"] for r in DL._checkpoint_column(path, version, "remove")
     }
     return [a for a in adds if a["path"] not in removed]
-
-
-def _latest_metadata(path: str) -> dict | None:
-    meta = None
-    for v in _versions(path):
-        for act in _commit_actions(path, v):
-            if "metaData" in act:
-                meta = act["metaData"]
-    if meta is None:
-        # vacuumed/log-truncated table: no surviving JSON commit carries
-        # metaData — fall back to the checkpoint (A3/O1)
-        ckpt = _last_checkpoint_version(path)
-        if ckpt is not None:
-            metas = _checkpoint_column(path, ckpt, "metaData")
-            if metas:
-                meta = metas[-1]
-    return meta
 
 
 def _schema_fingerprint(schema_string: "str | None") -> "str | None":
@@ -255,12 +209,8 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         #: guard (round-11 review); re-derived here only when a
         #: user-supplied schema bypassed schema().
         if guard_anchor is None:
-            vs0 = _versions(table_path)
-            ckpt0 = _last_checkpoint_version(table_path)
-            head0 = max(
-                vs0[-1] if vs0 else -1, ckpt0 if ckpt0 is not None else -1
-            )
-            meta0 = _latest_metadata(table_path)
+            head0 = _head(table_path)
+            meta0 = DL.latest_metadata(None, table_path)
             guard_anchor = (head0, (meta0 or {}).get("schemaString"))
         self._init_head = guard_anchor[0]
         self._declared_schema_fp = _schema_fingerprint(guard_anchor[1])
@@ -305,13 +255,9 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.path)
-        if vs:
-            latest = vs[-1]
-        else:
-            # fully-vacuumed log: the checkpoint is the only readable state
-            ckpt = _last_checkpoint_version(self.path)
-            latest = ckpt if ckpt is not None else -1
+        vs = DL.list_commit_versions(self.path)
+        # a fully-vacuumed log's checkpoint is its only readable state
+        latest = _head(self.path, vs)
         cap = self.max_commits_per_trigger
         max_bytes = self.max_bytes_per_trigger
         if (cap is None and max_bytes is None) or self._floor is None:
@@ -332,7 +278,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
             # snapshot is one indivisible unit and forms the whole
             # first batch; commit/byte admission control starts on
             # the NEXT trigger (floor then sits at the checkpoint)
-            ckpt = _last_checkpoint_version(self.path)
+            ckpt = DL.read_last_checkpoint(self.path)
             if ckpt is not None:
                 return {"version": ckpt}
         pos: "tuple[int, int | None]" = (floor_v, floor_idx)
@@ -398,10 +344,8 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         def thunk() -> bool:
             flag = getattr(self, "_dv_flag", None)
             if flag is None:
-                from ..sources.delta_log import latest_protocol
-
                 flag = "deletionVectors" in (
-                    (latest_protocol(self.path) or {}).get(
+                    (DL.latest_protocol(self.path) or {}).get(
                         "readerFeatures"
                     )
                     or []
@@ -419,7 +363,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         file identity and order.  Driver-side metadata; memoized."""
         if v in self._entries_cache:
             return self._entries_cache[v]
-        acts = _commit_actions(self.path, v)
+        acts = DL._read_commit(self.path, v)
         if v > self._init_head:
             for a in acts:
                 md = a.get("metaData")
@@ -487,13 +431,11 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 # stays executor-side in read(), which skips the file
                 # read entirely when a delta selection is empty (the
                 # grow-only delete case's resurrect twin).
-                from ..sources import delta_log as _DL
-
                 if not hasattr(self, "_dv_blob_cache"):
                     self._dv_blob_cache = {}
                 if len(self._dv_blob_cache) > 64:
                     self._dv_blob_cache.clear()  # bounded reader cache
-                for e in _DL.classify_mor_commit(
+                for e in DL.classify_mor_commit(
                     self.path,
                     acts,
                     v,
@@ -669,7 +611,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         ev, eidx = self._pos(end)
         parts: list[_FilePartition] = []
         schema_json = self._schema.json()
-        versions = _versions(self.path)
+        versions = DL.list_commit_versions(self.path)
         # first unconsumed position: mid-commit (sv, sidx) or sv+1
         begin_v = sv if sidx is not None else sv + 1
         if sv == -1 and sidx is None and (
@@ -685,7 +627,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 # (the JSON tail past the checkpoint folds into the
                 # snapshot instead of streaming raw and retracting).
                 if versions and versions[0] > 0:
-                    ckpt = _last_checkpoint_version(self.path)
+                    ckpt = DL.read_last_checkpoint(self.path)
                     if ckpt is None or ckpt < versions[0] - 1:
                         raise ValueError(
                             f"transaction log of {self.path} starts at "
@@ -700,7 +642,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 # surviving JSON commits miss every checkpoint-only
                 # file — materialize the checkpoint snapshot as the
                 # first batch, then stream commits past it.
-                ckpt = _last_checkpoint_version(self.path)
+                ckpt = DL.read_last_checkpoint(self.path)
                 if ckpt is None or (versions and ckpt < versions[0] - 1):
                     raise ValueError(
                         f"transaction log of {self.path} starts at version "
@@ -951,12 +893,8 @@ class DeltaLogDataSource(DataSource):
         # differs raises.  Reading the metadata first would leave a
         # window where the guard fingerprints a schema NEWER than the
         # one the stream pins, silently disarming it.
-        vs0 = _versions(self.options["path"])
-        ckpt0 = _last_checkpoint_version(self.options["path"])
-        guard_head = max(
-            vs0[-1] if vs0 else -1, ckpt0 if ckpt0 is not None else -1
-        )
-        meta = _latest_metadata(self.options["path"])
+        guard_head = _head(self.options["path"])
+        meta = DL.latest_metadata(None, self.options["path"])
         if meta is None:
             raise ValueError(f"no Delta metaData under {self.options['path']}")
         self._guard_anchor = (guard_head, meta.get("schemaString"))
@@ -964,9 +902,7 @@ class DeltaLogDataSource(DataSource):
         # active but a field lacks physicalName): the batch reader's
         # refuse-to-guess rule — read() would otherwise emit NULLs for
         # the unresolvable column
-        from ..sources.delta_log import column_mapping_of
-
-        column_mapping_of(meta)
+        DL.column_mapping_of(meta)
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
         from pyspark.sql.types import LongType, StringType, StructField
 
@@ -1023,17 +959,12 @@ class DeltaLogDataSource(DataSource):
             # commitInfo/mtime with Delta's monotonic fix-up; a
             # timestamp past the head starts an empty stream that waits
             # for future commits (delta-spark's startingTimestamp)
-            from ..sources.delta_log import resolve_timestamp
-
-            starting_version = resolve_timestamp(
+            starting_version = DL.resolve_timestamp(
                 self.options["path"], starting_ts, mode="at_or_after"
             )
         elif starting is not None:
             if str(starting).lower() == "latest":
-                vs = _versions(self.options["path"])
-                ckpt = _last_checkpoint_version(self.options["path"])
-                head = vs[-1] if vs else (ckpt if ckpt is not None else -1)
-                starting_version = head + 1
+                starting_version = _head(self.options["path"]) + 1
             else:
                 starting_version = int(starting)
                 if starting_version < 0:

@@ -1,7 +1,8 @@
 """Delta-backed state store: the SURVEY §7.4 scale path — state rows in
 a Delta table, LWW view computed by Spark, driver holds at most one
-batch of items.  Replays the core mirror scenarios on the delta
-backend and proves store-level semantics match the CSV store."""
+batch of items.  Replays the core mirror scenarios, pins the store's
+steering reads against hand-computed values, and migrates a legacy
+CSV state dir."""
 
 from __future__ import annotations
 
@@ -19,7 +20,6 @@ def _mk(spark, tmp_path, name, **kw):
         str(tmp_path / f"{name}_dst"),
         str(tmp_path / f"{name}_state"),
         table_name=name,
-        state_backend="delta",
         **kw,
     )
 
@@ -88,13 +88,12 @@ def test_delta_state_crash_recovery(spark, tmp_path):
     assert p2.run_once()["status"] == "up-to-date"
 
 
-def test_delta_state_store_semantics_match_csv(spark, tmp_path):
-    """Same item stream through both backends: identical LWW view,
-    high-water mark, and incomplete-batch steering."""
+def test_delta_state_store_semantics(spark, tmp_path):
+    """An item stream of two batches, the second still open: the LWW
+    view, high-water mark and incomplete-batch steering are exactly the
+    hand-computed ones, before and after compaction."""
     from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
-    from mirror_lake_kusto_spark.pipeline.state import StateStore
 
-    csv = StateStore(spark, str(tmp_path / "csv_state"))
     dlt = DeltaStateStore(spark, str(tmp_path / "dlt_state"))
 
     def item(start, end, action, state, path=None):
@@ -117,33 +116,43 @@ def test_delta_state_store_semantics_match_csv(spark, tmp_path):
          item(2, 2, "Remove", "Initial", "a.parquet")],
     ]
     for b in batches:
-        csv.persist([dict(i) for i in b])
         dlt.persist([dict(i) for i in b])
-    assert csv.high_water("t") == dlt.high_water("t") == 1
-    ci = csv.incomplete_batch("t")
-    di = dlt.incomplete_batch("t")
-    assert {(i["action"], i["blob_path"]) for i in ci} == {
-        (i["action"], i["blob_path"]) for i in di
+    expect_view = {
+        (0, 1, "StagingTable", None): "Done",
+        (0, 1, "Add", "a.parquet"): "Done",
+        (0, 1, "Add", "b.parquet"): "Done",
+        (2, 2, "StagingTable", None): "Initial",
+        (2, 2, "Remove", "a.parquet"): "Initial",
     }
-    csv_view = {
-        (r["action"], r["blob_path"]): r["state"]
-        for r in csv.current_items("t")
-    }
-    dlt_view = {
-        (r["action"], r["blob_path"]): r["state"]
-        for r in dlt.current_items("t")
-    }
-    assert csv_view == dlt_view
+
+    def view():
+        return {
+            (r["start_tx_id"], r["end_tx_id"], r["action"], r["blob_path"]):
+            r["state"]
+            for r in dlt.current_items("t")
+        }
+
+    def steering():
+        return dlt.high_water("t"), [
+            (i["start_tx_id"], i["end_tx_id"], i["action"], i["blob_path"])
+            for i in dlt.incomplete_batch("t")
+        ]
+
+    # batch (0, 1) is done, (2, 2) is the open one
+    expect_steering = (
+        1,
+        [(2, 2, "Remove", "a.parquet"), (2, 2, "StagingTable", None)],
+    )
+    assert view() == expect_view
+    assert steering() == expect_steering
     dlt.compact()  # OPTIMIZE+VACUUM keeps the view intact
-    assert {
-        (r["action"], r["blob_path"]): r["state"]
-        for r in dlt.current_items("t")
-    } == csv_view
+    assert view() == expect_view
+    assert steering() == expect_steering
 
 
 def test_delta_backend_is_the_default(spark, tmp_path):
-    """SURVEY §7.4 posture: a MirrorPipeline with no state_backend uses
-    the Delta state store."""
+    """SURVEY §7.4 posture: a MirrorPipeline keeps its state in the
+    Delta state store."""
     from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
 
     p = MirrorPipeline(
@@ -157,33 +166,49 @@ def test_delta_backend_is_the_default(spark, tmp_path):
 
 
 def test_csv_state_migrates_in_place_to_delta(spark, tmp_path):
-    """A mirror previously run with state_backend='csv' reopened with
-    the (default) delta backend: the CSV state migrates in place, the
-    high-water mark survives, and the next sync resumes incrementally
-    (no re-ingest, no data loss)."""
+    """A state dir left by the retired CSV backend (append-only
+    ``ix_<seq>_<uuid>.csv`` files, last writer wins per item key)
+    migrates in place on open: the LWW view and the high-water mark
+    survive, and the next sync resumes incrementally (no re-ingest, no
+    data loss)."""
+    import csv
     import os
+    import shutil
+
+    from mirror_lake_kusto_spark.pipeline.state import COLUMNS
 
     src_path = str(tmp_path / "mig_src")
     dst_path = str(tmp_path / "mig_dst")
     state_dir = str(tmp_path / "mig_state")
     src = DeltaSink(spark, src_path)
     src.append(spark.range(20).toDF("id"))
-
-    old = MirrorPipeline(
-        spark, src_path, dst_path, state_dir,
-        table_name="mig", state_backend="csv",
+    first = MirrorPipeline(
+        spark, src_path, dst_path, state_dir, table_name="mig",
     )
-    old.run_until_idle()
-    hwm = old.state.high_water("mig")
+    first.run_until_idle()
+    items = first.state.current_items("mig")
+    hwm = first.state.high_water("mig")
     assert hwm >= 0
-    assert any(n.startswith("ix_") for n in os.listdir(state_dir))
 
-    # new commits land after the backend switch
+    # the same state in the legacy layout: a flush of Initial rows,
+    # then a later flush of the final states for the same keys
+    shutil.rmtree(state_dir)
+    os.makedirs(state_dir)
+    flushes = [[{**i, "state": "Initial"} for i in items], items]
+    for seq, rows in enumerate(flushes):
+        name = f"ix_{seq:010d}_{seq:032x}.csv"
+        with open(os.path.join(state_dir, name), "w", newline="") as f:
+            w = csv.DictWriter(f, fieldnames=COLUMNS)
+            w.writeheader()
+            w.writerows(rows)
+
+    # new commits land before the state dir is reopened
     src.append(spark.range(20, 30).toDF("id"))
     new = MirrorPipeline(
         spark, src_path, dst_path, state_dir, table_name="mig",
-    )  # default backend = delta; CSV files migrate on open
+    )  # CSV files migrate on open
     assert not any(n.startswith("ix_") for n in os.listdir(state_dir))
+    assert new.state.current_items("mig") == items
     assert new.state.high_water("mig") == hwm
     r = new.run_once()
     assert r["status"] == "processed"
@@ -268,3 +293,26 @@ def test_lww_threshold_crossover_switches_to_distributed(spark, tmp_path):
     assert store.high_water("t") == 0
     assert store.incomplete_batch("t") is None
     assert len(store.current_items("t", "Add")) == 30
+
+
+def test_corrupt_state_commit_raises(spark, tmp_path):
+    """An unreadable state commit fails the steering read instead of
+    hydrating an empty state (which would restart the mirror from
+    version 0 without an error)."""
+    from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
+
+    def item(state):
+        return {
+            "table_name": "t", "start_tx_id": 0, "end_tx_id": 0,
+            "action": "Add", "state": state, "blob_path": "a.parquet",
+        }
+
+    store = DeltaStateStore(spark, str(tmp_path / "bad_state"))
+    store.persist([item("Initial")])
+    store.persist([item("Done")])
+    assert store.high_water("t") == 0
+    newest = DL.list_commit_versions(store.dir)[-1]
+    with open(DL._commit_file(store.dir, newest), "w") as f:
+        f.write("{not json\n")
+    with pytest.raises(ValueError):
+        DeltaStateStore(spark, store.dir).high_water("t")

@@ -13,8 +13,8 @@ import os
 
 import pytest
 
+from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
 from mirror_lake_kusto_spark.pipeline.orchestrate import MirrorPipeline
-from mirror_lake_kusto_spark.pipeline.state import StateStore
 from mirror_lake_kusto_spark.sources import delta_log as DL
 from mirror_lake_kusto_spark.sources import fs as FS
 from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
@@ -79,7 +79,7 @@ def test_memoryfs_walk_and_rmtree():
     assert fs.exists("memory://t/f0.txt")
 
 
-# -- StateStore on memory:// (the reference's append-blob state) ---------
+# -- state store on memory:// (the reference's append-blob state) -------
 
 
 def _items(n, state="Initial"):
@@ -98,34 +98,27 @@ def _items(n, state="Initial"):
 
 def test_state_store_memory_backend(spark):
     FS._MEMORY.clear()
-    st = StateStore(spark, "memory://acct/state")
+    st = DeltaStateStore(spark, "memory://acct/state")
     st.persist(_items(3))
     st.persist(_items(3, state="Done"))
     # fresh store rehydrates from blobs (durability)
-    st2 = StateStore(spark, "memory://acct/state")
+    st2 = DeltaStateStore(spark, "memory://acct/state")
     cur = st2.current_items("tbl")
     assert len(cur) == 3 and all(r["state"] == "Done" for r in cur)
-    # Spark-side LWW view agrees (driver-parallelize fallback)
-    rows = st2.status_df().collect()
-    assert len(rows) == 3 and all(r["state"] == "Done" for r in rows)
-    # compact: one file, same view (atomic temp+rename dance)
-    st2.compact()
-    names = FS._MEMORY.listdir("memory://acct/state")
-    assert len([n for n in names if n.startswith("ix_")]) == 1
-    st3 = StateStore(spark, "memory://acct/state")
-    assert st3.high_water("tbl") == 1
+    assert st2.high_water("tbl") == 1
 
 
 def test_state_store_memory_crash_between_persist_and_compact(spark):
     """A write that lands after rehydration is LWW-merged exactly as on
-    local disk — same total order via seq file names."""
+    local disk — same total order via the state table's commit
+    versions."""
     FS._MEMORY.clear()
-    st = StateStore(spark, "memory://acct/state2")
+    st = DeltaStateStore(spark, "memory://acct/state2")
     st.persist(_items(2))
     # simulated crash: new store instance, overlapping write
-    st_b = StateStore(spark, "memory://acct/state2")
+    st_b = DeltaStateStore(spark, "memory://acct/state2")
     st_b.persist(_items(2, state="Staged"))
-    st_c = StateStore(spark, "memory://acct/state2")
+    st_c = DeltaStateStore(spark, "memory://acct/state2")
     assert {r["state"] for r in st_c.current_items("tbl")} == {"Staged"}
 
 

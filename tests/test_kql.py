@@ -243,9 +243,11 @@ def test_parse_errors_are_loud(spark):
 
 def test_reference_status_view_kql_runs_verbatim(spark, tmp_path):
     """The reference's ONE emitted KQL function — the externaldata
-    status view (DatabaseGateway.cs:85-95) — runs verbatim through the
-    parser against a real mirror's state checkpoint and agrees with the
-    engine's own LWW view."""
+    status view (DatabaseGateway.cs:85-95) — runs through the parser
+    against a real mirror's state checkpoint and agrees with the
+    engine's own LWW view.  The reference reads CSV blobs; this
+    engine's checkpoint is a Delta table, so the same query reads its
+    parquet blobs (every row ever persisted, like the append blob)."""
     from mirror_lake_kusto_spark.functions.kql_parse import kql
     from mirror_lake_kusto_spark.pipeline.orchestrate import MirrorPipeline
     from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
@@ -257,7 +259,7 @@ def test_reference_status_view_kql_runs_verbatim(spark, tmp_path):
     src.append(spark.range(20, 30).toDF("id"))
     p = MirrorPipeline(
         spark, src_path, str(tmp_path / "sv_dst"), state_dir,
-        table_name="sv", state_backend="csv",
+        table_name="sv",
     )
     p.run_until_idle()
     src.delete("id < 5")
@@ -275,9 +277,9 @@ def test_reference_status_view_kql_runs_verbatim(spark, tmp_path):
         f"""
         externaldata({schema_decl})
         [
-           '{state_dir}/ix_*.csv;impersonate'
+           '{state_dir}/*.parquet;impersonate'
         ]
-        with(format='csv', ignoreFirstRecord=true)
+        with(format='parquet')
         | summarize arg_max(mirror_timestamp, *)
             by table_name, start_tx_id, end_tx_id, action, blob_path
         | order by table_name asc, start_tx_id asc, action asc, blob_path asc
@@ -293,6 +295,26 @@ def test_reference_status_view_kql_runs_verbatim(spark, tmp_path):
         for r in expect
     ]
     assert all(r["state"] in ("Done", "Skipped") for r in got)
+
+
+def test_externaldata_csv_skips_header(spark, tmp_path):
+    """externaldata's CSV reader: declared schema, header row dropped
+    with ignoreFirstRecord, RFC 4180 doubled quotes inside a cell."""
+    from mirror_lake_kusto_spark.functions.kql_parse import kql
+
+    (tmp_path / "a.csv").write_text(
+        'name,n,doc\nx,1,"{""k"":1}"\ny,2,\n'
+    )
+    got = kql(
+        spark,
+        f"""
+        externaldata(name:string, n:long, doc:string)
+        [ '{tmp_path}/*.csv;impersonate' ]
+        with(format='csv', ignoreFirstRecord=true)
+        | order by n asc
+        """,
+    ).collect()
+    assert [tuple(r) for r in got] == [("x", 1, '{"k":1}'), ("y", 2, None)]
 
 
 def test_parse_percentile_stdev(spark):

@@ -22,9 +22,8 @@ from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
 
 
 def _mk(spark, tmp_path, name, **kw):
-    # scenario-replay tests pin the reference-faithful CSV state store
-    # (delta is the engine default; test_delta_state.py covers it)
-    kw.setdefault("state_backend", "csv")
+    # scenario replays run on the engine's one state store (Delta);
+    # its store-level semantics are pinned in test_delta_state.py
     return MirrorPipeline(
         spark,
         str(tmp_path / f"{name}_src"),
@@ -247,15 +246,16 @@ def test_state_view_arg_max(spark, tmp_path):
     add_rows = [r for r in st if r["action"] == "Add"]
     assert add_rows and all(r["state"] == "Done" for r in add_rows)
     # raw store has Initial AND Done rows for the same key; view has one
-    raw = p.state._raw_df()
+    raw = p.state.sink.to_df()
     assert raw.count() > len(st)
     # the driver-held LWW map and the Spark-computed view agree exactly,
-    # including for a fresh store rehydrated from the CSVs
-    from mirror_lake_kusto_spark.pipeline.state import COLUMNS, StateStore
+    # including for a fresh store rehydrated from the state table
+    from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
+    from mirror_lake_kusto_spark.pipeline.state import COLUMNS
 
     spark_view = [{c: r[c] for c in COLUMNS} for r in st]
     assert p.state.current_items() == spark_view
-    fresh = StateStore(spark, p.state.dir)
+    fresh = DeltaStateStore(spark, p.state.dir)
     assert fresh.current_items() == spark_view
 
 
@@ -319,7 +319,6 @@ def test_fresh_mirror_on_vacuumed_source(spark, tmp_path):
         str(tmp_path / "fresh_vac_dst"),
         str(tmp_path / "fresh_vac_state"),
         table_name="fresh_vac",
-        state_backend="csv",
     )
     p.run_until_idle()
     assert _ids(p.mirror_df()) == list(range(12))
@@ -512,7 +511,7 @@ def test_concurrent_writers_optimistic_commit(spark, tmp_path):
     # a mirror consuming the mixed-writer log sees everything
     p = MirrorPipeline(
         spark, path, str(tmp_path / "cc_dst"), str(tmp_path / "cc_state"),
-        table_name="cc", state_backend="csv",
+        table_name="cc",
     )
     p.run_until_idle()
     assert _ids(p.mirror_df()) == [1, 2, 3, 4]
@@ -677,7 +676,7 @@ def test_incremental_chunking_bounds_driver_items(spark, tmp_path):
     src = _author_metadata_only_source(tmp_path, "chunk_src", 80, 25)  # 2000 adds
     p = MirrorPipeline(
         spark, src, str(tmp_path / "chunk_dst"), str(tmp_path / "chunk_state"),
-        table_name="chunk", max_items_per_batch=500, state_backend="csv",
+        table_name="chunk", max_items_per_batch=500,
     )
     results = p.run_until_idle()
     assert len(results) >= 4  # 2000 adds / 500 cap
@@ -703,7 +702,7 @@ def test_snapshot_diff_chunking_bounds_driver_items(spark, tmp_path):
         _os.remove(_os.path.join(src, "_delta_log", f"{v:020d}.json"))
     p = MirrorPipeline(
         spark, src, str(tmp_path / "snapc_dst"), str(tmp_path / "snapc_state"),
-        table_name="snapc", max_items_per_batch=1000, state_backend="csv",
+        table_name="snapc", max_items_per_batch=1000,
     )
     results = p.run_until_idle()
     assert len(results) >= 5  # 5000 adds / 1000 cap

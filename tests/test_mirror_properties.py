@@ -60,11 +60,11 @@ def test_mirror_equals_model_any_interleaving(_spark, tmp_path_factory, ops):
     base = tmp_path_factory.mktemp("prop")
     one = MirrorPipeline(
         spark, str(base / "s1"), str(base / "d1"), str(base / "st1"),
-        table_name="p1", state_backend="csv",
+        table_name="p1",
     )
     two = MirrorPipeline(
         spark, str(base / "s2"), str(base / "d2"), str(base / "st2"),
-        table_name="p2", state_backend="csv",
+        table_name="p2",
     )
     src1, src2 = DeltaSink(spark, one.source), DeltaSink(spark, two.source)
     model: set[int] = set()

@@ -24,7 +24,6 @@ SPARK_EXPR = "to_timestamp(concat(p0, '-01-01'))"
 
 
 def _mk(spark, tmp_path, name, **kw):
-    kw.setdefault("state_backend", "csv")
     return MirrorPipeline(
         spark,
         str(tmp_path / f"{name}_src"),
@@ -134,7 +133,6 @@ def test_kql_datetime_scalars_translate(spark, tmp_path):
         str(tmp_path / "md_dst"),
         str(tmp_path / "md_state"),
         table_name="md",
-        state_backend="csv",
         go_back_days=300,
         now_fn=lambda: dt.datetime(2022, 6, 1),
         creation_time_expr="make_datetime(toint(p0), toint(p1), 1)",

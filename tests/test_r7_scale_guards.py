@@ -83,7 +83,6 @@ def test_fat_commit_chunking_bounds_driver_items(spark, tmp_path):
         str(tmp_path / "fat_state"),
         table_name="fat",
         max_items_per_batch=500,
-        state_backend="csv",
     )
     results = p.run_until_idle()
     assert len(results) >= 4

@@ -181,3 +181,29 @@ def test_vacuumed_coordinated_table_tail_after_checkpoint(spark, tmp_path):
     assert sorted(
         r.id for r in DL.read_snapshot(spark, path).collect()
     ) == list(range(12))
+
+
+def test_stream_reads_ratified_tail(spark, tmp_path):
+    """The mlk_delta stream lists and reads commits through the batch
+    log reader, so it sees the same ratified staged tail: the stream
+    yields exactly the rows ``read_snapshot`` does."""
+    from mirror_lake_kusto_spark.streaming.delta_source import (
+        DeltaLogDataSource,
+    )
+
+    path, _rel = _coordinated_with_tail(spark, tmp_path, "cstr", "filesystem")
+    spark.dataSource.register(DeltaLogDataSource)
+    rows: list = []
+    q = (
+        spark.readStream.format("mlk_delta")
+        .option("path", path)
+        .load()
+        .writeStream.foreachBatch(lambda bdf, _bid: rows.extend(bdf.collect()))
+        .option("checkpointLocation", str(tmp_path / "cstr_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    batch = sorted(r.id for r in DL.read_snapshot(spark, path).collect())
+    assert batch == list(range(12))
+    assert sorted(r.id for r in rows) == batch

@@ -153,7 +153,7 @@ def test_vacuumed_snapshot_path_follows_dv(spark, tmp_path):
     vacuumed below a checkpoint, so the changed bitmap is found by
     joining the active set against recorded provenance."""
     src = _src(spark, tmp_path)
-    pipe = _pipe(spark, tmp_path, state_backend="csv")
+    pipe = _pipe(spark, tmp_path)
     pipe.run_until_idle()
     src.delete_dv("k = 3")
     src.append(spark.range(100, 120).selectExpr("id", "id % 7 AS k"))

@@ -2,16 +2,17 @@
 (D3/D4/O10): any sequence of persist / compact / rehydrate operations
 must behave exactly like a dict keyed on the item identity.
 
-Pure driver-side (the Spark status_df twin is asserted equal in
-test_mirror.py::test_state_view_arg_max); hypothesis drives the
-sequencing, a plain dict is the model."""
+Reads go through the driver LWW map (the Spark status_df twin is
+asserted equal in test_mirror.py::test_state_view_arg_max); hypothesis
+drives the sequencing, a plain dict is the model."""
 
 from __future__ import annotations
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from mirror_lake_kusto_spark.pipeline.state import KEY, StateStore
+from mirror_lake_kusto_spark.pipeline.delta_state import DeltaStateStore
+from mirror_lake_kusto_spark.pipeline.state import KEY
 
 _TABLES = ("t1", "t2")
 _ACTIONS = ("Schema", "StagingTable", "Add", "Remove")
@@ -56,9 +57,9 @@ def _ops(draw):
 
 @given(_ops())
 @settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-def test_state_store_is_lww_dict(tmp_path_factory, ops):
+def test_state_store_is_lww_dict(spark, tmp_path_factory, ops):
     tmp = tmp_path_factory.mktemp("state_prop")
-    store = StateStore(None, str(tmp))  # spark unused on the driver paths
+    store = DeltaStateStore(spark, str(tmp))
     model: dict[tuple, dict] = {}
     for kind, items in ops:
         if kind == "persist":
@@ -68,9 +69,9 @@ def test_state_store_is_lww_dict(tmp_path_factory, ops):
         elif kind == "compact":
             store.compact()
         else:  # reopen: fresh instance must rehydrate identically
-            store = StateStore(None, str(tmp))
+            store = DeltaStateStore(spark, str(tmp))
     got = {tuple(it.get(k) for k in KEY): it for it in store.current_items()}
     assert got == model
     # durability: a fresh store after everything sees the same view
-    fresh = StateStore(None, str(tmp))
+    fresh = DeltaStateStore(spark, str(tmp))
     assert {tuple(i.get(k) for k in KEY): i for i in fresh.current_items()} == model

@@ -380,7 +380,6 @@ def probe_fat_commit(spark) -> list[str]:
         "/tmp/mlk_scale_fat_state",
         table_name="scalefat",
         max_items_per_batch=cap,
-        state_backend="csv",
     )
     t0 = time.time()
     results = pipe.run_until_idle()
@@ -405,13 +404,10 @@ def probe_fat_commit(spark) -> list[str]:
         f"- drained in **{len(results)} chunked batches**, "
         f"**{wall:.1f} s** wall ({done:,} items reach terminal state)",
         f"- peak driver RSS moved {rss0:.0f} -> {rss1:.0f} MB "
-        f"(**{rss1 - rss0:+.0f} MB**).  The growth tracks the STATE "
-        "STORE, not the chunker: the snapshot diff is computed "
-        "Spark-side and `.limit(cap+1)` bounds what reaches the "
-        "driver per batch, but the CSV state backend's atomic "
-        "compaction (A12) rewrites all items driver-side — O(commit "
-        "items) by design.  The default Delta state backend keeps "
-        "that path distributed.",
+        f"(**{rss1 - rss0:+.0f} MB**).  The snapshot diff is "
+        "computed Spark-side and `.limit(cap+1)` bounds what reaches "
+        "the driver per batch; the Delta state store holds its LWW "
+        "map on the driver only below its size threshold.",
         "",
     ]
 
