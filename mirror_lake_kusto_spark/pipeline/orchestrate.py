@@ -15,9 +15,11 @@ DeltaTableOrchestration.ProcessTransactionBatchAsync
                 user's creation-time expression evaluated over distinct
                 partition tuples in ONE Spark job (J1/O5/O7;
                 BlobAnalysisOrchestration.cs:67-244);
-4. stage+load — read surviving blobs grouped by partition tuple with
-                partition constants injected (D5/O6/A7), add lineage
-                columns (H5), ONE atomic sink commit carrying a Delta
+4. stage+load — read surviving blobs in one scan, with partition
+                values (D5/O6/A7) and lineage columns (H5) joined in
+                from a broadcast per-file frame — data, not literals,
+                so every batch reuses the same generated code — then
+                ONE atomic sink commit carrying a Delta
                 ``txn`` action for idempotence (K5/O11/I3 — the
                 staging-table + `.move extents` dance collapses into
                 write-then-commit);
@@ -36,21 +38,21 @@ rows of already-deleted blob paths matches nothing).
 
 Scale: all data movement is executor-side (`spark.read.parquet` ->
 `sink.append`); the driver handles only the batch's action metadata.
-Lineage column MLK_BlobPath (TableDefinition.cs:16,58-69) is
-``input_file_name()`` at scan time — zero-cost, no shuffle.
+Lineage column MLK_BlobPath (TableDefinition.cs:16,58-69) is a column
+of that per-file frame, keyed on the scan-time file identity — no
+shuffle.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import time
 from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..sources import delta_log as DL
 from ..sources.delta_sink import DeltaSink
@@ -1004,7 +1006,9 @@ class MirrorPipeline:
             )
         rows = [list(k) for k in tuples]
         cols = [f"p{j}" for j in range(len(part_cols))]
-        df = self.spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+        df = DL.local_frame(
+            self.spark, rows, ", ".join(f"{c} string" for c in cols)
+        )
         evaluated = df.withColumn(
             "_ct", F.expr(ct_expr).cast("timestamp")
         ).collect()
@@ -1017,14 +1021,14 @@ class MirrorPipeline:
         return out
 
     def _stage_and_load(self, items: list[dict], end_tx: int) -> int:
-        """Read surviving add blobs (grouped per partition tuple, D5),
-        inject typed partition constants (O6/A7) + lineage columns (H5),
-        and publish with ONE idempotent atomic commit (K5/O11/I3)."""
+        """Read surviving add blobs in ONE scan whatever their partition
+        tuples, attach typed partition values (O6/A7) and lineage
+        columns (H5) from one broadcast per-file frame
+        (``delta_log.scan_with_file_frame``), and publish with ONE
+        idempotent atomic commit (K5/O11/I3)."""
         todo = [i for i in items if i["action"] == "Add" and i["state"] == "Analyzed"]
         if not todo:
             return 0
-        from ..sources import fs as _fsmod
-
         app_id = self.app_id
         staging = next(
             (i for i in items if i["action"] == "StagingTable"), None
@@ -1108,8 +1112,6 @@ class MirrorPipeline:
             )
         )
         if rt_src and src_mat_id:
-            from pyspark.sql.types import LongType
-
             # the source's materialized row-id column is physical-only;
             # files from before materialization null-fill
             read_schema = StructType(
@@ -1118,17 +1120,6 @@ class MirrorPipeline:
                     StructField(src_mat_id, LongType(), True),
                 ]
             )
-        groups: dict[tuple, list[str]] = {}
-        for it in todo:
-            pv = tuple(
-                sorted(
-                    (log_of.get(k, k), v)
-                    for k, v in json.loads(
-                        it["partition_values"] or "{}"
-                    ).items()
-                )
-            )
-            groups.setdefault(pv, []).append(it["blob_path"])
         # widened columns Spark cannot promote natively at scan
         # (byte/short era under decimal): era-split by sniffed
         # physical type, cast right after the scan — same pass
@@ -1139,114 +1130,77 @@ class MirrorPipeline:
                 json.loads(meta["schemaString"])["fields"]
             )
         }
-        parts: list[DataFrame] = []
-        dv_parts: list[DataFrame] = []
-        dv_files: list[dict] = []
-
-        def stage_scan(era_paths, variant_schema, cast_cols, with_dv, pv, rel_subset):
-            df = self.spark.read.schema(variant_schema).parquet(*era_paths)
-            for c in cast_cols:
-                df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-            extra: list[str] = []
-            if with_dv:
-                # merge-on-read source file: capture (file, physical
-                # row index) at scan so the bitmap anti-join below
-                # keeps only SURVIVING rows.  Distinct column names
-                # from the row-tracking __mlk_ridx, which must keep
-                # the physical index after the DV filter
-                df = df.withColumns(
-                    {
-                        "__mlk_dvfile": _fsmod.spark_scan_path(
-                            F.input_file_name()
-                        ),
-                        "__mlk_dvridx": F.col("_metadata.row_index"),
-                    }
+        files = [
+            {
+                "path": it["blob_path"],
+                "partitionValues": {
+                    log_of.get(k, k): v
+                    for k, v in json.loads(
+                        it["partition_values"] or "{}"
+                    ).items()
+                },
+            }
+            for it in todo
+        ]
+        # every batch constant is a column of the per-file frame, not a
+        # literal: consecutive batches generate identical code
+        consts = [
+            StructField("MLK_BlobPath", StringType()),
+            StructField("MLK_BatchTxId", LongType()),
+        ]
+        rows = [(self._lineage_path(f["path"]), end_tx) for f in files]
+        if rt_src:
+            base_of = {
+                f["path"]: f.get("baseRowId")
+                for f in DL.snapshot_files(self.spark, self.source, upto=end_tx)
+            }
+            consts.append(StructField("__mlk_base", LongType()))
+            rows = [(*r, base_of.get(f["path"])) for r, f in zip(rows, files)]
+        out = DL.scan_with_file_frame(
+            self.spark,
+            self.source,
+            files,
+            schema,
+            sorted(part_cols),
+            read_schema,
+            mapping,
+            problem_cols,
+            StructType(consts),
+            rows,
+            row_index=rt_src or bool(dv_descs),
+        )
+        keep = [F.col(f.name) for f in schema.fields]
+        keep += [F.col("MLK_BlobPath"), F.col("MLK_BatchTxId")]
+        if rt_src:
+            # lineage column: the SOURCE's stable row id per mirrored
+            # row — materialized value when the source rewrote the
+            # file, else add.baseRowId + physical row index
+            keep.append(
+                DL._row_id_columns(src_mat_id, None)["_row_id"].alias(
+                    "MLK_SourceRowId"
                 )
-                extra = ["__mlk_dvfile", "__mlk_dvridx"]
-            if mapping is not None:
-                df = df.select(
-                    *[
-                        F.col(mapping[f.name]).alias(f.name)
-                        for f in data_fields
-                    ],
-                    *extra,
-                )
-            for col_name, raw in pv:
-                df = df.withColumn(
-                    col_name, F.lit(raw).cast(type_of[col_name])
-                )
-            keep = [f.name for f in schema.fields]
-            if rt_src and src_mat_id:
-                keep.append(src_mat_id)
-            df = df.select(*keep, *extra).withColumns(
-                {
-                    "MLK_BlobPath": _fsmod.spark_scan_path(
-                        F.input_file_name()
-                    ),
-                    "MLK_BatchTxId": F.lit(end_tx).cast("long"),
-                }
             )
-            if rt_src:
-                df = df.withColumn(
-                    "__mlk_ridx", F.col("_metadata.row_index")
-                )
-            if with_dv:
-                dv_parts.append(df)
-                dv_files.extend(
-                    {"path": p, "deletionVector": dv_descs[p]}
-                    for p in rel_subset
-                )
-            else:
-                parts.append(df)
-
-        for pv, rel_paths in groups.items():
-            for subset, with_dv in (
-                ([p for p in rel_paths if p not in dv_descs], False),
-                ([p for p in rel_paths if p in dv_descs], True),
-            ):
-                if not subset:
-                    continue
-                abs_of = {
-                    os.path.join(self.source, p): p for p in subset
-                }
-                if problem_cols:
-                    era_groups = DL.physical_read_groups(
-                        sorted(abs_of), read_schema, problem_cols
-                    )
-                else:
-                    era_groups = [(sorted(abs_of), read_schema, [])]
-                for era_paths, variant_schema, cast_cols in era_groups:
-                    stage_scan(
-                        era_paths,
-                        variant_schema,
-                        cast_cols,
-                        with_dv,
-                        pv,
-                        [abs_of[p] for p in era_paths],
-                    )
-        if dv_parts:
-            dv_out = dv_parts[0]
-            for p in dv_parts[1:]:
-                dv_out = dv_out.unionByName(p)
-            # one bitmap anti-join across every DV'd file in the batch
+        if dv_descs:
+            keep += [
+                F.col("MLK_BlobPath").alias("__mlk_file"),
+                F.col("__mlk_ridx"),
+            ]
+        out = out.select(*keep)
+        if dv_descs:
+            # merge-on-read source files keep only SURVIVING rows: one
+            # bitmap anti-join across every DV'd file in the batch
             # (dv.deleted_rows, broadcast under 10M deleted rows — the
             # same pass read_snapshot applies)
-            parts.append(
-                DL._apply_deletion_vectors(
-                    self.spark,
-                    self.source,
-                    dv_out,
-                    dv_files,
-                    file_col="__mlk_dvfile",
-                    ridx_col="__mlk_dvridx",
-                )
+            out = DL._apply_deletion_vectors(
+                self.spark,
+                self.source,
+                out,
+                [
+                    {"path": p, "deletionVector": d}
+                    for p, d in dv_descs.items()
+                ],
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         extra_actions: list[dict] = []
-        if rt_src:
-            out = self._attach_source_row_ids(out, todo, end_tx, src_mat_id)
         # preserve the source's app-domain metadata (PROTOCOL.md
         # "Domain Metadata"): a consumer of the MIRROR must see the
         # domains the SOURCE carried.  delta.* domains are per-table
@@ -1271,37 +1225,6 @@ class MirrorPipeline:
         for it in todo:
             it["state"] = "Staged"
         return len(todo)
-
-    def _attach_source_row_ids(self, out, todo, end_tx, src_mat_id):
-        """Lineage column ``MLK_SourceRowId``: the source's stable row
-        id for every mirrored row — materialized value when the source
-        rewrote the file, else ``add.baseRowId + physical row index``.
-        The per-file id frame is batch-metadata-sized and broadcast;
-        the data never shuffles."""
-        from ..sources import fs as _fsmod
-
-        want = {i["blob_path"] for i in todo}
-        id_rows = [
-            (
-                _fsmod.data_path_spelling(self.source, f["path"]),
-                f.get("baseRowId"),
-            )
-            for f in DL.snapshot_files(self.spark, self.source, upto=end_tx)
-            if f["path"] in want
-        ]
-        ids = F.broadcast(
-            self.spark.createDataFrame(
-                id_rows, "MLK_BlobPath string, __mlk_base long"
-            )
-        )
-        out = out.join(ids, "MLK_BlobPath", "left")
-        fresh = F.col("__mlk_base") + F.col("__mlk_ridx")
-        src_id = (
-            F.coalesce(F.col(src_mat_id), fresh) if src_mat_id else fresh
-        )
-        return out.withColumn("MLK_SourceRowId", src_id).drop(
-            "__mlk_base", "__mlk_ridx", *( [src_mat_id] if src_mat_id else [])
-        )
 
     def _check_span_has_no_dvs(self, hwm: int, end_tx: int) -> None:
         """Raw-commit scan of (hwm, end_tx] for deletion-vector adds:
@@ -1334,8 +1257,8 @@ class MirrorPipeline:
         if not paths:
             return {}
         if not self.state.steering_is_driver_side():
-            probe = self.spark.createDataFrame(
-                [(p,) for p in sorted(paths)], "blob_path string"
+            probe = DL.local_frame(
+                self.spark, [(p,) for p in sorted(paths)], "blob_path string"
             )
             latest = (
                 self.state.adds_df(self.table)

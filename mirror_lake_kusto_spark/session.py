@@ -24,8 +24,13 @@ import os
 from pyspark.sql import SparkSession
 
 # At 100 TB a fixed shuffle-partition count is always wrong; AQE coalesces
-# from a deliberately-high initial number. Locally we start at ~2x cores.
-_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# from a deliberately-high initial number.  Locally the defaults follow
+# the machine: its core count, and half of physical RAM for the driver
+# JVM (which in local mode is the whole cluster).
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+_DEFAULT_DRIVER_MEM = (
+    f"{max(1, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**31)}g"
+)
 
 
 def build_session(
@@ -68,7 +73,10 @@ def build_session(
         # bound writer output files: one giant unsplittable parquet from
         # a hot partition is as bad as a million tiny ones (K2 analogue)
         .config("spark.sql.files.maxRecordsPerFile", str(5_000_000))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _DEFAULT_DRIVER_MEM),
+        )
         .config("spark.sql.parquet.compression.codec", "snappy")
         # INT96 (legacy default) writes NO column statistics, which
         # blanks min/max data skipping on timestamp columns; µs is the

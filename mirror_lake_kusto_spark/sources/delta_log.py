@@ -1360,11 +1360,12 @@ def read_snapshot(
     timestamp=None,
     row_ids: bool = False,
 ) -> DataFrame:
-    """Current table contents.  Files are read grouped by partition
-    tuple with the partition values injected as typed literal columns —
-    the reference's ConstValue ingestion mapping (A7/O6,
-    BlobStagingOrchestration.cs:291-308): partition columns are never
-    stored in the data files.
+    """Current table contents.  Partition columns are never stored in
+    the data files (the reference's ConstValue ingestion mapping,
+    A7/O6, BlobStagingOrchestration.cs:291-308): a table with one
+    partition tuple injects its values as typed literal columns; a
+    table with more reads every file in one scan and joins the values
+    in from a broadcast per-file frame (:func:`scan_with_file_frame`).
 
     ``partition_predicate`` (SQL over partition columns only) prunes
     whole partition groups BEFORE any data file is opened — classic
@@ -1519,24 +1520,19 @@ def read_snapshot(
         )
     if len(groups) > 1:
         # multi-tuple table: ONE scan (per era variant — usually
-        # exactly one) over ALL files; partition values are recovered
-        # through a broadcast metadata join on the scan-time file
-        # identity instead of a per-tuple literal-injection scan.  The
-        # old union-of-per-tuple-scans grew the plan (and driver
-        # planning time) O(partition tuples); this shape is O(1).
+        # exactly one) over ALL files; partition values arrive through
+        # a broadcast per-file frame instead of a per-tuple
+        # literal-injection scan, whose union grew the plan (and
+        # driver planning time) O(partition tuples)
         return _read_snapshot_joined_partitions(
             spark,
             table_path,
             files,
             schema,
             part_cols,
-            type_of,
             read_schema,
-            data_schema,
             mapping,
             problem_cols,
-            need_identity,
-            mat_cols,
             dv_files,
             row_ids,
             mat_id,
@@ -1610,41 +1606,135 @@ def _read_snapshot_joined_partitions(
     files: list[dict],
     schema: StructType,
     part_cols: list[str],
-    type_of: dict,
     read_schema: StructType,
-    data_schema: StructType,
     mapping: dict | None,
     problem_cols: dict,
-    need_identity: bool,
-    mat_cols: list[str],
     dv_files: list[dict],
     row_ids: bool,
     mat_id: str | None,
     mat_rcv: str | None,
     predicate,
 ) -> DataFrame:
-    """Single-scan read path for tables with >1 partition tuple: scan
-    every file in one job (one scan per widening-era variant when the
-    table carries vector-blind type changes), then attach partition
-    values by broadcast-joining a one-row-per-file metadata frame on
-    the canonical file identity — the same identity-join machinery the
-    deletion-vector and row-tracking paths use.  Plan size stays O(1)
-    in the number of partition tuples instead of O(tuples).
+    """Read path for tables with >1 partition tuple: one
+    :func:`scan_with_file_frame` whose per-file frame carries the raw
+    partition values — plus the DV file identity and the row-tracking
+    base id / commit version when those are needed — so plan size is
+    O(1) in the number of partition tuples instead of O(tuples)."""
+    fields: list[StructField] = []
+    rows: list[tuple] = [() for _ in files]
+    if dv_files:
+        fields.append(StructField("__mlk_file", StringType()))
+        rows = [
+            (*r, _fs.data_path_spelling(table_path, f["path"]))
+            for r, f in zip(rows, files)
+        ]
+    if row_ids:
+        fields += [
+            StructField("__mlk_base", LongType()),
+            StructField("__mlk_rcv", LongType()),
+        ]
+        rows = [
+            (*r, f.get("baseRowId"), f.get("defaultRowCommitVersion"))
+            for r, f in zip(rows, files)
+        ]
+    out = scan_with_file_frame(
+        spark,
+        table_path,
+        files,
+        schema,
+        part_cols,
+        read_schema,
+        mapping,
+        problem_cols,
+        StructType(fields),
+        rows,
+        row_index=bool(dv_files) or row_ids,
+    )
+    keep = [F.col(f.name) for f in schema.fields]
+    if row_ids:
+        keep += [
+            c.alias(n) for n, c in _row_id_columns(mat_id, mat_rcv).items()
+        ]
+    if dv_files:
+        keep += [F.col("__mlk_file"), F.col("__mlk_ridx")]
+    out = out.select(*keep)
+    if dv_files:
+        out = _apply_deletion_vectors(spark, table_path, out, dv_files)
+    if predicate is not None:
+        out = out.filter(predicate)
+    return out
 
-    Join-key choice: when every file's BASENAME is unique and contains
-    only join-safe characters (no URL-encoding ambiguity between the
-    log spelling and the scan's ``_metadata`` spelling — real tables
-    name files ``part-<uuid>.snappy.parquet``, always safe), the join
-    keys on ``_metadata.file_name`` directly: a constant-per-file
-    string with ZERO per-row canonicalization work.  Otherwise it
-    falls back to the canonical full-path spelling
-    (``spark_scan_path``/``data_path_spelling``), which pays a per-row
-    url_decode + regexp but is exact for any spelling."""
-    import re as _re
 
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A driver-built frame sent through Arrow, so it plans as
+    ``LocalTableScan``: the rows ride in the plan itself.  The same
+    rows passed to ``createDataFrame`` as Python tuples plan as ``Scan
+    ExistingRDD`` over a PythonRDD, which every evaluation decodes
+    again in Python workers.  ``schema`` is a StructType or a DDL
+    string; ``rows`` are tuples in its field order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.table(
+            [pa.array(c, type=t) for c, t in zip(cols, arrow.types)],
+            schema=arrow,
+        )
+    )
+
+
+def scan_with_file_frame(
+    spark: SparkSession,
+    table_path: str,
+    files: list[dict],
+    schema: StructType,
+    part_cols: list[str],
+    read_schema: StructType,
+    mapping: dict | None,
+    problem_cols: dict,
+    consts: StructType,
+    const_rows: list[tuple],
+    row_index: bool = False,
+) -> DataFrame:
+    """Scan ``files`` (``path`` relative to ``table_path``,
+    ``partitionValues`` keyed by LOGICAL name) as ONE parquet scan —
+    one per widening-era variant when the table carries vector-blind
+    type changes (:func:`physical_read_groups`), usually exactly one —
+    and attach every per-file constant through ONE broadcast join of a
+    one-row-per-file frame: the raw partition values plus ``consts``
+    (``const_rows[i]`` belongs to ``files[i]``).  The constants are
+    data in a :func:`local_frame`, never literals, so two reads of the
+    same shape generate identical code and the plan stays O(1) in the
+    number of files and partition tuples.
+
+    Output: the ``schema`` fields in order (logical names, partition
+    columns cast from the log's raw strings to their type), then the
+    physical-only columns of ``read_schema`` (materialized row-tracking
+    columns), then ``consts``, then ``__mlk_ridx`` (the physical row
+    index, which resolves only straight off the scan) when
+    ``row_index``.
+
+    Join key: when every file's BASENAME is unique and contains only
+    join-safe characters (no URL-encoding ambiguity between the log
+    spelling and the scan's ``_metadata`` spelling — real writers name
+    files ``part-<uuid>.snappy.parquet``), ``_metadata.file_name``: a
+    constant-per-file string with zero per-row canonicalization work.
+    Otherwise the canonical full path (``spark_scan_path`` /
+    ``data_path_spelling``), which pays a per-row url_decode + regexp
+    but is exact for any spelling."""
     basenames = [f["path"].rsplit("/", 1)[-1] for f in files]
     fname_join = len(set(basenames)) == len(files) and all(
-        _re.fullmatch(r"[A-Za-z0-9._=-]+", b) for b in basenames
+        re.fullmatch(r"[A-Za-z0-9._=-]+", b) for b in basenames
+    )
+    scan_key = (
+        F.col("_metadata.file_name")
+        if fname_join
+        else _fs.spark_scan_path(F.col("_metadata.file_path"))
     )
     all_paths = [_fs.join(table_path, f["path"]) for f in files]
     if problem_cols:
@@ -1653,88 +1743,71 @@ def _read_snapshot_joined_partitions(
         )
     else:
         variant_groups = [(all_paths, read_schema, [])]
-    parts: list[DataFrame] = []
+    out = None
     for paths, variant_schema, cast_cols in variant_groups:
+        added = {c: F.col(c).cast(problem_cols[c]) for c in cast_cols}
+        added["__mlk_key"] = scan_key
+        if row_index:
+            added["__mlk_ridx"] = F.col("_metadata.row_index")
         df = spark.read.schema(variant_schema).parquet(*paths)
-        for c in cast_cols:
-            df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-        ident = {}
-        if part_cols:
-            ident["__mlk_pvkey"] = (
-                F.col("_metadata.file_name")
-                if fname_join
-                else _fs.spark_scan_path(F.col("_metadata.file_path"))
-            )
-        if need_identity:
-            ident["__mlk_file"] = _fs.spark_scan_path(
-                F.col("_metadata.file_path")
-            )
-            ident["__mlk_ridx"] = F.col("_metadata.row_index")
-        df = df.withColumns(ident)
-        if mapping is not None:
-            keep_extra = (
-                (["__mlk_pvkey"] if part_cols else [])
-                + (["__mlk_file", "__mlk_ridx"] if need_identity else [])
-                + mat_cols
-            )
-            df = df.select(
+        df = df.withColumns(added)
+        out = df if out is None else out.unionByName(df)
+    pv_of = {c: i for i, c in enumerate(part_cols)}
+    keys = (
+        basenames
+        if fname_join
+        else [_fs.data_path_spelling(table_path, f["path"]) for f in files]
+    )
+    frame = local_frame(
+        spark,
+        [
+            (k, *[(f["partitionValues"] or {}).get(c) for c in part_cols], *r)
+            for k, f, r in zip(keys, files, const_rows)
+        ],
+        StructType(
+            [
+                StructField("__mlk_key", StringType(), False),
                 *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_schema.fields
+                    StructField(f"__mlk_pv{i}", StringType())
+                    for i in pv_of.values()
                 ],
-                *keep_extra,
-            )
-        parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if part_cols:
-        # one row per file: (join key, raw partition values); the
-        # cast from the raw log string to the column type is the same
-        # Cast the literal-injection path applied
-        pv_rows = {
-            (
-                f["path"].rsplit("/", 1)[-1]
-                if fname_join
-                else _fs.data_path_spelling(table_path, f["path"])
-            ): [(f["partitionValues"] or {}).get(c) for c in part_cols]
-            for f in files
-        }
-        pv_schema = StructType(
-            [StructField("__mlk_pvkey", StringType(), False)]
-            + [
-                StructField(f"__mlk_pv{i}", StringType(), True)
-                for i in range(len(part_cols))
+                *consts.fields,
             ]
-        )
-        pv = spark.createDataFrame(
-            [(k, *v) for k, v in pv_rows.items()], pv_schema
-        )
-        out = out.join(F.broadcast(pv), "__mlk_pvkey", "left")
-        out = out.withColumns(
-            {
-                c: F.col(f"__mlk_pv{i}").cast(
-                    type_of.get(c, StringType())
-                )
-                for i, c in enumerate(part_cols)
-            }
-        )
-    keep = [f.name for f in schema.fields]
-    if need_identity:
-        keep += ["__mlk_file", "__mlk_ridx"]
-    keep += mat_cols
-    out = out.select(*keep)
-    if row_ids:
-        out = _attach_row_ids(
-            spark, table_path, out, files, mat_id, mat_rcv
-        )
-    if dv_files:
-        out = _apply_deletion_vectors(spark, table_path, out, dv_files)
-    elif row_ids:
-        out = out.drop("__mlk_file", "__mlk_ridx")
-    if predicate is not None:
-        out = out.filter(predicate)
-    return out
+        ),
+    )
+    out = out.join(F.broadcast(frame), "__mlk_key", "left")
+    phys = {
+        (mapping[f.name] if mapping else f.name)
+        for f in schema.fields
+        if f.name not in pv_of
+    }
+    return out.select(
+        *[
+            F.col(f"__mlk_pv{pv_of[f.name]}").cast(f.dataType).alias(f.name)
+            if f.name in pv_of
+            else F.col(mapping[f.name] if mapping else f.name).alias(f.name)
+            for f in schema.fields
+        ],
+        *[f.name for f in read_schema.fields if f.name not in phys],
+        *consts.names,
+        *(["__mlk_ridx"] if row_index else []),
+    )
+
+
+def _row_id_columns(mat_id: str | None, mat_rcv: str | None) -> dict:
+    """``_row_id`` / ``_row_commit_version`` (PROTOCOL.md "Row
+    Tracking" read semantics) over ``__mlk_base`` / ``__mlk_rcv`` /
+    ``__mlk_ridx``: the materialized column value when a rewrite
+    preserved it, else the FRESH id ``add.baseRowId + physical row
+    index`` (and the add's defaultRowCommitVersion)."""
+    fresh_id = F.col("__mlk_base") + F.col("__mlk_ridx")
+    fresh_rcv = F.col("__mlk_rcv")
+    return {
+        "_row_id": F.coalesce(F.col(mat_id), fresh_id) if mat_id else fresh_id,
+        "_row_commit_version": F.coalesce(F.col(mat_rcv), fresh_rcv)
+        if mat_rcv
+        else fresh_rcv,
+    }
 
 
 def _attach_row_ids(
@@ -1745,39 +1818,26 @@ def _attach_row_ids(
     mat_id: str | None,
     mat_rcv: str | None,
 ) -> DataFrame:
-    """Materialize ``_row_id`` / ``_row_commit_version`` (PROTOCOL.md
-    "Row Tracking" read semantics): per row, the materialized column
-    value when a rewrite preserved it, else the FRESH id
-    ``add.baseRowId + physical row index`` (and the add's
-    defaultRowCommitVersion).  The per-file id frame is metadata-sized
-    and broadcast; rows never shuffle."""
-    id_rows = [
-        (
-            _fs.data_path_spelling(table_path, f["path"]),
-            f.get("baseRowId"),
-            f.get("defaultRowCommitVersion"),
-        )
-        for f in files
-    ]
-    ids = F.broadcast(
-        spark.createDataFrame(
-            id_rows, "__mlk_file string, __mlk_base long, __mlk_rcv long"
-        )
+    """Materialize ``_row_id`` / ``_row_commit_version`` on a scan that
+    carries ``__mlk_file`` / ``__mlk_ridx`` (:func:`_row_id_columns`).
+    The per-file id frame is metadata-sized and broadcast; rows never
+    shuffle."""
+    ids = local_frame(
+        spark,
+        [
+            (
+                _fs.data_path_spelling(table_path, f["path"]),
+                f.get("baseRowId"),
+                f.get("defaultRowCommitVersion"),
+            )
+            for f in files
+        ],
+        "__mlk_file string, __mlk_base long, __mlk_rcv long",
     )
-    out = out.join(ids, "__mlk_file", "left")
-    fresh_id = F.col("__mlk_base") + F.col("__mlk_ridx")
-    fresh_rcv = F.col("__mlk_rcv")
-    out = out.withColumns(
-        {
-            "_row_id": F.coalesce(F.col(mat_id), fresh_id)
-            if mat_id
-            else fresh_id,
-            "_row_commit_version": F.coalesce(F.col(mat_rcv), fresh_rcv)
-            if mat_rcv
-            else fresh_rcv,
-        }
-    ).drop("__mlk_base", "__mlk_rcv", *[c for c in (mat_id, mat_rcv) if c])
-    return out
+    out = out.join(F.broadcast(ids), "__mlk_file", "left")
+    return out.withColumns(_row_id_columns(mat_id, mat_rcv)).drop(
+        "__mlk_base", "__mlk_rcv", *[c for c in (mat_id, mat_rcv) if c]
+    )
 
 
 #: fromTypes whose parquet annotation (INT(8)/INT(16)) Spark's
@@ -2508,7 +2568,8 @@ def _prune_partitions(
     # raw strings ride along untyped so the kept-set keys match the
     # add-action partitionValues exactly (no cast-then-format drift)
     raw_cols = [f"_raw_{i}" for i in range(len(part_cols))]
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [list(t) * 2 for t in tuples],
         ", ".join(f"{c} string" for c in [*part_cols, *raw_cols]),
     )

@@ -1134,8 +1134,11 @@ class DeltaSink:
         BROADCAST join against the per-file id frame (metadata-sized;
         a literal map would bloat the plan on 10k-file groups).  Rows
         whose materialized value is already set keep it."""
+        from .delta_log import local_frame
+
         ids = F.broadcast(
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [
                     (
                         _fs.data_path_spelling(self.path, f["path"]),

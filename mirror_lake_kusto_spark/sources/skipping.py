@@ -347,7 +347,7 @@ def hilbert_column(
     dwarfs the key computation.  Nulls sort to bucket 0."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf, struct
 
     n = len(cols)
     if bits is None:
@@ -358,15 +358,14 @@ def hilbert_column(
     lo_hi = [bounds[c] for c in cols]
     top = float((1 << bits) - 1)
 
-    # no type hints: pandas_udf cannot infer an eval type from a
-    # varargs signature — the legacy SCALAR form handles *series
-    @pandas_udf("long", PandasUDFType.SCALAR)
-    def _hkey(*series):
-        m = len(series[0])
+    # one struct of the proxies arrives as one pandas DataFrame (column
+    # j = proxy of cols[j]), whatever the number of clustering columns
+    def _hkey(proxies):
+        m = len(proxies)
         coords = np.zeros((n, m), dtype=np.uint64)
-        for j, s in enumerate(series):
+        for j in range(n):
             lo, hi = lo_hi[j]
-            v = s.to_numpy(dtype=np.float64, na_value=lo)
+            v = proxies.iloc[:, j].to_numpy(dtype=np.float64, na_value=lo)
             if hi > lo:
                 v = (v - lo) / (hi - lo) * top
             else:
@@ -376,8 +375,17 @@ def hilbert_column(
             )
         return pd.Series(hilbert_index(coords, bits))
 
-    return _hkey(
-        *[numeric_proxy(c, type_of[c]) for c in cols]
+    # the DataFrame -> Series hints pick the scalar eval type; they are
+    # set as objects because this module postpones annotations and
+    # pandas is imported lazily, so written hints would not resolve
+    _hkey.__annotations__ = {"proxies": pd.DataFrame, "return": pd.Series}
+    return pandas_udf(_hkey, "long")(
+        struct(
+            *[
+                numeric_proxy(c, type_of[c]).alias(f"p{j}")
+                for j, c in enumerate(cols)
+            ]
+        )
     )
 
 

@@ -19,7 +19,10 @@ TABLES = (
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="mlk-spark-tests", cpus=8, shuffle_partitions=8)
+    # cores follow the machine (SPARK_GRAFT_CPUS, else os.cpu_count());
+    # the shuffle width stays fixed so plans and file counts do not
+    # vary with the host
+    s = build_session(app_name="mlk-spark-tests", shuffle_partitions=8)
     yield s
 
 

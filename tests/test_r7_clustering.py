@@ -16,7 +16,13 @@ import pytest
 from mirror_lake_kusto_spark.pipeline.orchestrate import MirrorPipeline
 from mirror_lake_kusto_spark.sources import delta_log as DL
 from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
-from mirror_lake_kusto_spark.sources.skipping import hilbert_index
+from mirror_lake_kusto_spark.sources.skipping import hilbert_column, hilbert_index
+
+# the legacy PandasUDFType form of a pandas UDF warns on every
+# declaration; the Hilbert key must stay on the type-hinted form
+pytestmark = pytest.mark.filterwarnings(
+    "error:.*preferred to specify type hints for pandas UDF:UserWarning"
+)
 
 
 @pytest.mark.parametrize("n,bits", [(2, 1), (2, 4), (3, 3), (4, 2)])
@@ -50,6 +56,25 @@ def _clustered_table(spark, tmp_path, name, n=20_000):
         .repartition(8)
     )
     return sink
+
+
+def test_hilbert_column_matches_hilbert_index(spark):
+    """The Spark-side key is the numpy curve over the scaled proxies,
+    column order kept and nulls in bucket 0."""
+    rows = [(a, b) for a in (None, 0, 5, 15) for b in (None, 0.0, 7.5, 15.0)]
+    df = spark.createDataFrame(rows, "a long, b double")
+    bounds = {"a": (0.0, 15.0), "b": (0.0, 15.0)}
+    got = [
+        r[0]
+        for r in df.select(
+            hilbert_column(["a", "b"], bounds, df.schema, bits=4)
+        ).collect()
+    ]
+    coords = np.array(
+        [[int(a or 0) for a, _ in rows], [int(b or 0) for _, b in rows]],
+        dtype=np.uint64,
+    )
+    assert got == hilbert_index(coords, 4).tolist()
 
 
 def test_set_cluster_by_protocol_and_domain(spark, tmp_path):

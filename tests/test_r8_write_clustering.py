@@ -6,9 +6,16 @@ provenance tag, so the incremental OPTIMIZE leaves them in place."""
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
 from mirror_lake_kusto_spark.sources import delta_log as DL
 from mirror_lake_kusto_spark.sources.delta_sink import DeltaSink
+
+# appends on a CLUSTER BY table compute the Hilbert key; the legacy
+# PandasUDFType form of a pandas UDF would warn on every declaration
+pytestmark = pytest.mark.filterwarnings(
+    "error:.*preferred to specify type hints for pandas UDF:UserWarning"
+)
 
 
 def _files_scanned(spark, path, pred):
