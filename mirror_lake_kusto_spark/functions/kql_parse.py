@@ -4337,7 +4337,7 @@ class KqlQuery:
         local slowdown for 10x fewer input scans "at real event
         volume" — and the r13 10x-corpus A/B refuted the trade both
         times it ran (persisted 1.43–1.50 s vs unpersisted 1.27–1.46 s;
-        tools/probe_activity_persist.py): the consumers are
+        OPTIMIZATION_r13.md): the consumers are
         independent stages the scheduler overlaps, and the persist's
         materialization barrier serializes them for longer than the
         repeated distinct costs.  Both A/Bs read page-cached local
@@ -4653,7 +4653,7 @@ class KqlQuery:
         work stays hash-distributed.  The pairs and first-bin frames
         are NOT persisted: the r12 persists here lost the r13
         10x-corpus A/B (persisted 1.29–1.49 s vs unpersisted
-        1.17–1.21 s; tools/probe_activity_persist.py) — see
+        1.17–1.21 s; OPTIMIZATION_r13.md) — see
         activity_metrics above for the mechanism."""
         if len(args) != 5:
             raise KqlParseError(

@@ -25,11 +25,23 @@ the projection matrix (a few KB) do.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import Any, Tuple
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+
+#: (key, pdf) -> pdf hints of an ``applyInPandas`` function, from which
+#: pyspark infers the grouped-map eval type.  Set as objects, because
+#: this module postpones annotations; a ``key`` without a hint makes
+#: pyspark warn "Cannot infer the eval type from type hints" per call.
+_GROUPED_MAP_HINTS = {
+    "key": Tuple[Any, ...],
+    "pdf": pd.DataFrame,
+    "return": pd.DataFrame,
+}
 
 
 def _with_cols(df: DataFrame, extra: list[tuple[str, str]]):
@@ -414,6 +426,7 @@ def cosine_pairs(
             {"id1": id1, "id2": id2, "cos_sim": np.round(sim, round_digits)}
         )
 
+    block_pairs.__annotations__ = _GROUPED_MAP_HINTS
     return grouped.groupBy("_gk").applyInPandas(
         block_pairs, "id1 bigint, id2 bigint, cos_sim double"
     )
@@ -1164,6 +1177,7 @@ def cosine_topk_mmr(
             }
         )
 
+    mmr.__annotations__ = _GROUPED_MAP_HINTS
     return (
         cand.groupBy("query_id")
         .applyInPandas(mmr, out_schema)

@@ -274,7 +274,7 @@ def repetition_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # higher-order functions re-evaluate non-variable subtrees on
     # EVERY element, so array_sort(grams) ran O(len) times per row:
     # O(len² log len) per document, 104.6 s vs 1.35 s at the 10x
-    # corpus (tools/probe_repetition_shapes.py, all three shapes
+    # corpus (OPTIMIZATION_r13.md, all three shapes
     # checksum-identical).
     def top_gram_count_expr(n: int):
         toks = F.col("_toks")

@@ -201,8 +201,8 @@ class MirrorPipeline:
         # "fail" = reference parity (TransactionLogEntry.cs:341-342
         # throws on unsupported log shapes): a DV-carrying source add
         # refuses loudly.  "materialize" (round 9): stage the file's
-        # SURVIVING rows (bitmap applied at read, the same
-        # _apply_deletion_vectors pass read_snapshot uses) and record
+        # SURVIVING rows (bitmap applied at read by the same
+        # delta_log.scan_with_file_frame read_snapshot uses) and record
         # the DV descriptor as provenance in the item state; when a
         # path's DV changes later (merge-on-read delete grows the
         # bitmap), the path re-stages — old lineage rows are deleted
@@ -1075,131 +1075,55 @@ class MirrorPipeline:
                 f"AND MLK_BatchTxId < {int(end_tx)}"
             )
         meta = DL.latest_metadata(self.spark, self.source, upto=end_tx)
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        type_of = {f.name: f.dataType for f in schema.fields}
-        src_conf = meta.get("configuration") or {}
         # source row tracking: carry every row's SOURCE identity into
         # the mirror as a lineage column — repacking would otherwise
         # silently strip the lineage the source guaranteed
         rt_src = (
-            str(src_conf.get("delta.enableRowTracking", "")).lower()
+            str(
+                (meta.get("configuration") or {}).get(
+                    "delta.enableRowTracking", ""
+                )
+            ).lower()
             == "true"
         )
-        src_mat_id = src_conf.get(
-            "delta.rowTracking.materializedRowIdColumnName"
-        )
-        # column-mapped source: files store PHYSICAL names; partition
-        # values recorded from add actions are keyed physical too —
-        # read physical, relabel logical right after the scan (the
-        # same normalization read_snapshot performs)
-        mapping = DL.column_mapping_of(meta)  # logical -> physical
-        log_of = {v: k for k, v in (mapping or {}).items()}
-        part_cols = {
-            log_of.get(c, c) for c in (meta.get("partitionColumns") or [])
-        }
-        # source files hold only data columns; explicit schema skips a
-        # footer-inference job per partition group
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        data_schema = StructType(data_fields)
-        read_schema = (
-            data_schema
-            if mapping is None
-            else StructType(
-                [
-                    StructField(mapping[f.name], f.dataType, f.nullable)
-                    for f in data_fields
-                ]
-            )
-        )
-        if rt_src and src_mat_id:
-            # the source's materialized row-id column is physical-only;
-            # files from before materialization null-fill
-            read_schema = StructType(
-                [
-                    *read_schema.fields,
-                    StructField(src_mat_id, LongType(), True),
-                ]
-            )
-        # widened columns Spark cannot promote natively at scan
-        # (byte/short era under decimal): era-split by sniffed
-        # physical type, cast right after the scan — same pass
-        # read_snapshot uses
-        problem_cols = {
-            (mapping[f] if mapping else f): type_of[f]
-            for f in DL.legacy_promote_cols(
-                json.loads(meta["schemaString"])["fields"]
-            )
-        }
-        files = [
+        base_of = (
             {
-                "path": it["blob_path"],
-                "partitionValues": {
-                    log_of.get(k, k): v
-                    for k, v in json.loads(
-                        it["partition_values"] or "{}"
-                    ).items()
-                },
-            }
-            for it in todo
-        ]
-        # every batch constant is a column of the per-file frame, not a
-        # literal: consecutive batches generate identical code
-        consts = [
-            StructField("MLK_BlobPath", StringType()),
-            StructField("MLK_BatchTxId", LongType()),
-        ]
-        rows = [(self._lineage_path(f["path"]), end_tx) for f in files]
-        if rt_src:
-            base_of = {
                 f["path"]: f.get("baseRowId")
                 for f in DL.snapshot_files(self.spark, self.source, upto=end_tx)
             }
-            consts.append(StructField("__mlk_base", LongType()))
-            rows = [(*r, base_of.get(f["path"])) for r, f in zip(rows, files)]
+            if rt_src
+            else {}
+        )
+        # every batch constant is a column of the per-file frame, not a
+        # literal: consecutive batches generate identical code.  DV'd
+        # files keep only their SURVIVING rows
         out = DL.scan_with_file_frame(
             self.spark,
             self.source,
-            files,
-            schema,
-            sorted(part_cols),
-            read_schema,
-            mapping,
-            problem_cols,
-            StructType(consts),
-            rows,
-            row_index=rt_src or bool(dv_descs),
-        )
-        keep = [F.col(f.name) for f in schema.fields]
-        keep += [F.col("MLK_BlobPath"), F.col("MLK_BatchTxId")]
-        if rt_src:
-            # lineage column: the SOURCE's stable row id per mirrored
-            # row — materialized value when the source rewrote the
-            # file, else add.baseRowId + physical row index
-            keep.append(
-                DL._row_id_columns(src_mat_id, None)["_row_id"].alias(
-                    "MLK_SourceRowId"
-                )
-            )
-        if dv_descs:
-            keep += [
-                F.col("MLK_BlobPath").alias("__mlk_file"),
-                F.col("__mlk_ridx"),
-            ]
-        out = out.select(*keep)
-        if dv_descs:
-            # merge-on-read source files keep only SURVIVING rows: one
-            # bitmap anti-join across every DV'd file in the batch
-            # (dv.deleted_rows, broadcast under 10M deleted rows — the
-            # same pass read_snapshot applies)
-            out = DL._apply_deletion_vectors(
-                self.spark,
-                self.source,
-                out,
+            meta,
+            [
+                {
+                    "path": it["blob_path"],
+                    "partitionValues": json.loads(
+                        it["partition_values"] or "{}"
+                    ),
+                    "deletionVector": dv_descs.get(it["blob_path"]),
+                    "baseRowId": base_of.get(it["blob_path"]),
+                    "MLK_BlobPath": self._lineage_path(it["blob_path"]),
+                    "MLK_BatchTxId": end_tx,
+                }
+                for it in todo
+            ],
+            StructType(
                 [
-                    {"path": p, "deletionVector": d}
-                    for p, d in dv_descs.items()
-                ],
-            )
+                    StructField("MLK_BlobPath", StringType()),
+                    StructField("MLK_BatchTxId", LongType()),
+                ]
+            ),
+            apply_dvs=True,
+            # lineage column: the SOURCE's stable row id per mirrored row
+            row_ids=("MLK_SourceRowId", None) if rt_src else None,
+        )
         extra_actions: list[dict] = []
         # preserve the source's app-domain metadata (PROTOCOL.md
         # "Domain Metadata"): a consumer of the MIRROR must see the

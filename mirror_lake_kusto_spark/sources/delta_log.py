@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import zlib
 from typing import Any
 
 import pyarrow.parquet as _pq
@@ -1360,12 +1361,9 @@ def read_snapshot(
     timestamp=None,
     row_ids: bool = False,
 ) -> DataFrame:
-    """Current table contents.  Partition columns are never stored in
-    the data files (the reference's ConstValue ingestion mapping,
-    A7/O6, BlobStagingOrchestration.cs:291-308): a table with one
-    partition tuple injects its values as typed literal columns; a
-    table with more reads every file in one scan and joins the values
-    in from a broadcast per-file frame (:func:`scan_with_file_frame`).
+    """Current table contents, read through :func:`scan_with_file_frame`
+    (partition values, deletion vectors, column mapping, widening eras
+    and — with ``row_ids`` — ``_row_id`` / ``_row_commit_version``).
 
     ``partition_predicate`` (SQL over partition columns only) prunes
     whole partition groups BEFORE any data file is opened — classic
@@ -1391,44 +1389,38 @@ def read_snapshot(
         upto = resolve_timestamp(table_path, timestamp)
     files = snapshot_files(spark, table_path, upto=upto)
     meta = latest_metadata(spark, table_path, upto=upto)
-    mat_id = mat_rcv = None
-    if row_ids:
-        conf = (meta or {}).get("configuration") or {}
-        if str(conf.get("delta.enableRowTracking", "")).lower() != "true":
-            raise ValueError(
-                f"{table_path}: row_ids=True needs row tracking "
-                "(delta.enableRowTracking) on the table"
-            )
-        mat_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
-        mat_rcv = conf.get(
-            "delta.rowTracking.materializedRowCommitVersionColumnName"
+    if row_ids and str(
+        ((meta or {}).get("configuration") or {}).get(
+            "delta.enableRowTracking", ""
         )
+    ).lower() != "true":
+        raise ValueError(
+            f"{table_path}: row_ids=True needs row tracking "
+            "(delta.enableRowTracking) on the table"
+        )
+    if meta is None:
+        return spark.createDataFrame([], StructType([]))
     mapping = column_mapping_of(meta)  # logical -> physical, or None
-    if mapping is not None:
-        # normalize to LOGICAL names up front: add.partitionValues (and
-        # metaData.partitionColumns in some writers) are keyed by
-        # physical name under column mapping
-        log_of = {v: k for k, v in mapping.items()}
-        files = [
-            {
-                **f,
-                "partitionValues": {
-                    log_of.get(k, k): v
-                    for k, v in (f["partitionValues"] or {}).items()
-                },
-            }
-            for f in files
-        ]
-        meta = {
-            **meta,
-            "partitionColumns": [
-                log_of.get(c, c)
-                for c in (meta.get("partitionColumns") or [])
+    if partition_predicate is not None and files:
+        # pruning reads partition values by LOGICAL name; under column
+        # mapping add.partitionValues (and metaData.partitionColumns in
+        # some writers) are keyed by physical name
+        parts = _logical_partition_columns(meta)
+        files = _prune_partitions(
+            spark,
+            [
+                {
+                    **f,
+                    "partitionValues": {
+                        c: _partition_value(f, c, mapping) for c in parts
+                    },
+                }
+                for f in files
             ],
-        }
-    if partition_predicate is not None and files and meta is not None:
-        files = _prune_partitions(spark, files, meta, partition_predicate)
-    if predicate is not None and files and meta is not None and mapping is None:
+            {**meta, "partitionColumns": parts},
+            partition_predicate,
+        )
+    if predicate is not None and files and mapping is None:
         # stats/bloom pruning is skipped under column mapping (stats
         # JSON is keyed by physical names); the row filter below keeps
         # the result exact either way — pruning is only ever advisory
@@ -1462,205 +1454,20 @@ def read_snapshot(
             else pred_schema
         )
         files = prune_files_bloom(table_path, files, predicate, bloom_schema)
-    if not files or meta is None:
+    if not files:
         return spark.createDataFrame(
-            [],
-            StructType.fromJson(json.loads(meta["schemaString"]))
-            if meta
-            else StructType([]),
+            [], StructType.fromJson(json.loads(meta["schemaString"]))
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    type_of = {f.name: f.dataType for f in schema.fields}
-    # files hold only the data columns (partition values live in the
-    # log); passing the schema skips a footer-inference job per group
-    data_schema = StructType([f for f in schema.fields if f.name not in part_cols])
-    # under column mapping the FILES store physical names: read with
-    # the physical schema, rename to logical right after the scan
-    read_schema = (
-        data_schema
-        if mapping is None
-        else StructType(
-            [
-                StructField(mapping[f.name], f.dataType, f.nullable)
-                for f in data_schema.fields
-            ]
-        )
-    )
-
-    dv_files = [
-        f
-        for f in files
-        if (f.get("deletionVector") or {}).get("cardinality")
-    ]
-    mat_cols = [c for c in (mat_id, mat_rcv) if c]
-    if mat_cols:
-        # the materialized row-id/commit-version columns are PHYSICAL
-        # only (never part of the logical schema): files written before
-        # materialization lack them and null-fill
-        read_schema = StructType(
-            [
-                *read_schema.fields,
-                *[StructField(c, LongType(), True) for c in mat_cols],
-            ]
-        )
-    need_identity = bool(dv_files) or row_ids
-    # columns whose widening history Spark cannot promote natively
-    # (byte/short era under a decimal logical type): era-split those
-    # scans by sniffed physical type, cast right after the scan
-    problem_cols = {
-        (mapping[c] if mapping else c): type_of[c]
-        for c in legacy_promote_cols(json.loads(meta["schemaString"])["fields"])
-    }
-    groups: dict[tuple, list[str]] = {}
-    for f in files:
-        key = tuple(sorted((f["partitionValues"] or {}).items()))
-        groups.setdefault(key, []).append(
-            _fs.join(table_path, f["path"])
-        )
-    if len(groups) > 1:
-        # multi-tuple table: ONE scan (per era variant — usually
-        # exactly one) over ALL files; partition values arrive through
-        # a broadcast per-file frame instead of a per-tuple
-        # literal-injection scan, whose union grew the plan (and
-        # driver planning time) O(partition tuples)
-        return _read_snapshot_joined_partitions(
-            spark,
-            table_path,
-            files,
-            schema,
-            part_cols,
-            read_schema,
-            mapping,
-            problem_cols,
-            dv_files,
-            row_ids,
-            mat_id,
-            mat_rcv,
-            predicate,
-        )
-    parts: list[DataFrame] = []
-    flat: list[tuple[tuple, list[str], StructType, list[str]]] = []
-    for key, paths in groups.items():
-        if problem_cols:
-            for ps, variant, cast_cols in physical_read_groups(
-                paths, read_schema, problem_cols
-            ):
-                flat.append((key, ps, variant, cast_cols))
-        else:
-            flat.append((key, paths, read_schema, []))
-    for key, paths, variant_schema, cast_cols in flat:
-        df = spark.read.schema(variant_schema).parquet(*paths)
-        for c in cast_cols:
-            df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-        if need_identity:
-            # merge-on-read: carry the file identity + physical row
-            # index so deletion vectors can filter below (must come
-            # straight off the scan — _metadata resolves only there)
-            df = df.withColumns(
-                {
-                    "__mlk_file": _fs.spark_scan_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__mlk_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        if mapping is not None:
-            keep_extra = (
-                ["__mlk_file", "__mlk_ridx"] if need_identity else []
-            ) + mat_cols
-            df = df.select(
-                *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_schema.fields
-                ],
-                *keep_extra,
-            )
-        for col_name, raw in key:
-            df = df.withColumn(
-                col_name, F.lit(raw).cast(type_of.get(col_name, StringType()))
-            )
-        keep = [f.name for f in schema.fields]
-        if need_identity:
-            keep += ["__mlk_file", "__mlk_ridx"]
-        keep += mat_cols
-        parts.append(df.select(*keep))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if row_ids:
-        out = _attach_row_ids(spark, table_path, out, files, mat_id, mat_rcv)
-    if dv_files:
-        out = _apply_deletion_vectors(spark, table_path, out, dv_files)
-    elif row_ids:
-        out = out.drop("__mlk_file", "__mlk_ridx")
-    if predicate is not None:
-        # pruning is advisory; the row filter guarantees exactness
-        out = out.filter(predicate)
-    return out
-
-
-def _read_snapshot_joined_partitions(
-    spark: SparkSession,
-    table_path: str,
-    files: list[dict],
-    schema: StructType,
-    part_cols: list[str],
-    read_schema: StructType,
-    mapping: dict | None,
-    problem_cols: dict,
-    dv_files: list[dict],
-    row_ids: bool,
-    mat_id: str | None,
-    mat_rcv: str | None,
-    predicate,
-) -> DataFrame:
-    """Read path for tables with >1 partition tuple: one
-    :func:`scan_with_file_frame` whose per-file frame carries the raw
-    partition values — plus the DV file identity and the row-tracking
-    base id / commit version when those are needed — so plan size is
-    O(1) in the number of partition tuples instead of O(tuples)."""
-    fields: list[StructField] = []
-    rows: list[tuple] = [() for _ in files]
-    if dv_files:
-        fields.append(StructField("__mlk_file", StringType()))
-        rows = [
-            (*r, _fs.data_path_spelling(table_path, f["path"]))
-            for r, f in zip(rows, files)
-        ]
-    if row_ids:
-        fields += [
-            StructField("__mlk_base", LongType()),
-            StructField("__mlk_rcv", LongType()),
-        ]
-        rows = [
-            (*r, f.get("baseRowId"), f.get("defaultRowCommitVersion"))
-            for r, f in zip(rows, files)
-        ]
     out = scan_with_file_frame(
         spark,
         table_path,
+        meta,
         files,
-        schema,
-        part_cols,
-        read_schema,
-        mapping,
-        problem_cols,
-        StructType(fields),
-        rows,
-        row_index=bool(dv_files) or row_ids,
+        apply_dvs=True,
+        row_ids=("_row_id", "_row_commit_version") if row_ids else None,
     )
-    keep = [F.col(f.name) for f in schema.fields]
-    if row_ids:
-        keep += [
-            c.alias(n) for n, c in _row_id_columns(mat_id, mat_rcv).items()
-        ]
-    if dv_files:
-        keep += [F.col("__mlk_file"), F.col("__mlk_ridx")]
-    out = out.select(*keep)
-    if dv_files:
-        out = _apply_deletion_vectors(spark, table_path, out, dv_files)
     if predicate is not None:
+        # pruning is advisory; the row filter guarantees exactness
         out = out.filter(predicate)
     return out
 
@@ -1688,156 +1495,233 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
     )
 
 
+def _logical_partition_columns(meta: dict) -> list[str]:
+    """``metaData.partitionColumns`` by LOGICAL name (some writers
+    record the physical names of a column-mapped table)."""
+    log_of = {p: l for l, p in (column_mapping_of(meta) or {}).items()}
+    return [log_of.get(c, c) for c in meta.get("partitionColumns") or []]
+
+
+def _partition_value(f: dict, col: str, mapping: dict | None):
+    """File ``f``'s raw partition value of logical column ``col``:
+    ``add.partitionValues`` is keyed by physical name under column
+    mapping, by logical name once a reader has normalized it."""
+    pv = f.get("partitionValues") or {}
+    return pv[col] if col in pv else pv.get((mapping or {}).get(col, col))
+
+
+def _has_dv(f: dict) -> bool:
+    """Does file ``f`` carry a deletion vector that deletes rows?  Its
+    ``deletionVector`` is a log descriptor or an already-fetched
+    payload (the change feed's)."""
+    dv = f.get("deletionVector")
+    return bool(dv.get("cardinality")) if isinstance(dv, dict) else bool(dv)
+
+
 def scan_with_file_frame(
     spark: SparkSession,
     table_path: str,
+    meta: dict,
     files: list[dict],
-    schema: StructType,
-    part_cols: list[str],
-    read_schema: StructType,
-    mapping: dict | None,
-    problem_cols: dict,
-    consts: StructType,
-    const_rows: list[tuple],
-    row_index: bool = False,
+    consts: StructType | None = None,
+    file_cols: list[StructField] = (),
+    identity: bool = False,
+    apply_dvs: bool = False,
+    row_ids: tuple[str, str | None] | None = None,
 ) -> DataFrame:
-    """Scan ``files`` (``path`` relative to ``table_path``,
-    ``partitionValues`` keyed by LOGICAL name) as ONE parquet scan —
-    one per widening-era variant when the table carries vector-blind
-    type changes (:func:`physical_read_groups`), usually exactly one —
-    and attach every per-file constant through ONE broadcast join of a
-    one-row-per-file frame: the raw partition values plus ``consts``
-    (``const_rows[i]`` belongs to ``files[i]``).  The constants are
-    data in a :func:`local_frame`, never literals, so two reads of the
-    same shape generate identical code and the plan stays O(1) in the
-    number of files and partition tuples.
+    """The ONE place add actions become rows: LOGICAL rows of ``files``
+    (``path`` relative to ``table_path``) of the table whose
+    ``metaData`` is ``meta`` — the reference's ConstValue ingestion
+    mapping (A7/O6, BlobStagingOrchestration.cs:291-308).  Everything
+    is derived from ``meta``: the physical→logical respelling under
+    column mapping, the logical partition columns (their values come
+    from each file dict's ``partitionValues``, cast from the log's raw
+    strings), the read schema, and the widening eras Spark cannot
+    promote natively (:func:`legacy_promote_cols`; one scan per era
+    variant, :func:`physical_read_groups`).  Each distinct path is
+    scanned once, in ONE parquet scan — usually exactly one.
 
-    Output: the ``schema`` fields in order (logical names, partition
-    columns cast from the log's raw strings to their type), then the
-    physical-only columns of ``read_schema`` (materialized row-tracking
-    columns), then ``consts``, then ``__mlk_ridx`` (the physical row
-    index, which resolves only straight off the scan) when
-    ``row_index``.
+    Output: the schema's fields in order, then ``file_cols`` (physical
+    columns outside the schema, read from the files and null where a
+    file lacks them), then ``consts``, then the optional outputs:
 
-    Join key: when every file's BASENAME is unique and contains only
-    join-safe characters (no URL-encoding ambiguity between the log
-    spelling and the scan's ``_metadata`` spelling — real writers name
-    files ``part-<uuid>.snappy.parquet``), ``_metadata.file_name``: a
-    constant-per-file string with zero per-row canonicalization work.
-    Otherwise the canonical full path (``spark_scan_path`` /
-    ``data_path_spelling``), which pays a per-row url_decode + regexp
-    but is exact for any spelling."""
-    basenames = [f["path"].rsplit("/", 1)[-1] for f in files]
-    fname_join = len(set(basenames)) == len(files) and all(
-        re.fullmatch(r"[A-Za-z0-9._=-]+", b) for b in basenames
-    )
-    scan_key = (
-        F.col("_metadata.file_name")
-        if fname_join
-        else _fs.spark_scan_path(F.col("_metadata.file_path"))
-    )
-    all_paths = [_fs.join(table_path, f["path"]) for f in files]
-    if problem_cols:
-        variant_groups = physical_read_groups(
-            all_paths, read_schema, problem_cols
-        )
-    else:
-        variant_groups = [(all_paths, read_schema, [])]
-    out = None
-    for paths, variant_schema, cast_cols in variant_groups:
-        added = {c: F.col(c).cast(problem_cols[c]) for c in cast_cols}
-        added["__mlk_key"] = scan_key
-        if row_index:
-            added["__mlk_ridx"] = F.col("_metadata.row_index")
-        df = spark.read.schema(variant_schema).parquet(*paths)
-        df = df.withColumns(added)
-        out = df if out is None else out.unionByName(df)
-    pv_of = {c: i for i, c in enumerate(part_cols)}
-    keys = (
-        basenames
-        if fname_join
-        else [_fs.data_path_spelling(table_path, f["path"]) for f in files]
-    )
-    frame = local_frame(
-        spark,
+    - ``identity``: ``__mlk_file`` (:func:`fs.data_path_spelling`) and
+      ``__mlk_ridx`` (the physical row index);
+    - ``apply_dvs``: rows deleted by the deletion vector of any file
+      dict that carries one (descriptor or fetched payload) anti-join
+      away (:func:`dv.deleted_rows`) — Delta merge-on-read;
+    - ``row_ids``: output names for the row id and, unless None, the
+      row commit version (PROTOCOL.md "Row Tracking"): the
+      materialized column when a rewrite preserved it, else the fresh
+      ``add.baseRowId`` + row index (and ``defaultRowCommitVersion``).
+
+    Per-file values — partition values, ``consts`` (read from the
+    file dicts by field name), base row ids — arrive through ONE
+    broadcast join of a :func:`local_frame`, never as literals, so two
+    reads of the same shape generate identical code and the plan is
+    O(1) in files and partition tuples.  A path may appear in several
+    file dicts (the change feed lists a file inserted at one version
+    and removed at a later one): each dict is one frame row, so the
+    join yields one copy of the file's rows per dict.  With nothing
+    per-file to join (unpartitioned, no ``consts``, no row ids) there
+    is no frame: the identity comes straight off the scan's
+    ``_metadata``.
+
+    Join key: when every distinct path's BASENAME is unique and
+    contains only join-safe characters (no URL-encoding ambiguity
+    between the log spelling and the scan's ``_metadata`` spelling —
+    real writers name files ``part-<uuid>.snappy.parquet``),
+    ``_metadata.file_name``: a constant-per-file string with zero
+    per-row canonicalization work.  Otherwise the canonical full path
+    (``spark_scan_path`` / ``data_path_spelling``), which pays a
+    per-row url_decode + regexp but is exact for any spelling.  The
+    join runs on the key's CRC-32 whenever the distinct keys' CRCs
+    differ (the scan reads only the frame's files, so equal CRCs then
+    mean equal files): a long key broadcasts as a ~1 MB
+    ``LongHashedRelation``, a string key as an ``UnsafeHashedRelation``
+    whose first page is a whole ``spark.buffer.pageSize`` (64 MB on a
+    7 GB driver) however few files it holds."""
+    from . import dv as _dv
+
+    schema_json = json.loads(meta["schemaString"])
+    schema = StructType.fromJson(schema_json)
+    mapping = column_mapping_of(meta) or {}
+    part_cols = _logical_partition_columns(meta)
+    conf = meta.get("configuration") or {}
+    mat_cols: list[str] = []
+    fresh: dict[str, Any] = {}
+    if row_ids:
+        # the materialized row-id/commit-version columns are PHYSICAL
+        # only (never part of the logical schema): files written before
+        # materialization lack them and null-fill
+        for out_name, mat, base in zip(
+            row_ids,
+            (
+                conf.get("delta.rowTracking.materializedRowIdColumnName"),
+                conf.get(
+                    "delta.rowTracking.materializedRowCommitVersionColumnName"
+                ),
+            ),
+            (F.col("__mlk_base") + F.col("__mlk_ridx"), F.col("__mlk_rcv")),
+        ):
+            if out_name is None:
+                continue
+            fresh[out_name] = F.coalesce(F.col(mat), base) if mat else base
+            if mat:
+                mat_cols.append(mat)
+    read_schema = StructType(
         [
-            (k, *[(f["partitionValues"] or {}).get(c) for c in part_cols], *r)
-            for k, f, r in zip(keys, files, const_rows)
-        ],
-        StructType(
-            [
-                StructField("__mlk_key", StringType(), False),
-                *[
-                    StructField(f"__mlk_pv{i}", StringType())
-                    for i in pv_of.values()
-                ],
-                *consts.fields,
-            ]
-        ),
+            StructField(mapping.get(f.name, f.name), f.dataType, f.nullable)
+            for f in schema.fields
+            if f.name not in part_cols
+        ]
+        + list(file_cols)
+        + [StructField(c, LongType(), True) for c in mat_cols]
     )
-    out = out.join(F.broadcast(frame), "__mlk_key", "left")
-    phys = {
-        (mapping[f.name] if mapping else f.name)
-        for f in schema.fields
-        if f.name not in pv_of
+    problem_cols = {
+        mapping.get(c, c): schema[c].dataType
+        for c in legacy_promote_cols(schema_json["fields"])
     }
-    return out.select(
+    dv_files = [f for f in files if _has_dv(f)] if apply_dvs else []
+    need_ident = identity or bool(dv_files)
+    framed = bool(part_cols or consts or row_ids)
+    paths = list(dict.fromkeys(f["path"] for f in files))
+    scanned: dict[str, Any] = {}
+    if framed:
+        basenames = [p.rsplit("/", 1)[-1] for p in paths]
+        if len(set(basenames)) == len(paths) and all(
+            re.fullmatch(r"[A-Za-z0-9._=-]+", b) for b in basenames
+        ):
+            key_of = dict(zip(paths, basenames))
+            scan_key = F.col("_metadata.file_name")
+        else:
+            key_of = {p: _fs.data_path_spelling(table_path, p) for p in paths}
+            scan_key = _fs.spark_scan_path(F.col("_metadata.file_path"))
+        crc_of = {p: zlib.crc32(k.encode()) for p, k in key_of.items()}
+        key_type = StringType()
+        if len(set(crc_of.values())) == len(crc_of):
+            key_of, key_type = crc_of, LongType()
+            scan_key = F.crc32(scan_key.cast("binary"))
+        scanned["__mlk_key"] = scan_key
+    elif need_ident:
+        # identity alone: straight off the scan, no join
+        scanned["__mlk_file"] = _fs.spark_scan_path(
+            F.col("_metadata.file_path")
+        )
+    if need_ident or row_ids:
+        scanned["__mlk_ridx"] = F.col("_metadata.row_index")
+    full = [_fs.join(table_path, p) for p in paths]
+    out = None
+    for ps, variant, cast_cols in (
+        physical_read_groups(full, read_schema, problem_cols)
+        if problem_cols
+        else [(full, read_schema, [])]
+    ):
+        df = spark.read.schema(variant).parquet(*ps).withColumns(
+            {
+                **{c: F.col(c).cast(problem_cols[c]) for c in cast_cols},
+                **scanned,
+            }
+        )
+        out = df if out is None else out.unionByName(df)
+    consts = consts or StructType([])
+    if framed:
+        fields = [StructField("__mlk_key", key_type, False)]
+        if need_ident:
+            fields.append(StructField("__mlk_file", StringType()))
+        fields += [
+            StructField(f"__mlk_pv{i}", StringType())
+            for i in range(len(part_cols))
+        ]
+        fields += consts.fields
+        if row_ids:
+            fields += [
+                StructField("__mlk_base", LongType()),
+                StructField("__mlk_rcv", LongType()),
+            ]
+        rows = []
+        for f in files:
+            row = [key_of[f["path"]]]
+            if need_ident:
+                row.append(_fs.data_path_spelling(table_path, f["path"]))
+            row += [_partition_value(f, c, mapping) for c in part_cols]
+            row += [f.get(c) for c in consts.names]
+            if row_ids:
+                row += [f.get("baseRowId"), f.get("defaultRowCommitVersion")]
+            rows.append(tuple(row))
+        frame = local_frame(spark, rows, StructType(fields))
+        out = out.join(F.broadcast(frame), "__mlk_key", "left")
+    pv_of = {c: i for i, c in enumerate(part_cols)}
+    ident = ["__mlk_file", "__mlk_ridx"] if need_ident else []
+    out = out.select(
         *[
             F.col(f"__mlk_pv{pv_of[f.name]}").cast(f.dataType).alias(f.name)
             if f.name in pv_of
-            else F.col(mapping[f.name] if mapping else f.name).alias(f.name)
+            else F.col(mapping.get(f.name, f.name)).alias(f.name)
             for f in schema.fields
         ],
-        *[f.name for f in read_schema.fields if f.name not in phys],
+        *[f.name for f in file_cols],
         *consts.names,
-        *(["__mlk_ridx"] if row_index else []),
+        *[c.alias(n) for n, c in fresh.items()],
+        *ident,
     )
-
-
-def _row_id_columns(mat_id: str | None, mat_rcv: str | None) -> dict:
-    """``_row_id`` / ``_row_commit_version`` (PROTOCOL.md "Row
-    Tracking" read semantics) over ``__mlk_base`` / ``__mlk_rcv`` /
-    ``__mlk_ridx``: the materialized column value when a rewrite
-    preserved it, else the FRESH id ``add.baseRowId + physical row
-    index`` (and the add's defaultRowCommitVersion)."""
-    fresh_id = F.col("__mlk_base") + F.col("__mlk_ridx")
-    fresh_rcv = F.col("__mlk_rcv")
-    return {
-        "_row_id": F.coalesce(F.col(mat_id), fresh_id) if mat_id else fresh_id,
-        "_row_commit_version": F.coalesce(F.col(mat_rcv), fresh_rcv)
-        if mat_rcv
-        else fresh_rcv,
-    }
-
-
-def _attach_row_ids(
-    spark: SparkSession,
-    table_path: str,
-    out: DataFrame,
-    files: list[dict],
-    mat_id: str | None,
-    mat_rcv: str | None,
-) -> DataFrame:
-    """Materialize ``_row_id`` / ``_row_commit_version`` on a scan that
-    carries ``__mlk_file`` / ``__mlk_ridx`` (:func:`_row_id_columns`).
-    The per-file id frame is metadata-sized and broadcast; rows never
-    shuffle."""
-    ids = local_frame(
-        spark,
-        [
-            (
-                _fs.data_path_spelling(table_path, f["path"]),
-                f.get("baseRowId"),
-                f.get("defaultRowCommitVersion"),
-            )
-            for f in files
-        ],
-        "__mlk_file string, __mlk_base long, __mlk_rcv long",
-    )
-    out = out.join(F.broadcast(ids), "__mlk_file", "left")
-    return out.withColumns(_row_id_columns(mat_id, mat_rcv)).drop(
-        "__mlk_base", "__mlk_rcv", *[c for c in (mat_id, mat_rcv) if c]
-    )
+    if dv_files:
+        cols = out.columns if identity else out.columns[: -len(ident)]
+        deleted = _dv.deleted_rows(
+            spark,
+            table_path,
+            [
+                (
+                    _fs.data_path_spelling(table_path, f["path"]),
+                    f["deletionVector"],
+                )
+                for f in dv_files
+            ],
+            *ident,
+        )
+        # a USING anti-join moves its keys first: restore the order
+        out = out.join(deleted, ident, "left_anti").select(*cols)
+    return out
 
 
 #: fromTypes whose parquet annotation (INT(8)/INT(16)) Spark's
@@ -1965,41 +1849,6 @@ def physical_read_groups(
         )
         out.append((ps, variant, sorted(types)))
     return out
-
-
-def _apply_deletion_vectors(
-    spark: SparkSession,
-    table_path: str,
-    out: DataFrame,
-    dv_files: list[dict],
-    file_col: str = "__mlk_file",
-    ridx_col: str = "__mlk_ridx",
-) -> DataFrame:
-    """Filter ``out`` (which carries ``__mlk_file``/``__mlk_ridx``) by
-    each file's deletion vector — Delta merge-on-read (PROTOCOL.md
-    "Deletion Vectors") — with an anti-join against the deleted
-    (file, row_index) pairs of :func:`dv.deleted_rows`.  Within the
-    broadcast bound, where the pair list lives on the driver anyway,
-    the driver decodes the bitmaps and the pairs are broadcast; beyond
-    it executors decode and the anti-join shuffles."""
-    from . import dv as _dv
-
-    deleted = _dv.deleted_rows(
-        spark,
-        table_path,
-        [
-            (
-                _fs.data_path_spelling(table_path, f["path"]),
-                f["deletionVector"],
-            )
-            for f in dv_files
-        ],
-        file_col,
-        ridx_col,
-    )
-    return out.join(
-        deleted, [file_col, ridx_col], "left_anti"
-    ).drop(file_col, ridx_col)
 
 
 def prior_dv_descs(
@@ -2291,8 +2140,13 @@ def read_changes(
     pinned in test_r10_dv_stream).
 
     Output = data columns (partition values injected, A7) plus
-    ``_change_type`` and ``_commit_version``.  Plumbing is O(commits)
-    driver metadata; file reads stay distributed and parallel.  Raises
+    ``_change_type`` and ``_commit_version``.  Every plain inserted or
+    removed file and every cdc file of the span is read in ONE
+    :func:`scan_with_file_frame` call, the commit version, change kind
+    and partition values riding its per-file frame as data; the
+    merge-on-read entries add one call per commit and entry kind.
+    Classification is O(commits) driver metadata; file reads stay
+    distributed and parallel.  Raises
     if the span predates the retained log or a removed file was
     vacuumed — silent under-reporting is the one failure mode an
     incremental consumer cannot detect."""
@@ -2330,54 +2184,38 @@ def read_changes(
     if meta is None:
         raise ValueError(f"no table metadata at {table_path}")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    type_of = {f.name: f.dataType for f in schema.fields}
-    data_schema = StructType([f for f in schema.fields if f.name not in part_cols])
-    # column mapping (round 12): data AND change files carry PHYSICAL
-    # column names; reads respell physically and alias back to logical
-    mapping = column_mapping_of(meta) or {}
-    log_of = {p: l for l, p in mapping.items()}
+    from . import dv as _dv
 
-    def _phys_st(st: StructType) -> StructType:
-        if not mapping:
-            return st
-        return StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name),
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in st.fields
-            ]
-        )
-
-    def _to_logical(df):
-        if not mapping:
-            return df
-        return df.select(
-            *[F.col(c).alias(log_of.get(c, c)) for c in df.columns]
-        )
-
-    # (version, change_type, partition tuple) -> file paths; the
-    # change_type "__cdc__" marks row-level change files whose
-    # _change_type column lives IN the file
-    groups: dict[tuple, list[str]] = {}
-    #: DV rewrites: (version, pv) -> [(rel, new_payload, old_payload,
-    #: cardinality)] — change rows are the bitmap DELTA (inner join)
-    delta_groups: dict[tuple, list[tuple]] = {}
-    #: one-sided DV masks: (version, change, pv) -> [(rel, payload,
-    #: cardinality)] — survivors only (anti join)
-    apply_groups: dict[tuple, list[tuple]] = {}
-    from . import dv as _dv  # used by _pair_frame below
-
+    # per-file change data, read from the file dicts by
+    # scan_with_file_frame: the commit, and the change kind of a
+    # synthesized file (None for a cdc file, whose _change_type column
+    # lives IN the file)
+    change = StructType(
+        [
+            StructField("_commit_version", LongType()),
+            StructField("__mlk_change", StringType()),
+        ]
+    )
+    #: plain inserted/removed data files and cdc files: ONE scan
+    plain: list[dict] = []
+    #: merge-on-read entries, per commit (dv.deleted_rows pairs are
+    #: keyed by (file, row index), which repeats across commits):
+    #: v -> (one-sided masks, DV rewrites)
+    mor: dict[int, tuple[list[dict], list[dict]]] = {}
     _dv_blob_cache: dict = {}  # span-wide: consecutive delete_dv
     # commits share .bin blobs (old side == previous new side)
     proto = latest_protocol(table_path, to_version)
     dv_possible = "deletionVectors" in (
         (proto or {}).get("readerFeatures") or []
     )
+
+    def present(rel: str, v: int, what: str) -> None:
+        if not _fs.get_fs(table_path).exists(_fs.join(table_path, rel)):
+            raise ValueError(
+                f"{what} {rel} (commit {v}) was vacuumed; the change "
+                "feed for this span is gone"
+            )
+
     for v in span:
         acts = _read_commit(table_path, v)
         cdc_acts = [a["cdc"] for a in acts if a.get("cdc") is not None]
@@ -2387,147 +2225,78 @@ def read_changes(
             # commit (CoW rewrite survivors, DV re-adds) is layout,
             # not change
             for a in cdc_acts:
-                full = _fs.join(table_path, a["path"])
-                if not _fs.get_fs(table_path).exists(full):
-                    raise ValueError(
-                        f"change file {a['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                pv = tuple(sorted((a.get("partitionValues") or {}).items()))
-                groups.setdefault((v, "__cdc__", pv), []).append(full)
+                present(a["path"], v, "change file")
+                plain.append({**a, "_commit_version": v})
             continue
         for e in classify_mor_commit(
             table_path, acts, v, dv_possible, _dv_blob_cache
         ):
-            pv = tuple(sorted(e["pv"].items()))
             kind = e["kind"]
+            if kind in ("delete", "delete_apply"):
+                present(e["path"], v, "removed file")
+            f = {
+                "path": e["path"],
+                "partitionValues": e["pv"],
+                "_commit_version": v,
+                "__mlk_change": kind.split("_")[0],
+            }
             if kind in ("insert", "delete"):
-                full = _fs.join(table_path, e["path"])
-                if kind == "delete" and not _fs.get_fs(table_path).exists(
-                    full
-                ):
-                    raise ValueError(
-                        f"removed file {e['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                groups.setdefault((v, kind, pv), []).append(full)
+                plain.append(f)
             elif kind == "delta":
-                delta_groups.setdefault((v, pv), []).append(
-                    (
-                        e["path"],
-                        e["new_payload"],
-                        e["old_payload"],
-                        e["cardinality"],
-                    )
-                )
+                mor.setdefault(v, ([], []))[1].append({**f, **e})
             else:  # insert_apply / delete_apply: survivors only
-                change = "insert" if kind == "insert_apply" else "delete"
-                if change == "delete" and not _fs.get_fs(table_path).exists(
-                    _fs.join(table_path, e["path"])
-                ):
-                    raise ValueError(
-                        f"removed file {e['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                apply_groups.setdefault((v, change, pv), []).append(
-                    (e["path"], e["payload"], e["cardinality"])
+                mor.setdefault(v, ([], []))[0].append(
+                    {**f, "deletionVector": e["payload"]}
                 )
+
+    def logical(df: DataFrame, change_type) -> DataFrame:
+        return df.select(
+            *schema.names, change_type.alias("_change_type"), "_commit_version"
+        )
 
     parts: list[DataFrame] = []
-    for (v, change, pv), paths in groups.items():
-        if change == "__cdc__":
-            cdc_schema = StructType(
-                _phys_st(data_schema).fields
-                + [StructField("_change_type", StringType())]
-            )
-            df = _to_logical(spark.read.schema(cdc_schema).parquet(*paths))
-        else:
-            df = _to_logical(
-                spark.read.schema(_phys_st(data_schema)).parquet(*paths)
-            )
-        for col_name, raw in pv:
-            # partitionValues keys are physical under column mapping
-            col_name = log_of.get(col_name, col_name)
-            df = df.withColumn(
-                col_name, F.lit(raw).cast(type_of.get(col_name, StringType()))
-            )
-        if change != "__cdc__":
-            df = df.withColumn("_change_type", F.lit(change))
-        parts.append(
-            df.select(*([f.name for f in schema.fields] + ["_change_type"]))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
-        )
-
-    def _identity_scan(rels):
-        return _to_logical(
-            spark.read.schema(_phys_st(data_schema))
-            .parquet(*[_fs.join(table_path, r) for r in rels])
-            .withColumns(
-                {
-                    "__mlk_file": _fs.spark_scan_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__mlk_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        )
-
-    def _pair_frame(entries, delta: bool):
-        """(file, row_index, _change_type) pairs of the entries'
-        already-fetched payloads; ``delta`` pairs are the new∖old
-        deletes and old∖new inserts."""
-        return _dv.deleted_rows(
+    if plain:
+        df = scan_with_file_frame(
             spark,
             table_path,
-            [
-                (
-                    _fs.data_path_spelling(table_path, e[0]),
-                    e[1],
-                    e[2] if delta else None,
-                )
-                for e in entries
-            ],
-            "__mlk_file",
-            "__mlk_ridx",
-            "_change_type",
+            meta,
+            plain,
+            change,
+            file_cols=[StructField("_change_type", StringType())],
         )
-
-    def _finish(df, pv, v):
-        for col_name, raw in pv:
-            col_name = log_of.get(col_name, col_name)
-            df = df.withColumn(
-                col_name,
-                F.lit(raw).cast(type_of.get(col_name, StringType())),
+        parts.append(logical(df, F.coalesce("_change_type", "__mlk_change")))
+    for applies, deltas in mor.values():
+        if applies:
+            # one-sided mask: survivors only (fresh DV-born file's
+            # inserts, or the live rows of a fully-removed DV'd file
+            # as deletes)
+            df = scan_with_file_frame(
+                spark, table_path, meta, applies, change, apply_dvs=True
             )
-        parts.append(
-            df.select(*([f.name for f in schema.fields] + ["_change_type"]))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
-        )
-
-    for (v, pv), entries in delta_groups.items():
-        # the bitmap delta: inner join keeps exactly the changed rows,
-        # _change_type rides the pair (delete for new∖old, insert for
-        # the old∖new of a shrinking vector)
-        df = (
-            _identity_scan([e[0] for e in entries])
-            .join(_pair_frame(entries, delta=True), ["__mlk_file", "__mlk_ridx"])
-            .drop("__mlk_file", "__mlk_ridx")
-        )
-        _finish(df, pv, v)
-    for (v, change, pv), entries in apply_groups.items():
-        # one-sided mask: survivors only (fresh DV-born file's inserts,
-        # or the live rows of a fully-removed DV'd file as deletes)
-        df = (
-            _identity_scan([e[0] for e in entries])
-            .join(
-                _pair_frame(entries, delta=False),
-                ["__mlk_file", "__mlk_ridx"],
-                "left_anti",
+            parts.append(logical(df, F.col("__mlk_change")))
+        if deltas:
+            # the bitmap delta: inner join keeps exactly the changed
+            # rows, _change_type rides the pair (delete for new∖old,
+            # insert for the old∖new of a shrinking vector)
+            pairs = _dv.deleted_rows(
+                spark,
+                table_path,
+                [
+                    (
+                        _fs.data_path_spelling(table_path, e["path"]),
+                        e["new_payload"],
+                        e["old_payload"],
+                    )
+                    for e in deltas
+                ],
+                "__mlk_file",
+                "__mlk_ridx",
+                "_change_type",
             )
-            .drop("__mlk_file", "__mlk_ridx")
-            .withColumn("_change_type", F.lit(change))
-        )
-        _finish(df, pv, v)
+            df = scan_with_file_frame(
+                spark, table_path, meta, deltas, change, identity=True
+            ).join(pairs, ["__mlk_file", "__mlk_ridx"])
+            parts.append(logical(df, F.col("_change_type")))
     if not parts:
         empty = StructType(
             schema.fields

@@ -403,7 +403,8 @@ class DeltaSink:
     (:meth:`_where`'s predicate, or ``_merge``'s key join), its
     new-rows step (none, ``_update``'s cast assignments, ``_merge``'s
     source join) and — through the tags its matcher sets — its change
-    types.  Every read goes through :meth:`_dml_scan`, every staged
+    types.  Every read goes through :meth:`_dml_scan` — the table
+    reader's own :func:`delta_log.scan_with_file_frame` — every staged
     file through :meth:`_stage_adds`; ``reorg`` and ``optimize`` reuse
     the same scan and rewrite (:meth:`_rewrite`)."""
 
@@ -1123,47 +1124,6 @@ class DeltaSink:
             ),
         )
         return self._rt_mats_cache
-
-    def _materialize_row_ids(
-        self, df, files: list[dict], mat_id: str, mat_rcv: str | None
-    ):
-        """Fill the materialized row-id / commit-version columns for
-        rows (of snapshot ``files``, identified by ``_f``/``_ridx``)
-        that still carry fresh (positional) ids: value =
-        ``add.baseRowId + physical row index``, resolved by a
-        BROADCAST join against the per-file id frame (metadata-sized;
-        a literal map would bloat the plan on 10k-file groups).  Rows
-        whose materialized value is already set keep it."""
-        from .delta_log import local_frame
-
-        ids = F.broadcast(
-            local_frame(
-                self.spark,
-                [
-                    (
-                        _fs.data_path_spelling(self.path, f["path"]),
-                        f.get("baseRowId"),
-                        f.get("defaultRowCommitVersion"),
-                    )
-                    for f in files
-                ],
-                "_f string, __mlk_base long, __mlk_frcv long",
-            )
-        )
-        df = df.join(ids, "_f", "left")
-        for col, fresh in (
-            (mat_id, F.col("__mlk_base") + F.col("_ridx")),
-            (mat_rcv, F.col("__mlk_frcv")),
-        ):
-            if not col:
-                continue
-            have = (
-                F.col(col)
-                if col in df.columns
-                else F.lit(None).cast("long")
-            )
-            df = df.withColumn(col, F.coalesce(have, fresh))
-        return df.drop("__mlk_base", "__mlk_frcv")
 
     def _check_conflicts(self, versions, actions: list[dict]) -> None:
         """Delta's logical conflict rules (delta-io PROTOCOL.md +
@@ -2068,7 +2028,7 @@ class DeltaSink:
             # files: 0.047 s serial vs 0.64 s pooled), and the whole
             # serial tail is ~1.5 % of a 1024-file commit (0.07 s of
             # 4.5 s — the write JOB is the floor).  Reverted; see
-            # tools/probe_commit_floor.py and OPTIMIZATION_r13.md.  On
+            # OPTIMIZATION_r13.md.  On
             # an object store (ms-latency round trips) a pool would
             # win — revisit only with such a backend to measure
             # against.
@@ -2628,130 +2588,71 @@ class DeltaSink:
             == "true"
         )
 
-    def _scan_logical(self, paths, logical_schema, with_pos=False):
-        """Scan table data files yielding LOGICAL column names — the
-        ONE home of the physical→logical respelling: every DML, reorg
-        and optimize read goes through it (round 12 made the rewrite
-        paths work on column-mapped tables this way).  Columns outside
-        the mapping (row-tracking materializations) are physical by
-        definition and keep their names.  ``with_pos`` attaches each
-        row's physical identity BEFORE the alias (``_metadata``
-        resolves only directly on the scan): ``_f``, the file in
-        :func:`fs.data_path_spelling`'s spelling, and ``_ridx``, its
-        row index.  Only ask for them when something uses them: a
-        dropped ``_metadata`` still builds a per-row struct (with the
-        row index) under a filter instead of pruning away."""
-        mapping = self._current_mapping() or {}
-        phys = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable, f.metadata
-                )
-                for f in logical_schema.fields
-            ]
-        )
-        df = self.spark.read.schema(phys).parquet(
-            *[_fs.join(self.path, p) for p in paths]
-        )
-        if with_pos:
-            df = df.withColumns(
-                {
-                    "_f": _fs.spark_scan_path(F.col("_metadata.file_path")),
-                    "_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        if mapping:
-            inv = {p: l for l, p in mapping.items()}
-            df = df.select(
-                *[F.col(c).alias(inv.get(c, c)) for c in df.columns]
-            )
-        return df
-
     @staticmethod
     def _groups(files) -> list[tuple[dict, list[dict]]]:
         """Snapshot file dicts grouped by partition tuple:
-        ``[(partitionValues, [file, ...]), ...]``."""
+        ``[(partitionValues, [file, ...]), ...]`` — one rewrite (and
+        one partition directory) per group."""
         groups: dict[tuple, list[dict]] = {}
         for f in files:
             key = tuple(sorted((f["partitionValues"] or {}).items()))
             groups.setdefault(key, []).append(f)
         return [(dict(k), g) for k, g in groups.items()]
 
-    def _dml_scan(
-        self, files, types, data_schema, old_pairs=None, row_ids=False
-    ) -> DataFrame:
+    def _dml_scan(self, meta, files, dvs=False, row_ids=False) -> DataFrame:
         """The one scan behind the DML, reorg and optimize paths:
-        LOGICAL rows of ``files`` — one :meth:`_scan_logical` per
-        partition group with its partition values injected (they live
-        in the directory, not the file, A7/O6), unioned by name.  Rows
-        named by ``old_pairs`` (what existing deletion vectors delete)
-        anti-join away.  ``row_ids`` also reads and MATERIALIZES the
-        row-tracking columns, so a rewrite or an appended post-image
-        keeps every row's identity (PROTOCOL.md "Row Tracking").
-        Probes (``row_ids`` off) carry ``_f``/``_ridx``; other scans
-        only while a join here needs them."""
-        mats = (
-            self._rt_mat_cols()
-            if row_ids and self._rt_enabled()
-            else (None, None)
+        LOGICAL rows of ``files`` through
+        :func:`delta_log.scan_with_file_frame`, which owns the
+        physical→logical respelling and the partition values (they
+        live in the log, not the file, A7/O6).  ``dvs`` anti-joins the
+        rows the files' existing deletion vectors delete.  ``row_ids``
+        MATERIALIZES the row-tracking columns, so a rewrite or an
+        appended post-image keeps every row's identity (PROTOCOL.md
+        "Row Tracking").  Probes (``row_ids`` off) carry each row's
+        physical identity: ``_f``, the file in
+        :func:`fs.data_path_spelling`'s spelling, and ``_ridx``, its
+        row index."""
+        from .delta_log import scan_with_file_frame
+
+        mats = self._rt_mat_cols() if row_ids and self._rt_enabled() else ()
+        df = scan_with_file_frame(
+            self.spark,
+            self.path,
+            meta,
+            files,
+            identity=not row_ids,
+            apply_dvs=dvs,
+            row_ids=mats if mats and mats[0] else None,
         )
-        schema = data_schema
-        if mats[0]:
-            schema = StructType(
-                [
-                    *data_schema.fields,
-                    *[
-                        StructField(c, LongType(), True)
-                        for c in mats
-                        if c and c not in data_schema.fieldNames()
-                    ],
-                ]
-            )
-        pos = not row_ids or old_pairs is not None or bool(mats[0])
-        frames = []
-        for pv, group in self._groups(files):
-            df = self._scan_logical([f["path"] for f in group], schema, pos)
-            if pv:
-                df = df.withColumns(
-                    {
-                        c: F.lit(raw).cast(types.get(c, "string"))
-                        for c, raw in pv.items()
-                    }
-                )
-            frames.append(df)
-        df = _union(frames)
-        if old_pairs is not None:
-            df = df.join(old_pairs, ["_f", "_ridx"], "left_anti")
-        if mats[0]:
-            df = self._materialize_row_ids(df, files, *mats)
-        return df
+        if row_ids:
+            return df
+        return df.withColumnsRenamed(
+            {"__mlk_file": "_f", "__mlk_ridx": "_ridx"}
+        )
 
     def _rewrite(
         self,
+        meta,
         files,
-        types,
-        data_schema,
         transform,
         data_change: bool,
         now: int,
         tags: dict[str, str] | None = None,
-        old_pairs=None,
+        dvs: bool = False,
     ) -> list:
         """Copy-on-write rewrite thunks, one per partition group of
         ``files``: remove the group's files and publish ``transform``
-        of their rows (:meth:`_dml_scan`, row ids materialized,
-        ``old_pairs`` purged) into the group's partition directory.
-        Partition columns stay OUT of the data files (injected at
-        read, A7/O6).  The DML fans the thunks out through
-        :meth:`_concurrent_stage`; maintenance runs them in turn, one
-        write job at a time, as it always has."""
+        of their rows (:meth:`_dml_scan`, row ids materialized, rows
+        in existing deletion vectors purged when ``dvs``) into the
+        group's partition directory.  Partition columns stay OUT of
+        the data files (injected at read, A7/O6).  The DML fans the
+        thunks out through :meth:`_concurrent_stage`; maintenance runs
+        them in turn, one write job at a time, as it always has."""
 
         def run(pv, group):
-            rows = self._dml_scan(
-                group, types, data_schema, old_pairs, row_ids=True
-            )
+            rows = self._dml_scan(meta, group, dvs, row_ids=True)
             adds = self._stage_adds(
-                transform(rows).drop("_f", "_ridx", _ACT, *pv),
+                transform(rows).drop(_ACT, *pv),
                 data_change,
                 skip_empty=True,
                 tags=tags,
@@ -2867,15 +2768,15 @@ class DeltaSink:
             )
 
     def _data_schema(self):
-        """(partition-col types, data-col StructType) from the table
-        metadata — both driver-side reads.  The StructType is LOGICAL;
-        on a column-mapped table the rewrite paths respell reads/
-        writes physically through _scan_logical/_stage_adds
-        (round 12 — mapped tables previously refused outright).
-        Mapped AND partitioned stays loud: partitionValues keys,
-        directory names, and _dml_scan's partition-value casts are
-        keyed physically and the rewrite paths don't translate them
-        yet."""
+        """(partition-col types, data-col StructType, metaData) from the
+        table metadata — driver-side reads.  The StructType is LOGICAL;
+        on a column-mapped table the rewrite paths read through
+        :func:`delta_log.scan_with_file_frame` and write physically
+        through _stage_adds (round 12 — mapped tables previously
+        refused outright).  Mapped AND partitioned stays loud: the
+        rewrite paths' partition directories and _stage_adds'
+        partitionValues are keyed by logical name, and Delta keys them
+        physically under mapping."""
         from .delta_log import (
             UnsupportedTableFeature,
             column_mapping_of,
@@ -2886,7 +2787,7 @@ class DeltaSink:
 
         meta = _lm(self.spark, self.path)
         if meta is None:
-            return {}, None
+            return {}, None, None
         if column_mapping_of(meta) is not None and (
             meta.get("partitionColumns") or []
         ):
@@ -2899,7 +2800,11 @@ class DeltaSink:
         schema = _St.fromJson(json.loads(meta["schemaString"]))
         part_cols = set(meta.get("partitionColumns") or [])
         types = {f.name: f.dataType for f in schema.fields if f.name in part_cols}
-        return types, _St([f for f in schema.fields if f.name not in part_cols])
+        return (
+            types,
+            _St([f for f in schema.fields if f.name not in part_cols]),
+            meta,
+        )
 
     # -- row-level DML: one pipeline, two write strategies -----------------
 
@@ -2936,7 +2841,7 @@ class DeltaSink:
         run through one :meth:`_concurrent_stage` into one commit."""
         from .delta_log import snapshot_files
 
-        types, data_schema = schema or self._data_schema()
+        types, data_schema, meta = schema or self._data_schema()
         if data_schema is None:
             return -1  # empty table: nothing to match
         now = int(time.time() * 1000)
@@ -2950,18 +2855,12 @@ class DeltaSink:
         # must never match again wherever matched ROWS are consumed
         # (bitmaps merge idempotently, so a plain delete_dv skips the
         # old-vector expansion)
-        old_pairs = (
-            self._old_dv_pairs(files)
-            if dv and (new_rows is not None or cdf)
-            else None
-        )
+        dvs = dv and (new_rows is not None or cdf)
         hit = F.col(_ACT).isNotNull()
         upd = F.col(_ACT) == "update"
         touched, packed = [], []
         if files:
-            probe = match(
-                self._dml_scan(files, types, data_schema, old_pairs)
-            ).filter(hit)
+            probe = match(self._dml_scan(meta, files, dvs)).filter(hit)
             if not dv:
                 touched = [
                     by_f[r["_f"]]
@@ -2996,9 +2895,7 @@ class DeltaSink:
         hits = post = None
         if touched and (cdf or new_rows is not None or inserts is not None):
             hits = match(
-                self._dml_scan(
-                    touched, types, data_schema, old_pairs, row_ids=True
-                )
+                self._dml_scan(meta, touched, dvs, row_ids=True)
             ).filter(hit)
             if new_rows is not None:
                 post = image(hits.filter(upd))
@@ -3009,9 +2906,8 @@ class DeltaSink:
         thunks = []
         if touched and not dv:
             thunks += self._rewrite(
+                meta,
                 touched,
-                types,
-                data_schema,
                 lambda df: image(match(df)),
                 data_change=True,
                 now=now,
@@ -3193,7 +3089,7 @@ class DeltaSink:
         matcher, and the assignment step — every right-hand side sees
         the PRE-update row and is cast to the column's declared type;
         generated data columns recompute from the new values."""
-        types, data_schema = self._data_schema()
+        types, data_schema, meta = self._data_schema()
         if data_schema is None:
             return -1  # empty table: nothing to update
         gen = self._generated()
@@ -3224,7 +3120,7 @@ class DeltaSink:
             dv,
             self._where(predicate, "update"),
             assign,
-            schema=(types, data_schema),
+            schema=(types, data_schema, meta),
         )
 
     #: DV'd-file count up to which existing-DV DESCRIPTORS (not
@@ -3233,35 +3129,6 @@ class DeltaSink:
     #: they ride as a DataFrame joined per affected file so driver
     #: memory stays flat (~40 MB at the bound)
     _DV_DESC_BROADCAST_FILES = 200_000
-
-    def _old_dv_pairs(self, files):
-        """(_f, _ridx) DataFrame of the rows the table's EXISTING
-        deletion vectors delete, or None when it carries none — the
-        already-deleted row set DML probes must ignore.  Expansion is
-        :func:`dv.deleted_rows`: within the broadcast bound, where the
-        pair list lived on the driver anyway, the driver decodes;
-        beyond it (rows or DV'd files) executors fetch and decode the
-        payloads, so driver RSS stays flat at any DV'd-file count."""
-        from . import dv as _dv
-
-        dv_files = [
-            f
-            for f in files
-            if (f.get("deletionVector") or {}).get("cardinality")
-        ]
-        if not dv_files:
-            return None
-        return _dv.deleted_rows(
-            self.spark,
-            self.path,
-            [
-                (
-                    _fs.data_path_spelling(self.path, f["path"]),
-                    f["deletionVector"],
-                )
-                for f in dv_files
-            ],
-        )
 
     def _old_dv_desc_df(self, files):
         """Handle on the table's EXISTING deletion-vector DESCRIPTORS
@@ -3496,7 +3363,7 @@ class DeltaSink:
         ]
         source = self._apply_defaults(source)
         source = self._apply_generated(source, "MERGE")
-        types, data_schema = self._data_schema()
+        types, data_schema, meta = self._data_schema()
         if data_schema is not None:
             # column-set guard: a wider source would write columns the
             # table metadata doesn't record (readers silently drop
@@ -3511,7 +3378,7 @@ class DeltaSink:
                     f"missing={missing} — project the source to the "
                     "target's columns first"
                 )
-        return keys, del_keys, source, types, data_schema, fill_cols
+        return keys, del_keys, source, types, data_schema, meta, fill_cols
 
     def merge(
         self,
@@ -3555,7 +3422,7 @@ class DeltaSink:
         source omitted and the prep default-filled keep the TARGET
         row's value, UPDATE SET * semantics) and the inserts (source
         rows whose key no live target row holds)."""
-        keys, del_keys, source, types, data_schema, fill_cols = (
+        keys, del_keys, source, types, data_schema, meta, fill_cols = (
             self._prep_merge(source, key_cols, delete_keys)
         )
         if data_schema is None:
@@ -3603,7 +3470,7 @@ class DeltaSink:
             upsert,
             inserts,
             txn=txn,
-            schema=(types, data_schema),
+            schema=(types, data_schema, meta),
         )
 
     def merge_dv(
@@ -3674,15 +3541,13 @@ class DeltaSink:
         ]
         actions: list[dict] = []
         if files:
-            types, data_schema = self._data_schema()
             thunks = self._rewrite(
+                self._data_schema()[2],
                 files,
-                types,
-                data_schema,
                 lambda df: df,
                 data_change=False,
                 now=int(time.time() * 1000),
-                old_pairs=self._old_dv_pairs(files),
+                dvs=True,
             )
             actions = [a for run in thunks for a in run()]
         return self._commit(actions, operation="REORG (PURGE)")
@@ -4327,7 +4192,7 @@ class DeltaSink:
                     f"an integer: {raw!r} — fix it with set_properties"
                 ) from None
         now = int(time.time() * 1000)
-        types, data_schema = self._data_schema()
+        _, data_schema, meta = self._data_schema()
         hilbert = zorder_by is None and bool(cluster_by)
         zcols = list(zorder_by or cluster_by or [])
         if zcols:
@@ -4344,12 +4209,10 @@ class DeltaSink:
         files = snapshot_files(self.spark, self.path)
         if zcols:
             bounds = self._zorder_bounds(zcols, data_schema, files)
-        if partition_predicate is not None and files:
-            meta = latest_metadata(self.spark, self.path)
-            if meta is not None:
-                files = _prune_partitions(
-                    self.spark, files, meta, partition_predicate
-                )
+        if partition_predicate is not None and files and meta is not None:
+            files = _prune_partitions(
+                self.spark, files, meta, partition_predicate
+            )
         cluster_tag = ",".join(zcols) if hilbert else None
         thunks = []
         for _pv, files in self._groups(files):
@@ -4405,9 +4268,8 @@ class DeltaSink:
                 def transform(df, n=n_out):
                     return df.coalesce(n)
             thunks += self._rewrite(
+                meta,
                 files,
-                types,
-                data_schema,
                 transform,
                 data_change=False,
                 now=now,

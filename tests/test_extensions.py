@@ -995,6 +995,9 @@ def test_random_projection_preserves_distances(spark):
     assert float(np.quantile(ratios, 0.05)) >= 0.5
 
 
+@pytest.mark.filterwarnings(
+    "error:Cannot infer the eval type from type hints:UserWarning"
+)
 def test_mmr_reduces_redundancy_keeps_relevance(spark):
     """MMR gate: for each query, the MMR-selected set's mean pairwise
     similarity is <= plain top-k's, the top-1 item matches (rank-1 is
@@ -1161,6 +1164,9 @@ def test_bruteforce_topk_deterministic_on_ties(spark):
     assert got == list(range(10))
 
 
+@pytest.mark.filterwarnings(
+    "error:Cannot infer the eval type from type hints:UserWarning"
+)
 def test_mmr_rewards_anticorrelated_candidates(spark):
     """Carbonell-Goldstein MMR: a negatively-similar candidate gets a
     diversity BONUS — the old -1 sentinel clamped it to zero."""

@@ -171,15 +171,17 @@ def test_repeated_basenames_key_on_full_path(spark, tmp_path):
 # -- driver-built frames plan as LocalTableScan -----------------------------
 
 
-def _attach_row_ids(spark, tmp_path):
-    out = spark.range(3).select(
-        F.lit(str(tmp_path / "f.parquet")).alias("__mlk_file"),
-        F.col("id").alias("__mlk_ridx"),
-    )
-    files = [{"path": "f.parquet", "baseRowId": 10, "defaultRowCommitVersion": 1}]
-    return lambda: DL._attach_row_ids(
-        spark, str(tmp_path), out, files, None, None
-    ).collect()
+def _row_tracked(spark, path) -> DeltaSink:
+    sink = DeltaSink(spark, path)
+    sink.append(spark.range(4).toDF("id"))
+    sink.set_properties({"delta.enableRowTracking": "true"})
+    return sink
+
+
+def _read_snapshot_row_ids(spark, tmp_path):
+    path = str(tmp_path / "rt_read")
+    _row_tracked(spark, path)
+    return lambda: DL.read_snapshot(spark, path, row_ids=True).collect()
 
 
 def _prune_partitions(spark, tmp_path):
@@ -198,14 +200,9 @@ def _prune_partitions(spark, tmp_path):
     return lambda: DL._prune_partitions(spark, files, meta, "k > 0")
 
 
-def _materialize_row_ids(spark, tmp_path):
-    sink = DeltaSink(spark, str(tmp_path / "rt"))
-    df = spark.range(3).select(
-        F.lit(str(tmp_path / "rt" / "f.parquet")).alias("_f"),
-        F.col("id").alias("_ridx"),
-    )
-    files = [{"path": "f.parquet", "baseRowId": 10, "defaultRowCommitVersion": 1}]
-    return lambda: sink._materialize_row_ids(df, files, "__rid", None).collect()
+def _row_tracked_delete(spark, tmp_path):
+    sink = _row_tracked(spark, str(tmp_path / "rt_delete"))
+    return lambda: sink.delete("id = 1")
 
 
 def _latest_add_items(spark, tmp_path):
@@ -239,9 +236,9 @@ def _creation_times(spark, tmp_path):
 _FRAME_SITES = {
     f.__name__.lstrip("_"): f
     for f in (
-        _attach_row_ids,
+        _read_snapshot_row_ids,
         _prune_partitions,
-        _materialize_row_ids,
+        _row_tracked_delete,
         _latest_add_items,
         _creation_times,
     )

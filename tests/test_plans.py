@@ -5,6 +5,8 @@ broadcast, and top-k avoids a global sort."""
 
 from __future__ import annotations
 
+import pytest
+
 from mirror_lake_kusto_spark import plans
 from mirror_lake_kusto_spark.queries import all_queries
 from tests.conftest import SF_DIR
@@ -205,6 +207,9 @@ def test_q8_all_dims_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.filterwarnings(
+    "error:Cannot infer the eval type from type hints:UserWarning"
+)
 def test_cosine_pairs_no_driver_collect_no_cartesian(spark, monkeypatch):
     """The exact all-pairs path must be the block-matrix self-join:
     constructing the DataFrame collects NOTHING to the driver, and the

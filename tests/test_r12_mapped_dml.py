@@ -3,9 +3,10 @@
 Before this round every rewrite path (delete/update/merge/update_dv/
 delete_dv) refused a column-mapped table outright — which made a
 replica permanently un-mergeable the moment it followed a source
-rename.  The rewrite paths now respell reads and writes physically
-through ONE helper (_scan_logical; the write side reuses _stage_adds'
-rule); mapped AND partitioned stays loud.
+rename.  The rewrite paths now respell reads and writes physically:
+reads through the table reader's own scan
+(delta_log.scan_with_file_frame), writes through _stage_adds' rule;
+mapped AND partitioned stays loud.
 
 Pins: CoW delete/update/merge on a renamed table; CDF change rows on a
 mapped table carry physical data columns but read back logically; MoR
