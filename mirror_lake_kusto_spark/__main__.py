@@ -174,6 +174,7 @@ def kql_main(argv: list[str]) -> int:
     from .functions.kql_parse import kql
     from .session import build_session
     from .sources.delta_sink import DeltaSink
+    from .sources.tables import read_parquet
 
     spark = build_session(app_name="mlk-kql", cpus=args.cpus)
     if not args.verbose:
@@ -187,7 +188,7 @@ def kql_main(argv: list[str]) -> int:
         if os.path.isdir(os.path.join(path, "_delta_log")):
             tables[name] = DeltaSink(spark, path).to_df()
         else:
-            tables[name] = spark.read.parquet(path)
+            tables[name] = read_parquet(spark, path)
     text = args.query
     if text.startswith("@"):
         with open(text[1:]) as f:

@@ -7,7 +7,7 @@ Re-expresses the reference's hand-rolled log machinery Spark-first:
   commit txId regex-extracted from the file name (A5,
   DeltaTableGateway.cs:247-262).
 - A2 checkpoint scan    (TransactionLogEntry.cs:365-398)  ->
-  ``spark.read.parquet`` — Spark decodes the nested add/remove structs
+  ``tables.read_parquet`` — Spark decodes the nested add/remove structs
   natively (the reference spends ~190 LoC reassembling repetition
   levels by hand; Catalyst's vectorized reader does it for free).
 - A3 ``_last_checkpoint`` pointer (DeltaTableGateway.cs:20-26,264-283).
@@ -36,6 +36,7 @@ import pyarrow.parquet as _pq
 import pyspark.sql.functions as F
 
 from . import fs as _fs
+from .tables import read_parquet
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -650,7 +651,7 @@ def read_actions(
         and after < 0
         and (upto is None or ckpt_version <= upto)
     ):
-        ckpt = spark.read.parquet(*checkpoint_files(table_path, ckpt_version))
+        ckpt = read_parquet(spark, *checkpoint_files(table_path, ckpt_version))
         side = sidecar_files(table_path, ckpt_version)
         keep = [
             "metaData", "add", "remove", "protocol", "txn",
@@ -661,7 +662,7 @@ def read_actions(
             # v2 checkpoint: the manifest holds protocol/metaData (and
             # possibly no file actions); adds/removes live in sidecars
             sdf = _conform_action_structs(
-                spark.read.parquet(*side)
+                read_parquet(spark, *side)
             ).select(*keep)
             ckpt = ckpt.unionByName(sdf)
         srcs.append(

@@ -42,6 +42,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from . import fs as _fs
 from .skipping import file_stats_json
+from .tables import read_parquet
 
 TX_FMT = "{:020d}"
 
@@ -2315,8 +2316,8 @@ class DeltaSink:
                 else:
                     vals.append(int(v))
             if missing:
-                scan = self.spark.read.parquet(
-                    *[_fs.join(self.path, p) for p in missing]
+                scan = read_parquet(
+                    self.spark, *[_fs.join(self.path, p) for p in missing]
                 )
                 agg = F.max(pname) if info["step"] > 0 else F.min(pname)
                 row = scan.agg(agg).collect()[0]
