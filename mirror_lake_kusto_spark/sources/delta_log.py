@@ -22,6 +22,21 @@ Re-expresses the reference's hand-rolled log machinery Spark-first:
 Everything here is metadata-scale (file listings, not data); the
 actions DataFrame distributes fine when a 100 TB table's checkpoint has
 millions of add entries.
+
+Log replay.  Every question about the table's state at a version —
+its active files, metaData, protocol, txn versions, domain metadata,
+a file's prior deletion vector — reads the same :func:`log_segment`:
+the ``_last_checkpoint`` checkpoint when it is at or before the
+version (else the newest complete one the listing shows at or before
+it), plus the commits after it, which must run without a gap to the
+version.  A version the log can no longer rebuild (history truncated
+past every usable checkpoint, or a missing commit) raises ValueError
+naming the earliest readable version, instead of answering from a
+partial log.  The answers are folds over one newest-first iterator
+(:func:`_replay`: commits from newest to oldest, then only the
+checkpoint columns asked for): metaData and protocol stop at the first
+hit, txn and domain metadata keep the newest action per key, and a
+file's newest action decides whether it is live.
 """
 
 from __future__ import annotations
@@ -30,7 +45,7 @@ import json
 import os
 import re
 import zlib
-from typing import Any
+from typing import Any, Iterator, NamedTuple
 
 import pyarrow.parquet as _pq
 import pyspark.sql.functions as F
@@ -224,7 +239,8 @@ def _declared_coordinator(table_path: str) -> str | None:
             break
     else:
         if last_ckpt is not None:
-            for m in _checkpoint_column(table_path, last_ckpt, "metaData"):
+            metas = _checkpoint_columns(table_path, last_ckpt, ("metaData",))
+            for m in metas["metaData"]:
                 name = conf_name(m)
     _COORD_NAME_CACHE[key] = name
     if len(_COORD_NAME_CACHE) > 4096:
@@ -294,8 +310,12 @@ def _read_backfilled_commit(table_path: str, version: int) -> list[dict]:
     return [json.loads(line) for line in text.splitlines() if line.strip()]
 
 
-def _read_commit(table_path: str, version: int) -> list[dict]:
-    """One commit's newline-delimited JSON actions, driver-side (A1)."""
+def _read_commit(
+    table_path: str, version: int, kinds: tuple[str, ...] | None = None
+) -> list[dict]:
+    """One commit's newline-delimited JSON actions, driver-side (A1);
+    with ``kinds``, only the lines that can hold one of those actions
+    are parsed (a state lookup skips the add actions' stats)."""
     fs = _fs.get_fs(table_path)
     try:
         text = fs.read_text(_commit_file(table_path, version))
@@ -310,7 +330,16 @@ def _read_commit(table_path: str, version: int) -> list[dict]:
         if version not in tail:
             raise
         text = fs.read_text(_fs.join(log_dir(table_path), tail[version]))
-    return [json.loads(line) for line in text.splitlines() if line.strip()]
+    lines = text.splitlines()
+    if kinds is not None:
+        # an action line opens with its key: skip other actions
+        # unparsed, parse anything else (a malformed line must fail)
+        lines = [
+            ln
+            for ln in lines
+            if not ln.startswith('{"') or ln[2 : ln.find('"', 2)] in kinds
+        ]
+    return [json.loads(line) for line in lines if line.strip()]
 
 
 def _conform(value: Any, dtype) -> Any:
@@ -322,6 +351,8 @@ def _conform(value: Any, dtype) -> Any:
         return {f.name: _conform(value.get(f.name), f.dataType) for f in dtype.fields}
     if isinstance(dtype, MapType):
         return dict(value)
+    if isinstance(dtype, ArrayType):
+        return list(value)
     if isinstance(dtype, LongType):
         return int(value)
     if isinstance(dtype, BooleanType):
@@ -492,26 +523,82 @@ def read_last_checkpoint(table_path: str) -> int | None:
     return int(json.loads(fs.read_text(p))["version"])
 
 
+#: checkpoint file names: classic ``<v>.checkpoint.parquet``, multi-part
+#: ``<v>.checkpoint.<part>.<parts>.parquet`` (groups 2, 3) and the v2
+#: manifest ``<v>.checkpoint.<uuid>.parquet``
+_CKPT_RE = re.compile(r"^(\d{20})\.checkpoint(?:\.(\d+)\.(\d+)|\.[^.]+)?\.parquet$")
+
+
 def list_checkpoint_versions(table_path: str) -> list[int]:
-    """ALL on-disk checkpoint versions (classic, multi-part, v2
-    manifest), ascending — not just the ``_last_checkpoint`` pointer.
-    A busy table can hold several: a reader resolving state BEFORE
-    some version must consult the newest checkpoint OLDER than it,
-    which the pointer alone cannot name (round-11 review:
-    prior_dv_descs wrongly failed loud when the newest checkpoint was
-    too new but an older one could witness)."""
+    """Every COMPLETE on-disk checkpoint version (classic, v2 manifest,
+    or a multi-part checkpoint with all of its parts listed),
+    ascending — not just the ``_last_checkpoint`` pointer, which
+    cannot name a checkpoint older than the newest one."""
     fs = _fs.get_fs(table_path)
-    d = log_dir(table_path)
     try:
-        names = fs.listdir(d)
+        names = fs.listdir(log_dir(table_path))
     except (FileNotFoundError, NotADirectoryError, OSError):
         return []
     out: set[int] = set()
+    parts: dict[tuple[int, int], set[int]] = {}
     for n in names:
-        m = re.match(r"^(\d{20})\.checkpoint(\..+)?\.parquet$", n)
-        if m:
+        m = _CKPT_RE.match(n)
+        if m is None:
+            continue
+        if m.group(3) is None:
             out.add(int(m.group(1)))
+        else:
+            parts.setdefault((int(m.group(1)), int(m.group(3))), set()).add(
+                int(m.group(2))
+            )
+    out |= {v for (v, n), got in parts.items() if len(got) == n}
     return sorted(out)
+
+
+class LogSegment(NamedTuple):
+    """What replaying the log to one version reads: the checkpoint to
+    start from (or None) and the commits after it, ascending."""
+
+    version: int
+    checkpoint: int | None
+    commits: list[int]
+
+
+def log_segment(table_path: str, upto: int | None = None) -> LogSegment:
+    """The checkpoint plus commit tail that rebuilds the table state at
+    ``upto`` (default, or past the head: the head; -1 for an empty
+    log).  The checkpoint is ``_last_checkpoint`` when it is at or
+    before the version, else the newest complete checkpoint at or
+    before it that the listing shows; the commits (from
+    :func:`list_commit_versions`, a coordinated tail included) must
+    run without a gap from it — or from v0 — to the version.  Raises
+    ValueError, naming the earliest readable version, when they do
+    not: answering from a partial log returns wrong state."""
+    commits = list_commit_versions(table_path)
+    pointer = read_last_checkpoint(table_path)
+    head = max(commits[-1] if commits else -1, -1 if pointer is None else pointer)
+    version = head if upto is None else min(upto, head)
+    ckpt = pointer
+    if ckpt is None or ckpt > version:
+        older = [c for c in list_checkpoint_versions(table_path) if c <= version]
+        ckpt = older[-1] if older else None
+    start = 0 if ckpt is None else ckpt + 1
+    tail = [v for v in commits if start <= v <= version]
+    if tail == list(range(start, version + 1)):
+        return LogSegment(version, ckpt, tail)
+    have = set(tail)
+    missing = next(v for v in range(start, version + 1) if v not in have)
+    found = next((v for v in tail if v > missing), version + 1)
+    readable = set(list_checkpoint_versions(table_path)) | (
+        {0} if commits and commits[0] == 0 else set()
+    )
+    raise ValueError(
+        f"{table_path}: the state at version {version} cannot be rebuilt: "
+        f"the transaction log is missing commits [{missing}, {found}) after "
+        + ("no checkpoint" if ckpt is None else f"checkpoint {ckpt}")
+        + "; the earliest readable version is "
+        + (str(min(readable)) if readable else "none")
+    )
 
 
 def checkpoint_files(table_path: str, version: int) -> list[str]:
@@ -588,20 +675,42 @@ def _conform_action_structs(df: DataFrame) -> DataFrame:
     return df
 
 
-def _checkpoint_part_column(path: str, column: str) -> list | None:
-    """One top-level column of a checkpoint part/sidecar, read through
+def _checkpoint_part_columns(path: str, columns) -> dict[str, list]:
+    """The named top-level columns of one checkpoint part or sidecar
+    that its SCHEMA has (a classic checkpoint has no ``sidecar``
+    column; a v2 manifest may carry no ``add``), in one read through
     the scheme-dispatched fs backend (so abfss://, s3a://, memory://
-    tables work — pyarrow alone cannot open those paths).  Returns
-    ``None`` when the column is genuinely absent from this part's
-    SCHEMA (a classic checkpoint has no ``sidecar`` column; a v2
-    manifest may carry no ``add``); any other failure — corruption,
-    permissions, network — raises, because silently skipping a
-    checkpoint part yields a silently wrong snapshot."""
+    tables work — pyarrow alone cannot open those paths).  Any other
+    failure — corruption, permissions, network — raises, because
+    silently skipping a checkpoint part yields a silently wrong
+    snapshot."""
     with _fs.get_fs(path).open_input(path) as h:
         pf = _pq.ParquetFile(h)
-        if column not in pf.schema_arrow.names:
-            return None
-        return pf.read(columns=[column]).column(0).to_pylist()
+        have = [c for c in columns if c in pf.schema_arrow.names]
+        if not have:
+            return {}
+        t = pf.read(columns=have)
+        return {c: t.column(c).to_pylist() for c in have}
+
+
+def _checkpoint_part_column(path: str, column: str) -> list | None:
+    """One column of a checkpoint part; None when its schema lacks it."""
+    return _checkpoint_part_columns(path, (column,)).get(column)
+
+
+def _sidecar_paths(table_path: str, sidecars) -> list[str]:
+    """Data paths of a v2 manifest's ``sidecar`` actions (relative ones
+    live under ``_delta_log/_sidecars/``)."""
+    out: list[str] = []
+    for sc in sidecars:
+        if sc is None or not sc.get("path"):
+            continue
+        sp = sc["path"]
+        if _fs.scheme_of(sp) or sp.startswith("/"):
+            out.append(sp)
+        else:
+            out.append(_fs.join(log_dir(table_path), "_sidecars", sp))
+    return out
 
 
 def sidecar_files(table_path: str, version: int) -> list[str]:
@@ -612,22 +721,9 @@ def sidecar_files(table_path: str, version: int) -> list[str]:
     column-projected read — the manifest is KB-scale metadata."""
     out: list[str] = []
     for path in checkpoint_files(table_path, version):
-        if not path.endswith(".parquet"):
-            raise UnsupportedTableFeature(
-                f"non-parquet checkpoint {path}: JSON v2 checkpoints "
-                "are not supported yet"
-            )
-        vals = _checkpoint_part_column(path, "sidecar")
-        if vals is None:
-            continue  # classic checkpoint: no sidecar column
-        for sc in vals:
-            if sc is None or not sc.get("path"):
-                continue
-            sp = sc["path"]
-            if _fs.scheme_of(sp) or sp.startswith("/"):
-                out.append(sp)
-            else:
-                out.append(_fs.join(log_dir(table_path), "_sidecars", sp))
+        out += _sidecar_paths(
+            table_path, _checkpoint_part_column(path, "sidecar") or ()
+        )
     return out
 
 
@@ -638,19 +734,21 @@ def read_actions(
     upto: int | None = None,
     use_checkpoint: bool = True,
 ) -> DataFrame:
-    """All log actions with their commit ``tx_id``, pruned via the
-    checkpoint when one covers the requested range (O1)."""
-    versions = [v for v in list_commit_versions(table_path) if v > after]
-    if upto is not None:
-        versions = [v for v in versions if v <= upto]
-    ckpt_version = read_last_checkpoint(table_path) if use_checkpoint else None
+    """All log actions with their commit ``tx_id``; a read from the
+    start (``after < 0``) is the :func:`log_segment` at ``upto`` — its
+    checkpoint plus the commits after it (O1)."""
+    if use_checkpoint and after < 0:
+        seg = log_segment(table_path, upto)
+        ckpt_version, versions = seg.checkpoint, seg.commits
+    else:
+        ckpt_version = None
+        versions = [
+            v
+            for v in list_commit_versions(table_path)
+            if after < v and (upto is None or v <= upto)
+        ]
     srcs: list[DataFrame] = []
-    d = log_dir(table_path)
-    if (
-        ckpt_version is not None
-        and after < 0
-        and (upto is None or ckpt_version <= upto)
-    ):
+    if ckpt_version is not None:
         ckpt = read_parquet(spark, *checkpoint_files(table_path, ckpt_version))
         side = sidecar_files(table_path, ckpt_version)
         keep = [
@@ -668,7 +766,6 @@ def read_actions(
         srcs.append(
             ckpt.select(*keep).withColumn("tx_id", F.lit(ckpt_version))
         )
-        versions = [v for v in versions if v > ckpt_version]
     if versions:
         # _commit_file resolves a coordinated table's ratified tail
         # versions to their staged <v>.<uuid>.json spelling
@@ -706,20 +803,91 @@ def read_actions(
     return out
 
 
-def _checkpoint_column(table_path: str, version: int, column: str) -> list:
-    """Non-null values of one action column from a checkpoint (single,
-    multi-part, or v2 manifest + sidecars), read driver-side with
-    column projection (pyarrow)."""
-    out: list = []
-    paths = list(checkpoint_files(table_path, version))
-    if column in ("add", "remove"):
+#: (kinds, ((part path, size, mtime), ...)) -> the non-file columns
+#: of a checkpoint: KB-scale, and every metaData/protocol/txn lookup
+#: whose commit tail lacks the action ends in the checkpoint
+_CKPT_COLUMNS: dict[tuple, dict[str, list]] = {}
+
+
+def _checkpoint_columns(
+    table_path: str, version: int, kinds: tuple[str, ...]
+) -> dict[str, list]:
+    """kind -> the non-null values of that action column in the
+    checkpoint at ``version`` (single, multi-part, or v2 manifest plus
+    sidecars), each part opened once, read driver-side with column
+    projection (pyarrow)."""
+    parts = checkpoint_files(table_path, version)
+    files = bool({"add", "remove"} & set(kinds))
+    key = None
+    if not files:
+        fs = _fs.get_fs(table_path)
+        key = (kinds, tuple((p, fs.getsize(p), fs.getmtime_ms(p)) for p in parts))
+        if key in _CKPT_COLUMNS:
+            return _CKPT_COLUMNS[key]
+    out: dict[str, list] = {k: [] for k in kinds}
+    sidecars: list[str] = []
+    for path in parts:
+        cols = _checkpoint_part_columns(
+            path, (*kinds, "sidecar") if files else kinds
+        )
         # v2 checkpoints keep file actions in sidecars
-        paths.extend(sidecar_files(table_path, version))
-    for path in paths:
-        vals = _checkpoint_part_column(path, column)
-        if vals is None:
-            continue  # column absent in this part (v2 manifest/sidecar)
-        out.extend(v for v in vals if v is not None)
+        sidecars += _sidecar_paths(table_path, cols.pop("sidecar", ()))
+        for k, vals in cols.items():
+            out[k] += [v for v in vals if v is not None]
+    for path in sidecars:
+        for k, vals in _checkpoint_part_columns(path, kinds).items():
+            out[k] += [v for v in vals if v is not None]
+    if key is not None:
+        if len(_CKPT_COLUMNS) >= 256:
+            _CKPT_COLUMNS.clear()
+        _CKPT_COLUMNS[key] = out
+    return out
+
+
+def _replay(
+    table_path: str, seg: LogSegment, kinds: tuple[str, ...]
+) -> Iterator[tuple[int, list[dict]]]:
+    """``(version, actions)`` over ``seg``, newest first: each commit's
+    ``kinds`` actions in file order, then — only if the caller reads
+    that far — the checkpoint's ``kinds`` columns as one action list."""
+    for v in reversed(seg.commits):
+        yield v, _read_commit(table_path, v, kinds)
+    if seg.checkpoint is not None:
+        cols = _checkpoint_columns(table_path, seg.checkpoint, kinds)
+        yield seg.checkpoint, [{k: a} for k in kinds for a in cols[k]]
+
+
+def _newest_first(table_path: str, seg: LogSegment, kind: str) -> Iterator[dict]:
+    """Every ``kind`` action of ``seg``, newest first."""
+    for _v, acts in _replay(table_path, seg, (kind,)):
+        for a in reversed(acts):
+            if a.get(kind) is not None:
+                yield a[kind]
+
+
+def _file_states(
+    table_path: str, seg: LogSegment, paths=None
+) -> dict[str, dict | None]:
+    """path -> its add action at ``seg.version``, or None when the
+    path's newest action is a remove.  The newest commit touching a
+    path decides; within one commit an add beats a remove of the same
+    path and the last add wins.  ``paths`` limits the fold to those
+    paths and stops it once all are decided."""
+    out: dict[str, dict | None] = {}
+    want = None if paths is None else set(paths)
+    for _v, acts in _replay(table_path, seg, ("add", "remove")):
+        if want is not None and len(out) == len(want):
+            break
+        adds: dict[str, dict] = {}
+        removes: set[str] = set()
+        for a in acts:
+            if a.get("add") is not None:
+                adds[a["add"]["path"]] = a["add"]
+            elif a.get("remove") is not None:
+                removes.add(a["remove"]["path"])
+        for p in adds.keys() | removes:
+            if p not in out and (want is None or p in want):
+                out[p] = adds.get(p)
     return out
 
 
@@ -727,22 +895,13 @@ def latest_metadata(
     spark: SparkSession, table_path: str, upto: int | None = None
 ) -> dict[str, Any] | None:
     """Latest metaData action ≤ upto (schema + partition columns) — F3's
-    'latest schema at txId' (TableStatus.cs:99-106).
-
-    Pure driver-side: reverse-scan the JSON commits, falling back to the
-    checkpoint parquet (column-projected) — one metadata lookup must not
-    cost a cluster job."""
-    versions = [v for v in list_commit_versions(table_path) if upto is None or v <= upto]
-    for v in reversed(versions):
-        metas = [a["metaData"] for a in _read_commit(table_path, v) if "metaData" in a]
-        if metas:
-            return _conform(metas[-1], METADATA_SCHEMA)
-    ckpt = read_last_checkpoint(table_path)
-    if ckpt is not None and (upto is None or ckpt <= upto):
-        metas = _checkpoint_column(table_path, ckpt, "metaData")
-        if metas:
-            return _conform(metas[-1], METADATA_SCHEMA)
-    return None
+    'latest schema at txId' (TableStatus.cs:99-106).  Driver-side: the
+    first hit of the newest-first replay, so one lookup reads at most
+    the commits since the last checkpoint."""
+    seg = log_segment(table_path, upto)
+    return _conform(
+        next(_newest_first(table_path, seg, "metaData"), None), METADATA_SCHEMA
+    )
 
 
 def file_actions(
@@ -1033,52 +1192,31 @@ _PROTOCOL_OK: set[tuple] = set()
 def check_protocol_supported(table_path: str, upto: int | None = None) -> None:
     """Raise UnsupportedTableFeature unless the table's LATEST protocol
     action (at or before ``upto``) is readable with basic reader
-    version 1.  Scans JSON commits newest-first (protocol upgrades are
-    appended, so the first hit going backward is the latest), falling
-    back to the checkpoint's protocol column; a table with no protocol
-    action anywhere is treated as version 1."""
-    versions = [
-        v
-        for v in list_commit_versions(table_path)
-        if upto is None or v <= upto
-    ]
-    head = versions[-1] if versions else -1
-    cache_key = (
-        table_path
-        if _fs.scheme_of(table_path)
-        else os.path.abspath(table_path),
-        head,
-        upto,
-    )
+    version 1; a table with no protocol action anywhere is treated as
+    version 1."""
+    _check_protocol(table_path, log_segment(table_path, upto), upto)
+
+
+def _check_protocol(
+    table_path: str, seg: LogSegment, upto: int | None
+) -> None:
+    """:func:`check_protocol_supported` over an already-built segment."""
+    head = seg.version
+    cache_key = (_norm_table(table_path), head, upto)
     if cache_key in _PROTOCOL_OK:
         return
-    ckpt = read_last_checkpoint(table_path)
-    use_ckpt = ckpt is not None and (upto is None or ckpt <= upto)
-    proto = None
-    for v in reversed(versions):
-        if use_ckpt and v <= ckpt:
-            break
-        for act in _read_commit(table_path, v):
-            if "protocol" in act:
-                proto = act["protocol"]
-                break
-        if proto is not None:
-            break
-    if proto is None and use_ckpt:
-        try:
-            protos = _checkpoint_column(table_path, ckpt, "protocol")
-        except Exception as exc:
-            # fail CLOSED: an unreadable protocol column on a table
-            # whose JSON history no longer carries the protocol action
-            # is exactly the foreign-table shape this guard exists for
-            raise UnsupportedTableFeature(
-                f"table {table_path}: cannot determine the protocol "
-                f"(checkpoint protocol column unreadable: {exc}) — "
-                "refusing to read blind"
-            ) from exc
-        for p in protos:
-            if p is not None:
-                proto = p
+    try:
+        proto = next(_newest_first(table_path, seg, "protocol"), None)
+    except UnsupportedTableFeature:
+        raise
+    except Exception as exc:
+        # fail CLOSED: an unreadable protocol (a checkpoint column the
+        # engine cannot decode) is exactly the foreign-table shape this
+        # guard exists for
+        raise UnsupportedTableFeature(
+            f"table {table_path}: cannot determine the protocol "
+            f"(log unreadable: {exc}) — refusing to read blind"
+        ) from exc
     if proto is not None:
         reader = proto.get("minReaderVersion") or 1
         features = set(proto.get("readerFeatures") or [])
@@ -1189,9 +1327,10 @@ def snapshot_files(
     Driver fast path (checkpoint via pyarrow + JSON commits via json)
     when the log is driver-scale; the Spark replay remains the fallback
     for logs past _DRIVER_JSON_BYTES."""
-    check_protocol_supported(table_path, upto)
+    seg = log_segment(table_path, upto)
+    _check_protocol(table_path, seg, upto)
     try:
-        return _snapshot_files_driver(table_path, upto)
+        return _live_files(table_path, seg)
     except _LogTooBig:
         pass
     fa = file_actions(spark, table_path, upto=upto)
@@ -1242,84 +1381,32 @@ def _num_records(stats: str | None) -> int | None:
     return int(n) if n is not None else None
 
 
-def _snapshot_files_driver(
-    table_path: str, upto: int | None
-) -> list[dict[str, Any]]:
-    """Same replay as the Spark path: per path keep the action with the
-    greatest (tx_id, is_add); files whose last action is an add are
-    active."""
-    versions = [v for v in list_commit_versions(table_path) if upto is None or v <= upto]
-    ckpt = read_last_checkpoint(table_path)
-    use_ckpt = ckpt is not None and (upto is None or ckpt <= upto)
-    json_versions = [v for v in versions if not use_ckpt or v > ckpt]
-    _tfs = _fs.get_fs(table_path)
-    total = sum(_tfs.getsize(_commit_file(table_path, v)) for v in json_versions)
-    if total > _DRIVER_JSON_BYTES:
+def _live_files(table_path: str, seg: LogSegment) -> list[dict[str, Any]]:
+    """The active files at ``seg.version`` — the driver-side replay of
+    :func:`_file_states` — as sorted file dicts; raises _LogTooBig when
+    the segment's commits exceed the driver budget."""
+    tfs = _fs.get_fs(table_path)
+    if (
+        sum(tfs.getsize(_commit_file(table_path, v)) for v in seg.commits)
+        > _DRIVER_JSON_BYTES
+    ):
         raise _LogTooBig
-    state: dict[str, tuple[tuple[int, int], dict | None]] = {}
-
-    def apply(tx_id: int, path: str, is_add: bool, info: dict | None) -> None:
-        rank = (tx_id, 1 if is_add else 0)
-        cur = state.get(path)
-        if cur is None or rank >= cur[0]:
-            state[path] = (rank, info)
-
-    if use_ckpt:
-        for add in _checkpoint_column(table_path, ckpt, "add"):
-            apply(
-                ckpt,
-                add["path"],
-                True,
-                {
-                    "path": add["path"],
-                    "partitionValues": dict(add.get("partitionValues") or {}),
-                    "size": add.get("size"),
-                    "numRecords": _num_records(add.get("stats")),
-                    "stats": add.get("stats"),
-                    "deletionVector": add.get("deletionVector"),
-                    "baseRowId": add.get("baseRowId"),
-                    "defaultRowCommitVersion": add.get(
-                        "defaultRowCommitVersion"
-                    ),
-                    # pyarrow reads parquet maps as (key, value) tuple
-                    # lists — normalize like partitionValues above
-                    "tags": dict(add["tags"]) if add.get("tags") else None,
-                },
-            )
-        try:
-            removes = _checkpoint_column(table_path, ckpt, "remove")
-        except Exception:
-            removes = []  # column absent in minimal checkpoints
-        for rm in removes:
-            apply(ckpt, rm["path"], False, None)
-    for v in json_versions:
-        for act in _read_commit(table_path, v):
-            if "add" in act:
-                a = act["add"]
-                apply(
-                    v,
-                    a["path"],
-                    True,
-                    {
-                        "path": a["path"],
-                        "partitionValues": dict(a.get("partitionValues") or {}),
-                        "size": a.get("size"),
-                        "numRecords": _num_records(a.get("stats")),
-                        "stats": a.get("stats"),
-                        "deletionVector": a.get("deletionVector"),
-                        "baseRowId": a.get("baseRowId"),
-                        "defaultRowCommitVersion": a.get(
-                            "defaultRowCommitVersion"
-                        ),
-                        "tags": dict(a["tags"]) if a.get("tags") else None,
-                    },
-                )
-            elif "remove" in act:
-                apply(v, act["remove"]["path"], False, None)
-    return sorted(
-        (info for _rank, info in state.values() if info is not None),
-        key=lambda f: f["path"],
-    )
+    return [
+        {
+            "path": path,
+            # pyarrow reads checkpoint maps as (key, value) tuple lists
+            "partitionValues": dict(a.get("partitionValues") or {}),
+            "size": a.get("size"),
+            "numRecords": _num_records(a.get("stats")),
+            "stats": a.get("stats"),
+            "deletionVector": a.get("deletionVector"),
+            "baseRowId": a.get("baseRowId"),
+            "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
+            "tags": dict(a["tags"]) if a.get("tags") else None,
+        }
+        for path, a in sorted(_file_states(table_path, seg).items())
+        if a is not None
+    ]
 
 
 def column_mapping_of(meta: dict | None) -> dict[str, str] | None:
@@ -1856,91 +1943,37 @@ def prior_dv_descs(
     table_path: str, paths, before_version: int
 ) -> dict[str, dict | None]:
     """The deletion-vector descriptor each of ``paths`` carried just
-    BEFORE ``before_version``: the latest add in earlier commits (add
-    wins over a same-commit remove, matching snapshot replay), falling
-    back to the newest checkpoint when the add predates the retained
-    JSON log.  ``None`` for files with no DV (or not live).  Driver
-    metadata only — payloads stay compressed; shared by the batch
-    change feed and the streaming source's DV-delta synthesis.
-
-    BATCHED by construction: one backward replay resolves every path
-    (the r10 probe caught the per-path variant re-parsing the previous
-    commit's JSON once per rewritten file — quadratic driver cost on a
-    2,000-file delete_dv)."""
-    remaining = set(paths)
+    BEFORE ``before_version``: the :func:`_file_states` fold at
+    ``before_version - 1`` limited to ``paths``.  ``None`` for files
+    with no DV (or removed).  Driver metadata only — payloads stay
+    compressed; shared by the batch change feed and the streaming
+    source's DV-delta synthesis.  One newest-first replay resolves
+    every path (a per-path replay re-parses each commit once per
+    rewritten file).  Raises when the log can no longer rebuild that
+    version or never mentions a path: defaulting to None would emit a
+    full-bitmap retract, re-deleting rows that were already dead."""
+    try:
+        seg = log_segment(table_path, before_version - 1)
+    except ValueError as exc:
+        raise ValueError(
+            f"cannot resolve prior deletion vectors before version "
+            f"{before_version} of {table_path}: {exc}"
+        ) from exc
+    states = _file_states(table_path, seg, paths)
+    unknown = sorted(set(paths) - set(states))
+    if unknown:
+        # every requested path was live at before_version (they come
+        # from the commit's own removes and rewrites): one the whole
+        # replay never saw is an inconsistent log
+        raise ValueError(
+            f"cannot resolve prior deletion vectors before version "
+            f"{before_version} of {table_path}: no action for "
+            f"{unknown!r} in the log up to version {seg.version}"
+        )
     out: dict[str, dict | None] = {}
-
-    def _desc(action) -> dict | None:
-        d = action.get("deletionVector")
-        return d if (d or {}).get("cardinality") else None
-
-    for v in reversed(list_commit_versions(table_path)):
-        if not remaining:
-            break
-        if v >= before_version:
-            continue
-        acts = _read_commit(table_path, v)
-        hit_adds: dict[str, dict] = {}
-        hit_removes: set[str] = set()
-        for a in acts:
-            ad = a.get("add")
-            if ad and ad.get("path") in remaining:
-                hit_adds[ad["path"]] = ad  # last add wins
-            rm = a.get("remove")
-            if rm and rm.get("path") in remaining:
-                hit_removes.add(rm["path"])
-        for p, ad in hit_adds.items():
-            out[p] = _desc(ad)
-            remaining.discard(p)
-        for p in hit_removes - set(hit_adds):
-            out[p] = None  # file was dead before this span
-            remaining.discard(p)
-    if remaining:
-        ckpts = list_checkpoint_versions(table_path)
-        older = [c for c in ckpts if c < before_version]
-        if older:
-            # the NEWEST checkpoint older than the classified commit
-            # witnesses every file alive at it; adds past it live in
-            # the JSON replay above (round-11 review: consulting only
-            # the _last_checkpoint pointer wrongly failed loud when a
-            # newer checkpoint existed alongside an older usable one)
-            for a in _checkpoint_column(table_path, older[-1], "add"):
-                if a and a.get("path") in remaining:
-                    out[a["path"]] = _desc(a)
-                    remaining.discard(a["path"])
-            if remaining:
-                # every requested path was live at before_version (they
-                # come from the commit's own removes/rewrites), so an
-                # add unwitnessed by BOTH the retained JSON span and
-                # the newest older checkpoint is an inconsistent log —
-                # defaulting to None here would emit the same
-                # full-bitmap retract the elif branch below guards
-                # against (round-11 advice: symmetric fail-loud)
-                raise ValueError(
-                    f"cannot resolve prior deletion vectors before "
-                    f"version {before_version} of {table_path}: the "
-                    f"add actions for {sorted(remaining)!r} are in "
-                    f"neither the retained JSON log nor checkpoint "
-                    f"{older[-1]} (on-disk checkpoints: {ckpts})"
-                )
-        elif ckpts:
-            # every checkpoint is AT/AFTER the commit being
-            # classified: each reflects state past before_version and
-            # cannot witness the prior descriptor.  The retained JSON
-            # log didn't resolve the path either (log cleanup removed
-            # the prior add); defaulting to None would emit a
-            # full-bitmap retract — re-deleting rows that were already
-            # dead.  Fail loud instead (round-10 review; same posture
-            # as the vacuumed-file ValueError in read_changes).
-            raise ValueError(
-                f"cannot resolve prior deletion vectors before version "
-                f"{before_version} of {table_path}: the add actions for "
-                f"{sorted(remaining)!r} are in neither the retained JSON "
-                f"log nor a checkpoint older than {before_version} "
-                f"(on-disk checkpoints: {ckpts})"
-            )
-    for p in remaining:
-        out[p] = None
+    for p, a in states.items():
+        d = (a or {}).get("deletionVector")
+        out[p] = d if (d or {}).get("cardinality") else None
     return out
 
 
@@ -2360,50 +2393,23 @@ def partition_subdir(part_values: dict[str, str]) -> str:
     return "/".join(f"{k}={v}" for k, v in sorted(part_values.items()))
 
 
-def typed_partition_cols(spark: SparkSession, table_path: str) -> dict[str, Any]:
-    """partition column name -> Spark DataType, from the table schema."""
-    meta = latest_metadata(spark, table_path)
-    if meta is None:
-        return {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = set(meta.get("partitionColumns") or [])
-    return {f.name: f.dataType for f in schema.fields if f.name in part_cols}
-
-
 def latest_domain_metadata(
     table_path: str, upto: int | None = None
 ) -> dict[str, str]:
     """Live domain metadata at ``upto``: domain -> configuration JSON
     (PROTOCOL.md "Domain Metadata" reconciliation: per domain keep the
-    newest action; a ``removed: true`` tombstone drops it).  Driver-
-    side metadata walk — checkpoint domainMetadata column first, then
-    surviving JSON commits in version order."""
-    state: dict[str, tuple[int, dict]] = {}
+    newest action; a ``removed: true`` tombstone drops it)."""
+    return _live_domains(table_path, log_segment(table_path, upto))
 
-    def apply(v: int, dm: dict) -> None:
-        cur = state.get(dm.get("domain") or "")
-        if cur is None or v >= cur[0]:
-            state[dm.get("domain") or ""] = (v, dm)
 
-    ckpt = read_last_checkpoint(table_path)
-    use_ckpt = ckpt is not None and (upto is None or ckpt <= upto)
-    if use_ckpt:
-        try:
-            for dm in _checkpoint_column(table_path, ckpt, "domainMetadata"):
-                apply(ckpt, dm)
-        except Exception:
-            pass  # column absent: table never used domain metadata
-    for v in list_commit_versions(table_path):
-        if upto is not None and v > upto:
-            continue
-        if use_ckpt and v <= ckpt:
-            continue
-        for act in _read_commit(table_path, v):
-            if "domainMetadata" in act:
-                apply(v, act["domainMetadata"])
+def _live_domains(table_path: str, seg: LogSegment) -> dict[str, str]:
+    """:func:`latest_domain_metadata` over an already-built segment."""
+    newest: dict[str, dict] = {}
+    for dm in _newest_first(table_path, seg, "domainMetadata"):
+        newest.setdefault(dm.get("domain") or "", dm)
     return {
         d: dm.get("configuration") or ""
-        for d, (_v, dm) in sorted(state.items())
+        for d, dm in sorted(newest.items())
         if not dm.get("removed")
     }
 
@@ -2423,8 +2429,8 @@ def reconciled_action_rows(
     faster on small logs; at 10M files the pyarrow path is a single
     sequential columnar encode, still cheaper than pickling rows into
     a Python-RDD-backed plan)."""
-    meta = latest_metadata(spark, table_path, upto=upto)
-    files = snapshot_files(spark, table_path, upto=upto)
+    seg = log_segment(table_path, upto)
+    files = snapshot_files(spark, table_path, upto=seg.version)
     blank = {
         "metaData": None,
         "add": None,
@@ -2433,33 +2439,26 @@ def reconciled_action_rows(
         "txn": None,
         "domainMetadata": None,
     }
-    acts: list[dict] = [{**blank, "metaData": meta}]
+    meta = next(_newest_first(table_path, seg, "metaData"), None)
+    acts: list[dict] = [{**blank, "metaData": _conform(meta, METADATA_SCHEMA)}]
     # carry the table's ACTUAL protocol: hardcoding the basic one would
     # silently downgrade a DV/feature table once the JSON history is
     # truncated past the checkpoint
+    proto = next(_newest_first(table_path, seg, "protocol"), None)
     acts.append(
         {
             **blank,
-            "protocol": latest_protocol(table_path, upto)
+            "protocol": _conform(proto, PROTOCOL_SCHEMA)
             or {"minReaderVersion": 1, "minWriterVersion": 2},
         }
     )
-    # carry forward the latest txn version per appId (Delta checkpoints
+    # carry forward the newest txn version per appId (Delta checkpoints
     # retain txn actions so idempotent-writer recovery survives log
-    # truncation) — driver-side scan, same as last_txn_version
+    # truncation)
     txns: dict[str, int] = {}
-    ckpt = read_last_checkpoint(table_path)
-    if ckpt is not None and (upto is None or ckpt <= upto):
-        for t in _checkpoint_column(table_path, ckpt, "txn"):
-            if t.get("appId") and t.get("version") is not None:
-                txns[t["appId"]] = max(txns.get(t["appId"], -1), int(t["version"]))
-    for v in list_commit_versions(table_path):
-        if upto is not None and v > upto:
-            continue
-        for act in _read_commit(table_path, v):
-            t = act.get("txn")
-            if t and t.get("appId") and t.get("version") is not None:
-                txns[t["appId"]] = max(txns.get(t["appId"], -1), int(t["version"]))
+    for t in _newest_first(table_path, seg, "txn"):
+        if t.get("appId") and t.get("version") is not None:
+            txns.setdefault(t["appId"], int(t["version"]))
     for app_id, version in sorted(txns.items()):
         acts.append(
             {**blank, "txn": {"appId": app_id, "version": version, "lastUpdated": 0}}
@@ -2467,7 +2466,7 @@ def reconciled_action_rows(
     # live domain metadata survives checkpointing (PROTOCOL.md: a
     # checkpoint that drops it loses the row-id high-water mark once
     # the JSON history is truncated)
-    for domain, conf in latest_domain_metadata(table_path, upto).items():
+    for domain, conf in _live_domains(table_path, seg).items():
         acts.append(
             {
                 **blank,
@@ -2517,64 +2516,25 @@ def reconciled_action_rows(
     return acts
 
 
-def reconciled_actions(
-    spark: SparkSession, table_path: str, upto: int | None = None
-) -> DataFrame:
-    """DataFrame view of :func:`reconciled_action_rows` (kept for
-    callers that want to query the checkpoint state relationally)."""
-    return spark.createDataFrame(
-        reconciled_action_rows(spark, table_path, upto), ACTIONS_SCHEMA
-    )
-
-
 def latest_protocol(
     table_path: str, upto: int | None = None
 ) -> dict | None:
-    """Latest protocol action at-or-before ``upto`` (driver-side:
-    reverse JSON scan, checkpoint fallback) — None if none recorded."""
-    versions = [
-        v
-        for v in list_commit_versions(table_path)
-        if upto is None or v <= upto
-    ]
-    ckpt = read_last_checkpoint(table_path)
-    use_ckpt = ckpt is not None and (upto is None or ckpt <= upto)
-    for v in reversed(versions):
-        if use_ckpt and v <= ckpt:
-            break
-        for act in _read_commit(table_path, v):
-            if "protocol" in act:
-                return _conform(act["protocol"], PROTOCOL_SCHEMA)
-    if use_ckpt:
-        try:
-            protos = _checkpoint_column(table_path, ckpt, "protocol")
-        except Exception:
-            protos = []
-        for pr in reversed(protos):
-            if pr is not None:
-                return _conform(pr, PROTOCOL_SCHEMA)
-    return None
+    """Latest protocol action at-or-before ``upto`` (driver-side, the
+    first hit of the newest-first replay) — None if none recorded."""
+    seg = log_segment(table_path, upto)
+    return _conform(
+        next(_newest_first(table_path, seg, "protocol"), None), PROTOCOL_SCHEMA
+    )
 
 
 def last_txn_version(spark: SparkSession, table_path: str, app_id: str) -> int | None:
-    """Latest committed ``txn`` version for an idempotent writer —
+    """Newest committed ``txn`` version for an idempotent writer —
     exactly-once recovery reads this instead of trusting its own state
     (I3; the Delta analogue of the reference's restart re-detection,
-    DeltaTableOrchestration.cs:76-81).  Driver-side: scans JSON commits
-    plus the checkpoint's carried-forward txn actions."""
-    best: int | None = None
-
-    def consider(txn: dict | None) -> None:
-        nonlocal best
-        if txn and txn.get("appId") == app_id and txn.get("version") is not None:
-            v = int(txn["version"])
-            best = v if best is None or v > best else best
-
-    for v in list_commit_versions(table_path):
-        for act in _read_commit(table_path, v):
-            consider(act.get("txn"))
-    ckpt = read_last_checkpoint(table_path)
-    if ckpt is not None:
-        for txn in _checkpoint_column(table_path, ckpt, "txn"):
-            consider(txn)
-    return best
+    DeltaTableOrchestration.cs:76-81).  Driver-side: the first hit of
+    the newest-first replay (commits, then the checkpoint's carried-
+    forward txn actions)."""
+    for t in _newest_first(table_path, log_segment(table_path), "txn"):
+        if t.get("appId") == app_id and t.get("version") is not None:
+            return int(t["version"])
+    return None

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from . import fs as _fs
+from .delta_log import _backfilled_commit_versions, log_dir
 from .skipping import file_stats_json
 from .tables import read_parquet
 
@@ -52,10 +53,6 @@ class ConcurrentCommitConflict(RuntimeError):
     between this commit's attempt and its retry (optimistic-concurrency
     loser with a real conflict — caller must re-plan from the new
     snapshot)."""
-
-
-def _log_dir(table_path: str) -> str:
-    return _fs.join(table_path, "_delta_log")
 
 
 # Legacy features implied by pre-table-features protocol versions
@@ -111,18 +108,6 @@ def upgraded_protocol(
     if bump_reader:
         out["readerFeatures"] = sorted(rf)
     return out
-
-
-def _list_versions(table_path: str) -> list[int]:
-    d = _log_dir(table_path)
-    out = []
-    for name in _fs.get_fs(table_path).listdir(d):
-        if name.endswith(".json") and len(name) == 25:
-            try:
-                out.append(int(name[:20]))
-            except ValueError:
-                continue
-    return sorted(out)
 
 
 
@@ -470,7 +455,7 @@ class DeltaSink:
         #: source's properties through this); None = carry forward
         self._pending_configuration: dict | None = None
         self.fs = _fs.get_fs(table_path)
-        self.fs.makedirs(_log_dir(table_path))
+        self.fs.makedirs(log_dir(table_path))
         if self.catalog_managed:
             self._adopt_catalog_managed()
 
@@ -497,7 +482,7 @@ class DeltaSink:
             if up == cur:
                 return
             target = _fs.join(
-                _log_dir(self.path), TX_FMT.format(v) + ".json"
+                log_dir(self.path), TX_FMT.format(v) + ".json"
             )
             try:
                 self.fs.create_exclusive(
@@ -522,7 +507,7 @@ class DeltaSink:
         reader."""
         from .delta_log import read_last_checkpoint
 
-        vs = _list_versions(self.path)
+        vs = _backfilled_commit_versions(self.path)
         ckpt = read_last_checkpoint(self.path)
         cands = vs[-1:] + ([ckpt] if ckpt is not None else [])
         if isinstance(self.coordinator, StagedCommitCoordinator):
@@ -545,7 +530,7 @@ class DeltaSink:
                 "backfill_commits needs a coordinated sink "
                 "(coordinated_commits=...)"
             )
-        log = _log_dir(self.path)
+        log = log_dir(self.path)
         n = 0
         for v, rel in sorted(
             self.coordinator.client.get_commits(self.path, 0).items()
@@ -609,7 +594,7 @@ class DeltaSink:
                 # otherwise both remove the same path) — Delta's
                 # conflict-detection rule, simplified to fail-on-overlap.
                 self._check_conflicts(range(attempted, v), actions)
-            target = _fs.join(_log_dir(self.path), TX_FMT.format(v) + ".json")
+            target = _fs.join(log_dir(self.path), TX_FMT.format(v) + ".json")
             body = []
             real_actions = [a for a in actions if "commitInfo" not in a]
             if v == 0:
@@ -1187,7 +1172,7 @@ class DeltaSink:
             if mine_adds and self._pending_schema != "{}"
             else None
         )
-        d = _log_dir(self.path)
+        d = log_dir(self.path)
         for v in versions:
             p = _fs.join(d, TX_FMT.format(v) + ".json")
             if not self.fs.isfile(p):
@@ -1397,32 +1382,21 @@ class DeltaSink:
             )
         return parsed
 
-    def _last_schema_string(self) -> str | None:
-        """Last recorded schemaString, from a driver-side newest-first
-        scan of the commit JSONs (metadata-only; no Spark job)."""
-        d = _log_dir(self.path)
-        for v in reversed(_list_versions(self.path)):
-            text = self.fs.read_text(_fs.join(d, TX_FMT.format(v) + ".json"))
-            for line in text.splitlines():
-                if not line.strip():
-                    continue
-                act = json.loads(line)
-                if "metaData" in act:
-                    return act["metaData"]["schemaString"]
-        return None
-
     def _schema_changed_from(self, actions) -> str | None:
         """The previous schemaString when this commit's pending schema
         differs from it (and no caller-supplied metaData overrides it),
-        else None.  ONE reverse log scan, reused by the typeChanges
-        annotation — _schema_changed + a second scan inside the branch
-        would read the whole post-checkpoint JSON tail twice per
-        schema-changing append."""
+        else None.  The previous schema is the table's latest metaData
+        (checkpoint included, so a schema change after log truncation
+        is still recorded), looked up once and reused by the
+        typeChanges annotation."""
+        from .delta_log import latest_metadata
+
         if self._pending_schema == "{}" or any(
             "metaData" in a for a in actions
         ):
             return None
-        prev = self._last_schema_string()
+        meta = latest_metadata(self.spark, self.path)
+        prev = None if meta is None else meta["schemaString"]
         if prev is None or self._schema_key(prev) == self._schema_key(
             self._pending_schema
         ):
@@ -1572,7 +1546,7 @@ class DeltaSink:
         from .delta_log import ACTIONS_SCHEMA, reconciled_action_rows
 
         rows = reconciled_action_rows(self.spark, self.path, upto=version)
-        log = _log_dir(self.path)
+        log = log_dir(self.path)
         n_parts = min(self.checkpoint_parts or 1, max(1, len(rows)))
         pointer: dict = {"version": version, "size": len(rows)}
         if n_parts == 1:
@@ -1662,7 +1636,7 @@ class DeltaSink:
                 writer_features=("v2Checkpoint",),
             )
         all_rows = reconciled_action_rows(self.spark, self.path, upto=version)
-        log = _log_dir(self.path)
+        log = log_dir(self.path)
         side_dir = _fs.join(log, "_sidecars")
         self.fs.makedirs(side_dir)
         file_rows = [
@@ -4363,7 +4337,7 @@ class DeltaSink:
         tomb: dict[str, int] = {}
         commit_rm_ts: dict[int, int] = {}
         cdc_by_commit: dict[int, set] = {}
-        for v in _list_versions(self.path):
+        for v in _backfilled_commit_versions(self.path):
             if retention_ms <= 0 and ckpt is not None and v <= ckpt:
                 # no retention: this commit truncates below, so its
                 # cdc files are garbage and its removes irrelevant
@@ -4448,10 +4422,10 @@ class DeltaSink:
                     removed_data += 1
         removed_commits = 0
         if ckpt is not None:
-            for v in _list_versions(self.path):
+            for v in _backfilled_commit_versions(self.path):
                 if v <= ckpt and commit_rm_ts.get(v, 0) < cutoff:
                     self.fs.remove(
-                        _fs.join(_log_dir(self.path), TX_FMT.format(v) + ".json")
+                        _fs.join(log_dir(self.path), TX_FMT.format(v) + ".json")
                     )
                     removed_commits += 1
         return {"data_files": removed_data, "log_files": removed_commits}
@@ -4551,11 +4525,11 @@ class DeltaSink:
         operations were recorded), add/remove counts.  Pure driver-side
         metadata over the log; O(commits)."""
         rows = []
-        for v in _list_versions(self.path):
+        for v in _backfilled_commit_versions(self.path):
             info = {"timestamp": None, "operation": None}
             n_add = n_remove = 0
             text = self.fs.read_text(
-                _fs.join(_log_dir(self.path), TX_FMT.format(v) + ".json")
+                _fs.join(log_dir(self.path), TX_FMT.format(v) + ".json")
             )
             for line in text.splitlines():
                 if not line.strip():
@@ -4677,7 +4651,7 @@ class DeltaSink:
         Mixed layouts (some files under ``k=v`` dirs, some not) raise —
         a silent guess would scatter rows across wrong partitions.
         """
-        if _list_versions(table_path):
+        if _backfilled_commit_versions(table_path):
             raise ValueError(f"{table_path} is already a Delta table")
         now = int(time.time() * 1000)
         entries: list[tuple[str, dict]] = []  # (relpath, partitionValues)
@@ -4776,7 +4750,7 @@ class DeltaSink:
         never delete source files; conversely vacuuming the SOURCE can
         break clones that still reference removed files — the same
         documented caveat as Delta's own shallow clones."""
-        if _list_versions(target_path):
+        if _backfilled_commit_versions(target_path):
             raise ValueError(f"{target_path} is already a Delta table")
         from .delta_log import latest_metadata, snapshot_files
 

@@ -58,44 +58,30 @@ from pyspark.sql.types import StructType
 
 from ..sources import delta_log as DL
 
-def _head(path: str, versions: "list[int] | None" = None) -> int:
+def _head(path: str) -> int:
     """Newest readable version: the last commit (a coordinated table's
-    ratified staged tail included) or the ``_last_checkpoint``,
-    whichever is later; -1 for an empty log."""
-    if versions is None:
-        versions = DL.list_commit_versions(path)
-    ckpt = DL.read_last_checkpoint(path)
-    return max(versions[-1] if versions else -1, -1 if ckpt is None else ckpt)
+    ratified staged tail included) or the checkpoint, whichever is
+    later; -1 for an empty log."""
+    return DL.log_segment(path).version
 
 
 def _driver_snapshot(path: str, upto: int) -> list[dict]:
     """Active files at ``upto`` via the batch reader's driver-side
-    replay (checkpoint + JSON tail, no Spark job) — the
-    ``initialSnapshot`` materialization.  A log whose JSON tail
-    exceeds the driver budget fails with a pointer at the batch
-    reader (such tables have checkpoints; write one)."""
+    replay (checkpoint + JSON tail, no Spark job) — the initial
+    snapshot's materialization.  DV'd files keep their descriptor: the
+    initial snapshot has batch semantics, so the reader applies the
+    bitmap at scan time — only MID-STREAM deletion vectors are
+    retractions and refuse.  A log whose JSON tail exceeds the driver
+    budget fails with a pointer at the batch reader (such tables have
+    checkpoints; write one)."""
     try:
-        return DL._snapshot_files_driver(path, upto)
+        return DL._live_files(path, DL.log_segment(path, upto))
     except DL._LogTooBig:
         raise ValueError(
             f"initialSnapshot of {path}: the JSON log tail exceeds the "
             "driver replay budget — checkpoint the table first (the "
             "snapshot then materializes from the checkpoint)"
         ) from None
-
-
-def _checkpoint_snapshot_files(path: str, version: int) -> list[dict]:
-    """Active files embedded in the checkpoint: adds minus any remove
-    tombstones (a reconciled checkpoint's adds ARE the snapshot; the
-    subtraction guards against writers that keep tombstones).  DV'd
-    adds pass through WITH their descriptor: the initial snapshot has
-    batch semantics, so the reader applies the bitmap at scan time —
-    only MID-STREAM deletion vectors are retractions and refuse."""
-    adds = DL._checkpoint_column(path, version, "add")
-    removed = {
-        r["path"] for r in DL._checkpoint_column(path, version, "remove")
-    }
-    return [a for a in adds if a["path"] not in removed]
 
 
 def _schema_fingerprint(schema_string: "str | None") -> "str | None":
@@ -257,7 +243,8 @@ class DeltaLogStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         vs = DL.list_commit_versions(self.path)
         # a fully-vacuumed log's checkpoint is its only readable state
-        latest = _head(self.path, vs)
+        seg = DL.log_segment(self.path)
+        latest = seg.version
         cap = self.max_commits_per_trigger
         max_bytes = self.max_bytes_per_trigger
         if (cap is None and max_bytes is None) or self._floor is None:
@@ -278,9 +265,8 @@ class DeltaLogStreamReader(DataSourceStreamReader):
             # snapshot is one indivisible unit and forms the whole
             # first batch; commit/byte admission control starts on
             # the NEXT trigger (floor then sits at the checkpoint)
-            ckpt = DL.read_last_checkpoint(self.path)
-            if ckpt is not None:
-                return {"version": ckpt}
+            if seg.checkpoint is not None:
+                return {"version": seg.checkpoint}
         pos: "tuple[int, int | None]" = (floor_v, floor_idx)
         commits_used = 0
         bytes_used = 0
@@ -626,35 +612,20 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 # honors the option's contract on a VACUUMED log too
                 # (the JSON tail past the checkpoint folds into the
                 # snapshot instead of streaming raw and retracting).
-                if versions and versions[0] > 0:
-                    ckpt = DL.read_last_checkpoint(self.path)
-                    if ckpt is None or ckpt < versions[0] - 1:
-                        raise ValueError(
-                            f"transaction log of {self.path} starts at "
-                            f"version {versions[0]} with no checkpoint "
-                            "covering the gap — initial snapshot cannot "
-                            "be reconstructed"
-                        )
                 snap_v = ev
                 snap_files = _driver_snapshot(self.path, upto=ev)
             else:
                 # initial offset on a vacuumed/truncated log: the
                 # surviving JSON commits miss every checkpoint-only
-                # file — materialize the checkpoint snapshot as the
-                # first batch, then stream commits past it.
-                ckpt = DL.read_last_checkpoint(self.path)
-                if ckpt is None or (versions and ckpt < versions[0] - 1):
-                    raise ValueError(
-                        f"transaction log of {self.path} starts at version "
-                        f"{versions[0] if versions else '<none>'} with no "
-                        "checkpoint covering the gap — initial snapshot "
-                        "cannot be reconstructed"
-                    )
-                snap_v = ckpt
+                # file — materialize the checkpoint the read at `ev`
+                # starts from as the first batch, then stream commits
+                # past it (log_segment raises when no checkpoint
+                # bridges the gap)
+                snap_v = DL.log_segment(self.path, ev).checkpoint
                 snap_files = (
-                    _checkpoint_snapshot_files(self.path, ckpt)
-                    if ckpt <= ev
-                    else None
+                    None
+                    if snap_v is None
+                    else _driver_snapshot(self.path, upto=snap_v)
                 )
             if snap_files is not None and snap_v <= ev:
                 blob_cache: dict = {}
@@ -893,8 +864,16 @@ class DeltaLogDataSource(DataSource):
         # differs raises.  Reading the metadata first would leave a
         # window where the guard fingerprints a schema NEWER than the
         # one the stream pins, silently disarming it.
-        guard_head = _head(self.options["path"])
-        meta = DL.latest_metadata(None, self.options["path"])
+        try:
+            guard_head = _head(self.options["path"])
+            meta = DL.latest_metadata(None, self.options["path"])
+        except ValueError:
+            # the log cannot rebuild its head (a missing commit, history
+            # truncated past every checkpoint): nothing can be pinned,
+            # and the query fails at its first trigger, where the
+            # reader reads the head again — the same error a gap that
+            # opens mid-stream raises
+            return StructType([])
         if meta is None:
             raise ValueError(f"no Delta metaData under {self.options['path']}")
         self._guard_anchor = (guard_head, meta.get("schemaString"))
