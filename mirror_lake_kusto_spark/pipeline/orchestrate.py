@@ -1066,12 +1066,8 @@ class MirrorPipeline:
             if restage:
                 restage_paths.append(it["blob_path"])
         if restage_paths:
-            abs_paths = [self._lineage_path(p) for p in sorted(restage_paths)]
-            quoted = ", ".join(
-                "'" + p.replace("'", "\\'") + "'" for p in abs_paths
-            )
             self.sink.delete(
-                f"MLK_BlobPath IN ({quoted}) "
+                f"{self._lineage_in(sorted(restage_paths))} "
                 f"AND MLK_BatchTxId < {int(end_tx)}"
             )
         meta = DL.latest_metadata(self.spark, self.source, upto=end_tx)
@@ -1386,6 +1382,16 @@ class MirrorPipeline:
 
         return _fsmod.data_path_spelling(self.source, rel)
 
+    def _lineage_in(self, rels: list[str]) -> str:
+        """``MLK_BlobPath IN (...)`` over source-relative blob paths,
+        each quoted so that Spark and the sink's stats skipping read
+        the same path (a backslash in a path is an escape otherwise)."""
+        from ..sources.skipping import sql_string_literal
+
+        return "MLK_BlobPath IN ({})".format(
+            ", ".join(sql_string_literal(self._lineage_path(p)) for p in rels)
+        )
+
     def _apply_removes(self, items: list[dict]) -> int:
         """C3 + K6: match removes to their historical adds; a skipped
         add skips its remove (BlobLoadingOrchestration.cs:88-153); the
@@ -1422,9 +1428,7 @@ class MirrorPipeline:
                 to_delete.append(it["blob_path"])
                 it["state"] = "Staged"
         if to_delete:
-            abs_paths = [self._lineage_path(p) for p in to_delete]
-            quoted = ", ".join("'" + p.replace("'", "\\'") + "'" for p in abs_paths)
-            self.sink.delete(f"MLK_BlobPath IN ({quoted})")
+            self.sink.delete(self._lineage_in(to_delete))
         return len(to_delete)
 
     def _stamp_and_persist(self, items: list[dict]) -> None:

@@ -1508,40 +1508,8 @@ def read_snapshot(
             {**meta, "partitionColumns": parts},
             partition_predicate,
         )
-    if predicate is not None and files and mapping is None:
-        # stats/bloom pruning is skipped under column mapping (stats
-        # JSON is keyed by physical names); the row filter below keeps
-        # the result exact either way — pruning is only ever advisory
-        from .bloom import prune_files_bloom
-        from .skipping import prune_files
-
-        pred_schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        collated = collations_of(meta)
-        # collated columns prune collation-AWARE (round 11): stats
-        # min/max are binary-ordered, so prune_files applies the
-        # case-variant interval test on the SPARK.UTF8_LCASE family
-        # (equality/IN only) and keeps every other collation's
-        # conjuncts non-prunable; the row filter below keeps the
-        # result exact either way
-        files = prune_files(
-            files,
-            predicate,
-            pred_schema,
-            list(meta.get("partitionColumns") or []),
-            collations=collated,
-        )
-        # a Bloom sidecar (if built) additionally prunes equality/IN
-        # lookups on high-cardinality columns; advisory and stale-safe.
-        # Blooms hash raw bytes — a case VARIANT of the literal would
-        # miss — so collated columns stay outside the bloom's view
-        bloom_schema = (
-            StructType(
-                [f for f in pred_schema.fields if f.name not in collated]
-            )
-            if collated
-            else pred_schema
-        )
-        files = prune_files_bloom(table_path, files, predicate, bloom_schema)
+    if predicate is not None and files:
+        files, _ = skip_files(spark, table_path, meta, files, predicate)
     if not files:
         return spark.createDataFrame(
             [], StructType.fromJson(json.loads(meta["schemaString"]))
@@ -1558,6 +1526,65 @@ def read_snapshot(
         # pruning is advisory; the row filter guarantees exactness
         out = out.filter(predicate)
     return out
+
+
+def skip_files(
+    spark: SparkSession,
+    table_path: str,
+    meta: dict,
+    files: list[dict],
+    predicate: str,
+    cover: bool = False,
+) -> tuple[list[dict], list[dict]]:
+    """Stats and Bloom skipping of ``files`` for ``predicate``, the one
+    pruning step behind ``read_snapshot`` and ``DeltaSink``'s DML:
+    ``(kept, covered)``.  ``kept`` are the files that may hold a
+    matching row — advisory, callers still filter rows.  ``covered``
+    (only when ``cover``) are the kept files every row of which
+    matches, by :func:`skipping.cover_files` — a proof.
+
+    Both are skipped under column mapping (stats JSON is keyed by
+    physical names), and when ``spark.sql.parser.escapedStringLiterals``
+    makes Spark read a backslash in a literal as itself."""
+    from .bloom import prune_files_bloom
+    from .skipping import cover_files, prune_files
+
+    if column_mapping_of(meta) is not None or (
+        "\\" in predicate
+        and spark.conf.get(
+            "spark.sql.parser.escapedStringLiterals", "false"
+        ).lower()
+        == "true"
+    ):
+        return files, []
+    pred_schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    parts = list(meta.get("partitionColumns") or [])
+    collated = collations_of(meta)
+    # collated columns prune collation-AWARE: stats min/max are
+    # binary-ordered, so prune_files applies the case-variant interval
+    # test on the SPARK.UTF8_LCASE family (equality/IN only) and keeps
+    # every other collation's conjuncts non-prunable
+    files = prune_files(
+        files, predicate, pred_schema, parts, collations=collated
+    )
+    covered = (
+        cover_files(files, predicate, pred_schema, parts, collated)
+        if cover
+        else []
+    )
+    # a Bloom sidecar (if built) additionally prunes equality/IN
+    # lookups on high-cardinality columns; advisory and stale-safe.
+    # Blooms hash raw bytes — a case VARIANT of the literal would
+    # miss — so collated columns stay outside the bloom's view
+    bloom_schema = (
+        StructType([f for f in pred_schema.fields if f.name not in collated])
+        if collated
+        else pred_schema
+    )
+    return (
+        prune_files_bloom(table_path, files, predicate, bloom_schema),
+        covered,
+    )
 
 
 def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
@@ -2388,9 +2415,38 @@ def _prune_partitions(
     ]
 
 
-def partition_subdir(part_values: dict[str, str]) -> str:
-    """Hive-style ``k=v/..`` relative dir for a partition tuple."""
-    return "/".join(f"{k}={v}" for k, v in sorted(part_values.items()))
+#: the directory name Spark's partitioned writer gives a null value
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+#: characters Spark writes as ``%XX`` in a partition directory name
+#: (``ExternalCatalogUtils.escapePathName``)
+_PATH_ESCAPES = frozenset(
+    '"#%\'*/:=?\\\x7f{[]^' + "".join(map(chr, range(1, 32)))
+)
+
+
+def _escape_path_name(v: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in v)
+
+
+def partition_subdir(part_values: dict[str, str | None]) -> str:
+    """Hive-style ``k=v/..`` relative dir for a partition tuple, spelled
+    as Spark's partitioned writer spells it (the inverse of
+    :func:`partition_dir_segment`)."""
+    return "/".join(
+        f"{_escape_path_name(k)}="
+        + (HIVE_NULL if v is None else _escape_path_name(str(v)))
+        for k, v in sorted(part_values.items())
+    )
+
+
+def partition_dir_segment(seg: str) -> tuple[str, str | None]:
+    """(column, value) of one hive ``k=v`` directory segment as the
+    log must record it: Spark's ``%XX`` escapes undone and the hive
+    default partition read as null."""
+    import urllib.parse as _up
+
+    k, _, v = seg.partition("=")
+    return _up.unquote(k), None if v == HIVE_NULL else _up.unquote(v)
 
 
 def latest_domain_metadata(

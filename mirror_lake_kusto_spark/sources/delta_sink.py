@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from . import fs as _fs
-from .delta_log import _backfilled_commit_versions, log_dir
+from .delta_log import (
+    _backfilled_commit_versions,
+    log_dir,
+    partition_dir_segment,
+    partition_subdir,
+)
 from .skipping import file_stats_json
 from .tables import read_parquet
 
@@ -381,12 +386,13 @@ def _stamp_mapping_identity(
 class DeltaSink:
     """Append / delete / optimize on a local or shared-FS Delta table.
 
-    Row-level DML runs ONE pipeline, :meth:`_dml`: match → touched
-    files → write strategy → CDF → actions → :meth:`_commit`.  The
-    copy-on-write verbs (``delete``/``update``/``merge``) and their
+    Row-level DML runs ONE pipeline, :meth:`_dml`: skip → match →
+    touched files → write strategy → CDF → actions → :meth:`_commit`.
+    The copy-on-write verbs (``delete``/``update``/``merge``) and their
     deletion-vector twins (``delete_dv``/``update_dv``/``merge_dv``)
     differ only in the strategy flag; each verb plugs in its matcher
-    (:meth:`_where`'s predicate, or ``_merge``'s key join), its
+    (a predicate, which also skips files by their stats, or
+    ``_merge``'s key join), its
     new-rows step (none, ``_update``'s cast assignments, ``_merge``'s
     source join) and — through the tags its matcher sets — its change
     types.  Every read goes through :meth:`_dml_scan` — the table
@@ -1975,8 +1981,6 @@ class DeltaSink:
         A failure anywhere removes the staging dir and every file
         already moved, then re-raises: nothing is left behind that no
         commit will ever reference (``vacuum`` skips ``_staging_``)."""
-        from .delta_log import partition_subdir
-
         mapping = self._current_mapping() or {}
         if mapping:
             df = df.select(
@@ -2014,7 +2018,7 @@ class DeltaSink:
                     pv, rel_dir = part_values, partition_subdir(part_values)
                 else:
                     pv = dict(
-                        seg.partition("=")[::2]
+                        partition_dir_segment(seg)
                         for seg in rel_dir.split("/")
                         if seg
                     )
@@ -2787,18 +2791,22 @@ class DeltaSink:
         self,
         op: str,
         dv: bool,
-        match,
+        match=None,
         new_rows=None,
         inserts=None,
         txn: tuple[str, int] | None = None,
         schema=None,
+        where: str | None = None,
     ) -> int:
         """The ONE row-level DML pipeline behind delete/update/merge and
-        their ``_dv`` twins: match → touched files → write strategy →
-        CDF → actions → :meth:`_commit`.  A verb supplies:
+        their ``_dv`` twins: skip → match → touched files → write
+        strategy → CDF → actions → :meth:`_commit`.  A verb supplies:
 
-        - ``match(df)``: tags each scanned row's ``__mlk_act`` with
-          NULL (untouched), ``'delete'`` or ``'update'``;
+        - ``where``, the predicate of delete/update (rows where it is
+          TRUE match, tagged ``'update'`` when there are ``new_rows``,
+          else ``'delete'``), or ``match(df)`` (merge): tags each
+          scanned row's ``__mlk_act`` with NULL (untouched),
+          ``'delete'`` or ``'update'``;
         - ``new_rows(df)``: the post-image of every ``'update'`` row,
           leaving other rows as they are;
         - ``inserts(hits)``: rows that matched no target row (merge),
@@ -2813,8 +2821,16 @@ class DeltaSink:
         Either way every later frame — post-images, inserts, the change
         feed (delete / update_preimage by tag, update_postimage,
         insert) — rescans only the TOUCHED files, and all staging jobs
-        run through one :meth:`_concurrent_stage` into one commit."""
-        from .delta_log import snapshot_files
+        run through one :meth:`_concurrent_stage` into one commit.
+
+        A ``where`` first skips files through
+        :func:`delta_log.skip_files`, the stats and Bloom pruning
+        ``read_snapshot`` uses, so the probe reads only files that may
+        hold a match.  A delete without CDF also takes the files the
+        stats prove wholly matched (:func:`skipping.cover_files`) as
+        plain removes, unread; when every touched file is covered the
+        DML runs no Spark job."""
+        from .delta_log import skip_files, snapshot_files
 
         types, data_schema, meta = schema or self._data_schema()
         if data_schema is None:
@@ -2824,6 +2840,34 @@ class DeltaSink:
         if not dv:
             self._require_no_dvs(op, files)
         cdf = self._cdf_enabled()
+        covered = []
+        if where is not None:
+            # rows where the predicate is TRUE match (a NULL result
+            # matches nothing, SQL WHERE semantics)
+            act = F.lit("delete" if new_rows is None else "update")
+            match = lambda df: df.withColumn(  # noqa: E731
+                _ACT, F.when(F.expr(where), act)
+            )
+            if files:
+                files, covered = skip_files(
+                    self.spark,
+                    self.path,
+                    meta,
+                    files,
+                    where,
+                    cover=new_rows is None and not cdf,
+                )
+                gone = {f["path"] for f in covered}
+                files = [f for f in files if f["path"] not in gone]
+                if not files:
+                    # nothing left to probe: still analyze the predicate
+                    # (no job), so a bad one raises as on the probe path
+                    match(
+                        self.spark.createDataFrame(
+                            [],
+                            StructType.fromJson(json.loads(meta["schemaString"])),
+                        )
+                    )
         mat_rcv = self._rt_mat_cols()[1] if self._rt_enabled() else None
         by_f = {_fs.data_path_spelling(self.path, f["path"]): f for f in files}
         # rows already in a deletion vector are logically gone: they
@@ -2917,6 +2961,7 @@ class DeltaSink:
                 thunks.append(lambda: self._stage_adds(cdc_df, cdc=True))
         staged = self._concurrent_stage(thunks)
         actions = [self._txn_action(txn)] if txn is not None else []
+        actions += [_remove(f, now) for f in covered]
         if packed:
             actions += self._dv_actions(packed, now)
         for acts in staged:
@@ -2972,24 +3017,20 @@ class DeltaSink:
             actions.append({"add": add})
         return actions
 
-    @staticmethod
-    def _where(predicate: str, act: str):
-        """Predicate matcher: tag rows where ``predicate`` is TRUE (a
-        NULL result matches nothing, SQL WHERE semantics)."""
-        return lambda df: df.withColumn(
-            _ACT, F.when(F.expr(predicate), F.lit(act))
-        )
-
     def delete(self, predicate: str) -> int:
         """Row-level delete: rewrite only the FILES that contain matching
         rows — K6's `.delete table records` as copy-on-write.
 
-        One probe scan over the whole snapshot (partition values injected
-        per group, data predicates pushed down to parquet) finds the
-        affected files; each is then rewritten without its matching rows.
-        All rewrites land in ONE atomic commit.  At scale this is two
-        jobs total — probe + rewrite — not one probe per partition."""
-        return self._dml("DELETE", False, self._where(predicate, "delete"))
+        The files' stats first skip every file that cannot hold a
+        match, and remove outright (no scan, no rewrite) every file
+        they prove wholly matched — unless the change feed is on, which
+        needs the deleted rows.  One probe scan over the files left
+        (partition values injected per group, data predicates pushed
+        down to parquet) finds the affected ones; each is then
+        rewritten without its matching rows.  All removes and rewrites
+        land in ONE atomic commit: at most two jobs — probe + rewrite —
+        and none when every affected file is covered."""
+        return self._dml("DELETE", False, where=predicate)
 
     def _check_update_assignments(
         self, assignments: dict[str, str], types, data_schema, gen
@@ -3093,9 +3134,9 @@ class DeltaSink:
         return self._dml(
             "UPDATE",
             dv,
-            self._where(predicate, "update"),
-            assign,
+            new_rows=assign,
             schema=(types, data_schema, meta),
+            where=predicate,
         )
 
     #: DV'd-file count up to which existing-DV DESCRIPTORS (not
@@ -3484,8 +3525,11 @@ class DeltaSink:
 
         At 100 TB this is the difference between rewriting terabytes to
         delete a few rows and appending kilobytes: the scan cost is the
-        same probe as ``delete``, the write cost is O(deleted-row
-        bitmap).  Readers apply the bitmaps via ``read_snapshot``;
+        same probe as ``delete`` — over the files the stats do not skip,
+        and with the files they prove wholly matched removed unread
+        when the change feed is off — and the write cost is
+        O(deleted-row bitmap).  Readers apply the bitmaps via
+        ``read_snapshot``;
         copy-on-write maintenance refuses until ``reorg()``
         materializes them (Delta's REORG APPLY PURGE model).
 
@@ -3499,7 +3543,7 @@ class DeltaSink:
         matches were all already deleted is left alone.  The commit
         also upgrades the protocol to readerVersion 3 +
         deletionVectors."""
-        return self._dml("DELETE", True, self._where(predicate, "delete"))
+        return self._dml("DELETE", True, where=predicate)
 
     def reorg(self) -> int:
         """REORG TABLE ... APPLY (PURGE): materialize every deletion
@@ -4665,17 +4709,8 @@ class DeltaSink:
             pv: dict[str, str | None] = {}
             hive = all("=" in s for s in segs)
             for s in segs if hive else []:
-                k, _, v = s.partition("=")
-                # Spark percent-encodes special chars in hive dir
-                # values and writes nulls as the hive sentinel — undo
-                # both so the log records the REAL values
-                import urllib.parse as _up
-
-                pv[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _up.unquote(v)
-                )
+                k, v = partition_dir_segment(s)
+                pv[k] = v
             for name in sorted(names):
                 if not name.endswith(".parquet") or name.startswith("_"):
                     continue

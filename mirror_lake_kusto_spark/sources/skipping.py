@@ -14,7 +14,24 @@ Safety: pruning is strictly an optimization.  A conjunct the parser
 does not understand, a column without stats, or a file without stats
 never excludes the file — and ``read_snapshot`` re-applies the full
 predicate as a row filter, so the result set is identical with pruning
-on or off.
+on or off.  The DML paths prune the same way before their probe.
+
+Covering (:func:`cover_files`) is the opposite claim — every row of a
+file matches — and it is a proof, not advice: a delete drops a covered
+file whole, unread, so a wrong cover deletes rows.  It holds only when
+every top-level conjunct parses (none dropped, no top-level OR); each
+is on a partition column or on an integral, binary-collation string,
+boolean or date column (timestamp stats may be truncated to ms,
+floats have NaN and -0.0, decimal stats may parse as floats); each
+literal is spelled so that Spark reads the value the test compares;
+the file's ``nullCount`` for the column is present and 0; ``=``/``IN``
+see min == max == a literal and ranges test max (``<``, ``<=``) or min
+(``>``, ``>=``).  Callers skip both under column mapping, where stats
+are keyed by physical names.
+
+Quoted literals decode as Spark's parser reads them (``''``, ``\\\\``,
+``\\'`` and ``\\"``); any other backslash escape makes the literal
+unparseable, so it neither prunes nor covers.
 
 Reference: stats format mirrors the Delta protocol's per-file stats
 (numRecords parse in the reference at TransactionLogEntry.cs:345-361);
@@ -31,6 +48,7 @@ from typing import Any
 from pyspark.sql.types import (
     BooleanType,
     DateType,
+    IntegralType,
     NumericType,
     StringType,
     StructType,
@@ -398,6 +416,9 @@ _CMP_RE = re.compile(
 )
 _NULL_RE = re.compile(r"^\s*(\w+)\s+IS\s+(NOT\s+)?NULL\s*$", re.IGNORECASE)
 _IN_RE = re.compile(r"^\s*(\w+)\s+IN\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL)
+_BETWEEN_RE = re.compile(
+    r"^\s*(\w+)\s+(NOT\s+)?BETWEEN\s+(.+)$", re.IGNORECASE | re.DOTALL
+)
 # reversed literal-first comparison: 5 < x  ->  x > 5
 _FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "=", "==": "==",
          "!=": "!=", "<>": "<>"}
@@ -408,59 +429,80 @@ def _is_word_char(ch: str) -> bool:
     return ch.isalnum() or ch == "_"
 
 
+def _split_top(text: str, on_and: bool):
+    """Split ``text`` outside quotes and parens: at top-level AND
+    (``on_and``) or at top-level commas.  Inside a quoted string a
+    backslash and the next character are one escape pair, as in
+    Spark's lexer, so ``\\'`` does not close the string.  Returns None
+    when a top-level OR makes no AND-side part required."""
+    parts: list[str] = []
+    depth = 0
+    quote: str | None = None
+    between = False  # a BETWEEN whose own AND is still ahead
+    buf: list[str] = []
+    i = 0
+    up = text.upper()
+
+    def _kw_at(kw: str, i: int) -> bool:
+        return (
+            up.startswith(kw, i)
+            and (i == 0 or not _is_word_char(text[i - 1]))
+            and (
+                i + len(kw) >= len(text)
+                or not _is_word_char(text[i + len(kw)])
+            )
+        )
+
+    while i < len(text):
+        ch = text[i]
+        if quote:
+            step = 2 if ch == "\\" and quote != "`" else 1
+            if ch == quote:
+                quote = None
+            buf.append(text[i:i + step])
+            i += step
+            continue
+        if ch in "'\"`":
+            quote = ch
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif depth == 0 and not on_and and ch == ",":
+            parts.append("".join(buf))
+            buf = []
+            i += 1
+            continue
+        elif depth == 0 and on_and:
+            if _kw_at("OR", i):
+                return None
+            if _kw_at("BETWEEN", i):
+                between = True
+            elif _kw_at("AND", i):
+                if between:
+                    between = False  # x BETWEEN a AND b: one conjunct
+                else:
+                    parts.append("".join(buf))
+                    buf = []
+                    i += 3
+                    continue
+        buf.append(ch)
+        i += 1
+    parts.append("".join(buf))
+    return [p.strip() for p in parts]
+
+
 def split_conjuncts(predicate: str) -> list[str]:
-    """Split on top-level AND (outside quotes and parens).
+    """Split on top-level AND (outside quotes and parens); the AND of
+    ``x BETWEEN a AND b`` stays inside its conjunct.
 
     If a top-level OR is present anywhere, NOTHING is a required
     conjunct — ``x AND a OR b`` parses as ``(x AND a) OR b``, so even
     the AND-side atoms cannot prune on their own.  Returns [] (no
     pruning; read_snapshot's row filter still applies the predicate).
     """
-    parts: list[str] = []
-    depth = 0
-    quote: str | None = None
-    buf: list[str] = []
-    i = 0
-    up = predicate.upper()
-
-    def _kw_at(kw: str, i: int) -> bool:
-        return (
-            up.startswith(kw, i)
-            and (i == 0 or not _is_word_char(predicate[i - 1]))
-            and (
-                i + len(kw) >= len(predicate)
-                or not _is_word_char(predicate[i + len(kw)])
-            )
-        )
-
-    while i < len(predicate):
-        ch = predicate[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            buf.append(ch)
-            i += 1
-            continue
-        if ch in "'\"":
-            quote = ch
-            buf.append(ch)
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and _kw_at("OR", i):
-            return []  # disjunction at top level — no conjunct required
-        if depth == 0 and _kw_at("AND", i):
-            parts.append("".join(buf))
-            buf = []
-            i += 3
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
+    parts = _split_top(predicate, on_and=True)
+    return [p for p in parts or [] if p]
 
 
 def _strip_parens(e: str) -> str:
@@ -483,36 +525,77 @@ def _strip_parens(e: str) -> str:
 
 
 # a quoted literal must be EXACTLY one quoted token: interior quotes
-# only as doubled escapes.  A sloppy startswith/endswith check would
-# treat  'a' OR c = 'z'  as the single string  a' OR c = 'z  and prune
-# files that contain c='z' — silent data loss.
-_SQUOTED_RE = re.compile(r"^'(?:[^']|'')*'$")
-_DQUOTED_RE = re.compile(r'^"(?:[^"]|"")*"$')
+# only as doubled or backslash escapes.  A sloppy startswith/endswith
+# check would treat  'a' OR c = 'z'  as the single string  a' OR c = 'z
+# and prune files that contain c='z' — silent data loss.
+_SQUOTED_RE = re.compile(r"^'(?:[^'\\]|''|\\.)*'$", re.DOTALL)
+_DQUOTED_RE = re.compile(r'^"(?:[^"\\]|""|\\.)*"$', re.DOTALL)
 _BAREWORD_RE = re.compile(r"^-?[\w.\-:+]+$")
+# literal spellings whose value is the same in Spark and in the stats
+# domain, the only ones a covering proof accepts
+_INT_RE = re.compile(r"^-?\d+$")
+_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
+
+
+def _unquote(text: str) -> str | None:
+    """The value of quoted literal ``text`` (already matched by
+    ``_SQUOTED_RE``/``_DQUOTED_RE``) as Spark's parser reads it, or
+    None when it holds an escape other than ``\\\\``, ``\\'`` and
+    ``\\"``: Spark turns ``\\b`` into a backspace, ``\\101`` into
+    ``A`` and ``\\%`` into two characters, and no stats test is worth
+    copying those rules."""
+    q, body = text[0], text[1:-1]
+    out: list[str] = []
+    i = 0
+    while i < len(body):
+        ch = body[i]
+        if ch == "\\":
+            if body[i + 1] not in "\\'\"":
+                return None
+            out.append(body[i + 1])
+            i += 2
+        elif ch == q:  # a doubled quote: the regex admits no single one
+            out.append(q)
+            i += 2
+        else:
+            out.append(ch)
+            i += 1
+    return "".join(out)
+
+
+def sql_string_literal(value: str) -> str:
+    """``value`` spelled as a single-quoted SQL string literal that
+    Spark's parser and :func:`_parse_literal` both read back as
+    ``value``: backslashes and quotes are backslash-escaped."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _parse_literal(text: str, dtype, columns: frozenset | set = frozenset()) -> Any:
-    """SQL literal (or raw partition value) -> comparable Python value
-    in the stats domain (None = unparseable -> no pruning).
+    """SQL literal -> comparable Python value in the stats domain
+    (None = unparseable -> no pruning).
 
     ``columns`` is the schema's column-name set: a bareword RHS that
     names a column is a column reference, never a literal (``a = b``
     must not prune as if b were the string 'b').
     """
     text = text.strip()
-    quoted = False
-    if text.startswith("'"):
-        if not _SQUOTED_RE.match(text):
+    quoted = text[:1] in ("'", '"')
+    if quoted:
+        if not (_SQUOTED_RE if text[0] == "'" else _DQUOTED_RE).match(text):
             return None  # not a single well-formed string literal
-        text, quoted = text[1:-1].replace("''", "'"), True
-    elif text.startswith('"'):
-        if not _DQUOTED_RE.match(text):
+        text = _unquote(text)
+        if text is None:
             return None
-        text, quoted = text[1:-1].replace('""', '"'), True
     elif not _BAREWORD_RE.match(text):
         return None  # expression, not a literal
     elif text in columns:
         return None  # column-to-column comparison — not prunable
+    return _typed(text, quoted, dtype)
+
+
+def _typed(text: str, quoted: bool, dtype) -> Any:
+    """A literal's (or a raw partition value's) text in the stats
+    domain of ``dtype``; None = not comparable."""
     if isinstance(dtype, (TimestampType, TimestampNTZType)):
         return _parse_ts(text)
     if isinstance(dtype, DateType):
@@ -538,6 +621,27 @@ def _parse_literal(text: str, dtype, columns: frozenset | set = frozenset()) -> 
         # (qualified refs like t.c pass the bareword regex)
         return text if quoted else None
     return None  # binary/array/map/struct — not prunable
+
+
+def _exact_literal(text: str, dtype) -> bool:
+    """Whether literal ``text`` on a column of ``dtype`` may enter a
+    covering proof: an integral, string, boolean or date column, and a
+    spelling Spark reads as exactly the value the stats test compares
+    (no float or timestamp widening, no string-to-number cast)."""
+    text = text.strip()
+    if isinstance(dtype, IntegralType):
+        return bool(_INT_RE.match(text))
+    if isinstance(dtype, BooleanType):
+        return text.lower() in ("true", "false")
+    if not text.startswith("'"):
+        return False
+    if isinstance(dtype, StringType):
+        return True
+    return isinstance(dtype, DateType) and bool(_DATE_RE.match(text[1:-1]))
+
+
+def _cover_type(dtype) -> bool:
+    return isinstance(dtype, (IntegralType, StringType, BooleanType, DateType))
 
 
 def _parse_ts(text: str) -> str | None:
@@ -586,7 +690,11 @@ class _Conjunct:
     pruning for the common all-lower/all-upper file layouts.)  Range
     operators (< <= > >=) never prune under ci: lower() is not
     monotone in binary order (``'Z' < 'a'`` but ``'z' > 'a'``), so no
-    sound interval test exists over binary-ordered stats."""
+    sound interval test exists over binary-ordered stats.
+
+    ``exact=True`` lets the conjunct enter a covering proof
+    (:meth:`covers`): its column and literals pass
+    :func:`_exact_literal` and its column compares in binary order."""
 
     def __init__(
         self,
@@ -595,12 +703,16 @@ class _Conjunct:
         op: str | None,
         values: list[Any],
         ci: bool = False,
+        exact: bool = False,
+        date: bool = False,
     ):
         self.kind = kind  # "cmp" | "in" | "isnull" | "notnull"
         self.col = col
         self.op = op
         self.values = values
         self.ci = ci
+        self.exact = exact
+        self.date = date  # the column is a DATE: stats are ISO strings
 
     def _eq_keep(self, lo, hi, v) -> bool:
         """Can a row equal to ``v`` (under the conjunct's collation)
@@ -663,6 +775,49 @@ class _Conjunct:
             return hi >= v
         return True
 
+    def covers(self, stats: dict, part: bool, part_value: Any) -> bool:
+        """True only when the stats PROVE every row of the file
+        matches.  ``part`` says the column is a partition column, whose
+        single value per file is ``part_value`` (None = null)."""
+        if not self.exact:
+            return False
+        if part:
+            if self.kind in ("isnull", "notnull"):
+                return (part_value is None) == (self.kind == "isnull")
+            lo = hi = part_value
+        else:
+            # wide bounds (a DV writer's tightBounds=false) describe
+            # more rows than the file holds; no proof from those
+            if stats.get("tightBounds") is False:
+                return False
+            nulls = (stats.get("nullCount") or {}).get(self.col)
+            if type(nulls) is not int:
+                return False
+            if self.kind == "isnull":
+                return nulls == stats.get("numRecords")
+            if nulls:
+                return False  # a NULL row matches no comparison
+            if self.kind == "notnull":
+                return True
+            lo = (stats.get("minValues") or {}).get(self.col)
+            hi = (stats.get("maxValues") or {}).get(self.col)
+        kinds = {type(v) for v in (lo, hi, *self.values)}
+        if len(kinds) != 1 or kinds.pop() not in (int, str, bool):
+            return False  # also rules out None: a null partition value
+        if self.date and not all(_DATE_RE.match(v) for v in (lo, hi)):
+            return False
+        if self.kind == "in":
+            return lo == hi and lo in self.values
+        v = self.values[0]
+        return {
+            "=": lo == hi == v,
+            "==": lo == hi == v,
+            "<": hi < v,
+            "<=": hi <= v,
+            ">": lo > v,
+            ">=": lo >= v,
+        }.get(self.op, False)
+
 
 #: the one collation family whose comparison is pure ASCII-safe
 #: lowercase folding — the only one with a sound stats test over
@@ -697,6 +852,91 @@ def _collation_mode(ident: str | None, values: list[Any]) -> str | None:
     return None
 
 
+def _parse_conjunct(
+    raw: str, type_of: dict, colset: frozenset, collations: dict
+) -> list[_Conjunct]:
+    """The tests one top-level conjunct ``raw`` stands for (two for a
+    BETWEEN); [] when it is not understood."""
+    c = _strip_parens(raw)
+
+    def _cmp(col: str, op: str, lit: str) -> list[_Conjunct]:
+        dtype = type_of[col]
+        v = _parse_literal(lit, dtype, colset)
+        mode = None if v is None else _collation_mode(collations.get(col), [v])
+        if mode is None:
+            return []
+        if mode == "ci" and op not in ("=", "==", "!=", "<>"):
+            return []  # no sound range test under case folding
+        exact = mode == "binary" and _exact_literal(lit, dtype)
+        return [
+            _Conjunct(
+                "cmp", col, op, [v], ci=mode == "ci", exact=exact,
+                date=isinstance(dtype, DateType),
+            )
+        ]
+
+    m = _NULL_RE.match(c)
+    if m and m.group(1) in type_of:
+        col = m.group(1)
+        return [
+            _Conjunct(
+                "notnull" if m.group(2) else "isnull", col, None, [],
+                exact=_cover_type(type_of[col]),
+            )
+        ]
+    m = _BETWEEN_RE.match(c)
+    if m and m.group(1) in type_of:
+        # x BETWEEN a AND b is x >= a AND x <= b; NOT BETWEEN prunes
+        # nothing (it is a disjunction)
+        bounds = _split_top(m.group(3), on_and=True)
+        if m.group(2) or not bounds or len(bounds) != 2:
+            return []
+        lo = _cmp(m.group(1), ">=", bounds[0])
+        hi = _cmp(m.group(1), "<=", bounds[1])
+        return lo + hi if lo and hi else []
+    m = _IN_RE.match(c)
+    if m and m.group(1) in type_of:
+        col = m.group(1)
+        lits = _split_top(m.group(2), on_and=False)
+        vals = [_parse_literal(v, type_of[col], colset) for v in lits]
+        if not vals or any(v is None for v in vals):
+            return []
+        mode = _collation_mode(collations.get(col), vals)
+        if mode is None:
+            return []
+        exact = mode == "binary" and all(
+            _exact_literal(v, type_of[col]) for v in lits
+        )
+        return [
+            _Conjunct(
+                "in", col, None, vals, ci=mode == "ci", exact=exact,
+                date=isinstance(type_of[col], DateType),
+            )
+        ]
+    m = _CMP_RE.match(c)
+    if m and m.group(1) in type_of:
+        return _cmp(m.group(1), m.group(2), m.group(3))
+    m = _CMP_REV_RE.match(c)
+    if m and m.group(3) in type_of:
+        return _cmp(m.group(3), _FLIP[m.group(2)], m.group(1))
+    return []
+
+
+def _conjunct_groups(
+    predicate: str,
+    schema: StructType,
+    collations: "dict[str, str] | None",
+) -> list[list[_Conjunct]]:
+    """The parsed tests of each top-level conjunct, in order ([] for a
+    conjunct not understood; no groups at all under a top-level OR)."""
+    type_of = {f.name: f.dataType for f in schema.fields}
+    colset = frozenset(type_of)
+    return [
+        _parse_conjunct(raw, type_of, colset, collations or {})
+        for raw in split_conjuncts(predicate)
+    ]
+
+
 def parse_conjuncts(
     predicate: str,
     schema: StructType,
@@ -710,57 +950,37 @@ def parse_conjuncts(
     never affects nullness), SPARK.UTF8_LCASE equality/IN prunes via
     the case-variant interval, everything else on a collated column is
     dropped (round-11; the round-8 posture was no pruning at all)."""
+    return [
+        c for group in _conjunct_groups(predicate, schema, collations)
+        for c in group
+    ]
+
+
+def _file_tests(files, conjuncts, schema, partition_columns):
+    """Per file: (file, stats dict, {partition col: typed value}) for
+    the partition columns ``conjuncts`` test.  A partition value that
+    does not parse in its column's type reads as a missing key, and so
+    does ``""``, which the Delta protocol reads as null for every
+    type."""
+    part_cols = set(partition_columns or [])
     type_of = {f.name: f.dataType for f in schema.fields}
-    colset = frozenset(type_of)
-    collations = collations or {}
-    out: list[_Conjunct] = []
-
-    def _add_cmp(col: str, op: str, v: Any) -> None:
-        mode = _collation_mode(collations.get(col), [v])
-        if mode is None:
-            return
-        if mode == "ci" and op not in ("=", "==", "!=", "<>"):
-            return  # no sound range test under case folding
-        out.append(_Conjunct("cmp", col, op, [v], ci=mode == "ci"))
-
-    for raw in split_conjuncts(predicate):
-        c = _strip_parens(raw)
-        m = _NULL_RE.match(c)
-        if m and m.group(1) in type_of:
-            out.append(
-                _Conjunct("notnull" if m.group(2) else "isnull", m.group(1), None, [])
-            )
-            continue
-        m = _IN_RE.match(c)
-        if m and m.group(1) in type_of:
-            vals = [
-                _parse_literal(v, type_of[m.group(1)], colset)
-                for v in m.group(2).split(",")
-            ]
-            if all(v is not None for v in vals) and vals:
-                mode = _collation_mode(collations.get(m.group(1)), vals)
-                if mode is not None:
-                    out.append(
-                        _Conjunct(
-                            "in", m.group(1), None, vals, ci=mode == "ci"
-                        )
-                    )
-            continue
-        m = _CMP_RE.match(c)
-        if not (m and m.group(1) in type_of):
-            m2 = _CMP_REV_RE.match(c)
-            if m2 and m2.group(3) in type_of:
-                m = None
-                col, op, lit = m2.group(3), _FLIP[m2.group(2)], m2.group(1)
-                v = _parse_literal(lit, type_of[col], colset)
-                if v is not None:
-                    _add_cmp(col, op, v)
-            continue
-        col, op, lit = m.group(1), m.group(2), m.group(3)
-        v = _parse_literal(lit, type_of[col], colset)
-        if v is not None:
-            _add_cmp(col, op, v)
-    return out
+    tested = {c.col for c in conjuncts} & part_cols
+    for f in files:
+        raw = f.get("stats")
+        try:
+            stats = json.loads(raw) if raw else {}
+        except (TypeError, ValueError):
+            stats = {}
+        pvs: dict[str, Any] = {}
+        for col in tested:
+            raw_pv = (f.get("partitionValues") or {}).get(col)
+            if raw_pv is None:
+                pvs[col] = None
+            elif raw_pv != "":
+                pv = _typed(str(raw_pv), True, type_of[col])
+                if pv is not None:
+                    pvs[col] = pv
+        yield f, stats, pvs
 
 
 def prune_files(
@@ -780,28 +1000,47 @@ def prune_files(
     if not conjuncts:
         return files
     part_cols = set(partition_columns or [])
-    type_of = {f.name: f.dataType for f in schema.fields}
     kept = []
-    for f in files:
-        raw = f.get("stats")
-        try:
-            stats = json.loads(raw) if raw else {}
-        except (TypeError, ValueError):
-            stats = {}
-        ok = True
-        for c in conjuncts:
-            pv = None
-            if c.col in part_cols:
-                raw_pv = (f.get("partitionValues") or {}).get(c.col)
-                if raw_pv is None:
-                    continue  # null partition — only IS NULL could prune; skip
-                quoted_pv = "'" + str(raw_pv).replace("'", "''") + "'"
-                pv = _parse_literal(quoted_pv, type_of[c.col])
-                if pv is None:
-                    continue
-            if not c.keep(stats, pv):
-                ok = False
-                break
-        if ok:
+    for f, stats, pvs in _file_tests(files, conjuncts, schema, part_cols):
+        if all(
+            c.keep(stats, None)
+            if c.col not in part_cols
+            # a null or unparseable partition value never prunes
+            else pvs.get(c.col) is None or c.keep(stats, pvs[c.col])
+            for c in conjuncts
+        ):
             kept.append(f)
     return kept
+
+
+def cover_files(
+    files: list[dict],
+    predicate: str,
+    schema: StructType,
+    partition_columns: list[str] | None = None,
+    collations: "dict[str, str] | None" = None,
+) -> list[dict]:
+    """The files every row of which matches ``predicate`` — a proof,
+    not advice: a DML drops these files whole, unread.  Empty unless
+    every top-level conjunct parses (no top-level OR, none dropped)
+    and is exact (see :func:`_exact_literal`); then a file is covered
+    when each conjunct holds for its partition value or, on a data
+    column, when its stats carry ``nullCount`` 0 and a [min, max]
+    inside the conjunct (``=``/``IN`` need min == max == a literal)."""
+    groups = _conjunct_groups(predicate, schema, collations)
+    if not groups or not all(groups):
+        return []
+    conjuncts = [c for g in groups for c in g]
+    if not all(c.exact for c in conjuncts):
+        return []
+    part_cols = set(partition_columns or [])
+    return [
+        f
+        for f, stats, pvs in _file_tests(files, conjuncts, schema, part_cols)
+        if all(
+            c.col in pvs and c.covers(stats, True, pvs[c.col])
+            if c.col in part_cols
+            else c.covers(stats, False, None)
+            for c in conjuncts
+        )
+    ]
