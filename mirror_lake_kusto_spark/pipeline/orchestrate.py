@@ -254,6 +254,8 @@ class MirrorPipeline:
         Call repeatedly to drain (one-shot mode processes each pending
         batch; continuous mode wraps this in a poll loop, I1)."""
         resumed = self.state.incomplete_batch(self.table)
+        # ONE read of the source log serves every phase of the batch
+        src = DL.snapshot(self.source)
         if resumed is not None and self._only_partial_staging_open(resumed):
             # previous snapshot-diff chunk finished its items; the batch
             # stays open purely to hold back the high-water mark —
@@ -265,14 +267,14 @@ class MirrorPipeline:
             start_tx = items[0]["start_tx_id"]
             end_tx = items[0]["end_tx_id"]
         else:
-            discovered = self._discover()
+            discovered = self._discover(src)
             if discovered is None:
                 return {"status": "up-to-date"}
             items, start_tx, end_tx = discovered
             self.state.persist(items)
 
-        self._analyze(items, end_tx)
-        n_staged = self._stage_and_load(items, end_tx)
+        self._analyze(items, src)
+        n_staged = self._stage_and_load(items, end_tx, src)
         n_deleted_paths = self._apply_removes(items)
         partial = any(
             it["action"] == "StagingTable"
@@ -364,23 +366,26 @@ class MirrorPipeline:
 
     # -- phases -------------------------------------------------------------
 
-    def _discover(self):
+    def _discover(self, src: DL.Snapshot):
+        """The next batch from the source snapshot ``src``: its commit
+        listing, protocol, metaData at the batch's end and the raw
+        commits of the span all come from that one read."""
         hwm = self.state.high_water(self.table)
-        versions = DL.list_commit_versions(self.source)
+        versions = src.commits
         if not versions or versions[-1] <= hwm:
             # a coordinated/catalog source can look "up-to-date" on the
             # filesystem while the coordinator holds staged commits the
             # mirror can never serve — stall LOUDLY, not silently
             # (round 8; the staleness branch of the protocol check)
             if versions and DL.unbackfilled_commit_versions(self.source):
-                DL.check_protocol_supported(self.source)
+                src.check_protocol()
             return None
         end_tx = versions[-1]
         # the incremental path must not outrun the reader's protocol
         # support: a v2Checkpoint/unknown-feature upgrade makes future
         # log shapes unreadable — stop BEFORE ingesting past it
         # (reference throw: TransactionLogEntry.cs:341-342)
-        DL.check_protocol_supported(self.source, end_tx)
+        src.at(end_tx).check_protocol()
         start_tx = hwm + 1
         snapshot_chunk = None  # set on the snapshot-diff path
         if versions[0] > hwm + 1:
@@ -392,13 +397,13 @@ class MirrorPipeline:
             # surviving JSON commits alone miss every checkpoint-only
             # file, and with empty processed state the snapshot diff
             # yields exactly the full active snapshot.
-            schema_item = self._check_schema(hwm, end_tx)
+            schema_item = self._check_schema(hwm, src.at(end_tx))
             add_rows, remove_rows, snapshot_chunk = self._chunked_diff(
                 end_tx
             )
         else:
-            end_tx, first_n = self._cap_span(hwm, end_tx)
-            schema_item = self._check_schema(hwm, end_tx)
+            end_tx, first_n = self._cap_span(hwm, end_tx, versions)
+            schema_item = self._check_schema(hwm, src.at(end_tx))
             if first_n > self.max_items_per_batch:
                 # FAT COMMIT: one commit alone exceeds the driver item
                 # budget (a 100k-file backfill commit).  The coalesced
@@ -433,7 +438,7 @@ class MirrorPipeline:
                 dv_extra_adds = self._dv_delta_snapshot(end_tx)
             else:
                 dv_extra_adds = self._dv_delta_incremental(
-                    hwm, end_tx, add_rows
+                    hwm, end_tx, add_rows, versions
                 )
         else:
             self._check_no_deletion_vectors(add_rows)
@@ -441,7 +446,7 @@ class MirrorPipeline:
             # commit (remove(P) + add(P, DV) on one path cancels to
             # nothing) — scan the RAW span too, else the mirror
             # silently diverges from the source
-            self._check_span_has_no_dvs(hwm, end_tx)
+            self._check_span_has_no_dvs(hwm, end_tx, versions)
         now = self.now_fn().isoformat()
         staging = self._item(start_tx, end_tx, "StagingTable", "Initial", now)
         if snapshot_chunk is not None:
@@ -501,7 +506,9 @@ class MirrorPipeline:
             return add_rows, remove_rows[:cap], "snapshot-chunk-partial"
         return add_rows, remove_rows, "snapshot-chunk-final"
 
-    def _cap_span(self, hwm: int, end_tx: int) -> tuple[int, int]:
+    def _cap_span(
+        self, hwm: int, end_tx: int, versions: list[int]
+    ) -> tuple[int, int]:
         """Commit-boundary chunking: choose the largest prefix of the
         pending versions whose cumulative action count stays under
         max_items_per_batch (always at least one commit).  Counts are
@@ -511,11 +518,7 @@ class MirrorPipeline:
         count above the cap means even a single-commit batch would
         blow the driver budget and the caller must chunk WITHIN it."""
         cap = self.max_items_per_batch
-        pending = [
-            v
-            for v in DL.list_commit_versions(self.source)
-            if hwm < v <= end_tx
-        ]
+        pending = [v for v in versions if hwm < v <= end_tx]
         total = 0
         chosen = pending[0]
         first_n = 0
@@ -614,11 +617,15 @@ class MirrorPipeline:
             "internal_state": None,
         }
 
-    def _check_schema(self, hwm: int, end_tx: int) -> dict[str, Any] | None:
+    def _check_schema(
+        self, hwm: int, at_end: DL.Snapshot
+    ) -> dict[str, Any] | None:
         """Schema fixed per mirror lifetime; change mid-stream throws
-        (TransactionLog.cs:153-157 parity).  Returns the Schema item to
-        record on first discovery, else None."""
-        meta = DL.latest_metadata(self.spark, self.source, upto=end_tx)
+        (TransactionLog.cs:153-157 parity).  ``at_end`` is the source
+        snapshot at the batch's end.  Returns the Schema item to record
+        on first discovery, else None."""
+        end_tx = at_end.version
+        meta = at_end.metadata
         if meta is None:
             raise ValueError(f"no metaData action in {self.source}")
         recorded = self._recorded_schema()
@@ -902,7 +909,7 @@ class MirrorPipeline:
         rows = self.state.current_items(self.table, "Schema")
         return max(rows, key=lambda r: r["start_tx_id"]) if rows else None
 
-    def _analyze(self, items: list[dict], end_tx: int) -> None:
+    def _analyze(self, items: list[dict], src: DL.Snapshot) -> None:
         """O4 empty-file skip + O5 go-back retention skip, with the
         creation-time expression batched over distinct partition tuples
         (one createDataFrame + F.expr round trip = the reference's ONE
@@ -921,7 +928,7 @@ class MirrorPipeline:
             return
         cutoff = self.now_fn() - _dt.timedelta(days=self.go_back_days)
         pending = [i for i in add_items if i["state"] == "Initial"]
-        creation = self._creation_times(pending)
+        creation = self._creation_times(pending, src)
         for it in pending:
             if _item_dv(it)[1]:
                 # a DV re-stage CORRECTS rows already in the mirror
@@ -970,7 +977,9 @@ class MirrorPipeline:
         self._ct_expr_resolved = expr
         return expr
 
-    def _creation_times(self, items: list[dict]) -> dict[str, _dt.datetime]:
+    def _creation_times(
+        self, items: list[dict], src: DL.Snapshot
+    ) -> dict[str, _dt.datetime]:
         """blob path -> creation time.  With an expression: evaluate it
         server-side over p0..pn partition-value columns (J1); without:
         the blob's delta modificationTime."""
@@ -984,8 +993,7 @@ class MirrorPipeline:
                 for i in items
                 if i["delta_timestamp"] is not None
             }
-        meta = DL.latest_metadata(self.spark, self.source)
-        part_cols = meta.get("partitionColumns") or []
+        part_cols = src.metadata.get("partitionColumns") or []
         ct_expr = self._resolved_creation_expr(
             [f"p{j}" for j in range(len(part_cols))]
         )
@@ -1020,12 +1028,15 @@ class MirrorPipeline:
                     out[path] = r["_ct"]
         return out
 
-    def _stage_and_load(self, items: list[dict], end_tx: int) -> int:
+    def _stage_and_load(
+        self, items: list[dict], end_tx: int, src: DL.Snapshot
+    ) -> int:
         """Read surviving add blobs in ONE scan whatever their partition
         tuples, attach typed partition values (O6/A7) and lineage
         columns (H5) from one broadcast per-file frame
         (``delta_log.scan_with_file_frame``), and publish with ONE
-        idempotent atomic commit (K5/O11/I3)."""
+        idempotent atomic commit (K5/O11/I3).  The source is read from
+        its snapshot ``src``."""
         todo = [i for i in items if i["action"] == "Add" and i["state"] == "Analyzed"]
         if not todo:
             return 0
@@ -1070,7 +1081,8 @@ class MirrorPipeline:
                 f"{self._lineage_in(sorted(restage_paths))} "
                 f"AND MLK_BatchTxId < {int(end_tx)}"
             )
-        meta = DL.latest_metadata(self.spark, self.source, upto=end_tx)
+        at_end = src.at(end_tx)
+        meta = at_end.metadata
         # source row tracking: carry every row's SOURCE identity into
         # the mirror as a lineage column — repacking would otherwise
         # silently strip the lineage the source guaranteed
@@ -1085,7 +1097,7 @@ class MirrorPipeline:
         base_of = (
             {
                 f["path"]: f.get("baseRowId")
-                for f in DL.snapshot_files(self.spark, self.source, upto=end_tx)
+                for f in at_end.files(self.spark)
             }
             if rt_src
             else {}
@@ -1125,9 +1137,7 @@ class MirrorPipeline:
         # "Domain Metadata"): a consumer of the MIRROR must see the
         # domains the SOURCE carried.  delta.* domains are per-table
         # internals (row-id watermarks, clustering state) and stay put.
-        for domain, conf in DL.latest_domain_metadata(
-            self.source, upto=end_tx
-        ).items():
+        for domain, conf in at_end.domains.items():
             if domain.startswith("delta."):
                 continue
             extra_actions.append(
@@ -1146,7 +1156,9 @@ class MirrorPipeline:
             it["state"] = "Staged"
         return len(todo)
 
-    def _check_span_has_no_dvs(self, hwm: int, end_tx: int) -> None:
+    def _check_span_has_no_dvs(
+        self, hwm: int, end_tx: int, versions: list[int]
+    ) -> None:
         """Raw-commit scan of (hwm, end_tx] for deletion-vector adds:
         a merge-on-read DELETE writes remove(P)+add(P,DV) on the SAME
         path, which the coalesced segment cancels away entirely — the
@@ -1154,7 +1166,7 @@ class MirrorPipeline:
         the same data _cap_span already line-counts)."""
         from ..sources.delta_log import UnsupportedTableFeature
 
-        for v in DL.list_commit_versions(self.source):
+        for v in versions:
             if not (hwm < v <= end_tx):
                 continue
             for act in DL._read_commit(self.source, v):
@@ -1203,7 +1215,7 @@ class MirrorPipeline:
         return out
 
     def _dv_delta_incremental(
-        self, hwm: int, end_tx: int, add_rows
+        self, hwm: int, end_tx: int, add_rows, versions: list[int]
     ) -> list[dict]:
         """Materialize-mode DV delta over the raw span (hwm, end_tx]:
         paths whose FINAL span action is an add but which the
@@ -1212,7 +1224,7 @@ class MirrorPipeline:
         re-stage Add (old lineage rows deleted in the staging step).
         Driver cost: the same commit JSONs _cap_span already read."""
         final: dict[str, dict | None] = {}
-        for v in DL.list_commit_versions(self.source):
+        for v in versions:
             if not (hwm < v <= end_tx):
                 continue
             # two passes per commit — removes then adds — so a commit

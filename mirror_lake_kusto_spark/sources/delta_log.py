@@ -25,18 +25,25 @@ millions of add entries.
 
 Log replay.  Every question about the table's state at a version —
 its active files, metaData, protocol, txn versions, domain metadata,
-a file's prior deletion vector — reads the same :func:`log_segment`:
+a file's prior deletion vector — is answered from one
+:class:`Snapshot`, which :func:`snapshot` builds from ONE commit
+listing and ONE ``_last_checkpoint`` read: its :func:`log_segment` is
 the ``_last_checkpoint`` checkpoint when it is at or before the
 version (else the newest complete one the listing shows at or before
 it), plus the commits after it, which must run without a gap to the
 version.  A version the log can no longer rebuild (history truncated
 past every usable checkpoint, or a missing commit) raises ValueError
 naming the earliest readable version, instead of answering from a
-partial log.  The answers are folds over one newest-first iterator
-(:func:`_replay`: commits from newest to oldest, then only the
-checkpoint columns asked for): metaData and protocol stop at the first
-hit, txn and domain metadata keep the newest action per key, and a
-file's newest action decides whether it is live.
+partial log.  The answers are lazy folds over one newest-first
+iterator (:func:`_replay`: commits from newest to oldest, then only
+the checkpoint columns asked for), each run at most once per
+snapshot: metaData and protocol stop at the first hit, txn and domain
+metadata keep the newest action per key, and a file's newest action
+decides whether it is live.  The public lookups (``latest_metadata``,
+``snapshot_files``, ...) each take their own snapshot; a caller with
+several questions takes one and asks it all of them.  The snapshot's
+version is also a writer's conflict window: ``DeltaSink`` checks a
+commit against every commit made after the version its operation read.
 """
 
 from __future__ import annotations
@@ -564,18 +571,11 @@ class LogSegment(NamedTuple):
     commits: list[int]
 
 
-def log_segment(table_path: str, upto: int | None = None) -> LogSegment:
-    """The checkpoint plus commit tail that rebuilds the table state at
-    ``upto`` (default, or past the head: the head; -1 for an empty
-    log).  The checkpoint is ``_last_checkpoint`` when it is at or
-    before the version, else the newest complete checkpoint at or
-    before it that the listing shows; the commits (from
-    :func:`list_commit_versions`, a coordinated tail included) must
-    run without a gap from it — or from v0 — to the version.  Raises
-    ValueError, naming the earliest readable version, when they do
-    not: answering from a partial log returns wrong state."""
-    commits = list_commit_versions(table_path)
-    pointer = read_last_checkpoint(table_path)
+def _cut_segment(
+    table_path: str, commits: list[int], pointer: int | None, upto: int | None
+) -> LogSegment:
+    """The segment at ``upto`` cut from one commit listing and one
+    ``_last_checkpoint`` read (see :func:`log_segment`)."""
     head = max(commits[-1] if commits else -1, -1 if pointer is None else pointer)
     version = head if upto is None else min(upto, head)
     ckpt = pointer
@@ -599,6 +599,148 @@ def log_segment(table_path: str, upto: int | None = None) -> LogSegment:
         + "; the earliest readable version is "
         + (str(min(readable)) if readable else "none")
     )
+
+
+class Snapshot:
+    """The table's state at one version, read once: one
+    :class:`LogSegment` and the commit listing it was cut from.  Each
+    question about that state is a lazy fold over the segment's
+    newest-first replay, run at most once per snapshot: ``metadata``,
+    ``protocol`` (and the :meth:`check_protocol` verdict), ``files``
+    (the live add actions), ``domains`` and ``txns``.  Built only by
+    :func:`snapshot`; :meth:`at` re-cuts an older version from the
+    same listing without listing the log again.  Values handed out are
+    fresh copies, so a caller may edit them."""
+
+    def __init__(
+        self,
+        table_path: str,
+        commits: list[int],
+        pointer: int | None,
+        upto: int | None,
+    ):
+        self.table_path = table_path
+        #: every readable commit version the listing showed, ascending
+        self.commits = commits
+        self._pointer = pointer
+        self._upto = upto
+        self.segment = _cut_segment(table_path, commits, pointer, upto)
+        self._folds: dict[str, Any] = {}
+
+    @property
+    def version(self) -> int:
+        return self.segment.version
+
+    def at(self, version: int) -> "Snapshot":
+        """The snapshot at ``version``, cut from the same listing; it
+        shares this one's folds when it is the same segment."""
+        snap = Snapshot(self.table_path, self.commits, self._pointer, version)
+        if snap.segment == self.segment:
+            snap._folds = self._folds
+        return snap
+
+    def _fold(self, key, compute):
+        if key not in self._folds:
+            self._folds[key] = compute()
+        return self._folds[key]
+
+    def _first(self, kind: str):
+        return self._fold(
+            kind,
+            lambda: next(_newest_first(self.table_path, self.segment, kind), None),
+        )
+
+    @property
+    def metadata(self) -> dict[str, Any] | None:
+        """The newest metaData action (schema, partition columns,
+        configuration), or None."""
+        return _conform(self._first("metaData"), METADATA_SCHEMA)
+
+    @property
+    def protocol(self) -> dict | None:
+        """The newest protocol action, or None."""
+        return _conform(self._first("protocol"), PROTOCOL_SCHEMA)
+
+    def check_protocol(self) -> None:
+        """Raise UnsupportedTableFeature unless this engine can read
+        the table at this version (:func:`check_protocol_supported`)."""
+        # the verdict depends on the version asked for, not only on
+        # the segment read (a staged tail past the head is refused)
+        err = self._fold(("verdict", self._upto), self._verdict)
+        if err is not None:
+            raise err
+
+    def _verdict(self) -> Exception | None:
+        try:
+            _check_protocol(self.table_path, self, self._upto)
+        except UnsupportedTableFeature as exc:
+            return exc
+        return None
+
+    def files(self, spark: SparkSession | None) -> list[dict[str, Any]]:
+        """The live files (the protocol is checked first): the
+        driver-side replay, or a Spark replay of the segment when its
+        commits exceed ``_DRIVER_JSON_BYTES``."""
+        self.check_protocol()
+
+        def live():
+            try:
+                return _live_files(self.table_path, self.segment)
+            except _LogTooBig:
+                return _spark_live_files(spark, self.table_path, self.segment)
+
+        return [dict(f) for f in self._fold("files", live)]
+
+    @property
+    def domains(self) -> dict[str, str]:
+        """Live domain metadata: domain -> configuration JSON
+        (PROTOCOL.md "Domain Metadata": per domain the newest action
+        wins; a ``removed: true`` tombstone drops it)."""
+        return dict(self._fold("domains", self._live_domains))
+
+    def _live_domains(self) -> dict[str, str]:
+        newest: dict[str, dict] = {}
+        for dm in _newest_first(self.table_path, self.segment, "domainMetadata"):
+            newest.setdefault(dm.get("domain") or "", dm)
+        return {
+            d: dm.get("configuration") or ""
+            for d, dm in sorted(newest.items())
+            if not dm.get("removed")
+        }
+
+    @property
+    def txns(self) -> dict[str, int]:
+        """The newest ``txn`` version per idempotent-writer appId."""
+        return dict(self._fold("txns", self._txn_versions))
+
+    def _txn_versions(self) -> dict[str, int]:
+        out: dict[str, int] = {}
+        for t in _newest_first(self.table_path, self.segment, "txn"):
+            if t.get("appId") and t.get("version") is not None:
+                out.setdefault(t["appId"], int(t["version"]))
+        return out
+
+
+def snapshot(table_path: str, upto: int | None = None) -> Snapshot:
+    """The table's :class:`Snapshot` at ``upto`` (default, or past the
+    head: the head): ONE :func:`list_commit_versions` listing and ONE
+    :func:`read_last_checkpoint` read, cut into the segment that
+    :func:`log_segment` describes."""
+    commits = list_commit_versions(table_path)
+    return Snapshot(table_path, commits, read_last_checkpoint(table_path), upto)
+
+
+def log_segment(table_path: str, upto: int | None = None) -> LogSegment:
+    """The checkpoint plus commit tail that rebuilds the table state at
+    ``upto`` (default, or past the head: the head; -1 for an empty
+    log).  The checkpoint is ``_last_checkpoint`` when it is at or
+    before the version, else the newest complete checkpoint at or
+    before it that the listing shows; the commits (from
+    :func:`list_commit_versions`, a coordinated tail included) must
+    run without a gap from it — or from v0 — to the version.  Raises
+    ValueError, naming the earliest readable version, when they do
+    not: answering from a partial log returns wrong state."""
+    return snapshot(table_path, upto).segment
 
 
 def checkpoint_files(table_path: str, version: int) -> list[str]:
@@ -739,14 +881,23 @@ def read_actions(
     checkpoint plus the commits after it (O1)."""
     if use_checkpoint and after < 0:
         seg = log_segment(table_path, upto)
-        ckpt_version, versions = seg.checkpoint, seg.commits
-    else:
-        ckpt_version = None
-        versions = [
-            v
-            for v in list_commit_versions(table_path)
-            if after < v and (upto is None or v <= upto)
-        ]
+        return _segment_actions(spark, table_path, seg.checkpoint, seg.commits)
+    versions = [
+        v
+        for v in list_commit_versions(table_path)
+        if after < v and (upto is None or v <= upto)
+    ]
+    return _segment_actions(spark, table_path, None, versions)
+
+
+def _segment_actions(
+    spark: SparkSession,
+    table_path: str,
+    ckpt_version: int | None,
+    versions: list[int],
+) -> DataFrame:
+    """The actions of the checkpoint at ``ckpt_version`` (if any) and
+    of the commits ``versions``, each row tagged with its ``tx_id``."""
     srcs: list[DataFrame] = []
     if ckpt_version is not None:
         ckpt = read_parquet(spark, *checkpoint_files(table_path, ckpt_version))
@@ -898,10 +1049,7 @@ def latest_metadata(
     'latest schema at txId' (TableStatus.cs:99-106).  Driver-side: the
     first hit of the newest-first replay, so one lookup reads at most
     the commits since the last checkpoint."""
-    seg = log_segment(table_path, upto)
-    return _conform(
-        next(_newest_first(table_path, seg, "metaData"), None), METADATA_SCHEMA
-    )
+    return snapshot(table_path, upto).metadata
 
 
 def file_actions(
@@ -915,7 +1063,11 @@ def file_actions(
     ``(tx_id, path, is_add, partitionValues, size, numRecords,
     dataChange, modificationTime)``; numRecords parsed from add.stats
     (H7, TransactionLogEntry.cs:345-361)."""
-    acts = read_actions(spark, table_path, after, upto, use_checkpoint)
+    return _file_rows(read_actions(spark, table_path, after, upto, use_checkpoint))
+
+
+def _file_rows(acts: DataFrame) -> DataFrame:
+    """:func:`file_actions` over an actions frame."""
     adds = acts.filter(F.col("add").isNotNull()).select(
         "tx_id",
         F.col("add.path").alias("path"),
@@ -1194,19 +1346,17 @@ def check_protocol_supported(table_path: str, upto: int | None = None) -> None:
     action (at or before ``upto``) is readable with basic reader
     version 1; a table with no protocol action anywhere is treated as
     version 1."""
-    _check_protocol(table_path, log_segment(table_path, upto), upto)
+    snapshot(table_path, upto).check_protocol()
 
 
-def _check_protocol(
-    table_path: str, seg: LogSegment, upto: int | None
-) -> None:
-    """:func:`check_protocol_supported` over an already-built segment."""
-    head = seg.version
+def _check_protocol(table_path: str, snap: Snapshot, upto: int | None) -> None:
+    """:func:`check_protocol_supported` over an already-read snapshot."""
+    head = snap.version
     cache_key = (_norm_table(table_path), head, upto)
     if cache_key in _PROTOCOL_OK:
         return
     try:
-        proto = next(_newest_first(table_path, seg, "protocol"), None)
+        proto = snap._first("protocol")
     except UnsupportedTableFeature:
         raise
     except Exception as exc:
@@ -1327,13 +1477,15 @@ def snapshot_files(
     Driver fast path (checkpoint via pyarrow + JSON commits via json)
     when the log is driver-scale; the Spark replay remains the fallback
     for logs past _DRIVER_JSON_BYTES."""
-    seg = log_segment(table_path, upto)
-    _check_protocol(table_path, seg, upto)
-    try:
-        return _live_files(table_path, seg)
-    except _LogTooBig:
-        pass
-    fa = file_actions(spark, table_path, upto=upto)
+    return snapshot(table_path, upto).files(spark)
+
+
+def _spark_live_files(
+    spark: SparkSession, table_path: str, seg: LogSegment
+) -> list[dict[str, Any]]:
+    """The Spark twin of :func:`_live_files`: per-path argmax(tx_id)
+    over the segment's actions, for a segment past the driver budget."""
+    fa = _file_rows(_segment_actions(spark, table_path, seg.checkpoint, seg.commits))
     latest = (
         fa.groupBy("path")
         .agg(
@@ -1475,8 +1627,9 @@ def read_snapshot(
         if upto is not None:
             raise ValueError("pass either upto= or timestamp=, not both")
         upto = resolve_timestamp(table_path, timestamp)
-    files = snapshot_files(spark, table_path, upto=upto)
-    meta = latest_metadata(spark, table_path, upto=upto)
+    snap = snapshot(table_path, upto)
+    files = snap.files(spark)
+    meta = snap.metadata
     if row_ids and str(
         ((meta or {}).get("configuration") or {}).get(
             "delta.enableRowTracking", ""
@@ -2211,8 +2364,9 @@ def read_changes(
     if the span predates the retained log or a removed file was
     vacuumed — silent under-reporting is the one failure mode an
     incremental consumer cannot detect."""
-    check_protocol_supported(table_path, to_version)
-    versions = list_commit_versions(table_path)
+    snap = snapshot(table_path, to_version)
+    snap.check_protocol()
+    versions = snap.commits
     span = [
         v
         for v in versions
@@ -2241,7 +2395,7 @@ def read_changes(
             raise ValueError(
                 f"empty change span: from {from_version} > to {to_version}"
             )
-    meta = latest_metadata(spark, table_path, upto=to_version)
+    meta = snap.metadata
     if meta is None:
         raise ValueError(f"no table metadata at {table_path}")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
@@ -2265,7 +2419,7 @@ def read_changes(
     mor: dict[int, tuple[list[dict], list[dict]]] = {}
     _dv_blob_cache: dict = {}  # span-wide: consecutive delete_dv
     # commits share .bin blobs (old side == previous new side)
-    proto = latest_protocol(table_path, to_version)
+    proto = snap.protocol
     dv_possible = "deletionVectors" in (
         (proto or {}).get("readerFeatures") or []
     )
@@ -2455,19 +2609,7 @@ def latest_domain_metadata(
     """Live domain metadata at ``upto``: domain -> configuration JSON
     (PROTOCOL.md "Domain Metadata" reconciliation: per domain keep the
     newest action; a ``removed: true`` tombstone drops it)."""
-    return _live_domains(table_path, log_segment(table_path, upto))
-
-
-def _live_domains(table_path: str, seg: LogSegment) -> dict[str, str]:
-    """:func:`latest_domain_metadata` over an already-built segment."""
-    newest: dict[str, dict] = {}
-    for dm in _newest_first(table_path, seg, "domainMetadata"):
-        newest.setdefault(dm.get("domain") or "", dm)
-    return {
-        d: dm.get("configuration") or ""
-        for d, dm in sorted(newest.items())
-        if not dm.get("removed")
-    }
+    return snapshot(table_path, upto).domains
 
 
 def reconciled_action_rows(
@@ -2485,8 +2627,8 @@ def reconciled_action_rows(
     faster on small logs; at 10M files the pyarrow path is a single
     sequential columnar encode, still cheaper than pickling rows into
     a Python-RDD-backed plan)."""
-    seg = log_segment(table_path, upto)
-    files = snapshot_files(spark, table_path, upto=seg.version)
+    snap = snapshot(table_path, upto)
+    files = snap.files(spark)
     blank = {
         "metaData": None,
         "add": None,
@@ -2495,34 +2637,28 @@ def reconciled_action_rows(
         "txn": None,
         "domainMetadata": None,
     }
-    meta = next(_newest_first(table_path, seg, "metaData"), None)
-    acts: list[dict] = [{**blank, "metaData": _conform(meta, METADATA_SCHEMA)}]
+    acts: list[dict] = [{**blank, "metaData": snap.metadata}]
     # carry the table's ACTUAL protocol: hardcoding the basic one would
     # silently downgrade a DV/feature table once the JSON history is
     # truncated past the checkpoint
-    proto = next(_newest_first(table_path, seg, "protocol"), None)
     acts.append(
         {
             **blank,
-            "protocol": _conform(proto, PROTOCOL_SCHEMA)
+            "protocol": snap.protocol
             or {"minReaderVersion": 1, "minWriterVersion": 2},
         }
     )
     # carry forward the newest txn version per appId (Delta checkpoints
     # retain txn actions so idempotent-writer recovery survives log
     # truncation)
-    txns: dict[str, int] = {}
-    for t in _newest_first(table_path, seg, "txn"):
-        if t.get("appId") and t.get("version") is not None:
-            txns.setdefault(t["appId"], int(t["version"]))
-    for app_id, version in sorted(txns.items()):
+    for app_id, version in sorted(snap.txns.items()):
         acts.append(
             {**blank, "txn": {"appId": app_id, "version": version, "lastUpdated": 0}}
         )
     # live domain metadata survives checkpointing (PROTOCOL.md: a
     # checkpoint that drops it loses the row-id high-water mark once
     # the JSON history is truncated)
-    for domain, conf in _live_domains(table_path, seg).items():
+    for domain, conf in snap.domains.items():
         acts.append(
             {
                 **blank,
@@ -2577,20 +2713,14 @@ def latest_protocol(
 ) -> dict | None:
     """Latest protocol action at-or-before ``upto`` (driver-side, the
     first hit of the newest-first replay) — None if none recorded."""
-    seg = log_segment(table_path, upto)
-    return _conform(
-        next(_newest_first(table_path, seg, "protocol"), None), PROTOCOL_SCHEMA
-    )
+    return snapshot(table_path, upto).protocol
 
 
 def last_txn_version(spark: SparkSession, table_path: str, app_id: str) -> int | None:
     """Newest committed ``txn`` version for an idempotent writer —
     exactly-once recovery reads this instead of trusting its own state
     (I3; the Delta analogue of the reference's restart re-detection,
-    DeltaTableOrchestration.cs:76-81).  Driver-side: the first hit of
-    the newest-first replay (commits, then the checkpoint's carried-
-    forward txn actions)."""
-    for t in _newest_first(table_path, log_segment(table_path), "txn"):
-        if t.get("appId") == app_id and t.get("version") is not None:
-            return int(t["version"])
-    return None
+    DeltaTableOrchestration.cs:76-81).  Driver-side: the newest-first
+    replay (commits, then the checkpoint's carried-forward txn
+    actions)."""
+    return snapshot(table_path).txns.get(app_id)

@@ -28,6 +28,7 @@ job over the log files.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -42,10 +43,13 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from . import fs as _fs
 from .delta_log import (
+    Snapshot,
     _backfilled_commit_versions,
+    _read_commit,
     log_dir,
     partition_dir_segment,
     partition_subdir,
+    snapshot,
 )
 from .skipping import file_stats_json
 from .tables import read_parquet
@@ -361,6 +365,28 @@ def _remove(f: dict, now: int, data_change: bool = True) -> dict:
     }
 
 
+def _operation(method):
+    """A public :class:`DeltaSink` operation: the outermost one reads
+    ONE snapshot of the table when it starts, every nested operation
+    reads the same one, and it is dropped when the outermost ends."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        outer = self._depth == 0
+        if outer:
+            self._snap = snapshot(self.path)
+            self._own_commit = None
+        self._depth += 1
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            self._depth -= 1
+            if outer:
+                self._snap = None
+
+    return run
+
+
 def _stamp_mapping_identity(
     fields: list[dict], conf: dict
 ) -> tuple[list[dict], int]:
@@ -398,7 +424,28 @@ class DeltaSink:
     types.  Every read goes through :meth:`_dml_scan` — the table
     reader's own :func:`delta_log.scan_with_file_frame` — every staged
     file through :meth:`_stage_adds`; ``reorg`` and ``optimize`` reuse
-    the same scan and rewrite (:meth:`_rewrite`)."""
+    the same scan and rewrite (:meth:`_rewrite`).
+
+    One snapshot per operation: each public operation reads ONE
+    :class:`delta_log.Snapshot` of the table when it starts
+    (:meth:`_state`), and everything it derives from the table —
+    column mapping, column types and fields, in-commit timestamps, row
+    tracking and its high-water mark, identity columns, the live
+    files — comes from that snapshot, so nothing outlives the
+    operation.  Its commits start from the version it read:
+    :meth:`_commit` checks its actions against every commit made since
+    that version (snapshot isolation with a conflict check, as Delta
+    writers do), then re-reads the snapshot at the new head before it
+    builds the commit.  An operation that commits more than once reads
+    at its own last commit before the next one."""
+
+    #: the snapshot the running operation reads; None outside one, and
+    #: after its own commit until it reads again
+    _snap: Snapshot | None = None
+    #: nesting depth of running operations
+    _depth = 0
+    #: the running operation's last commit, which its next read sees
+    _own_commit: int | None = None
 
     def __init__(
         self,
@@ -475,13 +522,11 @@ class DeltaSink:
         declares the feature) and already-declared tables."""
         import json as _json
 
-        from .delta_log import latest_protocol
-
         for _ in range(5):
             v = self._next_version()
             if v == 0:
                 return  # new table: bootstrap declares the feature
-            cur = latest_protocol(self.path)
+            cur = self._state().protocol
             up = upgraded_protocol(
                 cur, ("catalogManaged",), ("catalogManaged",)
             )
@@ -504,6 +549,15 @@ class DeltaSink:
         )
 
     # -- commit machinery ---------------------------------------------------
+
+    def _state(self) -> Snapshot:
+        """The snapshot the running operation reads (a fresh one
+        outside any operation)."""
+        if self._depth == 0:
+            return snapshot(self.path)
+        if self._snap is None:
+            self._snap = snapshot(self.path, self._own_commit)
+        return self._snap
 
     def _next_version(self) -> int:
         """Head+1 over BOTH the JSON commits and the checkpoint: after
@@ -555,6 +609,7 @@ class DeltaSink:
             n += 1
         return n
 
+    @_operation
     def _commit(
         self,
         actions: list[dict],
@@ -564,12 +619,21 @@ class DeltaSink:
         """Atomically create the next numbered commit file.  ``open(x)``
         fails if a concurrent writer won the version — retry with the
         next number (optimistic concurrency, Delta-style).
+
+        The commit starts from the version the operation read: it first
+        tries the version after it, and every commit past it is checked
+        against ``actions`` (:meth:`_check_conflicts`); when none
+        conflicts, the snapshot is re-read at the new head, so the
+        commit's metaData, row ids and timestamps are built on the
+        state it lands on.  A bare commit, made outside any operation
+        (its actions read nothing through this sink), starts at
+        :meth:`_next_version` and is checked from there.
         ``operation`` records a Delta-style ``commitInfo`` action (the
         audit row ``history()`` surfaces).  ``expected_version`` makes
         the commit compare-and-swap: it must land at exactly that
-        version or raise ConcurrentCommitConflict — the read-modify-
-        write primitive set_properties needs (a version stolen between
-        its read and its write would otherwise be overwritten blind)."""
+        version or raise ConcurrentCommitConflict — for a commit whose
+        actions name their own version (the row-id backfill's
+        ``defaultRowCommitVersion``)."""
         if operation is not None:
             actions = [
                 {
@@ -581,25 +645,34 @@ class DeltaSink:
                 },
                 *actions,
             ]
-        attempted: int | None = None
+        # the last version these actions are validated against
+        validated = self._state().version if self._depth > 1 else None
+        v = None if validated is None else validated + 1
         # per-_commit marker: which adds THIS call stamped (so a retry
         # re-stamps them from the fresh watermark, while adds that
         # arrived pre-assigned are never touched)
         self._rt_stamped_ids = set()
         while True:
-            v = self._next_version()
+            if v is None:
+                v = self._next_version()
             if expected_version is not None and v != expected_version:
                 raise ConcurrentCommitConflict(
                     f"expected to commit version {expected_version} but "
                     f"head moved to {v - 1}; re-read and retry"
                 )
-            if attempted is not None and v > attempted:
-                # lost the race: another writer committed [attempted, v).
-                # Re-submitting blindly is only safe when the winners
-                # touched disjoint files (concurrent DELETE/OPTIMIZE can
-                # otherwise both remove the same path) — Delta's
-                # conflict-detection rule, simplified to fail-on-overlap.
-                self._check_conflicts(range(attempted, v), actions)
+            if validated is None:
+                validated = v - 1
+            elif v - 1 > validated:
+                # other writers committed (validated, v): re-submitting
+                # is only safe when none of them conflicts with what
+                # this operation read and writes (concurrent
+                # DELETE/OPTIMIZE can otherwise both remove the same
+                # path) — Delta's conflict-detection rule, simplified
+                # to fail-on-overlap
+                self._check_conflicts(range(validated + 1, v), actions)
+                validated = v - 1
+            if self._state().version != validated:
+                self._snap = snapshot(self.path, validated)
             target = _fs.join(log_dir(self.path), TX_FMT.format(v) + ".json")
             body = []
             real_actions = [a for a in actions if "commitInfo" not in a]
@@ -693,9 +766,7 @@ class DeltaSink:
                     if widened:
                         feats.append("typeWidening")
                     if feats:
-                        from .delta_log import latest_protocol
-
-                        cur = latest_protocol(self.path)
+                        cur = self._state().protocol
                         need = [
                             f
                             for f in feats
@@ -724,80 +795,41 @@ class DeltaSink:
                     "\n".join(json.dumps(a) for a in body) + "\n",
                 )
             except FileExistsError:
-                # lost the race: another writer committed — its commit
-                # may carry new metadata (e.g. a rename), so the memo
-                # must be re-derived before we retry
-                self._mapping_cache = False
-                self._tbl_types_cache = False
-                self._fields_cache = False
-                self._ict_cache = None
-                self._rt_cache = None
-                self._rt_hwm_cache = None
-                self._rt_mats_cache = False
-                self._ident_cache = None
-                attempted = v
+                v = None  # lost the race: validate the winners, rebase
                 continue
-            if any("metaData" in a for a in body):
-                # our own metaData may have flipped table-level
-                # behaviors (ICT, column mapping, row tracking,
-                # identity, column types) — re-derive next time
-                self._tbl_types_cache = False
-                self._fields_cache = False
-                self._ict_cache = None
-                self._rt_cache = None
-                self._rt_mats_cache = False
-                self._ident_cache = None
-            for a in body:
-                dm = a.get("domainMetadata") or {}
-                if dm.get("domain") == "delta.rowTracking":
-                    self._rt_hwm_cache = int(
-                        json.loads(dm["configuration"])[
-                            "rowIdHighWaterMark"
-                        ]
-                    )
+            meta = next(
+                (a["metaData"] for a in body if "metaData" in a),
+                self._state().metadata,
+            )
+            # the operation's next read sees its own commit
+            self._snap = None
+            self._own_commit = v
             if (v + 1) % self.checkpoint_interval == 0 and not getattr(
                 self, "_ckpt_suspended", False
             ):
-                self._write_checkpoint(v)
+                self._write_checkpoint(v, meta)
             return v
 
-    #: memoized "table has delta.enableInCommitTimestamps=true"; None =
-    #: not yet derived.  Invalidated on a lost commit race and whenever
-    #: this writer commits metaData itself.
-    _ict_cache: "bool | None" = None
+    @staticmethod
+    def _conf_on(meta: dict | None, key: str) -> bool:
+        """Is the boolean table property ``key`` true in ``meta``?"""
+        conf = (meta or {}).get("configuration") or {}
+        return str(conf.get(key, "")).lower() == "true"
+
+    def _body_or_table_on(self, body, key: str) -> bool:
+        """Is table property ``key`` on for THIS commit?  A metaData
+        action in the body overrides the table state (the enabling
+        commit itself already carries the feature)."""
+        for a in body or ():
+            if a.get("metaData") is not None:
+                return self._conf_on(a["metaData"], key)
+        return self._conf_on(self._state().metadata, key)
 
     def _ict_enabled(self, body: list[dict]) -> bool:
         """Is in-commit-timestamp stamping on for THIS commit?  The
         enabling commit itself already stamps (PROTOCOL.md "In-Commit
-        Timestamps": required from the enablement commit onward), so
-        a metaData action in the body overrides the table state."""
-        for a in body:
-            md = a.get("metaData")
-            if md is not None:
-                return (
-                    str(
-                        (md.get("configuration") or {}).get(
-                            "delta.enableInCommitTimestamps", ""
-                        )
-                    ).lower()
-                    == "true"
-                )
-        if self._ict_cache is None:
-            from .delta_log import latest_metadata
-
-            try:
-                meta = latest_metadata(self.spark, self.path) or {}
-            except FileNotFoundError:
-                meta = {}
-            self._ict_cache = (
-                str(
-                    (meta.get("configuration") or {}).get(
-                        "delta.enableInCommitTimestamps", ""
-                    )
-                ).lower()
-                == "true"
-            )
-        return self._ict_cache
+        Timestamps": required from the enablement commit onward)."""
+        return self._body_or_table_on(body, "delta.enableInCommitTimestamps")
 
     def _stamp_ict(self, v: int, body: list[dict]) -> None:
         """Write ``commitInfo.inCommitTimestamp`` = max(now, prev + 1)
@@ -823,19 +855,20 @@ class DeltaSink:
             except FileNotFoundError:
                 prev = 0
         ict = max(now, prev + 1)
-        for a in body:
-            md = a.get("metaData")
-            if md is not None:
-                conf = md.get("configuration") or {}
-                if conf.get(
-                    "delta.inCommitTimestampEnablementVersion"
-                ) == str(v):
-                    # the enabling commit: the recorded enablement
-                    # clock must equal the inCommitTimestamp actually
-                    # stamped into this commit (PROTOCOL.md)
-                    conf["delta.inCommitTimestampEnablementTimestamp"] = (
-                        str(ict)
-                    )
+        key = "delta.enableInCommitTimestamps"
+        if not self._conf_on(self._state().metadata, key):
+            # the enabling commit records its own version and the
+            # inCommitTimestamp actually stamped into it as the
+            # enablement provenance (PROTOCOL.md); a retry at another
+            # version re-stamps both
+            for a in body:
+                md = a.get("metaData")
+                if md is not None:
+                    md["configuration"] = {
+                        **(md.get("configuration") or {}),
+                        "delta.inCommitTimestampEnablementVersion": str(v),
+                        "delta.inCommitTimestampEnablementTimestamp": str(ict),
+                    }
         for a in body:
             if "commitInfo" in a:
                 a["commitInfo"]["inCommitTimestamp"] = ict
@@ -852,59 +885,17 @@ class DeltaSink:
             },
         )
 
-    #: memoized "table has delta.enableRowTracking=true"; None = not
-    #: yet derived.  Same invalidation discipline as _ict_cache.
-    _rt_cache: "bool | None" = None
-    #: memoized row-id high-water mark; None = re-read from the log
-    _rt_hwm_cache: "int | None" = None
-
     def _rt_enabled(self, body: list[dict] | None = None) -> bool:
         """Is row tracking (PROTOCOL.md "Row Tracking") on for THIS
         commit?  A metaData action in the body overrides the table
         state (the enabling commit itself already assigns ids)."""
-        for a in body or ():
-            md = a.get("metaData")
-            if md is not None:
-                return (
-                    str(
-                        (md.get("configuration") or {}).get(
-                            "delta.enableRowTracking", ""
-                        )
-                    ).lower()
-                    == "true"
-                )
-        if self._rt_cache is None:
-            from .delta_log import latest_metadata
-
-            try:
-                meta = latest_metadata(self.spark, self.path) or {}
-            except FileNotFoundError:
-                meta = {}
-            self._rt_cache = (
-                str(
-                    (meta.get("configuration") or {}).get(
-                        "delta.enableRowTracking", ""
-                    )
-                ).lower()
-                == "true"
-            )
-        return self._rt_cache
+        return self._body_or_table_on(body, "delta.enableRowTracking")
 
     def _rt_hwm(self) -> int:
         """Current row-id high-water mark from the delta.rowTracking
         domain metadata (-1 when no id was ever assigned)."""
-        if self._rt_hwm_cache is None:
-            from .delta_log import latest_domain_metadata
-
-            conf = latest_domain_metadata(self.path).get(
-                "delta.rowTracking"
-            )
-            self._rt_hwm_cache = (
-                int(json.loads(conf).get("rowIdHighWaterMark", -1))
-                if conf
-                else -1
-            )
-        return self._rt_hwm_cache
+        conf = self._state().domains.get("delta.rowTracking")
+        return int(json.loads(conf).get("rowIdHighWaterMark", -1)) if conf else -1
 
     def _stamp_row_ids(self, v: int, body: list[dict]) -> None:
         """Assign fresh ``baseRowId`` / ``defaultRowCommitVersion`` to
@@ -1001,24 +992,22 @@ class DeltaSink:
         false commit re-adding every current file with a fresh
         baseRowId range + the watermark domain metadata — the same
         shape delta-spark's ALTER TABLE backfill writes."""
-        from .delta_log import latest_protocol, snapshot_files
-
-        cur = latest_protocol(self.path)
+        cur = self._state().protocol
         have = set((cur or {}).get("writerFeatures") or [])
         if not {"rowTracking", "domainMetadata"} <= have:
             self._commit_protocol_upgrade(
                 writer_features=("rowTracking", "domainMetadata")
             )
         for _attempt in range(5):
-            files = snapshot_files(self.spark, self.path)
-            todo = [f for f in files if f.get("baseRowId") is None]
+            snap = self._state()
+            todo = [f for f in snap.files(self.spark) if f.get("baseRowId") is None]
             if not todo:
                 break
-            self._rt_hwm_cache = None
             hwm = self._rt_hwm()
-            # pin the commit version (CAS) so defaultRowCommitVersion
-            # can be written INTO the backfill adds themselves
-            expected = self._next_version()
+            # the commit must land right after the version read (CAS),
+            # so defaultRowCommitVersion can be written INTO the
+            # backfill adds themselves
+            expected = snap.version + 1
             acts: list[dict] = []
             for f in sorted(todo, key=lambda f: f["path"]):
                 n = f.get("numRecords")
@@ -1063,10 +1052,9 @@ class DeltaSink:
                     operation="ROW TRACKING BACKFILL",
                     expected_version=expected,
                 )
-                self._rt_hwm_cache = hwm
                 break
             except ConcurrentCommitConflict:
-                continue
+                self._snap = snapshot(self.path)  # re-read, re-plan
         else:
             raise ConcurrentCommitConflict(
                 f"{self.path}: row-id backfill kept losing the commit "
@@ -1090,32 +1078,17 @@ class DeltaSink:
                 f"_row-commit-version-col-{suffix}",
         }
 
-    #: memoized _rt_mat_cols result; False = not yet derived (None is
-    #: a legal value).  One driver-side log walk per DELETE/OPTIMIZE
-    #: partition GROUP otherwise.
-    _rt_mats_cache: "tuple | bool" = False
-
     def _rt_mat_cols(self) -> tuple:
         """(materializedRowIdColumnName, materializedRowCommitVersion
         ColumnName) from the table configuration — (None, None) when
         not configured."""
-        if self._rt_mats_cache is not False:
-            return self._rt_mats_cache
-        from .delta_log import latest_metadata
-
-        try:
-            conf = (
-                latest_metadata(self.spark, self.path) or {}
-            ).get("configuration") or {}
-        except FileNotFoundError:
-            conf = {}
-        self._rt_mats_cache = (
+        conf = (self._state().metadata or {}).get("configuration") or {}
+        return (
             conf.get("delta.rowTracking.materializedRowIdColumnName"),
             conf.get(
                 "delta.rowTracking.materializedRowCommitVersionColumnName"
             ),
         )
-        return self._rt_mats_cache
 
     def _check_conflicts(self, versions, actions: list[dict]) -> None:
         """Delta's logical conflict rules (delta-io PROTOCOL.md +
@@ -1178,15 +1151,10 @@ class DeltaSink:
             if mine_adds and self._pending_schema != "{}"
             else None
         )
-        d = log_dir(self.path)
         for v in versions:
-            p = _fs.join(d, TX_FMT.format(v) + ".json")
-            if not self.fs.isfile(p):
-                continue
-            for line in self.fs.read_text(p).splitlines():
-                if not line.strip():
-                    continue
-                act = json.loads(line)
+            # _read_commit resolves a coordinated table's ratified
+            # staged tail: an unbackfilled winner is checked too
+            for act in _read_commit(self.path, v):
                 if "protocol" in act:
                     self._check_protocol_conflict(v, act["protocol"])
                 if "metaData" in act:
@@ -1201,12 +1169,10 @@ class DeltaSink:
                     )
                 if "domainMetadata" in act:
                     dom = act["domainMetadata"].get("domain") or ""
-                    if dom == "delta.rowTracking":
-                        # the winner advanced the row-id watermark:
-                        # NOT a conflict — _stamp_row_ids re-reads it
-                        # and rebases this commit's id range
-                        self._rt_hwm_cache = None
-                    elif dom in my_domains:
+                    # the winner advancing the row-id watermark is NOT
+                    # a conflict: the rebased commit re-reads it and
+                    # restamps its id range
+                    if dom != "delta.rowTracking" and dom in my_domains:
                         raise ConcurrentCommitConflict(
                             f"concurrent commit {v} wrote domain "
                             f"metadata for {dom!r} this commit also "
@@ -1395,13 +1361,11 @@ class DeltaSink:
         (checkpoint included, so a schema change after log truncation
         is still recorded), looked up once and reused by the
         typeChanges annotation."""
-        from .delta_log import latest_metadata
-
         if self._pending_schema == "{}" or any(
             "metaData" in a for a in actions
         ):
             return None
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         prev = None if meta is None else meta["schemaString"]
         if prev is None or self._schema_key(prev) == self._schema_key(
             self._pending_schema
@@ -1472,13 +1436,7 @@ class DeltaSink:
         # configuration (TBLPROPERTIES) must survive schema-evolving
         # commits — both carry forward from the previous metaData
         # instead of being regenerated/blanked
-        prev = None
-        try:
-            from .delta_log import latest_metadata
-
-            prev = latest_metadata(self.spark, self.path)
-        except Exception:
-            prev = None
+        prev = self._state().metadata
         conf = getattr(self, "_pending_configuration", None)
         if conf is None:
             conf = dict((prev or {}).get("configuration") or {})
@@ -1527,26 +1485,22 @@ class DeltaSink:
             "createdTime": int(time.time() * 1000),
         }
 
-    def _write_checkpoint(self, version: int) -> None:
+    def _write_checkpoint(self, version: int, meta: dict | None = None) -> None:
         """Flatten the whole log into ``<v>.checkpoint.parquet`` (or the
         protocol's multi-part ``<v>.checkpoint.<i>.<n>.parquet`` when
         ``checkpoint_parts`` > 1 — the shape a 10M-file table needs so
         the checkpoint itself writes and reads distributed) +
         ``_last_checkpoint`` (read path: DeltaTableGateway.cs:285-300).
         ``checkpoint_format='v2'`` writes the manifest+sidecar layout
-        instead (see _write_checkpoint_v2)."""
+        instead (see _write_checkpoint_v2).  ``meta`` is the table's
+        metaData at ``version`` when the caller holds it."""
         # the delta.checkpointPolicy TABLE PROPERTY is authoritative
         # when set (Delta's own switch — a foreign writer or
         # set_properties can flip a table to v2 checkpoints without
         # every writer changing its constructor args); the
         # constructor's checkpoint_format is the fallback
-        policy = self.checkpoint_format
-        try:
-            policy = self.properties().get(
-                "delta.checkpointPolicy"
-            ) or policy
-        except FileNotFoundError:
-            pass  # first-ever commit: no metadata yet
+        conf = (meta or self._state().metadata or {}).get("configuration")
+        policy = (conf or {}).get("delta.checkpointPolicy") or self.checkpoint_format
         if policy == "v2":
             return self._write_checkpoint_v2(version)
         from .delta_log import ACTIONS_SCHEMA, reconciled_action_rows
@@ -1596,10 +1550,8 @@ class DeltaSink:
         protocol before any behavior depending on it).  Checkpointing
         is suspended for this inner commit to avoid recursion when
         ``checkpoint_interval`` is small."""
-        from .delta_log import latest_protocol
-
         pr = upgraded_protocol(
-            latest_protocol(self.path), reader_features, writer_features
+            self._state().protocol, reader_features, writer_features
         )
         self._ckpt_suspended = True
         try:
@@ -1627,13 +1579,9 @@ class DeltaSink:
             StructType,
         )
 
-        from .delta_log import (
-            ACTIONS_SCHEMA,
-            latest_protocol,
-            reconciled_action_rows,
-        )
+        from .delta_log import ACTIONS_SCHEMA, reconciled_action_rows
 
-        cur = latest_protocol(self.path) or {}
+        cur = self._state().protocol or {}
         if "v2Checkpoint" not in set(
             cur.get("readerFeatures") or []
         ) or "v2Checkpoint" not in set(cur.get("writerFeatures") or []):
@@ -1759,17 +1707,13 @@ class DeltaSink:
         Returns (possibly re-ordered df, add tags or None)."""
         import pyspark.sql.functions as F
 
-        from .delta_log import snapshot_files
         from .skipping import (
             bounds_from_file_stats,
             hilbert_column,
             numeric_proxy,
         )
 
-        try:
-            ccols = self._clustering_columns()
-        except FileNotFoundError:
-            return df, None  # table doesn't exist yet (first append)
+        ccols = self._clustering_columns()
         if not ccols or any(c not in df.columns for c in ccols):
             # no declaration, or schema drift — the schema-change
             # handling downstream owns that failure mode
@@ -1789,10 +1733,7 @@ class DeltaSink:
             if lo is None:  # all-null / empty batch
                 lo = hi = 0.0
             bounds[c] = (float(lo), float(hi))
-        try:
-            files = snapshot_files(self.spark, self.path)
-        except FileNotFoundError:
-            files = []
+        files = self._state().files(self.spark)
         if files:
             got = bounds_from_file_stats(ccols, type_of, files)
             if got is not None:
@@ -1812,6 +1753,7 @@ class DeltaSink:
         out = out.sortWithinPartitions("_mlk_z").drop("_mlk_z")
         return out, {"MLK_CLUSTERED_BY": ",".join(ccols)}
 
+    @_operation
     def append(
         self,
         df: DataFrame,
@@ -1867,18 +1809,6 @@ class DeltaSink:
             }
         }
 
-    #: memoized _current_mapping result; False = not yet computed.
-    #: Invalidated by evolve_rename (the only in-process mutation) and
-    #: by a lost commit race (an external writer may have changed the
-    #: table's metadata)
-    _mapping_cache: "dict | None | bool" = False
-
-    #: memoized {column -> Delta JSON type} of the table's current
-    #: schema, for the append-upcast check; False = not yet derived.
-    #: Invalidated wherever _mapping_cache is (lost commit race, own
-    #: metaData commit) — the same events that can change the schema.
-    _tbl_types_cache: "dict | None | bool" = False
-
     def _upcast_widened(self, df: DataFrame) -> DataFrame:
         """Delta writer semantics after a type widening: input NARROWER
         than the table schema is cast up before staging, so
@@ -1889,22 +1819,7 @@ class DeltaSink:
         schema-change handling in _commit unchanged."""
         from .delta_log import is_type_widening
 
-        if self._tbl_types_cache is False:
-            from .delta_log import latest_metadata
-
-            try:
-                meta = latest_metadata(self.spark, self.path)
-            except FileNotFoundError:
-                meta = None
-            self._tbl_types_cache = (
-                None
-                if meta is None
-                else {
-                    f["name"]: f["type"]
-                    for f in json.loads(meta["schemaString"])["fields"]
-                }
-            )
-        tbl = self._tbl_types_cache
+        tbl = {f["name"]: f["type"] for f in self._table_fields()}
         if not tbl:
             return df
         casts = {}
@@ -1931,20 +1846,10 @@ class DeltaSink:
 
     def _current_mapping(self) -> dict | None:
         """Logical -> physical names when THIS table uses column
-        mapping (after evolve_rename), else None.  Memoized: the
-        metadata scan is driver-side remote I/O and sat on the append
-        hot path — a table that never used mapping paid a reverse log
-        walk per write."""
-        if self._mapping_cache is False:
-            from .delta_log import column_mapping_of, latest_metadata
+        mapping (after evolve_rename), else None."""
+        from .delta_log import column_mapping_of
 
-            try:
-                self._mapping_cache = column_mapping_of(
-                    latest_metadata(self.spark, self.path)
-                )
-            except FileNotFoundError:
-                self._mapping_cache = None
-        return self._mapping_cache
+        return column_mapping_of(self._state().metadata)
 
     def _stage_adds(
         self,
@@ -2076,6 +1981,7 @@ class DeltaSink:
         return actions
 
 
+    @_operation
     def add_constraint(self, name: str, expr: str) -> int:
         """ADD CONSTRAINT (PROTOCOL.md "CHECK Constraints"): record
         ``delta.constraints.<name> = <expr>`` in the table metadata and
@@ -2106,19 +2012,14 @@ class DeltaSink:
         )
         return self.set_properties({f"delta.constraints.{name}": expr})
 
+    @_operation
     def drop_constraint(self, name: str) -> int:
         """DROP CONSTRAINT: unset the property (the writer feature
         stays — features are never removed from a protocol)."""
         return self.set_properties({}, unset=(f"delta.constraints.{name}",))
 
     def _constraints(self) -> dict[str, str]:
-        from .delta_log import latest_metadata
-
-        try:
-            meta = latest_metadata(self.spark, self.path)
-        except FileNotFoundError:
-            return {}
-        conf = (meta or {}).get("configuration") or {}
+        conf = (self._state().metadata or {}).get("configuration") or {}
         pfx = "delta.constraints."
         return {
             k[len(pfx):]: v for k, v in conf.items() if k.startswith(pfx)
@@ -2138,6 +2039,7 @@ class DeltaSink:
                     f"{rows[0].asDict()}"
                 )
 
+    @_operation
     def add_identity_column(
         self, name: str, start: int = 1, step: int = 1
     ) -> int:
@@ -2162,9 +2064,7 @@ class DeltaSink:
             raise ValueError("identity step must be non-zero")
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"column name must be a bare word: {name!r}")
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no table metadata yet")
         parsed = json.loads(meta["schemaString"])
@@ -2192,27 +2092,10 @@ class DeltaSink:
             operation="ADD COLUMNS (identity)",
         )
 
-    #: memoized _identity_cols result; None = not yet derived.  Same
-    #: invalidation discipline as _mapping_cache/_ict_cache — the
-    #: lookup otherwise costs a driver-side log walk per append.
-    _ident_cache: "dict | None" = None
-
     def _identity_cols(self) -> dict[str, dict]:
         """name -> {start, step, highWaterMark?} from field metadata."""
-        if self._ident_cache is not None:
-            return self._ident_cache
-        from .delta_log import latest_metadata
-
-        try:
-            meta = latest_metadata(self.spark, self.path)
-        except FileNotFoundError:
-            self._ident_cache = {}
-            return {}
-        if meta is None:
-            self._ident_cache = {}
-            return {}
         out = {}
-        for f in json.loads(meta["schemaString"])["fields"]:
+        for f in self._table_fields():
             md = f.get("metadata") or {}
             if "delta.identity.start" in md:
                 out[f["name"]] = {
@@ -2223,7 +2106,6 @@ class DeltaSink:
                         md.get("delta.identity.allowExplicitInsert")
                     ),
                 }
-        self._ident_cache = out
         return out
 
     def _assign_identity(self, df: DataFrame, idents: dict) -> DataFrame:
@@ -2271,8 +2153,6 @@ class DeltaSink:
         highWaterMark to the batch's true MAX (from the add stats;
         one max() scan over the new files when a stats entry is
         missing).  None when nothing advanced."""
-        from .delta_log import latest_metadata
-
         new_hwm: dict[str, int] = {}
         mapping = self._current_mapping() or {}
         for name, info in idents.items():
@@ -2317,7 +2197,7 @@ class DeltaSink:
                 new_hwm[name] = batch_max
         if not new_hwm:
             return None
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         parsed = json.loads(meta["schemaString"])
         for f in parsed["fields"]:
             if f["name"] in new_hwm:
@@ -2327,6 +2207,7 @@ class DeltaSink:
                 }
         return {"metaData": {**meta, "schemaString": json.dumps(parsed)}}
 
+    @_operation
     def add_generated_column(
         self, name: str, sql_type: str, expr: str
     ) -> int:
@@ -2344,9 +2225,7 @@ class DeltaSink:
         consistently."""
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"column name must be a bare word: {name!r}")
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no table metadata yet")
         parsed = json.loads(meta["schemaString"])
@@ -2370,6 +2249,7 @@ class DeltaSink:
             operation="ADD COLUMNS (generated)",
         )
 
+    @_operation
     def set_column_default(self, column: str, sql_expr: str) -> int:
         """ALTER COLUMN ... SET DEFAULT (PROTOCOL.md "Default
         Columns", writer feature ``allowColumnDefaults``): the
@@ -2380,9 +2260,7 @@ class DeltaSink:
         only feature: readers see ordinary data, so the reader version
         stays put.  Existing rows are untouched (Delta's own
         semantics: SET DEFAULT affects future writes only)."""
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"no Delta table at {self.path}")
         parsed = json.loads(meta["schemaString"])
@@ -2415,19 +2293,17 @@ class DeltaSink:
         field.setdefault("metadata", {})["CURRENT_DEFAULT"] = sql_expr
         new_schema = json.dumps(parsed)
         self._pending_schema = new_schema
-        self._tbl_types_cache = False
         return self._commit(
             [{"metaData": {**meta, "schemaString": new_schema}}],
             operation=f"ALTER COLUMN (set default {column})",
         )
 
+    @_operation
     def drop_column_default(self, column: str) -> int:
         """ALTER COLUMN ... DROP DEFAULT: removes ``CURRENT_DEFAULT``
         from the field metadata (the feature stays in the protocol —
         Delta features are never retracted by ordinary DDL)."""
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"no Delta table at {self.path}")
         parsed = json.loads(meta["schemaString"])
@@ -2449,38 +2325,19 @@ class DeltaSink:
     def _defaults(self) -> dict[str, tuple[str, str]]:
         """name -> (default expression, Delta type) from field
         metadata ``CURRENT_DEFAULT``."""
-        fields = self._default_fields()
+        fields = self._table_fields()
         return {
             f["name"]: (f["metadata"]["CURRENT_DEFAULT"], f["type"])
             for f in fields
             if (f.get("metadata") or {}).get("CURRENT_DEFAULT")
         }
 
-    #: memoized table-schema field dicts for the defaults fill;
-    #: False = not yet derived.  Invalidated with _tbl_types_cache
-    #: (lost commit race, own metaData commits) — the same events
-    #: that can change the schema.
-    _fields_cache: "list | bool" = False
-
-    def _default_fields(self) -> list[dict]:
-        """The table schema's field dicts (one memoized driver-side
-        metadata read, shared by the defaults fill and its
-        column-order fix) — the append hot path must not pay a
-        remote log scan per write for a feature the table may not
-        even use (same rationale as _current_mapping)."""
-        if self._fields_cache is False:
-            from .delta_log import latest_metadata
-
-            try:
-                meta = latest_metadata(self.spark, self.path)
-            except FileNotFoundError:
-                meta = None
-            self._fields_cache = (
-                []
-                if meta is None
-                else json.loads(meta["schemaString"])["fields"]
-            )
-        return self._fields_cache
+    def _table_fields(self) -> list[dict]:
+        """The table schema's field dicts ([] before the first
+        metaData), shared by the defaults fill, the identity columns
+        and the append upcast."""
+        meta = self._state().metadata
+        return [] if meta is None else json.loads(meta["schemaString"])["fields"]
 
     def _apply_defaults(self, df: DataFrame) -> DataFrame:
         """Fill columns ABSENT from the frame with their declared
@@ -2507,24 +2364,16 @@ class DeltaSink:
         )
         # keep the table's declared column order where possible, so a
         # defaults-filled append doesn't reorder the metaData schema
-        order = [f["name"] for f in self._default_fields()]
+        order = [f["name"] for f in self._table_fields()]
         if set(order) == set(df.columns):
             df = df.select(*order)
         return df
 
     def _generated(self) -> dict[str, str]:
         """name -> generation expression, from schema field metadata."""
-        from .delta_log import latest_metadata
-
-        try:
-            meta = latest_metadata(self.spark, self.path)
-        except FileNotFoundError:
-            return {}
-        if meta is None:
-            return {}
         return {
             f["name"]: f["metadata"]["delta.generationExpression"]
-            for f in json.loads(meta["schemaString"])["fields"]
+            for f in self._table_fields()
             if (f.get("metadata") or {}).get("delta.generationExpression")
         }
 
@@ -2555,17 +2404,7 @@ class DeltaSink:
         """True when the table property ``delta.enableChangeDataFeed``
         is set — the DML paths then also stage row-level change files
         (PROTOCOL.md "Add CDC File")."""
-        from .delta_log import latest_metadata
-
-        try:
-            meta = latest_metadata(self.spark, self.path)
-        except FileNotFoundError:
-            return False
-        conf = (meta or {}).get("configuration") or {}
-        return (
-            str(conf.get("delta.enableChangeDataFeed", "")).lower()
-            == "true"
-        )
+        return self._conf_on(self._state().metadata, "delta.enableChangeDataFeed")
 
     @staticmethod
     def _groups(files) -> list[tuple[dict, list[dict]]]:
@@ -2667,9 +2506,6 @@ class DeltaSink:
             wait,
         )
 
-        # memoize the mapping once before the race (double-compute is
-        # benign but wasteful)
-        self._current_mapping()
         # fail fast: when one staging job raises, queued siblings are
         # skipped (running ones finish at pool exit — threads cannot
         # be killed) instead of the whole fan running to completion
@@ -2730,10 +2566,8 @@ class DeltaSink:
         a deletion vector that would resurrect its deleted rows.  The
         CoW paths therefore refuse until ``reorg()`` materializes the
         DVs (Delta's own REORG TABLE ... APPLY (PURGE) prerequisite)."""
-        from .delta_log import snapshot_files
-
         if files is None:
-            files = snapshot_files(self.spark, self.path)
+            files = self._state().files(self.spark)
         n = sum(
             1
             for f in files
@@ -2756,15 +2590,11 @@ class DeltaSink:
         rewrite paths' partition directories and _stage_adds'
         partitionValues are keyed by logical name, and Delta keys them
         physically under mapping."""
-        from .delta_log import (
-            UnsupportedTableFeature,
-            column_mapping_of,
-            latest_metadata as _lm,
-        )
+        from .delta_log import UnsupportedTableFeature, column_mapping_of
 
         from pyspark.sql.types import StructType as _St
 
-        meta = _lm(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             return {}, None, None
         if column_mapping_of(meta) is not None and (
@@ -2830,13 +2660,13 @@ class DeltaSink:
         stats prove wholly matched (:func:`skipping.cover_files`) as
         plain removes, unread; when every touched file is covered the
         DML runs no Spark job."""
-        from .delta_log import skip_files, snapshot_files
+        from .delta_log import skip_files
 
         types, data_schema, meta = schema or self._data_schema()
         if data_schema is None:
             return -1  # empty table: nothing to match
         now = int(time.time() * 1000)
-        files = snapshot_files(self.spark, self.path)
+        files = self._state().files(self.spark)
         if not dv:
             self._require_no_dvs(op, files)
         cdf = self._cdf_enabled()
@@ -2983,9 +2813,8 @@ class DeltaSink:
         Tracking) and clustering tags stay.  All of a commit's bitmaps
         share one .bin (:func:`dv.pack_dv_file`)."""
         from . import dv as _dv
-        from .delta_log import latest_protocol
 
-        cur = latest_protocol(self.path)
+        cur = self._state().protocol
         pr = upgraded_protocol(cur, ("deletionVectors",), ("deletionVectors",))
         actions: list[dict] = [] if pr == cur else [{"protocol": pr}]
         partial = []
@@ -3017,6 +2846,7 @@ class DeltaSink:
             actions.append({"add": add})
         return actions
 
+    @_operation
     def delete(self, predicate: str) -> int:
         """Row-level delete: rewrite only the FILES that contain matching
         rows — K6's `.delete table records` as copy-on-write.
@@ -3070,6 +2900,7 @@ class DeltaSink:
                     "move across partitions"
                 )
 
+    @_operation
     def update(self, predicate: str, assignments: dict[str, str]) -> int:
         """UPDATE ... SET — Delta's copy-on-write UPDATE: rewrite only
         the FILES containing matching rows, applying every assignment
@@ -3290,6 +3121,7 @@ class DeltaSink:
             ).collect()
         )
 
+    @_operation
     def update_dv(self, predicate: str, assignments: dict[str, str]) -> int:
         """Merge-on-read UPDATE ... SET: matched rows join each
         affected file's DELETION VECTOR and the post-update rows
@@ -3396,6 +3228,7 @@ class DeltaSink:
                 )
         return keys, del_keys, source, types, data_schema, meta, fill_cols
 
+    @_operation
     def merge(
         self,
         source: DataFrame,
@@ -3489,6 +3322,7 @@ class DeltaSink:
             schema=(types, data_schema, meta),
         )
 
+    @_operation
     def merge_dv(
         self,
         source: DataFrame,
@@ -3517,6 +3351,7 @@ class DeltaSink:
         DVs like any other."""
         return self._merge(source, key_cols, txn, delete_keys, dv=True)
 
+    @_operation
     def delete_dv(self, predicate: str) -> int:
         """Merge-on-read row-level delete: instead of rewriting every
         file containing a match (copy-on-write ``delete``), write a
@@ -3545,17 +3380,16 @@ class DeltaSink:
         deletionVectors."""
         return self._dml("DELETE", True, where=predicate)
 
+    @_operation
     def reorg(self) -> int:
         """REORG TABLE ... APPLY (PURGE): materialize every deletion
         vector by rewriting only the DV'd files without their deleted
         rows (dataChange=false — logical content is unchanged, so the
         mirror and the change feed ignore the churn, O2).  After this
         the copy-on-write paths (delete/merge/optimize) work again."""
-        from .delta_log import snapshot_files
-
         files = [
             f
-            for f in snapshot_files(self.spark, self.path)
+            for f in self._state().files(self.spark)
             if (f.get("deletionVector") or {}).get("cardinality")
         ]
         actions: list[dict] = []
@@ -3571,15 +3405,15 @@ class DeltaSink:
             actions = [a for run in thunks for a in run()]
         return self._commit(actions, operation="REORG (PURGE)")
 
+    @_operation
     def properties(self) -> dict[str, str]:
         """Table properties from the latest metaData's configuration —
         the engine's K2 table-policy store (Kusto merge/retention/
         caching policies map onto Delta TBLPROPERTIES)."""
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         return dict((meta or {}).get("configuration") or {})
 
+    @_operation
     def set_properties(
         self, props: dict[str, str], unset: Sequence[str] = ()
     ) -> int:
@@ -3590,8 +3424,6 @@ class DeltaSink:
         retention) at setup; here the same knobs live in the table
         itself and the engine reads them (``mlk.optimize.
         targetFileBytes`` steers OPTIMIZE's output sizing)."""
-        from .delta_log import latest_metadata
-
         for key in ("mlk.optimize.targetFileBytes",):
             if key in props:
                 try:
@@ -3608,9 +3440,7 @@ class DeltaSink:
             str(props.get("delta.enableChangeDataFeed", "")).lower()
             == "true"
         ):
-            from .delta_log import latest_protocol
-
-            cur = latest_protocol(self.path)
+            cur = self._state().protocol
             if "changeDataFeed" not in (
                 (cur or {}).get("writerFeatures") or []
             ):
@@ -3627,34 +3457,26 @@ class DeltaSink:
         ):
             props = {**props, **self._enable_row_tracking()}
         # in-commit timestamps are likewise feature-gated: commit the
-        # writer feature first, and record the enablement provenance
-        # (version + clock of the enabling commit) the protocol asks
-        # for so readers know mtimes before that point are historical
-        ict_enabling = (
+        # writer feature first (_stamp_ict records the enablement
+        # provenance in the commit that turns them on)
+        if (
             str(props.get("delta.enableInCommitTimestamps", "")).lower()
             == "true"
-        )
-        if ict_enabling:
-            from .delta_log import latest_protocol
-
-            cur = latest_protocol(self.path)
+        ):
+            cur = self._state().protocol
             if "inCommitTimestamp" not in (
                 (cur or {}).get("writerFeatures") or []
             ):
                 self._commit_protocol_upgrade(
                     writer_features=("inCommitTimestamp",)
                 )
-        # read-modify-write under optimistic concurrency: a concurrent
-        # metaData commit (schema evolution, another property writer)
-        # makes _commit raise via the metaData conflict rule — re-read
-        # and retry so no winner's state is ever overwritten blind
+        # read-modify-write under optimistic concurrency: a metaData
+        # commit made since this operation read (schema evolution,
+        # another property writer) makes _commit raise via the
+        # metaData conflict rule — re-read and retry so no winner's
+        # state is ever overwritten blind
         for _attempt in range(5):
-            # compare-and-swap: pin the expected version BEFORE reading
-            # the metadata; any concurrent commit moves the head and
-            # fails ours, so no winner's schema/properties are ever
-            # overwritten with stale state
-            expected = self._next_version()
-            meta = latest_metadata(self.spark, self.path)
+            meta = self._state().metadata
             if meta is None:
                 raise ValueError(
                     f"{self.path}: no table metadata yet — write data "
@@ -3664,31 +3486,18 @@ class DeltaSink:
             conf.update({k: str(v) for k, v in props.items()})
             for k in unset:
                 conf.pop(k, None)
-            if ict_enabling:
-                # enablement provenance must name THE commit the
-                # property lands in (pinned per CAS attempt — a lost
-                # race recomputes it); the timestamp is synced to the
-                # actual stamped inCommitTimestamp by _stamp_ict
-                conf["delta.inCommitTimestampEnablementVersion"] = str(
-                    expected
-                )
-                conf.setdefault(
-                    "delta.inCommitTimestampEnablementTimestamp",
-                    str(int(time.time() * 1000)),
-                )
             md = {**meta, "configuration": conf}
             try:
                 return self._commit(
-                    [{"metaData": md}],
-                    operation="SET TBLPROPERTIES",
-                    expected_version=expected,
+                    [{"metaData": md}], operation="SET TBLPROPERTIES"
                 )
             except ConcurrentCommitConflict:
-                continue
+                self._snap = snapshot(self.path)  # re-read, retry
         raise ConcurrentCommitConflict(
             f"{self.path}: metadata kept changing under set_properties"
         )
 
+    @_operation
     def evolve_rename(self, renames: dict[str, str]) -> int:
         """Metadata-only column RENAME via Delta column mapping
         ('name' mode, PROTOCOL.md "Column Mapping"): no data file is
@@ -3705,9 +3514,7 @@ class DeltaSink:
 
         Drop/retype still raise loudly elsewhere; this method only
         relabels existing fields."""
-        from .delta_log import latest_metadata, latest_protocol
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no metaData to rename")
         parsed = json.loads(meta["schemaString"])
@@ -3743,7 +3550,7 @@ class DeltaSink:
             ],
         }
         actions: list[dict] = []
-        cur_pr = latest_protocol(self.path)
+        cur_pr = self._state().protocol
         if "columnMapping" not in set(
             (cur_pr or {}).get("readerFeatures") or []
         ):
@@ -3758,9 +3565,9 @@ class DeltaSink:
             renames.get(c, c) for c in self.partition_by
         ]
         self._pending_schema = new_schema
-        self._mapping_cache = False  # re-derive after the rename commits
         return self._commit(actions, operation="RENAME COLUMN")
 
+    @_operation
     def evolve_add(self, new_schema_json: str) -> int:
         """ADDITIVE schema evolution on a column-mapped table: every
         existing logical field must survive with an identical type;
@@ -3774,9 +3581,7 @@ class DeltaSink:
         uses when the SOURCE adds a column after a rename — a plain
         schema-changing append would clobber the mapping metadata
         (_commit refuses exactly that)."""
-        from .delta_log import latest_metadata
-
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no metaData to evolve")
         parsed = json.loads(meta["schemaString"])
@@ -3815,7 +3620,6 @@ class DeltaSink:
             {**parsed, "fields": parsed["fields"] + added}
         )
         self._pending_schema = new_schema
-        self._mapping_cache = False
         return self._commit(
             [
                 {
@@ -3829,6 +3633,7 @@ class DeltaSink:
             operation="ADD COLUMNS",
         )
 
+    @_operation
     def evolve_drop(self, columns: Sequence[str]) -> int:
         """ALTER TABLE DROP COLUMN via column mapping (PROTOCOL.md
         "Column Mapping"): metadata-only — the dropped fields leave
@@ -3847,10 +3652,8 @@ class DeltaSink:
         column."""
         import re as _re
 
-        from .delta_log import latest_metadata, latest_protocol
-
         cols = list(columns)
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no metaData to evolve")
         parsed = json.loads(meta["schemaString"])
@@ -3914,7 +3717,7 @@ class DeltaSink:
         conf["delta.columnMapping.maxColumnId"] = str(max_id)
         new_schema = json.dumps({**parsed, "fields": survivors})
         actions: list[dict] = []
-        cur_pr = latest_protocol(self.path)
+        cur_pr = self._state().protocol
         if "columnMapping" not in set(
             (cur_pr or {}).get("readerFeatures") or []
         ):
@@ -3933,13 +3736,11 @@ class DeltaSink:
             }
         )
         self._pending_schema = new_schema
-        self._mapping_cache = False
-        self._tbl_types_cache = False
-        self._fields_cache = False
         return self._commit(
             actions, operation=f"DROP COLUMNS ({', '.join(cols)})"
         )
 
+    @_operation
     def widen_column(self, column: str, to_type: str) -> int:
         """ALTER COLUMN ... TYPE, restricted to PROTOCOL.md's lossless
         Type Widening matrix: the table's metaData records the wide
@@ -3953,6 +3754,7 @@ class DeltaSink:
         beyond that parity point."""
         return self.evolve_widen({column: to_type})
 
+    @_operation
     def evolve_widen(self, widen_map: dict[str, str]) -> int:
         """Apply several column widenings in ONE commit (the mirror's
         ``on_schema_change='widen'`` follow path).  Per column: no-op
@@ -3965,13 +3767,9 @@ class DeltaSink:
         Column-mapping metadata (physicalName/id) rides along
         untouched, so mapped tables widen too.  Returns the commit
         version, or -1 when every column was already wide."""
-        from .delta_log import (
-            is_type_widening,
-            latest_metadata,
-            latest_protocol,
-        )
+        from .delta_log import is_type_widening
 
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(f"{self.path}: no metaData to widen")
         parsed = json.loads(meta["schemaString"])
@@ -4002,7 +3800,7 @@ class DeltaSink:
             return -1
         new_schema = json.dumps(parsed)
         actions: list[dict] = []
-        cur_pr = latest_protocol(self.path)
+        cur_pr = self._state().protocol
         if "typeWidening" not in set(
             (cur_pr or {}).get("readerFeatures") or []
         ):
@@ -4017,6 +3815,7 @@ class DeltaSink:
         self._pending_schema = new_schema
         return self._commit(actions, operation="CHANGE COLUMN")
 
+    @_operation
     def set_cluster_by(self, cols: Sequence[str]) -> int:
         """Declare LIQUID CLUSTERING on the table (Delta's
         ``ALTER TABLE ... CLUSTER BY``): one commit carrying the
@@ -4029,16 +3828,10 @@ class DeltaSink:
         incremental, no-partition-boundaries layout that replaced
         ZORDER as the default for new tables.  Idempotent when the
         same columns are already declared (returns -1)."""
-        from .delta_log import (
-            latest_domain_metadata,
-            latest_metadata,
-            latest_protocol,
-        )
-
         cols = list(cols)
         if not cols:
             raise ValueError("set_cluster_by needs at least one column")
-        meta = latest_metadata(self.spark, self.path)
+        meta = self._state().metadata
         if meta is None:
             raise ValueError(
                 f"{self.path}: set_cluster_by before the table exists — "
@@ -4089,13 +3882,13 @@ class DeltaSink:
                     "timestamp, boolean)"
                 ) from None
         stored = [[mapping.get(c, c) if mapping else c] for c in cols]
-        cur = latest_domain_metadata(self.path).get("delta.clustering")
+        cur = self._state().domains.get("delta.clustering")
         if cur is not None and (
             json.loads(cur).get("clusteringColumns") == stored
         ):
             return -1  # already declared: replay-safe no-op
         actions: list[dict] = []
-        pr = latest_protocol(self.path)
+        pr = self._state().protocol
         have_w = set((pr or {}).get("writerFeatures") or [])
         need = [
             f
@@ -4122,9 +3915,7 @@ class DeltaSink:
     def _clustering_columns(self) -> list[str] | None:
         """LOGICAL clustering columns declared in the
         ``delta.clustering`` domain, or None."""
-        from .delta_log import latest_domain_metadata
-
-        conf = latest_domain_metadata(self.path).get("delta.clustering")
+        conf = self._state().domains.get("delta.clustering")
         if not conf:
             return None
         paths = json.loads(conf).get("clusteringColumns") or []
@@ -4140,6 +3931,7 @@ class DeltaSink:
             out.append(log_of.get(name, name))
         return out or None
 
+    @_operation
     def optimize(
         self,
         target_file_bytes: int | None = None,
@@ -4185,7 +3977,7 @@ class DeltaSink:
         forces a whole-table re-cluster (``OPTIMIZE FULL``)."""
         import math as _math
 
-        from .delta_log import _prune_partitions, latest_metadata, snapshot_files
+        from .delta_log import _prune_partitions
 
         self._require_no_dvs("OPTIMIZE")
         if zorder_by is not None and cluster_by is not None:
@@ -4199,7 +3991,7 @@ class DeltaSink:
             # reference sets Kusto merge policies; here the knob lives
             # in TBLPROPERTIES and the engine honors it).  One metadata
             # scan, not a properties() + _data_schema() double-read.
-            meta0 = latest_metadata(self.spark, self.path)
+            meta0 = self._state().metadata
             raw = ((meta0 or {}).get("configuration") or {}).get(
                 "mlk.optimize.targetFileBytes"
             )
@@ -4225,7 +4017,7 @@ class DeltaSink:
                     "(partition columns are already file-separated)"
                 )
         # one log walk, shared by bounds (stats fold) and the groups
-        files = snapshot_files(self.spark, self.path)
+        files = self._state().files(self.spark)
         if zcols:
             bounds = self._zorder_bounds(zcols, data_schema, files)
         if partition_predicate is not None and files and meta is not None:
@@ -4342,6 +4134,7 @@ class DeltaSink:
             for c in zcols
         }
 
+    @_operation
     def vacuum(self, retention_hours: float | None = None) -> dict:
         """Physically delete data files no longer referenced by the
         current snapshot, and truncate commit JSONs older than the last
@@ -4365,7 +4158,7 @@ class DeltaSink:
         single-writer mirror targets whose readers replay from the
         checkpoint, wrong for shared production tables: pass 168
         there."""
-        from .delta_log import read_last_checkpoint, snapshot_files
+        from .delta_log import read_last_checkpoint
 
         from . import dv as _dv
 
@@ -4376,8 +4169,6 @@ class DeltaSink:
         # clocks (retention) and the cdc references — these files can
         # live on slow object storage, so vacuum must not parse the
         # log twice
-        from .delta_log import _read_commit
-
         tomb: dict[str, int] = {}
         commit_rm_ts: dict[int, int] = {}
         cdc_by_commit: dict[int, set] = {}
@@ -4410,7 +4201,7 @@ class DeltaSink:
                     return False
             return ts < cutoff
 
-        snap = snapshot_files(self.spark, self.path)
+        snap = self._state().files(self.spark)
         live = {f["path"] for f in snap}
         # deletion-vector .bin files referenced by live adds must
         # survive; superseded ones (older DV generations) are garbage
@@ -4498,6 +4289,7 @@ class DeltaSink:
             predicate=predicate,
         )
 
+    @_operation
     def detail(self) -> DataFrame:
         """DESCRIBE DETAIL: one row of table-level metadata — format,
         id, location, createdTime, partition/clustering columns, live
@@ -4505,15 +4297,10 @@ class DeltaSink:
         table features).  Pure driver-side metadata: the file
         count/size folds over the snapshot's add actions, never the
         data (Delta's utility of the same name)."""
-        from .delta_log import (
-            latest_metadata,
-            latest_protocol,
-            snapshot_files,
-        )
-
-        meta = latest_metadata(self.spark, self.path) or {}
-        proto = latest_protocol(self.path) or {}
-        files = snapshot_files(self.spark, self.path)
+        snap = self._state()
+        meta = snap.metadata or {}
+        proto = snap.protocol or {}
+        files = snap.files(self.spark)
         feats = sorted(
             set(proto.get("readerFeatures") or [])
             | set(proto.get("writerFeatures") or [])
@@ -4598,6 +4385,7 @@ class DeltaSink:
             "n_adds long, n_removes long",
         )
 
+    @_operation
     def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION: one commit whose adds/removes turn
         the current snapshot back into the snapshot at ``version`` —
@@ -4605,11 +4393,10 @@ class DeltaSink:
         any was vacuumed).  The restore itself is a new commit, so
         history moves forward (Delta's RESTORE semantics); the schema
         recorded at ``version`` is re-recorded when it differs."""
-        from .delta_log import latest_metadata, snapshot_files
-
         now = int(time.time() * 1000)
-        target = {f["path"]: f for f in snapshot_files(self.spark, self.path, upto=version)}
-        current = {f["path"]: f for f in snapshot_files(self.spark, self.path)}
+        then = self._state().at(version)
+        target = {f["path"]: f for f in then.files(self.spark)}
+        current = {f["path"]: f for f in self._state().files(self.spark)}
         def _dv_key(f):
             d = f.get("deletionVector") or {}
             return (d.get("pathOrInlineDv"), d.get("offset")) if d.get(
@@ -4655,7 +4442,7 @@ class DeltaSink:
                     }
                 }
             )
-        old_meta = latest_metadata(self.spark, self.path, upto=version)
+        old_meta = then.metadata
         if old_meta is not None:
             # re-record the historical schema if it has since changed
             self._pending_schema = old_meta["schemaString"]
@@ -4787,10 +4574,9 @@ class DeltaSink:
         documented caveat as Delta's own shallow clones."""
         if _backfilled_commit_versions(target_path):
             raise ValueError(f"{target_path} is already a Delta table")
-        from .delta_log import latest_metadata, snapshot_files
-
-        files = snapshot_files(spark, source_path, upto=version)
-        meta = latest_metadata(spark, source_path, upto=version)
+        src = snapshot(source_path, version)
+        files = src.files(spark)
+        meta = src.metadata
         if meta is None:
             raise ValueError(f"no Delta table at {source_path}")
         sink = cls(

@@ -195,9 +195,11 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         #: guard (round-11 review); re-derived here only when a
         #: user-supplied schema bypassed schema().
         if guard_anchor is None:
-            head0 = _head(table_path)
-            meta0 = DL.latest_metadata(None, table_path)
-            guard_anchor = (head0, (meta0 or {}).get("schemaString"))
+            snap = DL.snapshot(table_path)
+            guard_anchor = (
+                snap.version,
+                (snap.metadata or {}).get("schemaString"),
+            )
         self._init_head = guard_anchor[0]
         self._declared_schema_fp = _schema_fingerprint(guard_anchor[1])
         #: per-version cache of this reader's emitted-entry lists
@@ -241,9 +243,12 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = DL.list_commit_versions(self.path)
-        # a fully-vacuumed log's checkpoint is its only readable state
-        seg = DL.log_segment(self.path)
+        # one read of the log: the commit listing admission walks, and
+        # the head (a fully-vacuumed log's checkpoint is its only
+        # readable state)
+        snap = DL.snapshot(self.path)
+        vs = snap.commits
+        seg = snap.segment
         latest = seg.version
         cap = self.max_commits_per_trigger
         max_bytes = self.max_bytes_per_trigger
@@ -854,19 +859,14 @@ class DeltaLogDataSource(DataSource):
                 "onDv must be 'fail' or 'materialize', got "
                 f"{self.options.get('ondv')!r}"
             )
-        # evolution-guard anchor (round-11 review): head is listed
-        # BEFORE the metadata read, so the schema fingerprint the
-        # reader guards with always corresponds to a version AT OR
-        # PAST the anchored head — a metaData commit racing in between
-        # lands above the head, matches the fingerprint we are about
-        # to read (it IS that commit's schema), and the pinned stream
-        # schema is consistent with it; anything landing later that
-        # differs raises.  Reading the metadata first would leave a
-        # window where the guard fingerprints a schema NEWER than the
-        # one the stream pins, silently disarming it.
+        # evolution-guard anchor (round-11 review): the head and the
+        # metadata come from ONE snapshot, so the schema fingerprint the
+        # reader guards with is exactly the schema at the anchored
+        # head, the one the stream pins — any metaData commit past it
+        # that differs raises
         try:
-            guard_head = _head(self.options["path"])
-            meta = DL.latest_metadata(None, self.options["path"])
+            snap = DL.snapshot(self.options["path"])
+            guard_head, meta = snap.version, snap.metadata
         except ValueError:
             # the log cannot rebuild its head (a missing commit, history
             # truncated past every checkpoint): nothing can be pinned,

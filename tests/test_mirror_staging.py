@@ -232,7 +232,7 @@ def _creation_times(spark, tmp_path):
         {"blob_path": f"f{y}", "partition_values": json.dumps({"year": str(y)})}
         for y in (2020, 2021)
     ]
-    return lambda: p._creation_times(items)
+    return lambda: p._creation_times(items, DL.snapshot(p.source))
 
 
 _FRAME_SITES = {

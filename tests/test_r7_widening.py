@@ -385,7 +385,6 @@ def test_mirror_widen_of_column_never_on_target(spark, tmp_path):
         )
     p.run_until_idle()                       # records (id, c int)
     src._pending_schema = "{}"
-    src._tbl_types_cache = False
     src.widen_column("c", "long")            # v2: widen the absent col
     src.append(
         spark.range(5, 8).selectExpr("id", "cast(id AS long) AS c")
